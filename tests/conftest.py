@@ -127,7 +127,7 @@ SLOW_TESTS = {
     "test_oracle.py::test_oracle[stream_novelty_maintained_loop]",
     "test_oracle.py::test_oracle[stream_semantic_ingest_loop]",
     "test_pq_batch_filtered.py::test_batch_pq_kfill_and_exactness",
-    "test_pq_batch_filtered.py::test_expansion_stats_all_four_serving_paths",
+    "test_pq_batch_filtered.py::test_expansion_stats_all_six_serving_paths",
     "test_recall_audit.py::test_ivf_pq_recall_audit_sees_drift_saturation_cannot",
     "test_retrieval.py::test_phrase_bm25_batch_equals_single_path",
     "test_shingle_arrow.py::test_shingle_arrow_matches_expression_random",

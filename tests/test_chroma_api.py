@@ -1163,6 +1163,82 @@ def test_collection_query_batch_ivf_per_query_fill(spark, tmp_path):
     assert len(got) == 10
 
 
+@pytest.fixture(scope="module")
+def dot_ivf(spark, tmp_path_factory):
+    """A dot collection in two clusters around centroids of unequal
+    norm, with two l2-assigned IVF indexes over it: one serving dot,
+    one serving cosine."""
+    import numpy as np
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        _assign_to_centroids,
+        ivf_write,
+    )
+
+    root = str(tmp_path_factory.mktemp("dot_ivf"))
+    rows = [(f"a{i}", f"doc a{i}", [1.0 + 0.01 * i, 0.01 * i, 0.0, 0.0])
+            for i in range(6)]
+    rows += [(f"b{i}", f"doc b{i}", [0.01 * i, 5.0 + 0.01 * i, 0.0, 0.0])
+             for i in range(6)]
+    hydrate(
+        spark,
+        spark.createDataFrame(
+            rows, "id string, text string, embedding array<float>"
+        ),
+        HydrationConfig(
+            collection_name="dc", root=root, id_col="id",
+            text_col="text", embedding_col="embedding", metric="dot",
+        ),
+    )
+    C = np.array([[1.0, 0.0, 0.0, 0.0], [0.0, 5.0, 0.0, 0.0]])
+    assigned = _assign_to_centroids(
+        read_collection(spark, root, "dc"), C, id_col="id",
+        embedding_col="embedding", metric="l2",
+    )
+    for metric in ("dot", "cosine"):
+        ivf_write(
+            assigned, C, f"{root}/dc/_ivf_{metric}", metric=metric,
+            source=(root, "dc"), build={"metric": "l2", "seed": 1},
+        )
+    return root
+
+
+def test_ivf_doors_probe_dot_index_by_dot(spark, dot_ivf):
+    # q is l2-nearest the short centroid but has the larger inner
+    # product with the long one: both IVF doors rank cells by the
+    # index's dot metric, so at nprobe=1 they probe the long
+    # centroid's cell and return the same rows
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        collection_query_batch_ivf,
+        collection_query_ivf,
+    )
+
+    root = dot_ivf
+    q = [1.0, 0.5, 0.0, 0.0]
+    kw = dict(n_results=3, index_path=f"{root}/dc/_ivf_dot", nprobe=1)
+    single = collection_query_ivf(spark, root, "dc", q, **kw).collect()
+    batch = collection_query_batch_ivf(spark, root, "dc", [q], **kw).collect()
+    assert [r["id"] for r in single] == ["b5", "b4", "b3"]
+    assert [(r["id"], r["score"]) for r in batch] == [
+        (r["id"], r["score"]) for r in single
+    ]
+
+
+def test_ivf_doors_refuse_index_metric_mismatch(spark, dot_ivf):
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        collection_query_batch_ivf,
+        collection_query_ivf,
+    )
+
+    root = dot_ivf
+    idx = f"{root}/dc/_ivf_cosine"  # serves cosine over a dot collection
+    q = [1.0, 0.5, 0.0, 0.0]
+    with pytest.raises(EngineError, match="metric"):
+        collection_query_ivf(spark, root, "dc", q, index_path=idx)
+    with pytest.raises(EngineError, match="metric"):
+        collection_query_batch_ivf(spark, root, "dc", [q], index_path=idx)
+
+
 # ---------------------------------------------------------------------------
 # collection_add / collection_upsert: the literal Chroma write front
 # doors (parallel-list signature) over the hydrate policies (r14)

@@ -1,7 +1,8 @@
 """Batch filtered serving through the compressed index
 (plans/chroma_api.py::collection_query_batch_ivf_pq): per-query
 k-fill under cell-killing predicates, exactness when rerank_factor
-covers the filtered slice, and the exact-batch output contract."""
+covers the filtered slice, and the exact-batch output contract; plus
+the k-fill contract shared by all six filtered ANN doors."""
 
 from __future__ import annotations
 
@@ -112,46 +113,105 @@ def test_batch_pq_include_distance(spark, pq_setup):
         assert row["distance"] == pytest.approx(1.0 - row["score"], abs=1e-3)
 
 
-def test_expansion_stats_all_four_serving_paths(spark, pq_setup, tmp_path):
-    """stats_out pins the k-fill doubling contract on every serving
-    path: a cell-killing predicate walks the probe to exhaustion in
-    exactly 1 + log2(n_cells/nprobe) rounds (here 2 cells, nprobe=1
-    -> 2 rounds, final_probe == n_cells), while an unfiltered query
-    that fills immediately stops after one round."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        ivf_build,
-        ivf_write,
-    )
+def test_batch_scores_equal_single_scores_exactly(spark, pq_setup):
+    """Batch doors score the query as doubles, like the single doors:
+    with ``score_decimals=None`` a query that float32 cannot hold
+    scores identically through both."""
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
-        collection_query_batch_ivf,
-        collection_query_ivf,
+        collection_query,
         collection_query_ivf_pq,
     )
 
     root, idx = pq_setup
+    qv = [9.5 + 1 / 3, 0.1, 0.7, 1 / 7, 0.0, 0.3, 0.0, 0.9]
+    single = collection_query_ivf_pq(
+        spark, root, "c", qv, n_results=4, index_path=idx, nprobe=1,
+        rerank_factor=8,
+    ).select("id", "score").collect()
+    batch = collection_query_batch_ivf_pq(
+        spark, root, "c", [qv], n_results=4, index_path=idx, nprobe=1,
+        rerank_factor=8,
+    ).select("id", "score").collect()
+    assert len(single) == 4
+    assert [tuple(r) for r in batch] == [tuple(r) for r in single]
+    exact = collection_query(spark, root, "c", qv, n_results=4).select(
+        "id", "score"
+    ).collect()
+    exact_b = collection_query_batch(
+        spark, root, "c", [qv], n_results=4
+    ).select("id", "score").collect()
+    assert [tuple(r) for r in exact_b] == [tuple(r) for r in exact]
+
+
+def test_expansion_stats_all_six_serving_paths(spark, pq_setup, tmp_path):
+    """The shared k-fill loop on all six filtered ANN doors: the
+    'rare' filter kills the query's nearest cell, so every door walks
+    the probe from 1 to both cells (2 rounds) and reports the same
+    stats as its batch twin, and each single door returns exactly its
+    batch twin's rows. Around it: an unfiltered query settles in one round and a
+    zero-match predicate exhausts to an empty result."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        ivf_build,
+        ivf_write,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
+        graph_index_build,
+        graph_index_write,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        collection_query_batch_graph,
+        collection_query_batch_ivf,
+        collection_query_graph,
+        collection_query_ivf,
+        collection_query_ivf_pq,
+    )
+
+    root, pqidx = pq_setup
     coll = read_collection(spark, root, "c")
     assigned, C = ivf_build(coll, n_centroids=2, seed=1)
     ividx = str(tmp_path / "ivf")
     ivf_write(assigned, C, ividx, metric="cosine", source=(root, "c"))
+    gassigned, GC = graph_index_build(coll, n_centroids=2, M=4, seed=1)
+    gidx = str(tmp_path / "graph")
+    graph_index_write(
+        gassigned, GC, gidx, M=4, source=(root, "c"), build={"seed": 1}
+    )
     qv = [9.5, 0.1, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]
+    doors = {
+        "ivf": (collection_query_ivf, collection_query_batch_ivf,
+                dict(index_path=ividx)),
+        "ivf_pq": (collection_query_ivf_pq, collection_query_batch_ivf_pq,
+                   dict(index_path=pqidx, rerank_factor=8)),
+        "graph": (collection_query_graph, collection_query_batch_graph,
+                  dict(index_path=gidx)),
+    }
+    exhausted = {"rounds": 2, "final_probe": 2, "n_cells": 2}
+    for kind, (single, batch, kw) in doors.items():
+        # the graph doors' default ef (4 * n_results) fills at the
+        # second round, before ef saturates
+        want = {**exhausted, "final_ef": 16} if kind == "graph" else exhausted
+        st: dict = {}
+        got = single(
+            spark, root, "c", qv, n_results=4, nprobe=1,
+            where={"kind": "rare"}, stats_out=st, **kw,
+        ).select("id", "score").collect()
+        stb: dict = {}
+        got_b = batch(
+            spark, root, "c", [qv], n_results=4, nprobe=1,
+            where={"kind": "rare"}, stats_out=stb, **kw,
+        ).select("id", "score").collect()
+        assert st == stb == want, (kind, st, stb)
+        assert len(got) == 4, kind
+        assert [tuple(r) for r in got_b] == [tuple(r) for r in got], kind
 
-    # single IVF: rare filter kills the near cell -> exhaustion in 2
-    st: dict = {}
-    got = collection_query_ivf(
-        spark, root, "c", qv, n_results=4, index_path=ividx,
-        nprobe=1, where={"kind": "rare"}, stats_out=st,
-    ).collect()
-    assert len(got) == 4
-    assert st == {"rounds": 2, "final_probe": 2, "n_cells": 2}
-    # ... and an unfiltered fill settles in ONE round at nprobe=1
+    # an unfiltered fill settles in ONE round at nprobe=1
     st1: dict = {}
     collection_query_ivf(
         spark, root, "c", qv, n_results=4, index_path=ividx,
         nprobe=1, stats_out=st1,
     ).collect()
-    assert st1["rounds"] == 1 and st1["final_probe"] == 1
-
-    # batch IVF: zero-match predicate -> exhaustion, empty, 2 rounds
+    assert st1 == {"rounds": 1, "final_probe": 1, "n_cells": 2}
+    # zero-match predicate -> exhaustion, empty, 2 rounds
     st2: dict = {}
     empty = collection_query_batch_ivf(
         spark, root, "c", [qv, qv], n_results=4, index_path=ividx,
@@ -159,23 +219,3 @@ def test_expansion_stats_all_four_serving_paths(spark, pq_setup, tmp_path):
     ).collect()
     assert empty == []
     assert st2 == {"rounds": 2, "final_probe": 2, "n_cells": 2}
-
-    # single PQ: rare filter -> exhaustion in 2
-    st3: dict = {}
-    got3 = collection_query_ivf_pq(
-        spark, root, "c", qv, n_results=4, index_path=idx,
-        nprobe=1, where={"kind": "rare"}, rerank_factor=8,
-        stats_out=st3,
-    ).collect()
-    assert len(got3) == 4
-    assert st3 == {"rounds": 2, "final_probe": 2, "n_cells": 2}
-
-    # batch PQ: rare filter -> per-query expansion, stats recorded
-    st4: dict = {}
-    got4 = collection_query_batch_ivf_pq(
-        spark, root, "c", [qv], n_results=4, index_path=idx,
-        nprobe=1, where={"kind": "rare"}, rerank_factor=8,
-        stats_out=st4,
-    ).collect()
-    assert len(got4) == 4
-    assert st4 == {"rounds": 2, "final_probe": 2, "n_cells": 2}

@@ -285,6 +285,25 @@ def _assign_to_centroids(
     return base.mapInArrow(assign, schema=out_schema)
 
 
+def _cell_order(centroids, queries, metric: str) -> np.ndarray:
+    """Cells nearest-first for each query row, ``(n_queries, n_cells)``
+    — the one probe-order rule of every IVF-shaped index: l2 ranks by
+    squared centroid distance, cosine by normalized similarity, dot by
+    raw inner product. The sort is stable, so a tie goes to the lower
+    cell and the probed set is a pure function of (query, centroids)
+    that a SQL oracle can replay."""
+    C = np.asarray(centroids, dtype=np.float64)
+    Q = np.atleast_2d(np.asarray(queries, dtype=np.float64))
+    if metric == "l2":
+        key = (C * C).sum(axis=1)[None, :] - 2.0 * (Q @ C.T)
+    else:
+        if metric == "cosine":
+            Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
+            C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+        key = -(Q @ C.T)
+    return np.argsort(key, axis=1, kind="stable")
+
+
 def ivf_search(
     assigned: DataFrame,
     centroids: np.ndarray,
@@ -299,16 +318,7 @@ def ivf_search(
 ) -> DataFrame:
     """Scan only the ``nprobe`` cells whose centroids are nearest the
     query, exact-rerank inside them."""
-    q = np.asarray(query_vector, dtype=np.float64)
-    if metric == "cosine":
-        qn = q / max(np.linalg.norm(q), 1e-300)
-        cn = centroids / np.maximum(
-            np.linalg.norm(centroids, axis=1, keepdims=True), 1e-300
-        )
-        order = np.argsort(-(cn @ qn), kind="stable")
-    else:
-        order = np.argsort(((centroids - q) ** 2).sum(axis=1), kind="stable")
-    cells = [int(c) for c in order[:nprobe]]
+    cells = [int(c) for c in _cell_order(centroids, query_vector, metric)[0, :nprobe]]
     candidates = assigned.filter(F.col("ivf_cell").isin(cells))
     return knn_query(
         candidates,
@@ -373,8 +383,6 @@ def ivf_knn_join(
         raise ValueError(f"metric must be one of {METRICS}")
     C = np.asarray(centroids, dtype=np.float64)
     npb = int(min(nprobe, C.shape[0]))
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    c_sq = (C * C).sum(axis=1)
 
     qid_type = queries.schema[query_id_col].dataType.simpleString()
     qemb_type = queries.schema[query_embedding_col].dataType.simpleString()
@@ -384,24 +392,7 @@ def ivf_knn_join(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Q = _rows_matrix(pdf["_qe"])
-            # stable argsort, not argpartition: boundary ties between
-            # the npb-th and npb+1-th cell resolve to the LOWER cell
-            # index deterministically, so the probed set is a pure
-            # function of (query, centroids) — what lets a recall
-            # audit's SQL oracle replay the probe decision exactly
-            # (n_centroids is small; the full sort is negligible)
-            if metric == "l2":
-                d = c_sq[None, :] - 2.0 * (Q @ C.T)
-                top = np.argsort(d, axis=1, kind="stable")[:, :npb]
-            else:
-                Qn = Q
-                if metric == "cosine":
-                    Qn = Q / np.maximum(
-                        np.linalg.norm(Q, axis=1, keepdims=True), 1e-300
-                    )
-                sims = Qn @ (Cn.T if metric == "cosine" else C.T)
-                top = np.argsort(-sims, axis=1, kind="stable")[:, :npb]
+            top = _cell_order(C, _rows_matrix(pdf["_qe"]), metric)[:, :npb]
             yield pd.DataFrame(
                 {
                     "_qid": pdf["_qid"].to_numpy().repeat(npb),

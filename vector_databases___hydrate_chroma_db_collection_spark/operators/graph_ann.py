@@ -70,6 +70,7 @@ from vector_databases___hydrate_chroma_db_collection_spark.errors import (
 )
 
 from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (  # noqa: E402
+    _cell_order,
     _serialized_writer as _ann_serialized_writer,
 )
 
@@ -642,11 +643,10 @@ def _serve_cells(
         )
     n_cells = int(C.shape[0])
     probe = min(max(int(nprobe), 1), n_cells)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    orders = _cell_order(C, np.stack([v for _, v in qs]), "cosine")[:, :probe]
     by_cell: dict[int, list[tuple[str, np.ndarray]]] = {}
-    for qid, v in qs:
+    for (qid, v), order in zip(qs, orders):
         vn = v / max(float(np.linalg.norm(v)), 1e-300)
-        order = np.argsort(-(Cn @ vn))[:probe]
         for c in order:
             by_cell.setdefault(int(c), []).append((qid, vn))
     src = cells_df

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+    _cell_order,
     _serialized_writer,
 )
 
@@ -646,10 +647,7 @@ def ivf_pq_search(
 
     m, n_codes, dsub = codebooks.shape
     q = np.asarray(query_vector, dtype=np.float64)
-    # stable: boundary ties resolve to the lower cell, the same
-    # deterministic-probe contract as ann.ivf_search / ivf_knn_join
-    order = np.argsort(((centroids - q) ** 2).sum(axis=1), kind="stable")
-    cells = [int(c) for c in order[:nprobe]]
+    cells = [int(c) for c in _cell_order(centroids, q, "l2")[0, :nprobe]]
     # Per-cell LUT: ||r_j - codebook_j[c]||^2 for r = q - centroid_cell.
     luts = {}
     for cell in cells:
@@ -763,8 +761,7 @@ def ivf_pq_knn_join(
             if len(pdf) == 0:
                 continue
             Q = np.vstack(pdf["_qe"].to_numpy()).astype(np.float64, copy=False)
-            d = (C * C).sum(axis=1)[None, :] - 2.0 * (Q @ C.T)
-            top = np.argsort(d, axis=1, kind="stable")[:, :npb]
+            top = _cell_order(C, Q, "l2")[:, :npb]
             yield pd.DataFrame(
                 {
                     "_qid": pdf["_qid"].to_numpy().repeat(npb),

@@ -455,15 +455,12 @@ def collection_query(
     ``knn_join_gemm`` on ``read_collection`` output instead — this is
     the interactive single-query path (shuffle-free).
     """
-    manifest = load_manifest(root, name)
-    if len(query_vector) != manifest.dim:
-        raise EngineError(
-            f"query vector dim {len(query_vector)} != collection dim {manifest.dim}"
-        )
     payload, want_d = _parse_include(
         include, default=("documents", "metadatas"), distances_ok=True
     )
-    df = _filtered(read_collection(spark, root, name), None, where, where_document)
+    manifest, df = _query_prologue(
+        spark, root, name, [query_vector], where, where_document
+    )
     return _serve_topk(
         df,
         manifest.metric,
@@ -473,6 +470,12 @@ def collection_query(
         include_distance=include_distance or want_d,
         payload_cols=tuple(payload),
     )
+
+
+def _distance(metric: str, raw: Column) -> Column:
+    """Chroma's distance for a metric-native score (hnswlib spaces):
+    cosine -> 1 - similarity, ip -> 1 - dot, l2 -> squared L2."""
+    return raw * raw if metric == "l2" else F.lit(1.0) - raw
 
 
 def _serve_topk(
@@ -485,9 +488,9 @@ def _serve_topk(
     include_distance: bool,
     payload_cols: tuple = ("document", "metadata"),
 ) -> DataFrame:
-    """Shared exact-rerank tail of the interactive query paths
-    (``collection_query``'s full scan and ``collection_query_ivf``'s
-    probed candidates): Project(score) -> TakeOrderedAndProject,
+    """Shared exact-rerank tail of the single-query paths
+    (``collection_query``'s full scan and the filtered ANN doors'
+    candidates): Project(score) -> TakeOrderedAndProject,
     metric-native ``score`` plus optional Chroma-convention
     ``distance``. ``payload_cols`` is the include-resolved column
     set between ``id`` and ``score``."""
@@ -500,13 +503,245 @@ def _serve_topk(
     scored = df.withColumn("score", score)
     cols = ["id", *payload_cols, "score"]
     if include_distance:
-        # Chroma's distance conventions per metric (hnswlib spaces):
-        # cosine -> 1 - similarity, ip -> 1 - dot, l2 -> squared L2.
-        dist = F.lit(1.0) - raw if metric in ("cosine", "dot") else raw * raw
-        scored = scored.withColumn("distance", dist)
+        scored = scored.withColumn("distance", _distance(metric, raw))
         cols.append("distance")
     order = [F.col("score").asc() if asc else F.col("score").desc(), F.col("id").asc()]
     return scored.orderBy(*order).limit(n_results).select(*cols)
+
+
+def _serve_topk_batch(
+    cand: DataFrame,
+    filtered: DataFrame,
+    queries: DataFrame,
+    metric: str,
+    n_results: int,
+    *,
+    score_decimals: int | None,
+    include_distance: bool,
+) -> DataFrame:
+    """Batch twin of ``_serve_topk``, the rerank tail of the batch ANN
+    doors: ``(qid, id)`` candidates join their filtered collection rows
+    and (broadcast) query vector, the manifest metric is recomputed on
+    only those rows, and a per-qid window keeps the top ``n_results``
+    by (score, id) — ``_serve_topk``'s tie-breaks, and with
+    ``_query_frame``'s double query vectors its exact scores. Output
+    ``(qid, rank, id, document, metadata, score[, distance])`` ordered
+    (qid, rank)."""
+    from pyspark.sql import Window
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import (
+        _score,
+    )
+
+    rows = cand.join(
+        filtered.select("id", "document", "metadata", "embedding"), "id"
+    ).join(F.broadcast(queries.withColumnRenamed("q_embedding", "_qe")), "qid")
+    raw, asc = _score(metric, F.col("embedding"), F.col("_qe"))
+    score = F.round(raw, score_decimals) if score_decimals is not None else raw
+    w = Window.partitionBy("qid").orderBy(
+        F.col("score").asc() if asc else F.col("score").desc(), F.col("id").asc()
+    )
+    out = (
+        rows.withColumn("score", score)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= n_results)
+    )
+    cols = ["qid", "rank", "id", "document", "metadata", "score"]
+    if include_distance:
+        out = out.withColumn("distance", _distance(metric, raw))
+        cols.append("distance")
+    return out.select(*cols).orderBy("qid", "rank")
+
+
+def _query_frame(
+    spark: SparkSession, query_vectors: list, qids=None
+) -> DataFrame:
+    """``(qid int, q_embedding array<double>)`` for the batch doors —
+    ``qids`` (default all) index ``query_vectors``. Doubles, like the
+    single doors' literal query vector, so a batch score equals its
+    single-query twin's exactly."""
+    qids = range(len(query_vectors)) if qids is None else qids
+    return spark.createDataFrame(
+        [(int(i), [float(x) for x in query_vectors[i]]) for i in qids],
+        "qid int, q_embedding array<double>",
+    )
+
+
+def _query_prologue(
+    spark: SparkSession,
+    root: str,
+    name: str,
+    query_vectors: list,
+    where: dict | None,
+    where_document: dict | None,
+    *,
+    cosine_only: bool = False,
+):
+    """Shared prologue of the query doors: manifest load, the graph
+    doors' cosine refusal (``cosine_only``), empty-batch and dimension
+    checks, and the pre-filtered collection read. Returns
+    ``(manifest, filtered)``."""
+    manifest = load_manifest(root, name)
+    if cosine_only and manifest.metric != "cosine":
+        raise EngineError(
+            f"collection metric {manifest.metric!r} != 'cosine': the "
+            "graph index generates candidates by cosine, so serving "
+            "an l2/dot collection through it would bias non-exhausted "
+            "top-k for unnormalized embeddings. Use the IVF/IVF-PQ or "
+            "exact doors for non-cosine collections."
+        )
+    if not query_vectors:
+        raise EngineError("query_vectors must be non-empty")
+    for i, v in enumerate(query_vectors):
+        if len(v) != manifest.dim:
+            raise EngineError(
+                f"query vector {i} dim {len(v)} != collection dim {manifest.dim}"
+            )
+    filtered = _filtered(
+        read_collection(spark, root, name), None, where, where_document
+    )
+    return manifest, filtered
+
+
+_EXHAUSTIVE_EF = 2**31  # saturates any graph cell: the exact-scan round
+
+
+def _kfill(
+    candidates,
+    n_queries: int,
+    *,
+    k: int,
+    n_cells: int,
+    nprobe: int,
+    ef: int | None = None,
+    batch: bool,
+    stats_out: dict | None,
+):
+    """The k-fill loop of the six filtered ANN doors (single and batch
+    x IVF / IVF-PQ / graph). The door supplies its index read and
+    ``candidates(pending, p, ef)``: the round's candidates for the
+    pending query ids at ``p`` probed cells (and beam width ``ef`` on
+    the graph doors) — filtered collection rows for a single door,
+    ``(qid, id)`` rows for a batch door.
+
+    - A query FILLS when it has at least ``k`` candidates. Single
+      doors check with an early-exit ``limit(k).count()``; batch
+      doors with one per-qid count, collecting <= |pending| rows.
+    - Filled queries settle and never re-score; the pending ids stay
+      a local list. The next round DOUBLES ``p`` for the unfilled
+      ones; once every cell is probed, the graph doors saturate
+      ``ef`` past the largest cell, which turns the beam into an exact
+      scan of each cell.
+    - EXHAUSTION stops the loop: every cell probed (and ``ef``
+      saturated, on the graph doors). That round is the exact
+      filtered scan, so a predicate that kills whole cells widens the
+      probe until it finds its matches and a door never under-fills.
+      Rounds are bounded by 1 + ceil(log2(n_cells / nprobe)), plus one
+      for ``ef``.
+    - ``stats_out`` receives ``rounds``, ``final_probe`` and
+      ``n_cells`` (and ``final_ef`` on the graph doors).
+
+    Returns the union of the settled candidates and the final probe
+    width."""
+    p = max(1, min(int(nprobe), n_cells))
+    pending = list(range(n_queries))
+    settled = []
+    rounds = 0
+    while True:
+        rounds += 1
+        cand = candidates(pending, p, ef)
+        if p >= n_cells and (ef is None or ef >= _EXHAUSTIVE_EF):
+            settled.append(cand)
+            break
+        if batch:
+            filled = {
+                int(r["qid"])
+                for r in cand.groupBy("qid").count().filter(F.col("count") >= k).collect()
+            }
+        else:
+            filled = set(pending) if cand.limit(k).count() >= k else set()
+        unfilled = [q for q in pending if q not in filled]
+        if not unfilled:
+            settled.append(cand)
+            break
+        if filled:
+            settled.append(cand.filter(~F.col("qid").isin(unfilled)))
+        pending = unfilled
+        if p < n_cells:
+            p = min(n_cells, p * 2)
+        else:
+            ef = _EXHAUSTIVE_EF
+    if stats_out is not None:
+        stats_out.update(rounds=rounds, final_probe=p, n_cells=n_cells)
+        if ef is not None:
+            stats_out["final_ef"] = ef
+    out = settled[0]
+    for part in settled[1:]:
+        out = out.unionByName(part)
+    return out, p
+
+
+def _index_cols(index_rows: DataFrame) -> list[str]:
+    """An IVF/IVF-PQ index's row columns: id first, then (IVF) the
+    embedding."""
+    return [c for c in index_rows.columns if c not in ("ivf_cell", "pq_code")]
+
+
+def _probed(filtered: DataFrame, index_rows: DataFrame, order):
+    """Single IVF/IVF-PQ ``_kfill`` candidates: the filtered collection
+    rows whose ids sit in the ``p`` nearest cells of ``order``. The
+    index scan prunes to those cell partitions, and the predicate runs
+    on the candidates only through one semi-join (Catalyst broadcasts
+    the small side)."""
+    idx_id = _index_cols(index_rows)[0]
+
+    def candidates(_pending, p, _ef):
+        ids = index_rows.filter(
+            F.col("ivf_cell").isin([int(c) for c in order[:p]])
+        ).select(F.col(idx_id).cast("string").alias("id"))
+        return filtered.join(ids, "id", "left_semi")
+
+    return candidates
+
+
+def _pairs(nn: DataFrame) -> DataFrame:
+    """A batch kNN join's output as checkpointed ``(qid, id)``
+    ``_kfill`` candidates (bounded: <= |pending| * its k rows)."""
+    return nn.select(
+        "qid", F.col("neighbor_id").cast("string").alias("id")
+    ).localCheckpoint(eager=True)
+
+
+def _restrict(index_rows: DataFrame, filtered: DataFrame) -> DataFrame:
+    """The index rows whose ids survive the filter (cells layout kept)
+    — how the batch doors evaluate the predicate once."""
+    idx_id = _index_cols(index_rows)[0]
+    return index_rows.join(
+        filtered.select(
+            F.col("id").cast(dict(index_rows.dtypes)[idx_id]).alias(idx_id)
+        ),
+        idx_id,
+        "left_semi",
+    )
+
+
+def _ivf_index(spark: SparkSession, index_path: str, manifest, verify_source: bool):
+    """``ivf_read`` for the IVF doors, which probe and rerank by the
+    manifest's metric: an index written to serve another metric is
+    refused rather than probed by one metric and ranked by another."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        ivf_read,
+    )
+
+    assigned, C, metric = ivf_read(spark, index_path, verify_source=verify_source)
+    if metric != manifest.metric:
+        raise EngineError(
+            f"IVF index serve metric {metric!r} != collection metric "
+            f"{manifest.metric!r}: the IVF doors probe and rank by the "
+            "collection's metric. Rewrite the index with "
+            f"ivf_write(..., metric={manifest.metric!r})."
+        )
+    return assigned, C
 
 
 def collection_query_ivf(
@@ -531,88 +766,34 @@ def collection_query_ivf(
     (its exact scan is the right interactive path at fixture scale;
     at 10^9 rows every filtered query paying a full scan is not).
 
-    Standard filtered-ANN algorithm: rank the index's cells by
-    centroid proximity to the query under the INDEX's serve metric
-    (stable order — ties to the lower cell, same contract as
-    ``ivf_search``), probe the nearest ``nprobe`` cells, evaluate the
-    ``where``/``where_document`` predicates ONLY on the probed
-    candidates, and DOUBLE the probe set until ``n_results`` filtered
-    candidates exist or every cell is probed — the k-fill guarantee:
-    a predicate that kills whole cells (metadata correlated with
-    vector position, the classic filtered-ANN failure) widens the
-    probe until matches are found, and the exhaustion fallback is
-    exactly the full filtered scan, never an empty under-fill.
-    Survivors are exact-reranked by the MANIFEST's metric through the
-    same tail as ``collection_query``, so the two paths return
-    byte-identical rows whenever the probe reaches every matching
-    cell.
-
-    Scale shape: each round scans ~p/n_centroids of the corpus
-    (partition-pruned on the ``ivf_cell`` layout), the predicate is
-    evaluated on candidate rows via one semi-join of the collection
-    against the probed ids (Catalyst broadcasts the small side), and
-    the fill check is ``limit(k).count()`` — an early-exit probe, not
-    a full count. Expansion rounds are bounded by log2(n_centroids).
-    ``verify_source`` keeps ``ivf_read``'s etag fence: a stale index
-    (collection mutated since the stamp) refuses rather than serving
-    deleted rows. Returns ``(id, document, metadata, score
-    [, distance])`` best-first — ``collection_query``'s contract."""
-    import numpy as np
-
+    Cells rank by centroid proximity under the manifest's metric (the
+    index must serve that metric — ``EngineError`` otherwise), and the
+    probe widens by the ``_kfill`` contract: each round scans ~p /
+    n_centroids of the corpus and evaluates the predicates only on
+    those candidates. Survivors rerank through ``collection_query``'s
+    own tail, so the two return byte-identical rows whenever the probe
+    reaches every matching cell. ``verify_source`` keeps ``ivf_read``'s
+    etag fence: a stale index refuses rather than serving deleted
+    rows. Returns ``(id, document, metadata, score[, distance])``
+    best-first — ``collection_query``'s contract."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        ivf_read,
+        _cell_order,
     )
 
-    manifest = load_manifest(root, name)
-    if len(query_vector) != manifest.dim:
-        raise EngineError(
-            f"query vector dim {len(query_vector)} != collection dim {manifest.dim}"
-        )
-    assigned, C, idx_metric = ivf_read(
-        spark, index_path, verify_source=verify_source
+    manifest, filtered = _query_prologue(
+        spark, root, name, [query_vector], where, where_document
     )
-    idx_id = [c for c in assigned.columns if c != "ivf_cell"][0]
-    q = np.asarray(query_vector, dtype=np.float64)
-    if idx_metric == "cosine":
-        qn = q / max(np.linalg.norm(q), 1e-300)
-        cn = C / np.maximum(
-            np.linalg.norm(C, axis=1, keepdims=True), 1e-300
-        )
-        cell_order = np.argsort(-(cn @ qn), kind="stable")
-    else:
-        cell_order = np.argsort(
-            ((C - q) ** 2).sum(axis=1), kind="stable"
-        )
-    n_cells = int(C.shape[0])
-    filtered = _filtered(
-        read_collection(spark, root, name), None, where, where_document
+    assigned, C = _ivf_index(spark, index_path, manifest, verify_source)
+    order = _cell_order(C, query_vector, manifest.metric)[0]
+    cand, _ = _kfill(
+        _probed(filtered, assigned, order), 1, k=int(n_results),
+        n_cells=len(C), nprobe=nprobe, batch=False, stats_out=stats_out,
     )
-    k = int(n_results)
-    p = max(1, min(int(nprobe), n_cells))
-    rounds = 0
-    while True:
-        rounds += 1
-        probed = [int(c) for c in cell_order[:p]]
-        cand_ids = assigned.filter(
-            F.col("ivf_cell").isin(probed)
-        ).select(F.col(idx_id).cast("string").alias("id"))
-        cand = filtered.join(cand_ids, "id", "left_semi")
-        if p >= n_cells or cand.limit(k).count() >= k:
-            break
-        p = min(n_cells, p * 2)
-    if stats_out is not None:
-        # observability for scale probes/tests: how far the k-fill
-        # doubling walked (rounds <= 1 + ceil(log2(n_cells/nprobe)))
-        # and the probe width it settled at (== n_cells on a
-        # cell-killing predicate — the exhaustion floor)
-        stats_out["rounds"] = rounds
-        stats_out["final_probe"] = p
-        stats_out["n_cells"] = n_cells
     return _serve_topk(
         cand,
         manifest.metric,
         query_vector,
-        k,
+        n_results,
         score_decimals=score_decimals,
         include_distance=include_distance,
     )
@@ -642,280 +823,40 @@ def collection_query_batch_ivf(
     output contract as the exact batch path:
     ``(qid, rank, id, document, metadata, score[, distance])``.
 
-    Plan: the filtered collection SEMI-restricts the index's
-    cell-assigned rows (predicate evaluated once, cells layout
-    preserved), ``ann.ivf_knn_join`` scores each query against only
-    its ``nprobe`` nearest cells (cogrouped per-cell GEMM, exact
-    scores, candidate-selection-only approximation), and queries that
-    UNDER-FILL (< n_results rows — the filter killed their probed
-    cells) are re-joined at a DOUBLED probe width until they fill or
-    every cell is probed — the per-query k-fill guarantee, with the
-    exhaustive join (== exact) as the floor. Each round's fill check
-    collects <= |queries| count rows; settled queries never re-score.
-    NOTE: this path probes AND scores with the MANIFEST's metric,
-    while ``collection_query_ivf`` probes with the index's recorded
-    serve metric — byte-equality between the two at partial probing
-    therefore holds when the index was written with
-    ``metric=manifest.metric`` (the standard configuration every
-    composed builder uses); at exhaustion both are exact regardless.
-    ``distance`` (Chroma conventions) derives from the UNROUNDED
-    exact score recomputed on the <= queries x k result rows —
-    identical contract to the exact batch path."""
-    import numpy as np
-
+    The filtered collection semi-restricts the index's cell-assigned
+    rows once (cells layout kept); each ``_kfill`` round runs
+    ``ann.ivf_knn_join`` for the pending queries against only their
+    ``p`` nearest cells (cogrouped per-cell GEMM), and the surviving
+    ids rerank through ``_serve_topk_batch`` under the manifest's
+    metric, which the index must serve (``EngineError`` otherwise) —
+    so each query's rows equal ``collection_query_ivf``'s."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         ivf_knn_join,
-        ivf_read,
     )
 
-    manifest = load_manifest(root, name)
-    if not query_vectors:
-        raise EngineError("query_vectors must be non-empty")
-    for i, v in enumerate(query_vectors):
-        if len(v) != manifest.dim:
-            raise EngineError(
-                f"query vector {i} dim {len(v)} != collection dim {manifest.dim}"
+    manifest, filtered = _query_prologue(
+        spark, root, name, query_vectors, where, where_document
+    )
+    assigned, C = _ivf_index(spark, index_path, manifest, verify_source)
+    idx_id, emb = _index_cols(assigned)[:2]
+    rows = _restrict(assigned, filtered)
+    cand, _ = _kfill(
+        lambda pending, p, _ef: _pairs(
+            ivf_knn_join(
+                _query_frame(spark, query_vectors, pending), rows, C,
+                k=int(n_results), id_col=idx_id, embedding_col=emb,
+                metric=manifest.metric, nprobe=p,
+                score_decimals=score_decimals,
             )
-    assigned, C, _idx_metric = ivf_read(
-        spark, index_path, verify_source=verify_source
-    )
-    idx_id = [c for c in assigned.columns if c != "ivf_cell"][0]
-    n_cells = int(np.asarray(C).shape[0])
-    filtered = _filtered(
-        read_collection(spark, root, name), None, where, where_document
-    )
-    # predicate evaluated ONCE, on the index rows (cells layout kept)
-    cand = assigned.join(
-        filtered.select(F.col("id").cast(dict(assigned.dtypes)[idx_id]).alias(idx_id)),
-        idx_id,
-        "left_semi",
-    )
-    queries = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(query_vectors)],
-        "qid int, q_embedding array<float>",
-    )
-    k = int(n_results)
-    p = max(1, min(int(nprobe), n_cells))
-    pending = queries
-    settled = []
-    rounds = 0
-    while True:
-        rounds += 1
-        nn = ivf_knn_join(
-            pending,
-            cand,
-            C,
-            k=k,
-            id_col=idx_id,
-            embedding_col=[c for c in assigned.columns if c != "ivf_cell"][1],
-            metric=manifest.metric,
-            nprobe=p,
-            score_decimals=score_decimals,
-        ).localCheckpoint(eager=True)  # bounded: <= |pending| * k rows
-        if p >= n_cells:
-            settled.append(nn)
-            break
-        counts = {
-            int(r["qid"]): int(r["n"])
-            for r in nn.groupBy("qid").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        unfilled = [
-            int(r["qid"])
-            for r in pending.select("qid").collect()
-            if counts.get(int(r["qid"]), 0) < k
-        ]
-        if not unfilled:
-            settled.append(nn)
-            break
-        settled.append(nn.filter(~F.col("qid").isin(unfilled)))
-        pending = queries.filter(F.col("qid").isin(unfilled))
-        p = min(n_cells, p * 2)
-    if stats_out is not None:
-        stats_out["rounds"] = rounds
-        stats_out["final_probe"] = p
-        stats_out["n_cells"] = n_cells
-    out = settled[0]
-    for part in settled[1:]:
-        out = out.unionByName(part)
-    out = out.join(
-        filtered.select(
-            F.col("id").alias("neighbor_id"), "document", "metadata",
-            *(["embedding"] if include_distance else []),
         ),
-        "neighbor_id",
-    ).withColumnRenamed("neighbor_id", "id")
-    cols = ["qid", "rank", "id", "document", "metadata", "score"]
-    if include_distance:
-        from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import (
-            _score,
-        )
-
-        qv = queries.withColumnRenamed("q_embedding", "_qe")
-        out = out.join(F.broadcast(qv), "qid")
-        raw, _asc = _score(manifest.metric, F.col("embedding"), F.col("_qe"))
-        dist = (
-            raw * raw if manifest.metric == "l2" else F.lit(1.0) - raw
-        )
-        out = out.withColumn("distance", dist)
-        cols.append("distance")
-    return out.select(*cols).orderBy("qid", "rank")
-
-
-def collection_query_batch_ivf_pq(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    query_vectors: list[list[float]],
-    n_results: int = 10,
-    *,
-    index_path: str,
-    nprobe: int = 2,
-    where: dict | None = None,
-    where_document: dict | None = None,
-    rerank_factor: int = 8,
-    score_decimals: int | None = None,
-    include_distance: bool = False,
-    verify_source: bool = True,
-    stats_out: dict | None = None,
-) -> DataFrame:
-    """``collection.query`` with MULTIPLE query embeddings served
-    through the persisted COMPRESSED (IVF-PQ) index, with optional
-    metadata/document pre-filters — the last cell of the serving
-    matrix (single/batch x IVF/IVF-PQ x filtered/unfiltered). Same
-    output contract as the other batch paths:
-    ``(qid, rank, id, document, metadata, score[, distance])``.
-
-    Plan: the filtered collection SEMI-restricts the 8-byte code
-    table once (cells layout preserved — the float vectors are never
-    scanned for candidate generation), ``pq.ivf_pq_knn_join`` ADC-
-    prescreens each query against its ``nprobe`` nearest cells to
-    ``n_results * rerank_factor`` candidates (executor-built residual
-    LUTs, the batch ADC shape), queries that UNDER-FILL (< n_results
-    candidates — the filter killed their probed cells) re-join at a
-    DOUBLED probe width until they fill or every cell is probed (the
-    per-query k-fill guarantee, exhaustive ADC as the floor), and the
-    exact rerank recomputes the MANIFEST metric on only the <=
-    queries x k x rerank_factor surviving rows — identical tie-breaks
-    (score, then id) to ``_serve_topk``, so a ``rerank_factor``
-    covering the filtered candidate count makes every row equal the
-    exact batch path's."""
-    import numpy as np
-
-    from pyspark.sql import Window
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import (
-        _score,
+        len(query_vectors), k=int(n_results), n_cells=len(C),
+        nprobe=nprobe, batch=True, stats_out=stats_out,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
-        ivf_pq_knn_join,
-        ivf_pq_read,
+    return _serve_topk_batch(
+        cand, filtered, _query_frame(spark, query_vectors), manifest.metric,
+        n_results, score_decimals=score_decimals,
+        include_distance=include_distance,
     )
-
-    manifest = load_manifest(root, name)
-    if not query_vectors:
-        raise EngineError("query_vectors must be non-empty")
-    for i, v in enumerate(query_vectors):
-        if len(v) != manifest.dim:
-            raise EngineError(
-                f"query vector {i} dim {len(v)} != collection dim {manifest.dim}"
-            )
-    encoded, C, books, _rot = ivf_pq_read(
-        spark, index_path, verify_source=verify_source,
-        with_rotation=True,
-    )
-    idx_id = [
-        c for c in encoded.columns if c not in ("ivf_cell", "pq_code")
-    ][0]
-    n_cells = int(np.asarray(C).shape[0])
-    filtered = _filtered(
-        read_collection(spark, root, name), None, where, where_document
-    )
-    # predicate evaluated ONCE, on the code rows (cells layout kept)
-    cand = encoded.join(
-        filtered.select(
-            F.col("id").cast(dict(encoded.dtypes)[idx_id]).alias(idx_id)
-        ),
-        idx_id,
-        "left_semi",
-    )
-    queries = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(query_vectors)],
-        "qid int, q_embedding array<float>",
-    )
-    k = int(n_results)
-    kk = k * int(rerank_factor)
-    p = max(1, min(int(nprobe), n_cells))
-    pending = queries
-    settled = []
-    rounds = 0
-    while True:
-        rounds += 1
-        nn = ivf_pq_knn_join(
-            pending,
-            cand,
-            C,
-            books,
-            k=kk,
-            id_col=idx_id,
-            nprobe=p,
-            rotation=_rot,
-            score_decimals=score_decimals,
-        ).localCheckpoint(eager=True)  # bounded: <= |pending| * k * rf
-        if p >= n_cells:
-            settled.append(nn)
-            break
-        counts = {
-            int(r["qid"]): int(r["n"])
-            for r in nn.groupBy("qid").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        unfilled = [
-            int(r["qid"])
-            for r in pending.select("qid").collect()
-            if counts.get(int(r["qid"]), 0) < k
-        ]
-        if not unfilled:
-            settled.append(nn)
-            break
-        settled.append(nn.filter(~F.col("qid").isin(unfilled)))
-        pending = queries.filter(F.col("qid").isin(unfilled))
-        p = min(n_cells, p * 2)
-    if stats_out is not None:
-        stats_out["rounds"] = rounds
-        stats_out["final_probe"] = p
-        stats_out["n_cells"] = n_cells
-    adc = settled[0]
-    for part in settled[1:]:
-        adc = adc.unionByName(part)
-    # exact rerank on the ADC survivors only: manifest-metric scores
-    # recomputed from the collection's float rows, _serve_topk's
-    # (score, id) tie-breaks, top-k per query
-    rows = adc.select("qid", F.col("neighbor_id").cast("string").alias("id")).join(
-        filtered.select("id", "document", "metadata", "embedding"), "id"
-    ).join(F.broadcast(queries.withColumnRenamed("q_embedding", "_qe")), "qid")
-    raw, asc = _score(manifest.metric, F.col("embedding"), F.col("_qe"))
-    score = (
-        F.round(raw, score_decimals) if score_decimals is not None else raw
-    )
-    rows = rows.withColumn("score", score)
-    order = [
-        F.col("score").asc() if asc else F.col("score").desc(),
-        F.col("id").asc(),
-    ]
-    w = Window.partitionBy("qid").orderBy(*order)
-    out = rows.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    cols = ["qid", "rank", "id", "document", "metadata", "score"]
-    if include_distance:
-        # Chroma's distance conventions per metric (see _serve_topk)
-        dist = (
-            F.lit(1.0) - raw
-            if manifest.metric in ("cosine", "dot")
-            else raw * raw
-        )
-        out = out.withColumn("distance", dist)
-        cols.append("distance")
-    return out.select(*cols).orderBy("qid", "rank")
 
 
 def collection_query_ivf_pq(
@@ -937,101 +878,253 @@ def collection_query_ivf_pq(
 ) -> DataFrame:
     """``collection.query`` served through the persisted COMPRESSED
     (IVF-PQ) index with metadata/document pre-filters — the 8-bytes-
-    per-row twin of ``collection_query_ivf``, completing the filtered
-    serving matrix (exact scan / IVF / IVF-PQ). Same filtered-ANN
-    shape: rank cells by l2 centroid proximity (ADC is residual
-    squared-L2 whatever the rerank metric — FAISS semantics; stable
-    ties), probe ``nprobe`` cells, evaluate the predicates only on
-    probed candidates, DOUBLE until ``n_results`` filtered candidates
-    exist or every cell is probed (the same k-fill guarantee, with
-    the same full-filtered-scan exhaustion floor). Survivors then go
-    through the standard IVF-PQ+refine recipe: ADC prescreens the
-    filtered candidates to ``n_results * rerank_factor`` ids over the
-    8-byte codes (``ivf_pq_search`` on the candidate-restricted code
-    table — the corpus's float vectors are never scanned), and the
-    exact rerank is ``collection_query``'s own tail over just those
-    rows, so the output contract and tie-breaks are identical to the
-    other two paths.
-
-    Scale shape: the probe scans ~p/n_centroids of the CODE table
-    (m bytes/row, partition-pruned), the predicate semi-join and the
-    fill check are the same bounded shapes as the IVF path, and the
-    float vectors are touched only for the <= k*rerank_factor
-    reranked rows. A ``rerank_factor`` large enough to cover the
+    per-row twin of ``collection_query_ivf``. Cells rank by l2
+    centroid proximity (ADC is residual squared-L2 whatever the rerank
+    metric — FAISS semantics) and the probe widens by the ``_kfill``
+    contract. Survivors then go through the standard IVF-PQ+refine
+    recipe: ADC prescreens the filtered candidates' codes to
+    ``n_results * rerank_factor`` ids (the corpus's float vectors are
+    never scanned), and the exact rerank is ``collection_query``'s own
+    tail over just those rows. A ``rerank_factor`` covering the
     filtered candidate count makes the result exact (the
-    oracle-checkable configuration); production settings trade that
-    for bytes moved. Returns ``(id, document, metadata, score
-    [, distance])`` best-first."""
+    oracle-checkable configuration). Returns ``(id, document,
+    metadata, score[, distance])`` best-first."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        _cell_order,
+    )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
         ivf_pq_read,
         ivf_pq_search,
     )
 
-    manifest = load_manifest(root, name)
-    if len(query_vector) != manifest.dim:
-        raise EngineError(
-            f"query vector dim {len(query_vector)} != collection dim {manifest.dim}"
-        )
-    encoded, C, books, _rot = ivf_pq_read(
-        spark, index_path, verify_source=verify_source,
-        with_rotation=True,
+    manifest, filtered = _query_prologue(
+        spark, root, name, [query_vector], where, where_document
     )
-    idx_id = [
-        c for c in encoded.columns if c not in ("ivf_cell", "pq_code")
-    ][0]
-    import numpy as np
-
-    q = np.asarray(query_vector, dtype=np.float64)
-    cell_order = np.argsort(((C - q) ** 2).sum(axis=1), kind="stable")
-    n_cells = int(C.shape[0])
-    filtered = _filtered(
-        read_collection(spark, root, name), None, where, where_document
+    encoded, C, books, rot = ivf_pq_read(
+        spark, index_path, verify_source=verify_source, with_rotation=True,
     )
-    k = int(n_results)
-    p = max(1, min(int(nprobe), n_cells))
-    rounds = 0
-    while True:
-        rounds += 1
-        probed = [int(c) for c in cell_order[:p]]
-        cand_codes = encoded.filter(F.col("ivf_cell").isin(probed))
-        cand = filtered.join(
-            cand_codes.select(F.col(idx_id).cast("string").alias("id")),
-            "id",
-            "left_semi",
-        )
-        if p >= n_cells or cand.limit(k).count() >= k:
-            break
-        p = min(n_cells, p * 2)
-    if stats_out is not None:
-        stats_out["rounds"] = rounds
-        stats_out["final_probe"] = p
-        stats_out["n_cells"] = n_cells
-    # ADC prescreen over the FILTERED candidates' codes only, then
-    # exact rerank through the shared tail (rerank inside
-    # ivf_pq_search would re-scan embeddings per candidate anyway;
-    # routing through _serve_topk keeps one rerank implementation)
-    fil_codes = cand_codes.join(
-        cand.select(F.col("id").cast(dict(encoded.dtypes)[idx_id]).alias(idx_id)),
-        idx_id,
-        "left_semi",
+    idx_id = _index_cols(encoded)[0]
+    order = _cell_order(C, query_vector, "l2")[0]
+    cand, p = _kfill(
+        _probed(filtered, encoded, order), 1, k=int(n_results),
+        n_cells=len(C), nprobe=nprobe, batch=False, stats_out=stats_out,
+    )
+    # ADC prescreen over the settled cells' FILTERED codes only, then
+    # exact rerank through the shared tail
+    fil_codes = _restrict(
+        encoded.filter(F.col("ivf_cell").isin([int(c) for c in order[:p]])),
+        cand,
     )
     prescreen = ivf_pq_search(
-        fil_codes,
-        C,
-        books,
-        query_vector,
-        k=k * int(rerank_factor),
-        id_col=idx_id,
-        nprobe=p,  # the cells the fill loop settled on
-        rotation=_rot,
+        fil_codes, C, books, query_vector,
+        k=int(n_results) * int(rerank_factor), id_col=idx_id, nprobe=p,
+        rotation=rot,
     ).select(F.col(idx_id).cast("string").alias("id"))
     return _serve_topk(
         filtered.join(F.broadcast(prescreen), "id", "left_semi"),
         manifest.metric,
         query_vector,
+        n_results,
+        score_decimals=score_decimals,
+        include_distance=include_distance,
+    )
+
+
+def collection_query_batch_ivf_pq(
+    spark: SparkSession,
+    root: str,
+    name: str,
+    query_vectors: list[list[float]],
+    n_results: int = 10,
+    *,
+    index_path: str,
+    nprobe: int = 2,
+    where: dict | None = None,
+    where_document: dict | None = None,
+    rerank_factor: int = 8,
+    score_decimals: int | None = None,
+    include_distance: bool = False,
+    verify_source: bool = True,
+    stats_out: dict | None = None,
+) -> DataFrame:
+    """``collection.query`` with MULTIPLE query embeddings served
+    through the persisted COMPRESSED (IVF-PQ) index, with optional
+    metadata/document pre-filters. Same output contract as the other
+    batch paths: ``(qid, rank, id, document, metadata, score[,
+    distance])``.
+
+    The filtered collection semi-restricts the code table once (the
+    float vectors are never scanned for candidate generation); each
+    ``_kfill`` round runs ``pq.ivf_pq_knn_join`` for the pending
+    queries, ADC-prescreening them against their ``p`` nearest cells
+    to ``n_results * rerank_factor`` candidates, and
+    ``_serve_topk_batch`` reranks the survivors exactly under the
+    manifest's metric — so a ``rerank_factor`` covering the filtered
+    candidate count makes every row equal the exact batch path's."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
+        ivf_pq_knn_join,
+        ivf_pq_read,
+    )
+
+    manifest, filtered = _query_prologue(
+        spark, root, name, query_vectors, where, where_document
+    )
+    encoded, C, books, rot = ivf_pq_read(
+        spark, index_path, verify_source=verify_source, with_rotation=True,
+    )
+    idx_id = _index_cols(encoded)[0]
+    codes = _restrict(encoded, filtered)
+    cand, _ = _kfill(
+        lambda pending, p, _ef: _pairs(
+            ivf_pq_knn_join(
+                _query_frame(spark, query_vectors, pending), codes, C, books,
+                k=int(n_results) * int(rerank_factor),
+                id_col=idx_id, nprobe=p, rotation=rot,
+                score_decimals=score_decimals,
+            )
+        ),
+        len(query_vectors), k=int(n_results), n_cells=len(C),
+        nprobe=nprobe, batch=True, stats_out=stats_out,
+    )
+    return _serve_topk_batch(
+        cand, filtered, _query_frame(spark, query_vectors), manifest.metric,
+        n_results, score_decimals=score_decimals,
+        include_distance=include_distance,
+    )
+
+
+def collection_query_graph(
+    spark: SparkSession,
+    root: str,
+    name: str,
+    query_vector,
+    n_results: int = 10,
+    *,
+    index_path: str,
+    nprobe: int = 2,
+    ef: int | None = None,
+    where: dict | None = None,
+    where_document: dict | None = None,
+    score_decimals: int | None = None,
+    include_distance: bool = False,
+    verify_source: bool = True,
+    stats_out: dict | None = None,
+) -> DataFrame:
+    """``collection.query`` served THROUGH the persisted per-cell
+    GRAPH index (``operators/graph_ann.py``) with metadata/document
+    pre-filters; cosine collections only (``EngineError`` otherwise —
+    the graph generates candidates by cosine). Each ``_kfill`` round
+    runs the per-cell beam (``ef``, default 4 * n_results) over the
+    probed cells — ~probed_cells * ef rows scored, the budget rather
+    than the probed row count — and keeps the filtered rows it
+    reached. The k-fill is two-dimensional here: once every cell is
+    probed ``ef`` saturates, so with the filter off the exhausted
+    answer equals ``collection_query`` byte-for-byte. Survivors rerank
+    through the shared ``_serve_topk`` tail. Returns ``(id, document,
+    metadata, score[, distance])`` — ``collection_query``'s
+    contract."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
+        _serve_cells,
+        graph_index_read,
+    )
+
+    manifest, filtered = _query_prologue(
+        spark, root, name, [query_vector], where, where_document,
+        cosine_only=True,
+    )
+    _cells, C, _meta = graph_index_read(
+        spark, index_path, verify_source=verify_source
+    )
+    k = int(n_results)
+
+    def candidates(_pending, p, e):
+        per_cell = _serve_cells(
+            spark, index_path, [("0", query_vector)], k=k, nprobe=p, ef=e,
+            verify_source=False,  # fenced once above
+        )
+        ids = per_cell.select(F.col("neighbor_id").alias("id")).dropDuplicates(["id"])
+        return filtered.join(ids, "id", "left_semi")
+
+    cand, _ = _kfill(
+        candidates, 1, k=k, n_cells=len(C), nprobe=nprobe,
+        ef=max(int(ef) if ef is not None else 4 * k, k), batch=False,
+        stats_out=stats_out,
+    )
+    return _serve_topk(
+        cand,
+        manifest.metric,
+        query_vector,
         k,
         score_decimals=score_decimals,
         include_distance=include_distance,
+    )
+
+
+def collection_query_batch_graph(
+    spark: SparkSession,
+    root: str,
+    name: str,
+    query_vectors: list,
+    n_results: int = 10,
+    *,
+    index_path: str,
+    nprobe: int = 2,
+    ef: int | None = None,
+    where: dict | None = None,
+    where_document: dict | None = None,
+    score_decimals: int | None = None,
+    include_distance: bool = False,
+    verify_source: bool = True,
+    stats_out: dict | None = None,
+) -> DataFrame:
+    """Batch ``collection.query`` through the persisted GRAPH index
+    with optional pre-filters; cosine collections only. Each
+    ``_kfill`` round runs one per-cell beam pass for every pending
+    query (``graph_ann._serve_cells``: the queries' probed cells union
+    into one partition-pruned scan), and ``_serve_topk_batch`` reranks
+    the filtered candidates under the manifest's metric — so each
+    query's rows equal ``collection_query_graph``'s, and exhausted
+    results equal the exact batch path byte-for-byte. Output:
+    ``(qid, rank, id, document, metadata, score[, distance])`` ordered
+    (qid, rank)."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
+        _serve_cells,
+        graph_index_read,
+    )
+
+    manifest, filtered = _query_prologue(
+        spark, root, name, query_vectors, where, where_document,
+        cosine_only=True,
+    )
+    _cells, C, _meta = graph_index_read(
+        spark, index_path, verify_source=verify_source
+    )
+    k = int(n_results)
+
+    def candidates(pending, p, e):
+        per_cell = _serve_cells(
+            spark, index_path, [(str(q), query_vectors[q]) for q in pending],
+            k=k, nprobe=p, ef=e,
+            verify_source=False,  # fenced once above
+        )
+        return (
+            per_cell.select(
+                F.col("qid").cast("int").alias("qid"),
+                F.col("neighbor_id").alias("id"),
+            )
+            .dropDuplicates(["qid", "id"])
+            .join(filtered.select("id"), "id", "left_semi")
+            .localCheckpoint(eager=True)  # bounded: <= |pending|*p*ef
+        )
+
+    cand, _ = _kfill(
+        candidates, len(query_vectors), k=k, n_cells=len(C), nprobe=nprobe,
+        ef=max(int(ef) if ef is not None else 4 * k, k), batch=True,
+        stats_out=stats_out,
+    )
+    return _serve_topk_batch(
+        cand, filtered, _query_frame(spark, query_vectors), manifest.metric,
+        k, score_decimals=score_decimals, include_distance=include_distance,
     )
 
 
@@ -1071,23 +1164,11 @@ def collection_query_batch(
         knn_join,
     )
 
-    manifest = load_manifest(root, name)
-    if not query_vectors:
-        raise EngineError("query_vectors must be non-empty")
-    for i, v in enumerate(query_vectors):
-        if len(v) != manifest.dim:
-            raise EngineError(
-                f"query vector {i} dim {len(v)} != collection dim {manifest.dim}"
-            )
-    corpus = _filtered(
-        read_collection(spark, root, name), None, where, where_document
-    )
-    queries = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(query_vectors)],
-        "qid int, q_embedding array<float>",
+    manifest, corpus = _query_prologue(
+        spark, root, name, query_vectors, where, where_document
     )
     nn = knn_join(
-        queries,
+        _query_frame(spark, query_vectors),
         corpus,
         k=n_results,
         metric=manifest.metric,
@@ -1103,10 +1184,7 @@ def collection_query_batch(
     cols = ["qid", "rank", "id", "document", "metadata", "score"]
     out = out.withColumnRenamed("neighbor_id", "id")
     if include_distance:
-        asc_metric = manifest.metric == "l2"
-        raw = F.col("raw_score")
-        dist = raw * raw if asc_metric else F.lit(1.0) - raw
-        out = out.withColumn("distance", dist)
+        out = out.withColumn("distance", _distance(manifest.metric, F.col("raw_score")))
         cols.append("distance")
     return out.select(*cols).orderBy("qid", "rank")
 
@@ -1938,255 +2016,3 @@ def collection_upsert(
             upsert_semantics=True,
         )
     return report.rows_written
-
-
-def collection_query_graph(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    query_vector,
-    n_results: int = 10,
-    *,
-    index_path: str,
-    nprobe: int = 2,
-    ef: int | None = None,
-    where: dict | None = None,
-    where_document: dict | None = None,
-    score_decimals: int | None = None,
-    include_distance: bool = False,
-    verify_source: bool = True,
-    stats_out: dict | None = None,
-) -> DataFrame:
-    """``collection.query`` served THROUGH the persisted per-cell
-    GRAPH index (``operators/graph_ann.py``) with metadata/document
-    pre-filters — completing the filtered serving matrix's fourth
-    column (exact scan / IVF / IVF-PQ / graph). The k-fill contract
-    is two-dimensional here: a starved fill first DOUBLES the probed
-    cell set (the IVF discipline), and once every cell is probed it
-    saturates ``ef`` past the largest cell, which by the beam's
-    documented degradation turns the final round into the EXACT
-    filtered scan — so exhaustion can never under-fill, and with the
-    filter off the exhausted answer equals ``collection_query``
-    byte-for-byte. Each round's beam scores ~probed_cells * ef rows
-    (the budget, not the probed row count); survivors rerank through
-    the shared ``_serve_topk`` tail under the MANIFEST's metric.
-    ``stats_out`` receives rounds / final_probe / final_ef / n_cells
-    for the termination assertions. Returns ``(id, document,
-    metadata, score[, distance])`` — ``collection_query``'s
-    contract."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
-        _serve_cells,
-        graph_index_read,
-    )
-
-    manifest = load_manifest(root, name)
-    if manifest.metric != "cosine":
-        raise EngineError(
-            f"collection metric {manifest.metric!r} != 'cosine': the "
-            "graph index generates candidates by cosine, so serving "
-            "an l2/dot collection through it would bias non-exhausted "
-            "top-k for unnormalized embeddings. Use the IVF/IVF-PQ or "
-            "exact doors for non-cosine collections."
-        )
-    if len(query_vector) != manifest.dim:
-        raise EngineError(
-            f"query vector dim {len(query_vector)} != collection dim "
-            f"{manifest.dim}"
-        )
-    _cells, C, _meta = graph_index_read(
-        spark, index_path, verify_source=verify_source
-    )
-    n_cells = int(C.shape[0])
-    filtered = _filtered(
-        read_collection(spark, root, name), None, where, where_document
-    )
-    k = int(n_results)
-    p = max(1, min(int(nprobe), n_cells))
-    e = max(int(ef) if ef is not None else 4 * k, k)
-    exhaustive_ef = 2**31  # saturates any cell: the exact-scan round
-    rounds = 0
-    while True:
-        rounds += 1
-        per_cell = _serve_cells(
-            spark,
-            index_path,
-            [("q", query_vector)],
-            k=k,
-            nprobe=p,
-            ef=e,
-            verify_source=False,  # checked once above
-        )
-        # widen the per-query emission to the fill target: the beam
-        # emits its best `e` per cell; rank_topk to k*? — keep all
-        # emitted candidates, the filter decides what survives
-        cand_ids = per_cell.select(
-            F.col("neighbor_id").alias("id")
-        ).dropDuplicates(["id"])
-        cand = filtered.join(cand_ids, "id", "left_semi")
-        if cand.limit(k).count() >= k:
-            break
-        if p >= n_cells and e >= exhaustive_ef:
-            break  # full filtered scan completed: nothing more exists
-        if p < n_cells:
-            p = min(n_cells, p * 2)
-        else:
-            e = exhaustive_ef
-    if stats_out is not None:
-        stats_out["rounds"] = rounds
-        stats_out["final_probe"] = p
-        stats_out["final_ef"] = e
-        stats_out["n_cells"] = n_cells
-    return _serve_topk(
-        cand,
-        manifest.metric,
-        query_vector,
-        k,
-        score_decimals=score_decimals,
-        include_distance=include_distance,
-    )
-
-
-def collection_query_batch_graph(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    query_vectors: list,
-    n_results: int = 10,
-    *,
-    index_path: str,
-    nprobe: int = 2,
-    ef: int | None = None,
-    where: dict | None = None,
-    where_document: dict | None = None,
-    score_decimals: int | None = None,
-    include_distance: bool = False,
-    verify_source: bool = True,
-    stats_out: dict | None = None,
-) -> DataFrame:
-    """Batch ``collection.query`` through the persisted GRAPH index
-    with optional pre-filters — completing the single/batch x
-    {IVF, IVF-PQ, graph} filtered serving matrix. One per-cell beam
-    pass serves every PENDING query per round (the shared
-    ``graph_ann._serve_cells`` stage: each query's probed cells union
-    into one partition-pruned scan); per-query k-fill follows the
-    ``collection_query_batch_ivf`` discipline — settled queries never
-    re-score, unfilled ones re-serve at a DOUBLED probe width, and
-    once every cell is probed ``ef`` saturates past the largest cell
-    so the final round is each remaining query's EXACT filtered scan
-    (the beam's documented degradation): exhaustion can never
-    under-fill. Candidates rerank against the collection rows under
-    the MANIFEST's metric (per-qid broadcast query join + bounded
-    window), so exhausted results equal the exact batch path
-    byte-for-byte. Output: ``(qid, rank, id, document, metadata,
-    score[, distance])`` ordered (qid, rank)."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
-        _serve_cells,
-        graph_index_read,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import (
-        _score,
-    )
-
-    manifest = load_manifest(root, name)
-    if manifest.metric != "cosine":
-        raise EngineError(
-            f"collection metric {manifest.metric!r} != 'cosine': the "
-            "graph index generates candidates by cosine, so serving "
-            "an l2/dot collection through it would bias non-exhausted "
-            "top-k for unnormalized embeddings. Use the IVF/IVF-PQ or "
-            "exact doors for non-cosine collections."
-        )
-    if not query_vectors:
-        raise EngineError("query_vectors must be non-empty")
-    for i, v in enumerate(query_vectors):
-        if len(v) != manifest.dim:
-            raise EngineError(
-                f"query vector {i} dim {len(v)} != collection dim "
-                f"{manifest.dim}"
-            )
-    _cells, C, _meta = graph_index_read(
-        spark, index_path, verify_source=verify_source
-    )
-    n_cells = int(C.shape[0])
-    filtered = _filtered(
-        read_collection(spark, root, name), None, where, where_document
-    )
-    k = int(n_results)
-    p = max(1, min(int(nprobe), n_cells))
-    e = max(int(ef) if ef is not None else 4 * k, k)
-    exhaustive_ef = 2**31
-    pending = {i: [float(x) for x in v] for i, v in enumerate(query_vectors)}
-    settled = []
-    rounds = 0
-    while True:
-        rounds += 1
-        per_cell = _serve_cells(
-            spark,
-            index_path,
-            [(str(q), v) for q, v in sorted(pending.items())],
-            k=k,
-            nprobe=p,
-            ef=e,
-            verify_source=False,  # fenced once above
-        )
-        cand = (
-            per_cell.select(
-                F.col("qid").cast("int").alias("qid"),
-                F.col("neighbor_id").alias("id"),
-            )
-            .dropDuplicates(["qid", "id"])
-            .join(filtered.select("id"), "id", "left_semi")
-            .localCheckpoint(eager=True)  # bounded: <= |pending|*p*ef
-        )
-        exhausted = p >= n_cells and e >= exhaustive_ef
-        counts = {
-            int(r["qid"]): int(r["n"])
-            for r in cand.groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        unfilled = [q for q in pending if counts.get(q, 0) < k]
-        if not unfilled or exhausted:
-            settled.append(cand)
-            break
-        settled.append(cand.filter(~F.col("qid").isin(unfilled)))
-        pending = {q: pending[q] for q in unfilled}
-        if p < n_cells:
-            p = min(n_cells, p * 2)
-        else:
-            e = exhaustive_ef
-    if stats_out is not None:
-        stats_out["rounds"] = rounds
-        stats_out["final_probe"] = p
-        stats_out["final_ef"] = e
-        stats_out["n_cells"] = n_cells
-    out = settled[0]
-    for part in settled[1:]:
-        out = out.unionByName(part)
-    queries_df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(query_vectors)],
-        "qid int, _qe array<float>",
-    )
-    payload = out.join(
-        filtered.select("id", "document", "metadata", "embedding"), "id"
-    ).join(F.broadcast(queries_df), "qid")
-    raw, asc = _score(manifest.metric, F.col("embedding"), F.col("_qe"))
-    score = (
-        F.round(raw, score_decimals) if score_decimals is not None else raw
-    )
-    payload = payload.withColumn("score", score)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").asc() if asc else F.col("score").desc(),
-        F.col("id").asc(),
-    )
-    payload = payload.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    cols = ["qid", "rank", "id", "document", "metadata", "score"]
-    if include_distance:
-        dist = raw * raw if manifest.metric == "l2" else F.lit(1.0) - raw
-        payload = payload.withColumn("distance", dist)
-        cols.append("distance")
-    return payload.select(*cols).orderBy("qid", "rank")

@@ -2313,9 +2313,10 @@ def collection_ivfpq_recall_audit(
     )
 
 
-@query(
-    "collection_query_filtered_ivf",
-    f"""
+# Oracles shared by the filtered serving doors' queries: doc 7's
+# lang='fr' neighbours (single doors) and docs 3, 7 and 11's (batch
+# doors), over-asked at 100 so every door's k-fill walks to exhaustion.
+_FR_TOP100_SQL = f"""
     WITH corpus AS (
         SELECT CAST(d.doc_id AS VARCHAR) AS id, d.lang, e.embedding AS emb
         FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
@@ -2326,8 +2327,103 @@ def collection_ivfpq_recall_audit(
         WHERE c.lang = 'fr'
     )
     SELECT id, score FROM scored ORDER BY score DESC, id LIMIT 100
-    """,
-)
+    """
+_FR_BATCH_TOP100_SQL = f"""
+    WITH corpus AS (
+        SELECT CAST(d.doc_id AS VARCHAR) AS id, d.lang, e.embedding AS emb
+        FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
+    ),
+    q AS (
+        SELECT CASE vec_id WHEN 3 THEN 0 WHEN 7 THEN 1 ELSE 2 END AS qid,
+               embedding AS qe
+        FROM embeddings WHERE vec_id IN (3, 7, 11)
+    ),
+    scored AS (
+        SELECT q.qid, c.id, {_COS_SQL} AS score
+        FROM q JOIN corpus c ON c.lang = 'fr'
+    ),
+    ranked AS (
+        SELECT qid, id, score,
+               CAST(row_number() OVER (
+                   PARTITION BY qid ORDER BY score DESC, id
+               ) AS INT) AS rank
+        FROM scored
+    )
+    SELECT qid, rank, id, score FROM ranked WHERE rank <= 100
+    """
+
+
+def _doc_vectors(spark, sf_dir, vec_ids) -> list:
+    """The raw ``embeddings`` rows of ``vec_ids``: the batch doors'
+    query vectors."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return [
+        list(e.filter(F.col("vec_id") == v).first()["embedding"])
+        for v in vec_ids
+    ]
+
+
+def _collection_vector(spark, root, name, doc_id: str) -> list:
+    """Row ``doc_id``'s embedding as hydrated into collection ``name``:
+    the single doors' query vector."""
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+        read_collection,
+    )
+
+    coll = read_collection(spark, root, name)
+    return list(coll.filter(F.col("id") == doc_id).first()["embedding"])
+
+
+def _door_index(spark, root, name, kind, *, opq=False) -> str:
+    """A seeded 8-cell ``kind`` index ("ivf", "ivf_pq" or "graph")
+    persisted over collection ``name`` and stamped to it, for the
+    serving doors' queries (``opq`` rotates the IVF-PQ residuals).
+    Returns the index path."""
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+        read_collection,
+    )
+
+    coll = read_collection(spark, root, name)
+    idx = f"{root}/{name}/_{kind.replace('_', '')}"
+    if kind == "ivf":
+        from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+            ivf_build,
+            ivf_write,
+        )
+
+        assigned, C = ivf_build(coll, n_centroids=8, seed=42)
+        ivf_write(
+            assigned, C, idx, metric="cosine", source=(root, name),
+            build={"metric": "l2", "seed": 42, "sample_fraction": None},
+        )
+    elif kind == "ivf_pq":
+        from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
+            ivf_pq_build,
+            ivf_pq_write,
+        )
+
+        enc, C, books, *rot = ivf_pq_build(
+            coll, n_centroids=8, m=8, n_codes=16, seed=42, opq=opq
+        )
+        ivf_pq_write(
+            enc, C, books, idx, source=(root, name),
+            rotation=rot[0] if rot else None,
+        )
+    else:
+        from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
+            graph_index_build,
+            graph_index_write,
+        )
+
+        assigned, C = graph_index_build(coll, n_centroids=8, M=6, seed=42)
+        graph_index_write(
+            assigned, C, idx, M=6, source=(root, name),
+            build={"seed": 42},
+        )
+    return idx
+
+
+@query("collection_query_filtered_ivf", _FR_TOP100_SQL)
 def collection_query_filtered_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-filtered ANN served THROUGH the persisted IVF index —
     the r11 verdict's missing filtered-serving shape
@@ -2343,43 +2439,13 @@ def collection_query_filtered_ivf(spark: SparkSession, sf_dir: str) -> DataFrame
     whole-cell-killed k-fill guarantee are pinned in
     tests/test_chroma_api.py; this driver query pins the exhaustion
     contract against SQL."""
-    import tempfile
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        ivf_build,
-        ivf_write,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
-        HydrationConfig,
-        hydrate,
-    )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
         collection_query_ivf,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        read_collection,
-    )
 
-    d = load_table(spark, sf_dir, "documents")
-    e = load_table(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="vdb_fivf_")
-    cfg = HydrationConfig(
-        collection_name="fivf",
-        root=root,
-        id_col="doc_id",
-        text_col="text",
-        embedding_col="embedding",
-        metadata_col="lang",
-    )
-    hydrate(spark, d.join(e, d.doc_id == e.vec_id), cfg)
-    coll = read_collection(spark, root, "fivf")
-    assigned, C = ivf_build(coll, n_centroids=8, seed=42)
-    idx = f"{root}/fivf/_ivf"
-    ivf_write(
-        assigned, C, idx, metric="cosine", source=(root, "fivf"),
-        build={"metric": "l2", "seed": 42, "sample_fraction": None},
-    )
-    qvec = list(coll.filter(F.col("id") == "7").first()["embedding"])
+    root = _hydrate_docs_collection(spark, sf_dir, "fivf")
+    idx = _door_index(spark, root, "fivf", "ivf")
+    qvec = _collection_vector(spark, root, "fivf", "7")
     return collection_query_ivf(
         spark,
         root,
@@ -2586,21 +2652,7 @@ def collection_export_import_with_index(
     return knn.unionByName(gate)
 
 
-@query(
-    "collection_query_filtered_ivfpq",
-    f"""
-    WITH corpus AS (
-        SELECT CAST(d.doc_id AS VARCHAR) AS id, d.lang, e.embedding AS emb
-        FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-    ), q AS (SELECT emb AS qe FROM corpus WHERE id = '7'),
-    scored AS (
-        SELECT c.id, {_COS_SQL} AS score
-        FROM corpus c, q
-        WHERE c.lang = 'fr'
-    )
-    SELECT id, score FROM scored ORDER BY score DESC, id LIMIT 100
-    """,
-)
+@query("collection_query_filtered_ivfpq", _FR_TOP100_SQL)
 def collection_query_filtered_ivfpq(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2616,42 +2668,13 @@ def collection_query_filtered_ivfpq(
     rerank, and MUST still equal the oracle's brute-force filtered
     cosine scan byte-for-byte. The partial-probe k-fill case (filter
     kills whole cells) is pinned in tests/test_chroma_api.py."""
-    import tempfile
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
-        ivf_pq_build,
-        ivf_pq_write,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
-        HydrationConfig,
-        hydrate,
-    )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
         collection_query_ivf_pq,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        read_collection,
-    )
 
-    d = load_table(spark, sf_dir, "documents")
-    e = load_table(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="vdb_fpq_")
-    cfg = HydrationConfig(
-        collection_name="fpq",
-        root=root,
-        id_col="doc_id",
-        text_col="text",
-        embedding_col="embedding",
-        metadata_col="lang",
-    )
-    hydrate(spark, d.join(e, d.doc_id == e.vec_id), cfg)
-    coll = read_collection(spark, root, "fpq")
-    encoded, C, books = ivf_pq_build(
-        coll, n_centroids=8, m=8, n_codes=16, seed=42
-    )
-    idx = f"{root}/fpq/_ivfpq"
-    ivf_pq_write(encoded, C, books, idx, source=(root, "fpq"))
-    qvec = list(coll.filter(F.col("id") == "7").first()["embedding"])
+    root = _hydrate_docs_collection(spark, sf_dir, "fpq")
+    idx = _door_index(spark, root, "fpq", "ivf_pq")
+    qvec = _collection_vector(spark, root, "fpq", "7")
     return collection_query_ivf_pq(
         spark,
         root,
@@ -2666,32 +2689,7 @@ def collection_query_filtered_ivfpq(
     ).select("id", "score")
 
 
-@query(
-    "collection_query_batch_filtered_ivf",
-    f"""
-    WITH corpus AS (
-        SELECT CAST(d.doc_id AS VARCHAR) AS id, d.lang, e.embedding AS emb
-        FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-    ),
-    q AS (
-        SELECT CASE vec_id WHEN 3 THEN 0 WHEN 7 THEN 1 ELSE 2 END AS qid,
-               embedding AS qe
-        FROM embeddings WHERE vec_id IN (3, 7, 11)
-    ),
-    scored AS (
-        SELECT q.qid, c.id, {_COS_SQL} AS score
-        FROM q JOIN corpus c ON c.lang = 'fr'
-    ),
-    ranked AS (
-        SELECT qid, id, score,
-               CAST(row_number() OVER (
-                   PARTITION BY qid ORDER BY score DESC, id
-               ) AS INT) AS rank
-        FROM scored
-    )
-    SELECT qid, rank, id, score FROM ranked WHERE rank <= 100
-    """,
-)
+@query("collection_query_batch_filtered_ivf", _FR_BATCH_TOP100_SQL)
 def collection_query_batch_filtered_ivf(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2705,53 +2703,17 @@ def collection_query_batch_filtered_ivf(
     including the (rounded score, id) rank column. The mixed case
     (one query settling early while another expands) is pinned in
     tests/test_chroma_api.py."""
-    import tempfile
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        ivf_build,
-        ivf_write,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
-        HydrationConfig,
-        hydrate,
-    )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
         collection_query_batch_ivf,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        read_collection,
-    )
 
-    d = load_table(spark, sf_dir, "documents")
-    e = load_table(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="vdb_bfivf_")
-    cfg = HydrationConfig(
-        collection_name="bfivf",
-        root=root,
-        id_col="doc_id",
-        text_col="text",
-        embedding_col="embedding",
-        metadata_col="lang",
-    )
-    hydrate(spark, d.join(e, d.doc_id == e.vec_id), cfg)
-    coll = read_collection(spark, root, "bfivf")
-    assigned, C = ivf_build(coll, n_centroids=8, seed=42)
-    idx = f"{root}/bfivf/_ivf"
-    ivf_write(
-        assigned, C, idx, metric="cosine", source=(root, "bfivf"),
-        build={"metric": "l2", "seed": 42, "sample_fraction": None},
-    )
-    qvecs = [
-        list(
-            e.filter(F.col("vec_id") == v).first()["embedding"]
-        )
-        for v in (3, 7, 11)
-    ]
+    root = _hydrate_docs_collection(spark, sf_dir, "bfivf")
+    idx = _door_index(spark, root, "bfivf", "ivf")
     return collection_query_batch_ivf(
         spark,
         root,
         "bfivf",
-        qvecs,
+        _doc_vectors(spark, sf_dir, (3, 7, 11)),
         n_results=100,
         index_path=idx,
         nprobe=2,
@@ -3193,32 +3155,7 @@ def collection_cdc_apply_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "collection_query_batch_filtered_ivfpq",
-    f"""
-    WITH corpus AS (
-        SELECT CAST(d.doc_id AS VARCHAR) AS id, d.lang, e.embedding AS emb
-        FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-    ),
-    q AS (
-        SELECT CASE vec_id WHEN 3 THEN 0 WHEN 7 THEN 1 ELSE 2 END AS qid,
-               embedding AS qe
-        FROM embeddings WHERE vec_id IN (3, 7, 11)
-    ),
-    scored AS (
-        SELECT q.qid, c.id, {_COS_SQL} AS score
-        FROM q JOIN corpus c ON c.lang = 'fr'
-    ),
-    ranked AS (
-        SELECT qid, id, score,
-               CAST(row_number() OVER (
-                   PARTITION BY qid ORDER BY score DESC, id
-               ) AS INT) AS rank
-        FROM scored
-    )
-    SELECT qid, rank, id, score FROM ranked WHERE rank <= 100
-    """,
-)
+@query("collection_query_batch_filtered_ivfpq", _FR_BATCH_TOP100_SQL)
 def collection_query_batch_filtered_ivfpq(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3236,53 +3173,17 @@ def collection_query_batch_filtered_ivfpq(
     vectors touched only at rerank) is the scale point; the equality
     here proves the compressed path degrades to exact under the
     oracle-checkable configuration."""
-    import tempfile
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
-        HydrationConfig,
-        hydrate,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
-        ivf_pq_build,
-        ivf_pq_write,
-    )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
         collection_query_batch_ivf_pq,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        read_collection,
-    )
 
-    d = load_table(spark, sf_dir, "documents")
-    e = load_table(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="vdb_bfpq_")
-    hydrate(
-        spark,
-        d.join(e, d.doc_id == e.vec_id),
-        HydrationConfig(
-            collection_name="bfpq",
-            root=root,
-            id_col="doc_id",
-            text_col="text",
-            embedding_col="embedding",
-            metadata_col="lang",
-        ),
-    )
-    coll = read_collection(spark, root, "bfpq")
-    enc, C, books = ivf_pq_build(
-        coll, n_centroids=8, m=8, n_codes=16, seed=42
-    )
-    idx = f"{root}/bfpq/_ivfpq"
-    ivf_pq_write(enc, C, books, idx, source=(root, "bfpq"))
-    qvecs = [
-        list(e.filter(F.col("vec_id") == v).first()["embedding"])
-        for v in (3, 7, 11)
-    ]
+    root = _hydrate_docs_collection(spark, sf_dir, "bfpq")
+    idx = _door_index(spark, root, "bfpq", "ivf_pq")
     return collection_query_batch_ivf_pq(
         spark,
         root,
         "bfpq",
-        qvecs,
+        _doc_vectors(spark, sf_dir, (3, 7, 11)),
         n_results=100,
         index_path=idx,
         nprobe=2,
@@ -3598,21 +3499,7 @@ def collection_two_writer_fence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "collection_query_opq",
-    f"""
-    WITH corpus AS (
-        SELECT CAST(d.doc_id AS VARCHAR) AS id, d.lang, e.embedding AS emb
-        FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-    ), q AS (SELECT emb AS qe FROM corpus WHERE id = '7'),
-    scored AS (
-        SELECT c.id, {_COS_SQL} AS score
-        FROM corpus c, q
-        WHERE c.lang = 'fr'
-    )
-    SELECT id, score FROM scored ORDER BY score DESC, id LIMIT 100
-    """,
-)
+@query("collection_query_opq", _FR_TOP100_SQL)
 def collection_query_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``collection_query_filtered_ivfpq``'s OPQ twin (r13 verdict
     item 8; Ge et al. 2013, public): the IVF-PQ index is built with
@@ -3628,42 +3515,13 @@ def collection_query_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-reranked answer. A rotation desync between encode and
     serve (the bug class this query gates) garbles ADC scores and
     starves the prescreen, breaking the hash."""
-    import tempfile
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
-        ivf_pq_build,
-        ivf_pq_write,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
-        HydrationConfig,
-        hydrate,
-    )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
         collection_query_ivf_pq,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        read_collection,
-    )
 
-    d = load_table(spark, sf_dir, "documents")
-    e = load_table(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="vdb_opq_")
-    cfg = HydrationConfig(
-        collection_name="opq",
-        root=root,
-        id_col="doc_id",
-        text_col="text",
-        embedding_col="embedding",
-        metadata_col="lang",
-    )
-    hydrate(spark, d.join(e, d.doc_id == e.vec_id), cfg)
-    coll = read_collection(spark, root, "opq")
-    encoded, C, books, rot = ivf_pq_build(
-        coll, n_centroids=8, m=8, n_codes=16, seed=42, opq=True
-    )
-    idx = f"{root}/opq/_ivfpq"
-    ivf_pq_write(encoded, C, books, idx, source=(root, "opq"), rotation=rot)
-    qvec = list(coll.filter(F.col("id") == "7").first()["embedding"])
+    root = _hydrate_docs_collection(spark, sf_dir, "opq")
+    idx = _door_index(spark, root, "opq", "ivf_pq", opq=True)
+    qvec = _collection_vector(spark, root, "opq", "7")
     return collection_query_ivf_pq(
         spark,
         root,
@@ -3678,21 +3536,7 @@ def collection_query_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id", "score")
 
 
-@query(
-    "collection_query_filtered_graph",
-    f"""
-    WITH corpus AS (
-        SELECT CAST(d.doc_id AS VARCHAR) AS id, d.lang, e.embedding AS emb
-        FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-    ), q AS (SELECT emb AS qe FROM corpus WHERE id = '7'),
-    scored AS (
-        SELECT c.id, {_COS_SQL} AS score
-        FROM corpus c, q
-        WHERE c.lang = 'fr'
-    )
-    SELECT id, score FROM scored ORDER BY score DESC, id LIMIT 100
-    """,
-)
+@query("collection_query_filtered_graph", _FR_TOP100_SQL)
 def collection_query_filtered_graph(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3707,49 +3551,16 @@ def collection_query_filtered_graph(
     EXACT filtered scan — byte-identical to the oracle's brute-force
     filtered cosine. The stats contract (rounds / final_probe /
     final_ef) is asserted in the query body."""
-    import tempfile
-
     from vector_databases___hydrate_chroma_db_collection_spark.errors import (
         EngineError,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
-        graph_index_build,
-        graph_index_write,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
-        HydrationConfig,
-        hydrate,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
         collection_query_graph as query_graph_door,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        read_collection,
-    )
 
-    d = load_table(spark, sf_dir, "documents")
-    e = load_table(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="vdb_fgr_")
-    cfg = HydrationConfig(
-        collection_name="fgr",
-        root=root,
-        id_col="doc_id",
-        text_col="text",
-        embedding_col="embedding",
-        metadata_col="lang",
-    )
-    hydrate(spark, d.join(e, d.doc_id == e.vec_id), cfg)
-    coll = read_collection(spark, root, "fgr")
-    assigned, C = graph_index_build(
-        coll, id_col="id", embedding_col="embedding",
-        n_centroids=8, M=6, seed=42,
-    )
-    idx = f"{root}/fgr/_graph"
-    graph_index_write(
-        assigned, C, idx, M=6, source=(root, "fgr"),
-        build={"seed": 42},
-    )
-    qvec = list(coll.filter(F.col("id") == "7").first()["embedding"])
+    root = _hydrate_docs_collection(spark, sf_dir, "fgr")
+    idx = _door_index(spark, root, "fgr", "graph")
+    qvec = _collection_vector(spark, root, "fgr", "7")
     st: dict = {}
     out = query_graph_door(
         spark,
@@ -3772,32 +3583,7 @@ def collection_query_filtered_graph(
     return res
 
 
-@query(
-    "collection_query_batch_filtered_graph",
-    f"""
-    WITH corpus AS (
-        SELECT CAST(d.doc_id AS VARCHAR) AS id, d.lang, e.embedding AS emb
-        FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-    ),
-    q AS (
-        SELECT CASE vec_id WHEN 3 THEN 0 WHEN 7 THEN 1 ELSE 2 END AS qid,
-               embedding AS qe
-        FROM embeddings WHERE vec_id IN (3, 7, 11)
-    ),
-    scored AS (
-        SELECT q.qid, c.id, {_COS_SQL} AS score
-        FROM q JOIN corpus c ON c.lang = 'fr'
-    ),
-    ranked AS (
-        SELECT qid, id, score,
-               CAST(row_number() OVER (
-                   PARTITION BY qid ORDER BY score DESC, id
-               ) AS INT) AS rank
-        FROM scored
-    )
-    SELECT qid, rank, id, score FROM ranked WHERE rank <= 100
-    """,
-)
+@query("collection_query_batch_filtered_graph", _FR_BATCH_TOP100_SQL)
 def collection_query_batch_filtered_graph(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3811,56 +3597,17 @@ def collection_query_batch_filtered_graph(
     reproduce the oracle's brute-force filtered cosine byte-for-byte;
     settled queries never re-score (the batch discipline shared with
     the IVF twin)."""
-    import tempfile
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
-        graph_index_build,
-        graph_index_write,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
-        HydrationConfig,
-        hydrate,
-    )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
         collection_query_batch_graph,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        read_collection,
-    )
 
-    d = load_table(spark, sf_dir, "documents")
-    e = load_table(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="vdb_bfgr_")
-    hydrate(
-        spark,
-        d.join(e, d.doc_id == e.vec_id),
-        HydrationConfig(
-            collection_name="bfgr",
-            root=root,
-            id_col="doc_id",
-            text_col="text",
-            embedding_col="embedding",
-            metadata_col="lang",
-        ),
-    )
-    coll = read_collection(spark, root, "bfgr")
-    assigned, C = graph_index_build(
-        coll, id_col="id", embedding_col="embedding",
-        n_centroids=8, M=6, seed=42,
-    )
-    idx = f"{root}/bfgr/_graph"
-    graph_index_write(
-        assigned, C, idx, M=6, source=(root, "bfgr"), build={"seed": 42}
-    )
-    qvecs = [
-        list(e.filter(F.col("vec_id") == v).first()["embedding"])
-        for v in (3, 7, 11)
-    ]
+    root = _hydrate_docs_collection(spark, sf_dir, "bfgr")
+    idx = _door_index(spark, root, "bfgr", "graph")
     return collection_query_batch_graph(
         spark,
         root,
         "bfgr",
-        qvecs,
+        _doc_vectors(spark, sf_dir, (3, 7, 11)),
         n_results=100,
         index_path=idx,
         nprobe=2,
