@@ -545,12 +545,10 @@ def test_ivf_rebuild_is_atomic_for_readers(spark, tmp_path):
     """Rebuilding an IVF index at the same path writes a fresh
     versioned cells directory and swaps the sidecar pointer last —
     the r10 lifecycle (same as band_index_write): the superseded
-    directory is removed only after the commit, reads resolve through
-    the sidecar's location, and a pre-versioning layout (cells at the
-    bare name, no location key) still loads."""
+    directory is removed only after the commit, and reads resolve
+    through the sidecar's location."""
     import json
     import os
-    import shutil
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         ivf_build,
@@ -578,16 +576,6 @@ def test_ivf_rebuild_is_atomic_for_readers(spark, tmp_path):
     assert c2.shape[0] == 4 and loaded.count() == emb.count()
     q = _query_vec(spark)
     assert ivf_search(loaded, c2, q, k=5, id_col="vec_id", nprobe=2).count() == 5
-
-    # legacy layout: cells at the bare name, sidecar without location
-    legacy = str(tmp_path / "ivf_legacy")
-    os.makedirs(legacy)
-    shutil.copytree(f"{path}/{meta2['location']}", f"{legacy}/cells")
-    meta_legacy = {k: v for k, v in meta2.items() if k != "location"}
-    with open(f"{legacy}/ivf_index.json", "w") as f:
-        json.dump(meta_legacy, f)
-    loaded_l, c_l, _ = ivf_read(spark, legacy)
-    assert loaded_l.count() == emb.count() and c_l.shape[0] == 4
 
 
 def test_ivf_pq_rebuild_is_atomic_for_readers(spark, tmp_path):
@@ -840,11 +828,7 @@ def test_ivf_balance_audit_flags(spark, tmp_path):
     cells healthy; a DRIFTED append (vectors scaled away from the
     trained centroids) flips refresh_recommended via the distance
     test; a HOT-CELL append (many vectors near one centroid) flips it
-    via occupancy skew; a pre-train_stats index audits occupancy only
-    (trained columns NULL)."""
-    import json
-    import os
-
+    via occupancy skew."""
     import numpy as np
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators import (
@@ -911,14 +895,6 @@ def test_ivf_balance_audit_flags(spark, tmp_path):
     }
     assert hot_audit[0]["occupancy_ratio"] > 2.5
     assert hot_audit[0]["refresh_recommended"]
-
-    # legacy index without train_stats: occupancy-only audit
-    meta = json.load(open(os.path.join(path2, "ivf_index.json")))
-    meta.pop("train_stats")
-    ann._atomic_sidecar_write(path2, "ivf_index.json", meta)
-    legacy = ann.ivf_balance_audit(spark, path2, skew_threshold=2.5).collect()
-    assert all(r["trained_mean_dist"] is None for r in legacy)
-    assert any(r["refresh_recommended"] for r in legacy)  # skew still seen
 
 
 def test_auto_n_centroids_constant_occupancy(spark):

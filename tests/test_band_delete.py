@@ -301,58 +301,6 @@ def test_refcount_delete_after_append_exact(spark, tmp_path):
     assert _gate(spark, idx, probes) == {102: True}
 
 
-def test_legacy_cntless_index_falls_back_and_upgrades(spark, tmp_path):
-    # an index written by the pre-r13 layout (cnt-less bucket_keys,
-    # id-only ids part): deletes fall back to the bands-scan
-    # derivation with identical semantics; a compact migrates the
-    # layout forward
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
-        _keys_have_cnt,
-        _read_part,
-        _sidecar_read,
-        _sidecar_write,
-    )
-
-    idx = _mk(spark, tmp_path)
-    meta = _sidecar_read(idx)
-    # rewrite the parts in the legacy shape: bucket_keys without cnt,
-    # ids without _keys (fresh dirs + sidecar swap, like old code did)
-    old_keys = _read_part(spark, idx, "bucket_keys", meta).select("band", "h")
-    nb = meta["num_buckets"]
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
-        _write_new_part,
-    )
-
-    meta["locations"]["bucket_keys"] = _write_new_part(
-        old_keys, idx, "bucket_keys", nb, meta["locations"]["bucket_keys"]
-    )
-    old_ids = spark.read.parquet(
-        os.path.join(idx, meta["locations"]["ids"])
-    ).select("doc_id")
-    meta["locations"]["ids"] = _write_new_part(
-        old_ids, idx, "ids", None, meta["locations"]["ids"]
-    )
-    meta["ddl"]["bucket_keys"] = ", ".join(
-        f"`{c}` {t}" for c, t in old_keys.dtypes
-    )
-    _sidecar_write(idx, meta)
-    assert not _keys_have_cnt(band_index_meta(idx))
-    # legacy fallback: same retirement semantics
-    band_index_delete(spark, idx, [1, 3])
-    probes = [(101, DOCS[0][1]), (103, DOCS[2][1])]
-    assert _gate(spark, idx, probes) == {101: True, 103: False}
-    # compact migrates to the r13 layout
-    band_index_compact(spark, idx)
-    m2 = band_index_meta(idx)
-    assert "cnt" in m2["ddl"]["bucket_keys"]
-    assert "_keys" in spark.read.parquet(
-        os.path.join(idx, m2["locations"]["ids"])
-    ).columns
-    # and the upgraded index deletes through the fast path correctly
-    band_index_delete(spark, idx, [4])
-    assert _gate(spark, idx, probes) == {101: True, 103: True}
-
-
 def test_append_of_tombstoned_id_refused_until_compact(spark, tmp_path):
     idx = _mk(spark, tmp_path)
     band_index_delete(spark, idx, [2])

@@ -806,75 +806,10 @@ def test_band_index_compact_bounds_files_and_preserves_content(spark, tmp_path):
 
     # torn index refuses to compact
     meta = bi.band_index_meta(path)
-    meta["pending_append"] = True
+    meta["pending_appends"] = [{"digest": "1:2", "tag": None}]
     bi._sidecar_write(bi._local_sidecar_path(path), meta)
     with pytest.raises(ValueError, match="torn append in flight"):
         bi.band_index_compact(spark, path)
-
-
-def test_band_index_legacy_torn_first_append_heals(spark, tmp_path):
-    """The nastiest replay corner: a LEGACY index (no ids guard
-    dataset) whose FIRST append tears right after the bands part
-    lands. The bands-derived fallback guard then sees the batch as
-    already indexed — trusting it would skip bucket_keys forever and
-    verbatim duplicates would gate novel. The replay must instead
-    treat the batch as fresh and let per-part dedupe converge every
-    part exactly-once."""
-    import json
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        band_index as bi,
-    )
-
-    d = load_table(spark, SF_SMOKE, "documents")
-    path = str(tmp_path / "legacy_torn")
-    bi.band_index_build(
-        d.filter(F.col("doc_id") < 20), path, id_col="doc_id", text_col="text"
-    )
-    # demote to the pre-ids layout: drop the guard dataset
-    p = bi._local_sidecar_path(path)
-    meta = bi._sidecar_read(p)
-    import shutil as _sh
-
-    _sh.rmtree(f"{path}/{meta['locations'].pop('ids')}")
-    bi._sidecar_write(p, meta)
-
-    batch = d.filter(F.col("doc_id").between(20, 29))
-    real_append_part = bi._append_part
-    calls = {"n": 0}
-
-    def tear_after_bands(df, pp, part, nb, m):
-        if calls["n"] == 1:  # bands landed; tear before bucket_keys
-            raise RuntimeError("torn after bands")
-        calls["n"] += 1
-        return real_append_part(df, pp, part, nb, m)
-
-    bi._append_part = tear_after_bands
-    try:
-        with pytest.raises(RuntimeError, match="torn"):
-            bi.band_index_append(spark, path, batch)
-    finally:
-        bi._append_part = real_append_part
-
-    # replay: bands must not double; bucket_keys must gain the batch
-    bi.band_index_append(spark, path, batch)
-    bands_t, meta2 = bi.band_index_read(spark, path)
-    assert bands_t.count() == 30 * 8
-    ids_t = spark.read.parquet(f"{path}/{meta2['locations']['ids']}")
-    assert ids_t.count() == ids_t.distinct().count() == 30
-    keys = bi.band_index_bucket_keys(spark, path)
-    # the torn attempt may have landed the batch's keys once already;
-    # the semi-join gate is multiplicity-immune so only the DISTINCT
-    # set is contractual: exactly the 30 docs' band keys
-    assert keys.distinct().count() == bands_t.select("band", "h").distinct().count()
-    # the batch's verbatim copies now gate as full-band duplicates
-    probe = batch.select((F.col("doc_id") + 1000).alias("doc_id"), "text")
-    out = novelty_gate(probe, keys, id_col="doc_id", text_col="text")
-    got = {r["doc_id"]: (r["n_hit_bands"], r["novel"]) for r in out.collect()}
-    release_cache(out)
-    assert all(got[i + 1000] == (8, False) for i in range(20, 30))
-    # a second replay is a pure no-op (guard now served by ids)
-    assert bi.band_index_append(spark, path, batch) == 0
 
 
 def _batch_digest(spark, docs, id_col):
@@ -922,7 +857,7 @@ def test_band_index_append_heals_mid_job_commit_tear(spark, tmp_path):
     # doc land, plus HALF the shingle rows, with the batch's pending
     # marker set — exactly what a mid-job-commit crash leaves
     p = bi._local_sidecar_path(path)
-    meta = bi._sidecar_read(p)
+    meta = bi.band_index_meta(p)
     digest = _batch_digest(spark, batch, "doc_id")
     meta["pending_appends"] = [{"digest": digest, "tag": None}]
     bi._sidecar_write(p, meta)
@@ -1057,68 +992,6 @@ def test_band_index_append_in_batch_duplicate_ids(spark, tmp_path):
     assert got == want
 
 
-def test_rebuild_over_legacy_index_drops_legacy_catalog_entries(spark, tmp_path):
-    """Rebuilding over a PRE-VERSIONING index (bare part dirs, no
-    "locations" map) must drop the legacy-format catalog entries
-    ``band_index_<md5(index path)>_<part>`` too — the new naming
-    scheme digests (data dir, bucket count), so deriving only the new
-    name would leave stale tables pointing at deleted directories
-    accumulating in persistent metastores."""
-    import hashlib
-    import os
-    import shutil
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        band_index as bi,
-    )
-
-    d = load_table(spark, SF_SMOKE, "documents")
-    corpus = d.filter(F.col("doc_id") < 20)
-    path = str(tmp_path / "legacy_cat")
-    bi.band_index_build(corpus, path, id_col="doc_id", text_col="text")
-    p = bi._local_sidecar_path(path)
-    meta = bi._sidecar_read(p)
-    nb = meta["num_buckets"]
-    # demote to the r9-era layout: bare part dirs, no locations map,
-    # bucketed parts registered under the legacy name format
-    legacy_digest = hashlib.md5(
-        os.path.abspath(path).encode("utf-8")
-    ).hexdigest()[:12]
-    legacy_tables = []
-    for part, d_ver in list(meta["locations"].items()):
-        # a genuine r9 metastore never saw the new-format names
-        spark.sql(
-            "DROP TABLE IF EXISTS "
-            f"{bi._bucket_table(os.path.join(p, d_ver), nb)}"
-        )
-        shutil.move(os.path.join(p, d_ver), os.path.join(p, part))
-        if part in ("bands", "bucket_keys"):
-            tbl = f"band_index_{legacy_digest}_{part}"
-            spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {tbl} ({meta['ddl'][part]}) "
-                f"USING PARQUET CLUSTERED BY (band, h) SORTED BY (band, h) "
-                f"INTO {nb} BUCKETS LOCATION '{os.path.join(p, part)}'"
-            )
-            legacy_tables.append(tbl)
-    del meta["locations"]
-    bi._sidecar_write(p, meta)
-    assert all(spark.catalog.tableExists(t) for t in legacy_tables)
-
-    # rebuild at the same path: fresh versioned dirs win, legacy dirs
-    # AND legacy catalog entries must both be gone
-    bi.band_index_build(corpus, path, id_col="doc_id", text_col="text")
-    for t in legacy_tables:
-        assert not spark.catalog.tableExists(t), t
-    for part in ("bands", "bucket_keys", "ids"):
-        assert not os.path.exists(os.path.join(p, part)), part
-    # the rebuilt index still serves
-    keys = bi.band_index_bucket_keys(spark, path)
-    probe = corpus.limit(5).select("doc_id", "text")
-    out = novelty_gate(probe, keys, id_col="doc_id", text_col="text")
-    assert all(not r["novel"] for r in out.collect())
-    release_cache(out)
-
-
 def test_band_index_append_records_per_tag_contribution(spark, tmp_path):
     """Tagged appends persist their POST-GUARD contributed id set
     (band_index_appended_ids): a replayed streaming batch excludes
@@ -1225,12 +1098,12 @@ def test_band_index_torn_tagged_append_reuses_first_attempt_record(
     # torn: the record is served from the pending marker
     rec = bi.band_index_appended_ids(spark, path, "s#7")
     assert sorted(r[0] for r in rec.collect()) == [20, 21, 22, 23, 24]
-    meta = bi._sidecar_read(bi._local_sidecar_path(path))
+    meta = bi.band_index_meta(path)
     torn_dir = meta["pending_appends"][0]["appended_ids"]
 
     # replay heals and commits the SAME recording (no rewrite)
     bi.band_index_append(spark, path, batch, tag="s#7")
-    meta2 = bi._sidecar_read(bi._local_sidecar_path(path))
+    meta2 = bi.band_index_meta(path)
     assert meta2.get("pending_appends") is None
     assert meta2["last_append_ids"] == torn_dir
     rec2 = bi.band_index_appended_ids(spark, path, "s#7")

@@ -489,66 +489,3 @@ def test_cdc_delete_insert_null_field_clears_stored_value(spark, tmp_path):
     coll2 = read_collection(spark, root, "c")
     assert coll2.count() == 20
     assert coll2.filter(F.col("id") == "4").first()["document"] is None
-
-
-def _legacy_wal_entry(spark, idx, sink, batch_events, batch_id, state):
-    """Plant a PRE-r14 WAL entry for ``batch_events``: the tag uses
-    the old per-id-LATEST (id:op:seq) digest basis and the recording
-    lacks the ``_e0`` column — exactly what an engine upgrade finds
-    on disk."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        idguard,
-    )
-
-    uniq = batch_events.groupBy(F.col("id")).agg(
-        F.expr("max_by(op, seq)").alias("op"), F.max("seq").alias("seq")
-    )
-    tagged = uniq.select(
-        F.concat_ws(":", "id", "op", F.col("seq").cast("string")).alias("_k")
-    )
-    digest, _ = idguard.batch_digests(tagged, "_k")
-    tag = f"{sink}#{batch_id}#{digest}"
-    d = "cdc_verdicts_v0001"
-    uniq.select(
-        "id", "op", "seq", F.lit("recorded_outcome").alias("outcome")
-    ).write.mode("overwrite").parquet(os.path.join(idx, d))
-    log = {"entries": [{"tag": tag, "dir": d, "state": state}]}
-    with open(os.path.join(idx, "cdc_log.json"), "w") as f:
-        json.dump(log, f)
-
-
-def test_cdc_legacy_pending_recording_refuses_with_migration_error(
-    spark, tmp_path
-):
-    # a batch that CRASHED under the pre-upgrade engine: its pending
-    # recording has no _e0, so the net mutations cannot be
-    # reconstructed against the half-mutated store — the replay must
-    # raise a clear migration error, not crash-loop on a missing
-    # column, and must NOT be re-judged as a fresh batch (the legacy
-    # digest basis is still recognized).
-    root, cfg, idx = _setup(spark, tmp_path)
-    ev = spark.createDataFrame(
-        [("insert", 1, "800", "doc", [1.0] * 4)], EV_SCHEMA
-    )
-    _legacy_wal_entry(spark, idx, "cdc_mig", ev, 0, "pending")
-    fn = cdc_ingest_batch_fn(idx, cfg, "cdc_mig")
-    with pytest.raises(EngineError, match="pre-upgrade"):
-        fn(ev, 0)
-    # no mutation happened: the store is untouched
-    assert read_collection(spark, root, "c").count() == 20
-
-
-def test_cdc_legacy_done_recording_republishes_untouched(spark, tmp_path):
-    # a batch COMMITTED by the pre-upgrade engine: the replay must
-    # find it via the legacy digest, republish the recorded verdicts
-    # verbatim (the planted sentinel outcome proves it came from the
-    # recording, not a recompute), and leave the stores alone.
-    root, cfg, idx = _setup(spark, tmp_path)
-    ev = spark.createDataFrame(
-        [("insert", 1, "900", "doc", [1.0] * 4)], EV_SCHEMA
-    )
-    _legacy_wal_entry(spark, idx, "cdc_mig2", ev, 0, "done")
-    fn = cdc_ingest_batch_fn(idx, cfg, "cdc_mig2")
-    got = {r["id"]: r["outcome"] for r in fn(ev, 0).collect()}
-    assert got == {"900": "recorded_outcome"}
-    assert read_collection(spark, root, "c").count() == 20

@@ -955,9 +955,11 @@ def test_export_refuses_stale_or_foreign_index(spark, tmp_path):
         StaleIndexError,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _atomic_sidecar_write,
         ivf_build,
         ivf_write,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _atomic_sidecar_write,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
         export_collection,

@@ -58,6 +58,25 @@ def test_minhash_lsh_matches_exact_jaccard(corpus):
     assert (1, 2) in lsh and (1, 3) in lsh
 
 
+def test_minhash_duplicate_id_never_self_pairs(spark, corpus):
+    """A row repeated verbatim (same id, same text) puts its id twice
+    into every bucket it lands in; the candidates must still pair
+    distinct ids only, and the pair set must equal the deduplicated
+    corpus's."""
+    def pairs(df):
+        return {
+            (r["id_a"], r["id_b"])
+            for r in D.minhash_lsh_pairs(
+                df, id_col="doc_id", text_col="text", threshold=0.3
+            ).collect()
+        }
+
+    dup = corpus.unionByName(corpus.filter(F.col("doc_id").isin(1, 5)))
+    got = pairs(dup)
+    assert not any(a == b for a, b in got)
+    assert got == pairs(corpus)
+
+
 def test_minhash_mega_bucket_guard(spark, corpus):
     """A planted boilerplate cluster (one band bucket >> cap) must
     complete via star expansion and still link every member to the

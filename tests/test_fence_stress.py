@@ -182,7 +182,10 @@ def test_writer_lock_mutual_exclusion_across_processes(tmp_path):
 import json, os, sys
 sys.path.insert(0, %r)
 from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-    _writer_lock, _atomic_sidecar_write,
+    _writer_lock,
+)
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    _atomic_sidecar_write,
 )
 p = sys.argv[1]
 for _ in range(50):

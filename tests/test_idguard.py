@@ -139,7 +139,7 @@ def test_band_prefilter_index_heals_filter_on_first_append(spark, tmp_path):
     )
     # demote: strip the filter from the sidecar and disk
     p = bi._local_sidecar_path(path)
-    meta = bi._sidecar_read(p)
+    meta = bi.band_index_meta(p)
     os.remove(os.path.join(p, meta.pop("id_bloom")["location"]))
     bi._sidecar_write(p, meta)
 
@@ -355,7 +355,7 @@ def test_hash_spec_mismatch_falls_back_to_exact(spark, tmp_path):
         d.filter(F.col("doc_id") < 20), path, id_col="doc_id", text_col="text"
     )
     p = bi._local_sidecar_path(path)
-    meta = bi._sidecar_read(p)
+    meta = bi.band_index_meta(p)
     meta["id_bloom"]["hash"] = "some-future-family-v9"
     bi._sidecar_write(p, meta)
 
@@ -414,7 +414,7 @@ def test_band_index_audit_flags_and_compact_resets(spark, tmp_path):
 
     # unusable filter -> capacity NULL, audit still serves
     p = bi._local_sidecar_path(path)
-    meta = bi._sidecar_read(p)
+    meta = bi.band_index_meta(p)
     meta["id_bloom"]["hash"] = "alien-family"
     bi._sidecar_write(p, meta)
     legacy = bi.band_index_audit(spark, path).first()
@@ -483,7 +483,7 @@ def test_custom_sized_filter_capacity_in_audit(spark, tmp_path):
         text_col="text",
         expected_ids=30,
     )
-    meta = bi._sidecar_read(bi._local_sidecar_path(path))
+    meta = bi.band_index_meta(path)
     assert meta["id_bloom"]["capacity"] == 30
     fresh = bi.band_index_audit(spark, path).first()
     assert fresh["filter_capacity_used"] == 1.0
@@ -494,7 +494,7 @@ def test_custom_sized_filter_capacity_in_audit(spark, tmp_path):
     )
     bi.band_index_append(spark, path, grown)
     # appends merge into the SAME filter: capacity carries forward
-    meta2 = bi._sidecar_read(bi._local_sidecar_path(path))
+    meta2 = bi.band_index_meta(path)
     assert meta2["id_bloom"]["capacity"] == 30
     # dup threshold raised out of the way: the flip must come from
     # the capacity signal
@@ -628,59 +628,6 @@ def test_batch_digest_two_seed_format():
     assert da.count(":") == 2
     assert da == db  # order-independent
     assert da != dc
-
-
-def test_legacy_pending_slot_survives_foreign_allduplicate_commit(
-    spark, tmp_path
-):
-    """Review regression: a pre-r12 single-slot pending_append record
-    must survive a DIFFERENT tag committing with zero new rows (that
-    path skips the recording block, and before the fix the commit
-    popped the legacy slot and GC'd its recording dir — the crashed
-    batch's replay then gated as fresh)."""
-    import json
-    import os
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        ann,
-    )
-
-    e = load_table(spark, SF_SMOKE, "embeddings")
-    corpus = e.filter(F.col("vec_id") < 30).select("vec_id", "embedding")
-    assigned, C = ann.ivf_build(
-        corpus, n_centroids=2, id_col="vec_id", embedding_col="embedding"
-    )
-    path = str(tmp_path / "legacy_slot")
-    ann.ivf_write(assigned, C, path, metric="l2",
-                  build={"metric": "l2", "seed": 42})
-    # tag B appends normally (so a later all-dup commit has a tag)
-    bB = e.filter(F.col("vec_id").between(30, 34)).select(
-        "vec_id", "embedding"
-    )
-    assert ann.ivf_append(spark, path, bB, tag="B") == 5
-
-    # forge a pre-r12 crashed append: legacy single-slot record with
-    # a real recording dir
-    rec_dir = ann._fresh_versioned_dir(path, "ivf_append_ids")
-    spark.createDataFrame([(35,), (36,)], "vec_id bigint").write.parquet(
-        os.path.join(path, rec_dir)
-    )
-    meta = json.load(open(os.path.join(path, "ivf_index.json")))
-    meta["pending_append"] = {"tag": "A-legacy", "appended_ids": rec_dir}
-    ann._atomic_sidecar_write(path, "ivf_index.json", meta)
-
-    # tag C commits with ZERO new rows (all ids already indexed)
-    assert ann.ivf_append(spark, path, bB, tag="C") == 0
-    meta = json.load(open(os.path.join(path, "ivf_index.json")))
-    assert [p_["tag"] for p_ in meta.get("pending_appends") or []] == [
-        "A-legacy"
-    ]
-    assert "pending_append" not in meta  # migrated, not duplicated
-    assert os.path.isdir(os.path.join(path, rec_dir))  # dir survived GC
-    assert sorted(
-        int(r[0])
-        for r in ann.ivf_appended_ids(spark, path, "A-legacy").collect()
-    ) == [35, 36]
 
 
 def test_ivf_compact_cycles_never_recycle_cells_names(spark, tmp_path):

@@ -343,7 +343,7 @@ def test_band_maintenance_defers_on_foreign_torn_append(spark, tmp_path):
         text_col="text",
     )
     p = bi._local_sidecar_path(idx)
-    meta = bi._sidecar_read(p)
+    meta = bi.band_index_meta(p)
     assert bi.band_index_audit(spark, idx).first()["compact_recommended"]
     meta["pending_appends"] = [{"tag": "foreign#9", "digest": "1:2:3"}]
     bi._sidecar_write(p, meta)

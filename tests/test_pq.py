@@ -361,17 +361,11 @@ def test_ivf_pq_balance_audit_saturation_and_occupancy(spark, tmp_path):
     cell's mean reconstructed-residual norm past the 1.1x saturation
     threshold (the signal is hull-bounded — codes cannot express how
     far out the data went — which is exactly why the threshold is
-    low); a pre-train_stats index audits occupancy only."""
-    import json
-    import os
-
+    low)."""
     from pyspark.sql import functions as F
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators import (
         pq,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _atomic_sidecar_write,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.sources.parquet import (
         load_table,
@@ -409,11 +403,3 @@ def test_ivf_pq_balance_audit_saturation_and_occupancy(spark, tmp_path):
         after[c]["mean_res_norm"] > after[c]["trained_mean_res_norm"]
         for c in dominated
     )
-
-    # legacy sidecar without train_stats: occupancy-only
-    meta = json.load(open(os.path.join(path, "ivf_pq_index.json")))
-    meta.pop("train_stats")
-    _atomic_sidecar_write(path, "ivf_pq_index.json", meta)
-    legacy = pq.ivf_pq_balance_audit(spark, path, skew_threshold=2.5).collect()
-    assert all(r["trained_mean_res_norm"] is None for r in legacy)
-    assert not any(r["refresh_recommended"] for r in legacy)  # balanced

@@ -1701,92 +1701,3 @@ def test_stream_semantic_in_batch_duplicate_rows_one_verdict(spark, tmp_path):
     rows = ingest(tripled, 0).collect()
     assert len(rows) == 1 and rows[0]["doc_id"] == 40
     assert read_collection(spark, root, "semdups").count() == 31
-
-
-def test_replay_across_digest_upgrade_matches_legacy_tag(spark, tmp_path):
-    """r12 review regression: append tags fold a content digest whose
-    format changed in r12 (single-xor -> two-seed). A batch RECORDED
-    under the legacy format (pre-upgrade run) must still be detected
-    as a replay by post-upgrade code — otherwise the replay gates as
-    fresh and its republished verdicts flip. Simulated by rewriting
-    the sidecar's recorded tag to the legacy form (what a pre-r12 run
-    left behind) and replaying the same (batch, batch_id)."""
-    import json
-    import os
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        band_index as bi,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
-        HydrationConfig,
-        hydrate,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        read_collection,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.streaming.neardup_stream import (
-        _novelty_ingest_batch_fn,
-    )
-
-    d = load_table(spark, SF_SMOKE, "documents")
-    e = load_table(spark, SF_SMOKE, "embeddings")
-    root = str(tmp_path)
-    cfg = HydrationConfig(
-        collection_name="digup",
-        root=root,
-        id_col="doc_id",
-        text_col="text",
-        embedding_col="embedding",
-    )
-    corpus = d.filter(F.col("doc_id") < 30)
-    hydrate(spark, corpus.join(e, corpus.doc_id == e.vec_id), cfg)
-    idx = f"{root}/digup/_bands"
-    bi.band_index_build(
-        read_collection(spark, root, "digup"),
-        idx,
-        id_col="id",
-        text_col="document",
-        source=(root, "digup"),
-    )
-
-    def with_emb(docs):
-        return docs.join(
-            e.select((F.col("vec_id") % 30).alias("_k"), "embedding")
-            .dropDuplicates(["_k"]),
-            docs.doc_id % 30 == F.col("_k"),
-        ).drop("_k")
-
-    ingest = _novelty_ingest_batch_fn(idx, cfg, "digup_sink")
-    b = with_emb(d.filter(F.col("doc_id").isin(40, 41)).select("doc_id", "text"))
-    first = {
-        r["doc_id"]: (r["n_hit_bands"], r["novel"])
-        for r in ingest(b, 3).collect()
-    }
-    assert all(v[1] for v in first.values())  # both novel, ingested
-
-    # rewrite the recorded tag to the PRE-r12 legacy digest form
-    # (count:xor — strip the second xor component)
-    p = bi._local_sidecar_path(idx)
-    meta = bi._sidecar_read(p)
-    tag = meta["last_append_tag"]
-    head, digest = tag.rsplit("#", 1)
-    assert digest.count(":") == 2
-    legacy_tag = head + "#" + ":".join(digest.split(":")[:2])
-    recorded = meta.pop("last_append_ids", None)
-    meta["last_append_tag"] = legacy_tag
-    if recorded is not None:
-        meta["last_append_ids"] = recorded
-    bi._sidecar_write(p, meta)
-
-    # replay of the SAME (batch, batch_id): must match via the legacy
-    # tag and republish first-attempt verdicts (docs stay novel, not
-    # flipped duplicate by their own rows)
-    replay = {
-        r["doc_id"]: (r["n_hit_bands"], r["novel"])
-        for r in ingest(b, 3).collect()
-    }
-    assert replay == first
-    # and the re-commit kept the batch addressable under the matched
-    # (legacy) tag for any further replay
-    meta2 = bi._sidecar_read(p)
-    assert meta2["last_append_tag"] == legacy_tag

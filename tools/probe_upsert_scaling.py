@@ -37,6 +37,9 @@ def main() -> None:
     from vector_databases___hydrate_chroma_db_collection_spark.operators import (
         ann,
     )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        read_sidecar,
+    )
     from vector_databases___hydrate_chroma_db_collection_spark.session import (
         get_spark,
     )
@@ -86,10 +89,7 @@ def main() -> None:
             # clustered: all 2k ids from ONE cell (locality best case)
             cells = spark.read.parquet(
                 os.path.join(
-                    path,
-                    json.load(
-                        open(os.path.join(path, "ivf_index.json"))
-                    )["location"],
+                    path, read_sidecar(path, "ivf_index.json")["location"]
                 )
             )
             big_cell = (

@@ -53,9 +53,10 @@ class StaleIndexError(EngineError):
     etag that no longer matches the collection's current state (an
     update/delete/upsert swapped the ``_current`` data dir, or an
     append added files): serving the index could return deleted ids
-    or miss updated vectors. Rebuild the index from the current
-    collection (or read with ``verify_source=False`` to accept the
-    staleness explicitly)."""
+    or miss updated vectors — or its sidecar predates
+    ``store.FORMAT_VERSION``. Rebuild the index from the current
+    collection (or, for a stale etag only, read with
+    ``verify_source=False`` to accept the staleness explicitly)."""
 
 
 class NearDuplicateError(EngineError):

@@ -32,6 +32,16 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators._arrow impo
     rows_matrix as _rows_matrix,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import knn_query
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    _atomic_sidecar_write,
+    _check_expected_etag,
+    _check_source_stamp,
+    _fresh_versioned_dir,
+    _local_sidecar_path,
+    _read_unchecked,
+    _source_stamp,
+    read_sidecar,
+)
 
 
 def np_round_half_up(a, decimals: int):
@@ -889,20 +899,6 @@ def mllib_minhash_dedup_join(
     )
 
 
-def _local_sidecar_path(path: str) -> str:
-    """The JSON sidecar is written with driver-local file IO; a remote
-    scheme (s3a/hdfs/...) would silently land the Parquet cells remote
-    and the sidecar on the driver's local disk — a half-persisted
-    index. Accept local paths and the file: scheme only, loudly."""
-    if "://" in path and not path.startswith("file://"):
-        raise NotImplementedError(
-            f"index sidecars use driver-local file IO; got {path!r} — "
-            "persist to a locally-mounted path (or file:), or write "
-            "the sidecar through your object-store client"
-        )
-    return path[len("file://"):] if path.startswith("file://") else path
-
-
 _WRITER_LOCK_STATE = None  # lazily a threading.local with per-thread depth
 
 
@@ -985,64 +981,6 @@ def _serialized_writer(default_sidecar: str = "ivf_index.json"):
     return deco
 
 
-def _atomic_sidecar_write(p: str, fname: str, meta: dict) -> None:
-    """Atomic, durable sidecar commit: temp file + fsync + rename (+
-    best-effort directory fsync), so a reader never observes a
-    half-written JSON and neither a crash mid-write NOR a power loss
-    right after the rename can leave a truncated sidecar where the
-    previous one used to be (rename alone orders nothing against data
-    writeback on most filesystems)."""
-    import json
-    import os
-
-    tmp = os.path.join(p, fname + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(p, fname))
-    try:
-        dfd = os.open(p, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-    except OSError:
-        pass  # directory fsync is best-effort (not all FS/OS allow it)
-
-
-def _fresh_versioned_dir(
-    p: str, base: str, floor_names: list | None = None
-) -> str:
-    """Next unused versioned data directory (``<base>_v1``, ...) — a
-    REBUILD never writes into the directory readers are scanning;
-    the sidecar's location pointer is swapped last (atomic), so
-    readers that follow the read API (sidecar first) see the complete
-    old index until the commit and the complete new index after.
-    Scans the filesystem (a crashed rebuild's orphan directory is
-    never reused) AND floors the version above every name in
-    ``floor_names`` — the sidecar's CURRENT recording locations. The
-    floor is what makes versions MONOTONIC across GC (the
-    ``fresh_bloom_file`` ``prev`` contract): after GC removes a
-    superseded version, a bare filesystem scan would recycle its name
-    and a reader holding an older sidecar could open a same-named
-    directory with different content."""
-    import os
-
-    v = 0
-    for name in floor_names or []:
-        if not name:
-            continue
-        try:
-            v = max(v, int(str(name).rsplit("_v", 1)[1].split(".")[0]))
-        except (IndexError, ValueError):
-            pass
-    v += 1
-    while os.path.exists(os.path.join(p, f"{base}_v{v}")):
-        v += 1
-    return f"{base}_v{v}"
-
-
 def _fresh_cells_dir(p: str, prev: str | None = None) -> str:
     """``prev`` = the sidecar's CURRENT cells location: floors the new
     version above it so repeated compact/refresh cycles (each GCs the
@@ -1051,68 +989,16 @@ def _fresh_cells_dir(p: str, prev: str | None = None) -> str:
     return _fresh_versioned_dir(p, "cells", floor_names=[prev])
 
 
-def _drop_old_cells(p: str, old_meta: dict | None, new_dir: str) -> None:
+def _drop_old_cells(p: str, old_dir: str | None, new_dir: str) -> None:
     """Post-commit cleanup of a rebuild: remove the superseded data
     directory. Runs only AFTER the new sidecar is committed, so a
     crash here leaks a directory (safe) rather than breaking
-    readers. Pre-versioning indexes kept cells at the bare ``cells``
-    name — handled by the same fallback the readers use."""
+    readers."""
     import os
     import shutil
 
-    if old_meta is None:
-        return
-    old_dir = old_meta.get("location", "cells")
-    if old_dir != new_dir:
+    if old_dir and old_dir != new_dir:
         shutil.rmtree(os.path.join(p, old_dir), ignore_errors=True)
-
-
-def _source_stamp(source: tuple[str, str] | None) -> dict | None:
-    """Staleness stamp for an index built FROM a collection: record
-    (root, name, etag-at-build). Readers re-derive the etag and
-    refuse to serve an index whose source has since been mutated —
-    without this, a persisted index keeps answering with ids a
-    ``collection_delete`` removed or vectors a ``collection_update``
-    replaced (plans/chroma_api.py:245,409 swap the ``_current`` data
-    dir; appends add files; ``collection_etag`` changes either way)."""
-    if source is None:
-        return None
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        collection_etag,
-    )
-
-    root, name = source
-    return {"root": root, "name": name, "etag": collection_etag(root, name)}
-
-
-def _check_source_stamp(meta: dict, path: str, verify_source: bool) -> None:
-    src = meta.get("source")
-    if src is None or not verify_source:
-        return
-    from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-        StaleIndexError,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        collection_etag,
-    )
-
-    try:
-        now = collection_etag(src["root"], src["name"])
-    except Exception as e:
-        raise StaleIndexError(
-            f"index at {path!r} was built from collection "
-            f"{src['name']!r} at {src['root']!r}, which is no longer "
-            f"readable ({e}); rebuild the index or pass "
-            "verify_source=False"
-        ) from e
-    if now != src["etag"]:
-        raise StaleIndexError(
-            f"index at {path!r} is STALE: collection {src['name']!r} "
-            f"at {src['root']!r} changed since the index was built "
-            f"(etag {src['etag'][:12]} -> {now[:12]}). Rebuild the "
-            "index from the current collection, or pass "
-            "verify_source=False to serve it anyway"
-        )
 
 
 def ivf_write(
@@ -1142,21 +1028,19 @@ def ivf_write(
     scoring) — without the explicit ``build`` record a refresh would
     have to guess, and guessing the wrong training metric silently
     swaps the cell layout."""
-    import json
     import os
 
     path = _local_sidecar_path(path)
     os.makedirs(path, exist_ok=True)
-    old_meta = None
+    old_meta = {}
     if os.path.exists(os.path.join(path, "ivf_index.json")):
-        with open(os.path.join(path, "ivf_index.json")) as f:
-            old_meta = json.load(f)
+        old_meta = _read_unchecked(path, "ivf_index.json")
     stamp = _source_stamp(source)
     # Rebuild-is-atomic-for-readers: fresh versioned data dir, sidecar
     # location swapped last, superseded dir removed after the commit
     # (the same lifecycle as band_index_write; the r9 in-place
     # overwrite gave concurrent readers read failures mid-rebuild).
-    cells_dir = _fresh_cells_dir(path, (old_meta or {}).get("location"))
+    cells_dir = _fresh_cells_dir(path, old_meta.get("location"))
     # One task per cell -> exactly one data file per cell dir (the
     # ivf_compact idiom). Without the cluster-by-cell exchange the
     # dynamic-partition write fans every map task into every cell it
@@ -1185,7 +1069,7 @@ def ivf_write(
         cells_back,
         F.col(idc).cast("string"),
         path,
-        ((old_meta or {}).get("id_bloom") or {}).get("location"),
+        (old_meta.get("id_bloom") or {}).get("location"),
     )
     # build-time per-cell training stats: the baseline
     # ivf_balance_audit compares appended drift against. One scan of
@@ -1218,7 +1102,7 @@ def ivf_write(
             "id_bloom": id_bloom,
         },
     )
-    _drop_old_cells(path, old_meta, cells_dir)
+    _drop_old_cells(path, old_meta.get("location"), cells_dir)
     idguard.gc_bloom_files(path, {id_bloom["location"]})
     # a rebuild supersedes every recorded per-tag append contribution
     # (the fresh sidecar carries no last_append_*) AND every tombstone
@@ -1250,17 +1134,12 @@ def ivf_read(
     the semantic gate — is delete-correct for free); pass
     ``include_tombstoned=True`` for the physical rows (compaction and
     append internals read the raw parquet directly instead)."""
-    import json
     import os
 
     path = _local_sidecar_path(path)
-    with open(os.path.join(path, "ivf_index.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(path, "ivf_index.json")
     _check_source_stamp(meta, path, verify_source)
-    # pre-versioning sidecars have no "location" — cells at bare name
-    assigned = spark.read.parquet(
-        os.path.join(path, meta.get("location", "cells"))
-    )
+    assigned = spark.read.parquet(os.path.join(path, meta["location"]))
     if not include_tombstoned:
         idc = [c for c in assigned.columns if c != "ivf_cell"][0]
         assigned = _mask_tombstones(spark, path, meta, assigned, idc)
@@ -1306,9 +1185,10 @@ def ivf_append(
     false positives) are anti-joined against the indexed id column.
     The filter is re-merged with the whole batch and committed
     BEFORE the data append (superset invariant survives any crash);
-    pre-filter indexes pay one full id scan on their first append
-    and carry a filter thereafter. ``on_existing='skip'`` (default)
-    makes replays idempotent, ``'error'`` raises naming the count. The guarded
+    an index without a usable filter pays one full id scan on its
+    next append and carries a filter thereafter.
+    ``on_existing='skip'`` (default) makes replays idempotent,
+    ``'error'`` raises naming the count. The guarded
     batch is eagerly materialized (localCheckpoint) BEFORE the append
     so the write never re-lists the directory it writes into. A
     single-dataset append needs no torn-write protocol — but NOT
@@ -1340,37 +1220,22 @@ def ivf_append(
     EARLIER batches from duplicate to novel.
 
     Returns the number of new vectors indexed (after the guard)."""
-    import json
     import os
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, "ivf_index.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(p, "ivf_index.json")
     if on_existing not in ("skip", "error"):
         raise ValueError(
             f"on_existing must be 'skip' or 'error', got {on_existing!r}"
         )
-    if expected_prev_etag is not None:
-        from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-            StaleIndexError,
-        )
-
-        src = meta.get("source")
-        recorded = src["etag"] if src else None
-        if recorded != expected_prev_etag:
-            raise StaleIndexError(
-                f"IVF index at {path!r} records etag "
-                f"{str(recorded)[:12]!r} but the append expected "
-                f"{expected_prev_etag[:12]!r}: the source collection "
-                "was mutated by something other than this append "
-                "since the index was last stamped — run ivf_refresh "
-                "instead"
-            )
+    _check_expected_etag(
+        meta, path, "ivf_index.json", expected_prev_etag, "append"
+    )
     from vector_databases___hydrate_chroma_db_collection_spark.operators import (
         idguard,
     )
 
-    loc = os.path.join(p, meta.get("location", "cells"))
+    loc = os.path.join(p, meta["location"])
     existing = spark.read.parquet(loc)
     exist_id, exist_emb = [c for c in existing.columns if c != "ivf_cell"][:2]
     ic = id_col or exist_id
@@ -1403,11 +1268,8 @@ def ivf_append(
     # republish, not raise.
     ts = _tombstones_df(spark, p, meta)
     if ts is not None and tag is not None:
-        _pend = list(meta.get("pending_appends") or [])
-        if meta.get("pending_append"):
-            _pend.append(meta["pending_append"])
         if tag == meta.get("last_append_tag") or any(
-            e.get("tag") == tag for e in _pend
+            e.get("tag") == tag for e in meta.get("pending_appends") or []
         ):
             ts = None
     if ts is not None:
@@ -1454,7 +1316,7 @@ def ivf_append(
             )
         )
     else:
-        maybe = batch  # pre-filter index: exact path for the whole batch
+        maybe = batch  # no usable filter: exact path for the whole batch
         fresh = batch.join(
             have, F.col(exist_id) == F.col("_have_id"), "left_anti"
         )
@@ -1492,16 +1354,8 @@ def ivf_append(
     # band-index design) — a single slot would let a second writer's
     # tagged append overwrite a crashed batch's record, making that
     # batch's replay gate as fresh against an index already holding
-    # its partial rows. A legacy single-slot record is MIGRATED into
-    # the list in meta itself (not just read) so every later commit
-    # path — including a different tag committing with zero new rows,
-    # which skips the recording block entirely — preserves it and its
-    # recording dir survives the keep-set GC.
+    # its partial rows.
     pending = list(meta.get("pending_appends") or [])
-    legacy = meta.pop("pending_append", None)
-    if legacy:
-        pending.append(legacy)
-        meta["pending_appends"] = pending
     prev_entry = next((e for e in pending if e.get("tag") == tag), None)
     app_dir = (prev_entry or {}).get("appended_ids")
     if n_new:
@@ -1533,7 +1387,6 @@ def ivf_append(
             meta["pending_appends"] = [
                 e for e in pending if e.get("tag") != tag
             ] + [{"tag": tag, "appended_ids": app_dir}]
-            meta.pop("pending_append", None)  # legacy single slot
         # -- persist the merged id-guard filter BEFORE the data append:
         # a committed filter must stay a SUPERSET of the indexed ids
         # (a missing id would let its replay skip the exact check and
@@ -1578,7 +1431,6 @@ def ivf_append(
             meta["pending_appends"] = remaining
         else:
             meta.pop("pending_appends", None)
-        meta.pop("pending_append", None)  # legacy single slot
         meta["last_append_tag"] = tag
         if not replay_of_completed:
             # None = recorded as an all-duplicate (empty) contribution;
@@ -1601,7 +1453,7 @@ def ivf_append(
     return n_new
 
 
-def ivf_appended_ids(spark, path: str, tag: str) -> DataFrame | None:
+def ivf_appended_ids(spark, path: str, tag: str) -> DataFrame:
     """The id set a TAGGED ``ivf_append`` actually contributed (its
     post-guard fresh ids, recorded before the batch's data write) —
     what a replayed semantic-gate micro-batch excludes from the
@@ -1610,34 +1462,26 @@ def ivf_appended_ids(spark, path: str, tag: str) -> DataFrame | None:
     why whole-batch exclusion is wrong for same-id redeliveries).
     Served from the pending record (crashed append) or
     ``last_append_tag`` (completed). Returns a one-column DataFrame
-    (empty when the append was recorded as all-duplicate), ``None``
-    when the tag matches but carries no recording, and raises
+    (empty when the append was recorded as all-duplicate) and raises
     ``KeyError`` for unknown tags."""
-    import json
     import os
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, "ivf_index.json")) as f:
-        meta = json.load(f)
-    pending = list(meta.get("pending_appends") or [])
-    legacy = meta.get("pending_append")
-    if legacy:
-        pending.append(legacy)
-    entry = next((e for e in pending if e.get("tag") == tag), None)
+    meta = read_sidecar(p, "ivf_index.json")
+    entry = next(
+        (e for e in meta.get("pending_appends") or [] if e.get("tag") == tag),
+        None,
+    )
     if entry is not None:
-        d = entry.get("appended_ids")
+        d = entry["appended_ids"]
     elif meta.get("last_append_tag") == tag:
-        if "last_append_ids" not in meta:
-            return None
         d = meta["last_append_ids"]
     else:
         raise KeyError(
             f"IVF index at {path!r} records no append tagged {tag!r}"
         )
     if d is None:
-        cells = spark.read.parquet(
-            os.path.join(p, meta.get("location", "cells"))
-        )
+        cells = spark.read.parquet(os.path.join(p, meta["location"]))
         idc = [c for c in cells.columns if c != "ivf_cell"][0]
         return cells.select(idc).limit(0)
     return spark.read.parquet(os.path.join(p, d))
@@ -1756,12 +1600,10 @@ def ivf_delete(
     id-granular masking cannot distinguish the old physical row from
     a new one under the same id. Returns the number of NEWLY
     tombstoned ids."""
-    import json
     import os
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, sidecar)) as f:
-        meta = json.load(f)
+    meta = read_sidecar(p, sidecar)
     if isinstance(ids, DataFrame):
         first = ids.columns[0]
         batch = ids.select(F.col(first).cast("string").alias("_del_id"))
@@ -1802,28 +1644,13 @@ def ivf_delete(
                 _atomic_sidecar_write(p, sidecar, meta)
         return 0
 
-    if expected_prev_etag is not None:
-        from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-            StaleIndexError,
-        )
-
-        src = meta.get("source")
-        recorded = src["etag"] if src else None
-        if recorded != expected_prev_etag:
-            raise StaleIndexError(
-                f"index at {path!r} records etag "
-                f"{str(recorded)[:12]!r} but the delete expected "
-                f"{expected_prev_etag[:12]!r}: the source collection "
-                "was mutated by something other than this delete "
-                "since the index was last stamped — run ivf_refresh "
-                "(or rebuild) instead"
-            )
+    _check_expected_etag(meta, path, sidecar, expected_prev_etag, "delete")
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators import (
         idguard,
     )
 
-    loc = os.path.join(p, meta.get("location", "cells"))
+    loc = os.path.join(p, meta["location"])
     cells = spark.read.parquet(loc)
     idc = [c for c in cells.columns if c not in ("ivf_cell", "pq_code")][0]
     have = cells.select(F.col(idc).cast("string").alias("_have_id"))
@@ -1949,7 +1776,7 @@ def _surgical_replace(
         idguard,
     )
 
-    loc = os.path.join(p, meta.get("location", "cells"))
+    loc = os.path.join(p, meta["location"])
     cells = spark.read.parquet(loc)
     idc = [c for c in cells.columns if c not in ("ivf_cell", "pq_code")][0]
     # no broadcast hint on the batch: unlike the tombstone recordings
@@ -2012,13 +1839,13 @@ def _surgical_replace(
                 meta["tombstones"] = {"location": ts_dir, "n": int(n_still)}
             else:
                 meta.pop("tombstones", None)
-    old_meta_loc = {"location": meta.get("location", "cells")}
+    old_dir = meta["location"]
     meta["location"] = new_dir
     src = meta.get("source")
     if src is not None:
         meta["source"] = _source_stamp((src["root"], src["name"]))
     _atomic_sidecar_write(p, sidecar, meta)
-    _drop_old_cells(p, old_meta_loc, new_dir)
+    _drop_old_cells(p, old_dir, new_dir)
     idguard.gc_bloom_files(p, {(meta.get("id_bloom") or {}).get("location")})
     prefix = _tombstone_prefix(sidecar)
     keep = {(meta.get("tombstones") or {}).get("location")}
@@ -2077,29 +1904,14 @@ def ivf_upsert(
     (replacing a row with itself converges).
 
     Returns ``(n_updated, n_added)``."""
-    import json
     import os
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, "ivf_index.json")) as f:
-        meta = json.load(f)
-    if expected_prev_etag is not None:
-        from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-            StaleIndexError,
-        )
-
-        src = meta.get("source")
-        recorded = src["etag"] if src else None
-        if recorded != expected_prev_etag:
-            raise StaleIndexError(
-                f"IVF index at {path!r} records etag "
-                f"{str(recorded)[:12]!r} but the upsert expected "
-                f"{expected_prev_etag[:12]!r}: the source collection "
-                "was mutated by something other than this upsert "
-                "since the index was last stamped — run ivf_refresh "
-                "instead"
-            )
-    loc = os.path.join(p, meta.get("location", "cells"))
+    meta = read_sidecar(p, "ivf_index.json")
+    _check_expected_etag(
+        meta, path, "ivf_index.json", expected_prev_etag, "upsert"
+    )
+    loc = os.path.join(p, meta["location"])
     existing = spark.read.parquet(loc)
     exist_id, exist_emb = [c for c in existing.columns if c != "ivf_cell"][:2]
     ic = id_col or exist_id
@@ -2139,12 +1951,8 @@ def ivf_tombstoned_ids(
     """The index's current tombstone set as a one-column DataFrame
     (``_ts_id`` string; empty when the index carries none) — the
     observability twin of ``ivf_appended_ids`` for the delete path."""
-    import json
-    import os
-
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, sidecar)) as f:
-        meta = json.load(f)
+    meta = read_sidecar(p, sidecar)
     ts = _tombstones_df(spark, p, meta)
     if ts is not None:
         return ts
@@ -2283,30 +2091,24 @@ def ivf_balance_audit(
     distance exceeds ``drift_threshold``-times its trained mean (the
     appended data has drifted away from the trained centroids —
     nearest-EXISTING-centroid assignment is getting worse, run
-    ``ivf_refresh``). Indexes written before training stats were
-    recorded audit occupancy only (trained columns NULL, drift
-    untested).
+    ``ivf_refresh``).
 
     ``recell_recommended`` (one value, stamped on every row) is the
     CELL-COUNT hint the constant-occupancy sizing implies
     (``auto_n_centroids``): it flips when appends have grown MEAN
-    occupancy a decade past the build-time mean (or, for indexes
-    without training stats, past 10x ``TARGET_CELL_ROWS``) — at that
+    occupancy a decade past the build-time mean (or, for an index
+    built empty, past 10x ``TARGET_CELL_ROWS``) — at that
     point every cell is uniformly overfull, ``refresh_recommended``'s
     per-cell skew test stays quiet, but a fixed-nprobe serve scans
     10x the rows the build was sized for; rebuild with
     ``n_centroids="auto"`` rather than re-training at the old count. One scan of the cells dataset (broadcast centroid
     join + map-side-combinable aggregate) — audit cost is corpus-scan
     bound, run it at the cadence appends warrant, not per batch."""
-    import json
     import os
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, "ivf_index.json")) as f:
-        meta = json.load(f)
-    cells = spark.read.parquet(
-        os.path.join(p, meta.get("location", "cells"))
-    )
+    meta = read_sidecar(p, "ivf_index.json")
+    cells = spark.read.parquet(os.path.join(p, meta["location"]))
     # audit the LOGICAL index (tombstones masked): occupancy and
     # drift verdicts drive refresh decisions about SERVABLE content —
     # rows a delete already masked must not keep a cell looking hot
@@ -2332,25 +2134,17 @@ def ivf_balance_audit(
         ],
         "ivf_cell int, n_rows bigint, mean_dist double",
     )
-    trained = meta.get("train_stats")
-    if trained is not None:
-        tdf = spark.createDataFrame(
-            [
-                (i, int(n), float(d))
-                for i, (n, d) in enumerate(
-                    zip(trained["cell_rows"], trained["cell_mean_dist"])
-                )
-            ],
-            "ivf_cell int, trained_n_rows bigint, trained_mean_dist double",
-        )
-    else:
-        tdf = spark.createDataFrame(
-            [(i, None, None) for i in range(n_cells)],
-            "ivf_cell int, trained_n_rows bigint, trained_mean_dist double",
-        )
-    built_total = (
-        sum(trained["cell_rows"]) if trained is not None else None
+    trained = meta["train_stats"]
+    tdf = spark.createDataFrame(
+        [
+            (i, int(n), float(d))
+            for i, (n, d) in enumerate(
+                zip(trained["cell_rows"], trained["cell_mean_dist"])
+            )
+        ],
+        "ivf_cell int, trained_n_rows bigint, trained_mean_dist double",
     )
+    built_total = sum(trained["cell_rows"])
     mean_occ = total / max(n_cells, 1)
     if built_total:
         recell = mean_occ >= 10.0 * max(built_total / n_cells, 1.0)
@@ -2510,15 +2304,11 @@ def ivf_recall_audit(
     design exists for: PQ saturation is hull-bounded and can audit
     near-clean under real drift — recall cannot be fooled that way).
     """
-    import json
     import os
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, "ivf_index.json")) as f:
-        meta = json.load(f)
-    cells = spark.read.parquet(
-        os.path.join(p, meta.get("location", "cells"))
-    )
+    meta = read_sidecar(p, "ivf_index.json")
+    cells = spark.read.parquet(os.path.join(p, meta["location"]))
     C = np.asarray(meta["centroids"])
     metric = meta["metric"]
     idc, embc = [c for c in cells.columns if c != "ivf_cell"][:2]
@@ -2595,7 +2385,6 @@ def ivf_compact(
     Cells large enough to need multi-file splits should lower
     ``spark.sql.files.maxRecordsPerFile`` for the session instead.
     """
-    import json
     import os
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators import (
@@ -2603,9 +2392,8 @@ def ivf_compact(
     )
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, sidecar)) as f:
-        meta = json.load(f)
-    old_dir = meta.get("location", "cells")
+    meta = read_sidecar(p, sidecar)
+    old_dir = meta["location"]
     old_loc = os.path.join(p, old_dir)
     before = _data_files(old_loc)
     df = spark.read.parquet(old_loc)
@@ -2654,7 +2442,7 @@ def ivf_compact(
     meta["location"] = new_dir
     meta.pop("tombstones", None)
     _atomic_sidecar_write(p, sidecar, meta)
-    _drop_old_cells(p, {"location": old_dir}, new_dir)
+    _drop_old_cells(p, old_dir, new_dir)
     idguard.gc_bloom_files(p, {meta["id_bloom"]["location"]})
     if ts is not None:
         import shutil
@@ -2684,18 +2472,15 @@ def ivf_refresh(
 
     Only works on stamped indexes — an index built from an arbitrary
     DataFrame has no recorded source to rebuild from (ValueError says
-    so). Sidecars written WITHOUT a ``build`` record fall back to the
-    search metric plus this function's seed/sample_fraction kwargs —
-    note the search metric is not necessarily the training metric
-    (l2-trained cells are often served with cosine), so pre-``build``
-    indexes should be refreshed once with explicit intent and
-    re-written with the record."""
-    import json
-    import os
-
+    so). An index written with ``build=None`` falls back to the search
+    metric plus this function's seed/sample_fraction kwargs — the
+    search metric is not necessarily the training metric (l2-trained
+    cells are often served with cosine), so pass ``build`` to
+    ``ivf_write`` when they differ. The sidecar is read unchecked, so
+    this also rebuilds an index whose format predates
+    ``store.FORMAT_VERSION``."""
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, "ivf_index.json")) as f:
-        meta = json.load(f)
+    meta = _read_unchecked(p, "ivf_index.json")
     src = meta.get("source")
     if src is None:
         raise ValueError(

@@ -70,7 +70,6 @@ this index is that gate's corpus state.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import shutil
 
@@ -78,15 +77,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_databases___hydrate_chroma_db_collection_spark.operators import idguard
-from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    _atomic_sidecar_write,
+    _check_expected_etag,
     _check_source_stamp,
+    _fresh_versioned_dir,
     _local_sidecar_path,
+    _read_unchecked,
     _source_stamp,
+    read_sidecar,
 )
 
 _SIDECAR = "band_index.json"
 _BUCKET_COLS = ("band", "h")
-_PARTS = ("bands", "bucket_keys", "shingles", "sizes", "ids")
 
 
 def _bucket_id(nb: int):
@@ -103,44 +106,24 @@ def _bucket_id(nb: int):
 
 def _sidecar_write(p: str, meta: dict) -> None:
     """Atomic, durable sidecar commit — the shared temp+fsync+rename
-    writer (ann._atomic_sidecar_write), so the band and vector index
+    writer (store._atomic_sidecar_write), so the band and vector index
     lifecycles cannot drift apart."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _atomic_sidecar_write,
-    )
-
     _atomic_sidecar_write(p, _SIDECAR, meta)
 
 
-def _sidecar_read(p: str) -> dict:
-    with open(os.path.join(p, _SIDECAR)) as f:
-        return json.load(f)
-
-
-def _part_dir(meta: dict, part: str) -> str:
-    """Relative data directory for a part. Pre-versioning sidecars
-    have no ``locations`` map — their parts live at the bare part
-    name (the legacy layout, still readable)."""
-    return (meta.get("locations") or {}).get(part, part)
-
-
 def _part_loc(path: str, part: str, meta: dict) -> str:
-    return os.path.join(_local_sidecar_path(path), _part_dir(meta, part))
+    return os.path.join(_local_sidecar_path(path), meta["locations"][part])
 
 
 def _fresh_part_dir(p: str, part: str, prev=None) -> str:
     """Next unused versioned directory name for a part (``bands_v1``,
-    ``bands_v2``, ...) — the shared scanner (ann._fresh_versioned_dir),
+    ``bands_v2``, ...) — the shared scanner (store._fresh_versioned_dir),
     so the band and vector index lifecycles cannot drift apart.
     ``prev`` floors the version above the sidecar's CURRENT location
     (a name, or a list of names for the append recordings), so GC of
     superseded dirs can never recycle a name under a reader holding
     an older sidecar — the ``fresh_bloom_file`` monotonicity contract
     applied to every allocator (r12)."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _fresh_versioned_dir,
-    )
-
     floors = prev if isinstance(prev, (list, tuple)) else [prev]
     return _fresh_versioned_dir(p, part, floor_names=list(floors))
 
@@ -257,40 +240,24 @@ def _read_part(
 
 
 def _drop_part_dirs(
-    spark: SparkSession, path: str, old_meta: dict | None, new_locations: dict
+    spark: SparkSession, path: str, old_meta: dict, new_locations: dict
 ) -> None:
     """Post-commit cleanup of a rebuild: remove superseded data
     directories and their catalog entries. Runs only AFTER the new
     sidecar is committed, so a crash here leaks directories (safe)
     rather than breaking readers."""
-    if old_meta is None:
-        return
     p = _local_sidecar_path(path)
     old_nb = old_meta.get("num_buckets")
-    # pre-versioning sidecars (no "locations" map) registered their
-    # bucketed parts under the legacy name format
-    # band_index_<md5(abspath(INDEX path))>_<part> — derive and drop
-    # that too, or rebuilding over an r9-era index leaves stale
-    # catalog entries pointing at deleted directories in persistent
-    # metastores.
-    legacy = old_meta.get("locations") is None
-    legacy_digest = hashlib.md5(
-        os.path.abspath(path).encode("utf-8")
-    ).hexdigest()[:12]
-    for part in _PARTS:
-        old_d = _part_dir(old_meta, part)
+    for part, old_d in (old_meta.get("locations") or {}).items():
         old_loc = os.path.join(p, old_d)
         if old_d == new_locations.get(part) or not os.path.exists(old_loc):
             continue
         if old_nb is not None and part in ("bands", "bucket_keys"):
-            for tbl in (
-                [_bucket_table(old_loc, old_nb)]
-                + ([f"band_index_{legacy_digest}_{part}"] if legacy else [])
-            ):
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                except Exception:
-                    pass
+            tbl = _bucket_table(old_loc, old_nb)
+            try:
+                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            except Exception:
+                pass
         shutil.rmtree(old_loc, ignore_errors=True)
 
 
@@ -395,7 +362,9 @@ def band_index_write(
     p = _local_sidecar_path(path)
     os.makedirs(p, exist_ok=True)
     old_meta = (
-        _sidecar_read(p) if os.path.exists(os.path.join(p, _SIDECAR)) else None
+        _read_unchecked(p, _SIDECAR)
+        if os.path.exists(os.path.join(p, _SIDECAR))
+        else {}
     )
     stamp = _source_stamp(source)
     # Bucket keys aggregated to one row per key at build time: novelty
@@ -409,7 +378,7 @@ def band_index_write(
     # key by pure arithmetic — sum(cnt) <= sum(recorded decrements) —
     # instead of scanning the corpus-order ``bands`` part for
     # survivors.
-    old_locs = (old_meta or {}).get("locations") or {}
+    old_locs = old_meta.get("locations") or {}
     locations = {
         "bands": _write_new_part(
             band_rows, path, "bands", num_buckets, old_locs.get("bands")
@@ -484,7 +453,7 @@ def band_index_write(
         spark.read.parquet(os.path.join(p, locations["ids"])),
         F.col(id_col).cast("string"),
         p,
-        ((old_meta or {}).get("id_bloom") or {}).get("location"),
+        (old_meta.get("id_bloom") or {}).get("location"),
         expected_ids=expected_ids,
     )
     meta = {
@@ -535,27 +504,6 @@ def _band_ts_ids(spark: SparkSession, p: str, meta: dict) -> DataFrame | None:
     return spark.read.parquet(os.path.join(p, ts["ids_location"]))
 
 
-def _keys_have_cnt(meta: dict) -> bool:
-    """Whether the persisted ``bucket_keys`` part carries the ``cnt``
-    contributor-refcount column (r13 layout). Legacy cnt-less indexes
-    keep working — deletes just fall back to the bands-scan retirement
-    derivation until a compact/apply rewrite upgrades the layout."""
-    return "cnt" in (meta.get("ddl") or {}).get("bucket_keys", "")
-
-
-def _ids_have_keys(spark: SparkSession, path: str, meta: dict) -> bool:
-    """Whether the persisted ``ids`` part carries each doc's ``_keys``
-    array (r13 layout) — schema probe only, no data read."""
-    locations = meta.get("locations") or {}
-    if "ids" not in locations:
-        return False
-    loc = os.path.join(_local_sidecar_path(path), locations["ids"])
-    try:
-        return "_keys" in spark.read.parquet(loc).columns
-    except Exception:
-        return False
-
-
 def _band_key_decs(spark: SparkSession, p: str, meta: dict) -> DataFrame | None:
     """The cumulative per-key delete decrements ``(band, h, dec)`` —
     how many tombstoned docs emitted each key since the last physical
@@ -603,17 +551,15 @@ def band_index_delete(
       a compact purges (``TombstonedIdError``, the ``ivf_append``
       discipline).
     - **removed keys**: the ``(band, h)`` bucket keys of the deleted
-      docs that NO SURVIVING document also emits. On the r13 layout
-      this is pure REFCOUNT ARITHMETIC — corpus-independent per
-      batch: the batch docs' key arrays come off the ``ids`` part in
-      the same lookup that resolves which batch ids are indexed, the
-      per-key decrements merge into a small cumulative recording
+      docs that NO SURVIVING document also emits. This is pure
+      REFCOUNT ARITHMETIC — corpus-independent per batch: the batch
+      docs' key arrays come off the ``ids`` part in the same lookup
+      that resolves which batch ids are indexed, the per-key
+      decrements merge into a small cumulative recording
       (``key_decs``), and a key retires iff its total contributor
       count (sum of ``cnt`` rows in ``bucket_keys``, restricted to
       the batch's keys by a broadcast semi — one narrow 3-int-column
-      lookup, never the ``bands`` part) is fully decremented. Legacy
-      cnt-less layouts fall back to the old one-bands-scan
-      derivation until a compact/apply rewrite upgrades them.
+      lookup, never the ``bands`` part) is fully decremented.
       ``band_index_bucket_keys`` serves ``keys MINUS removed`` via a
       broadcast anti-join, which equals "distinct keys of the
       surviving docs" exactly: a shared key keeps gating duplicates
@@ -635,7 +581,7 @@ def band_index_delete(
     ``ids`` part is written last) — replay that append first, then
     delete. Returns the number of newly tombstoned ids."""
     p = _local_sidecar_path(path)
-    meta = _sidecar_read(p)
+    meta = read_sidecar(p, _SIDECAR)
     id_list = None
     if isinstance(ids, DataFrame):
         first = ids.columns[0]
@@ -671,82 +617,48 @@ def band_index_delete(
                 meta["source"] = stamp
                 _sidecar_write(p, meta)
         return 0
-    if expected_prev_etag is not None:
-        from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-            StaleIndexError,
-        )
-
-        src = meta.get("source")
-        recorded = src["etag"] if src else None
-        if recorded != expected_prev_etag:
-            raise StaleIndexError(
-                f"band index at {path!r} records etag "
-                f"{str(recorded)[:12]!r} but the delete expected "
-                f"{expected_prev_etag[:12]!r}: the source collection "
-                "was mutated by something other than this delete "
-                "since the index was last stamped — run "
-                "band_index_refresh instead"
-            )
+    _check_expected_etag(meta, path, _SIDECAR, expected_prev_etag, "delete")
     # which batch ids are actually indexed: Bloom prescreen (negative
-    # = definitely not indexed) + exact join on the ids part. On the
-    # r13 layout the join also fetches each present doc's (band, h)
-    # key array — the retirement arithmetic's whole input, so the
-    # delete never opens the corpus-order ``bands`` part at all.
-    locations = meta.get("locations") or {}
+    # = definitely not indexed) + exact join on the ids part. The join
+    # also fetches each present doc's (band, h) key array — the
+    # retirement arithmetic's whole input, so the delete never opens
+    # the corpus-order ``bands`` part at all.
     idc = meta["id_col"]
-    fast = _keys_have_cnt(meta) and _ids_have_keys(spark, path, meta)
-    if "ids" in locations:
-        have = spark.read.parquet(os.path.join(p, locations["ids"]))
-        if id_list is not None and 0 < len(id_list) <= 10_000:
-            # bounded LITERAL batch: push a typed isin into the scan —
-            # the ids part is written range-clustered on the id (see
-            # the build/compact/apply writers), so parquet row-group
-            # min/max stats prune everything outside the batch's id
-            # range and the lookup stops paying the corpus-order read
-            # (the LAST linear term on the delete path). A DataFrame
-            # batch or a huge list keeps the plain scan — honest, and
-            # semantically identical (the join below re-restricts).
-            id_type = meta.get("id_type")
-            try:
-                vals = (
-                    [int(i) for i in id_list]
-                    if id_type in ("int", "bigint", "smallint", "tinyint")
-                    else [str(i) for i in id_list]
-                )
-                have = have.filter(F.col(idc).isin(vals))
-            except (TypeError, ValueError):
-                pass  # uncastable literals: plain scan
-    else:  # legacy pre-ids index: derive once from bands
-        have = _read_part(spark, path, "bands", meta).select(idc).distinct()
-    have_cols = [F.col(idc).cast("string").alias("_have_id")] + (
-        [F.col("_keys")] if fast else []
-    )
-    have = have.select(*have_cols)
+    have = spark.read.parquet(os.path.join(p, meta["locations"]["ids"]))
+    if id_list is not None and 0 < len(id_list) <= 10_000:
+        # bounded LITERAL batch: push a typed isin into the scan —
+        # the ids part is written range-clustered on the id (see
+        # the build/compact/apply writers), so parquet row-group
+        # min/max stats prune everything outside the batch's id
+        # range and the lookup stops paying the corpus-order read
+        # (the LAST linear term on the delete path). A DataFrame
+        # batch or a huge list keeps the plain scan — honest, and
+        # semantically identical (the join below re-restricts).
+        id_type = meta["id_type"]
+        try:
+            vals = (
+                [int(i) for i in id_list]
+                if id_type in ("int", "bigint", "smallint", "tinyint")
+                else [str(i) for i in id_list]
+            )
+            have = have.filter(F.col(idc).isin(vals))
+        except (TypeError, ValueError):
+            pass  # uncastable literals: plain scan
+    have = have.select(F.col(idc).cast("string").alias("_have_id"), "_keys")
     # ids are unique in the part, so an inner join keeps batch
     # cardinality while attaching _keys (a semi-join would drop them)
-    join_kind = "inner" if fast else "left_semi"
     bloom_meta = meta.get("id_bloom")
+    probe = fresh_batch
     if idguard.filter_usable(bloom_meta):
         _neg, maybe, _st = idguard.bloom_split(
             fresh_batch, p, bloom_meta, "_del_id"
         )
-        present = (
-            maybe.join(
-                have, F.col("_del_id") == F.col("_have_id"), join_kind
-            )
-            if maybe is not None
-            else fresh_batch.limit(0).join(
-                have, F.col("_del_id") == F.col("_have_id"), join_kind
-            )
-        )
-    else:
-        present = fresh_batch.join(
-            have, F.col("_del_id") == F.col("_have_id"), join_kind
-        )
-    present = present.select(
-        F.col("_del_id").alias("_ts_id"),
-        *([F.col("_keys")] if fast else []),
-    ).localCheckpoint(eager=True)
+        probe = maybe if maybe is not None else fresh_batch.limit(0)
+    present = (
+        probe.join(have, F.col("_del_id") == F.col("_have_id"), "inner")
+        .select(F.col("_del_id").alias("_ts_id"), "_keys")
+        .localCheckpoint(eager=True)
+    )
     n_new = present.count()
     commit = n_new > 0
     if commit:
@@ -769,81 +681,50 @@ def band_index_delete(
             "overwrite"
         ).parquet(os.path.join(p, ids_dir))
         n_ts = int(obs_ids.get["n"])
-        decs_dir = None
-        if fast:
-            # retirement by refcount arithmetic — O(batch keys), no
-            # bands scan: the batch's per-key decrements (each doc
-            # emits a key at most once, so exploding the present docs'
-            # key arrays and counting IS the contributor loss) merge
-            # into the cumulative decs recording; a key retires iff
-            # its total contributor count (sum of cnt rows in
-            # bucket_keys, restricted to the batch's keys by a
-            # broadcast semi — the one narrow lookup) has been fully
-            # decremented. Equal to the old survivors-scan derivation
-            # because cumulative decs = all tombstoned docs' emissions.
-            dec_delta = (
-                present.select(F.explode("_keys").alias("_k"))
-                .select(F.col("_k.band").alias("band"), F.col("_k.h").alias("h"))
-                .groupBy("band", "h")
-                .agg(F.count(F.lit(1)).alias("dec"))
-            )
-            decs_prev = _band_key_decs(spark, p, meta)
-            merged_decs = (
-                dec_delta
-                if decs_prev is None
-                else decs_prev.unionByName(dec_delta)
-                .groupBy("band", "h")
-                .agg(F.sum("dec").alias("dec"))
-            )
-            decs_dir = _fresh_part_dir(
-                p, "key_decs", prev=[ts_cur.get("decs_location")]
-            )
-            merged_decs.write.mode("overwrite").parquet(
-                os.path.join(p, decs_dir)
-            )
-            merged_decs = spark.read.parquet(os.path.join(p, decs_dir))
-            cand = dec_delta.select("band", "h").localCheckpoint(eager=True)
-            totals = (
-                _read_part(spark, path, "bucket_keys", meta)
-                .join(F.broadcast(cand), ["band", "h"], "left_semi")
-                .groupBy("band", "h")
-                .agg(F.sum("cnt").alias("_cnt"))
-            )
-            removed_new = (
-                totals.join(F.broadcast(merged_decs), ["band", "h"])
-                .filter(F.col("_cnt") <= F.col("dec"))
-                .select("band", "h")
-            )
-        else:
-            # legacy cnt-less layout: ONE scan of bands — dead keys
-            # (broadcast semi on the batch), survivors restricted to
-            # those keys (broadcast semi again), then a batch-sized
-            # anti-join
-            bands_df = _read_part(spark, path, "bands", meta)
-            all_ts = spark.read.parquet(os.path.join(p, ids_dir))
-            dead_keys = (
-                bands_df.join(
-                    F.broadcast(present_ids),
-                    F.col(idc).cast("string") == F.col("_ts_id"),
-                    "left_semi",
-                )
-                .select("band", "h")
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            alive_on_dead = (
-                bands_df.join(
-                    F.broadcast(all_ts),
-                    F.col(idc).cast("string") == F.col("_ts_id"),
-                    "left_anti",
-                )
-                .join(F.broadcast(dead_keys), ["band", "h"], "left_semi")
-                .select("band", "h")
-                .distinct()
-            )
-            removed_new = dead_keys.join(
-                alive_on_dead, ["band", "h"], "left_anti"
-            )
+        # retirement by refcount arithmetic — O(batch keys), no
+        # bands scan: the batch's per-key decrements (each doc
+        # emits a key at most once, so exploding the present docs'
+        # key arrays and counting IS the contributor loss) merge
+        # into the cumulative decs recording; a key retires iff
+        # its total contributor count (sum of cnt rows in
+        # bucket_keys, restricted to the batch's keys by a
+        # broadcast semi — the one narrow lookup) has been fully
+        # decremented. Equal to deriving the survivors' keys from a
+        # bands scan, because cumulative decs = all tombstoned docs'
+        # emissions.
+        dec_delta = (
+            present.select(F.explode("_keys").alias("_k"))
+            .select(F.col("_k.band").alias("band"), F.col("_k.h").alias("h"))
+            .groupBy("band", "h")
+            .agg(F.count(F.lit(1)).alias("dec"))
+        )
+        decs_prev = _band_key_decs(spark, p, meta)
+        merged_decs = (
+            dec_delta
+            if decs_prev is None
+            else decs_prev.unionByName(dec_delta)
+            .groupBy("band", "h")
+            .agg(F.sum("dec").alias("dec"))
+        )
+        decs_dir = _fresh_part_dir(
+            p, "key_decs", prev=[ts_cur.get("decs_location")]
+        )
+        merged_decs.write.mode("overwrite").parquet(
+            os.path.join(p, decs_dir)
+        )
+        merged_decs = spark.read.parquet(os.path.join(p, decs_dir))
+        cand = dec_delta.select("band", "h").localCheckpoint(eager=True)
+        totals = (
+            _read_part(spark, path, "bucket_keys", meta)
+            .join(F.broadcast(cand), ["band", "h"], "left_semi")
+            .groupBy("band", "h")
+            .agg(F.sum("cnt").alias("_cnt"))
+        )
+        removed_new = (
+            totals.join(F.broadcast(merged_decs), ["band", "h"])
+            .filter(F.col("_cnt") <= F.col("dec"))
+            .select("band", "h")
+        )
         rk_prev = _band_removed_keys(spark, p, meta)
         merged_keys = (
             removed_new
@@ -865,9 +746,8 @@ def band_index_delete(
             "n": int(n_ts),
             "keys_location": keys_dir,
             "n_keys": int(n_keys),
+            "decs_location": decs_dir,
         }
-        if decs_dir is not None:
-            meta["tombstones"]["decs_location"] = decs_dir
     src = meta.get("source")
     if src is not None:
         meta["source"] = _source_stamp((src["root"], src["name"]))
@@ -925,29 +805,15 @@ def band_index_defer_updates(
     Same ``expected_prev_etag`` fence as the other mutations. Returns
     the number of queued rows (post in-batch dedup)."""
     p = _local_sidecar_path(path)
-    meta = _sidecar_read(p)
-    if expected_prev_etag is not None:
-        from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-            StaleIndexError,
-        )
-
-        src = meta.get("source")
-        recorded = src["etag"] if src else None
-        if recorded != expected_prev_etag:
-            raise StaleIndexError(
-                f"band index at {path!r} records etag "
-                f"{str(recorded)[:12]!r} but the deferral expected "
-                f"{expected_prev_etag[:12]!r}: the source collection "
-                "was mutated by something other than this update — "
-                "run band_index_refresh instead"
-            )
+    meta = read_sidecar(p, _SIDECAR)
+    _check_expected_etag(meta, path, _SIDECAR, expected_prev_etag, "deferral")
     idc = meta["id_col"]
-    id_type = meta.get("id_type")
+    id_type = meta["id_type"]
     ic = id_col or idc
     tc = text_col or meta["text_col"]
     batch = (
         updates.select(
-            (F.col(ic).cast(id_type) if id_type else F.col(ic)).alias(idc),
+            F.col(ic).cast(id_type).alias(idc),
             F.col(tc).alias("_text"),
         )
         .dropDuplicates([idc])
@@ -976,7 +842,7 @@ def band_index_deferred_updates(
     or ``None`` when nothing is queued. Observability + the drain
     input for ``band_index_apply``/``band_index_compact``."""
     p = _local_sidecar_path(path)
-    meta = _sidecar_read(p)
+    meta = read_sidecar(p, _SIDECAR)
     return _resolve_deferred(spark, p, meta)
 
 
@@ -1055,35 +921,21 @@ def band_index_apply(
     )
 
     p = _local_sidecar_path(path)
-    meta = _sidecar_read(p)
-    if meta.get("pending_append") or meta.get("pending_appends"):
+    meta = read_sidecar(p, _SIDECAR)
+    if meta.get("pending_appends"):
         raise ValueError(
             f"band index at {path!r} has a torn append in flight; "
             "replay the interrupted band_index_append before applying "
             "batch mutations"
         )
-    if expected_prev_etag is not None:
-        from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-            StaleIndexError,
-        )
-
-        src = meta.get("source")
-        recorded = src["etag"] if src else None
-        if recorded != expected_prev_etag:
-            raise StaleIndexError(
-                f"band index at {path!r} records etag "
-                f"{str(recorded)[:12]!r} but the apply expected "
-                f"{expected_prev_etag[:12]!r}: the source collection "
-                "was mutated by something other than this apply — run "
-                "band_index_refresh instead"
-            )
+    _check_expected_etag(meta, path, _SIDECAR, expected_prev_etag, "apply")
     idc = meta["id_col"]
-    id_type = meta.get("id_type")
+    id_type = meta["id_type"]
     ic = id_col or idc
     tc = text_col or meta["text_col"]
     up = (
         upserts.select(
-            (F.col(ic).cast(id_type) if id_type else F.col(ic)).alias(idc),
+            F.col(ic).cast(id_type).alias(idc),
             F.col(tc).alias("_text"),
         ).dropDuplicates([idc]).localCheckpoint(eager=True)
         if upserts is not None
@@ -1142,13 +994,11 @@ def band_index_apply(
         .dropDuplicates(["_aff_id"])
         .localCheckpoint(eager=True)
     )
-    old_locations = dict(meta.get("locations") or {})
+    old_locations = dict(meta["locations"])
     have = (
         spark.read.parquet(os.path.join(p, old_locations["ids"]))
-        if "ids" in old_locations
-        else _read_part(spark, path, "bands", meta).select(idc).distinct()
-    ).select(F.col(idc).cast("string").alias("_have_id")).localCheckpoint(
-        eager=True
+        .select(F.col(idc).cast("string").alias("_have_id"))
+        .localCheckpoint(eager=True)
     )
     # counts judged against the LOGICAL pre-state (physical minus
     # prior tombstones)
@@ -1173,11 +1023,7 @@ def band_index_apply(
         else None
     )
     if sh_cached is not None:
-        sh = (
-            sh_cached.withColumn("_id", F.col("_id").cast(id_type))
-            if id_type
-            else sh_cached
-        )
+        sh = sh_cached.withColumn("_id", F.col("_id").cast(id_type))
         bands_new = _band_rows_from_shingles(
             sh, idc, meta["num_hashes"], meta["bands"]
         )
@@ -1200,17 +1046,13 @@ def band_index_apply(
         bands_final = bands_final.unionByName(bands_new)
     bands_final = bands_final.localCheckpoint(eager=True)
     # bucket_keys re-derived from the FINAL bands with exact per-key
-    # contributor refcounts (the r13 retirement-arithmetic layout —
-    # this rewrite upgrades legacy cnt-less indexes too)
+    # contributor refcounts (the retirement-arithmetic layout)
     finals = {
         "bands": bands_final,
         "bucket_keys": bands_final.groupBy("band", "h").agg(
             F.count(F.lit(1)).alias("cnt")
         ),
     }
-    meta.setdefault("ddl", {})["bucket_keys"] = ", ".join(
-        f"`{c}` {t}" for c, t in finals["bucket_keys"].dtypes
-    )
     if meta.get("has_shingles"):
         sh_f = _survivors("shingles")
         sz_f = _survivors("sizes")
@@ -1291,7 +1133,7 @@ def band_index_tombstoned_ids(spark: SparkSession, path: str) -> DataFrame:
     DataFrame (``_ts_id`` string; empty when none) — the
     observability twin of ``ann.ivf_tombstoned_ids``."""
     p = _local_sidecar_path(path)
-    ts = _band_ts_ids(spark, p, _sidecar_read(p))
+    ts = _band_ts_ids(spark, p, read_sidecar(p, _SIDECAR))
     if ts is not None:
         return ts
     return spark.createDataFrame([], "_ts_id string")
@@ -1302,7 +1144,7 @@ def band_index_meta(path: str) -> dict:
     bindings / bucket layout / source stamp) without loading any
     data — what a serving caller needs to hash its probe side with
     the index's exact family."""
-    return _sidecar_read(_local_sidecar_path(path))
+    return read_sidecar(_local_sidecar_path(path), _SIDECAR)
 
 
 def band_index_read(
@@ -1321,7 +1163,7 @@ def band_index_read(
     come back as catalog-table scans (``Bucketed: true``), so joins
     against them need no corpus-side Exchange.
 
-    A sidecar with ``pending_append`` set marks a torn (crashed)
+    A ``pending_appends`` entry in the sidecar marks a torn (crashed)
     append: the parts may be missing that batch's tail, which reads
     exactly like a pre-append index — safe to gate against (documents
     of the torn batch gate as not-yet-ingested); replaying the append
@@ -1333,7 +1175,7 @@ def band_index_read(
     exports — is delete-correct for free; pass
     ``include_tombstoned=True`` for the physical rows."""
     p = _local_sidecar_path(path)
-    meta = _sidecar_read(p)
+    meta = read_sidecar(p, _SIDECAR)
     _check_source_stamp(meta, path, verify_source)
     bands = _read_part(spark, path, "bands", meta)
     if not include_tombstoned:
@@ -1367,7 +1209,7 @@ def band_index_bucket_keys(
     partitioning, so the gate's downstream SEMI join stays
     corpus-side exchange-free."""
     p = _local_sidecar_path(path)
-    meta = _sidecar_read(p)
+    meta = read_sidecar(p, _SIDECAR)
     _check_source_stamp(meta, path, verify_source)
     # (band, h) only: the per-key ``cnt`` refcount is delete-path
     # bookkeeping (retirement arithmetic), not serving surface
@@ -1411,12 +1253,14 @@ def band_index_refresh(spark: SparkSession, path: str) -> tuple[DataFrame, dict]
     persisted rows, re-stamp with the collection's CURRENT etag, and
     return the freshly-loaded index. Only works on stamped indexes
     (an index built from an arbitrary DataFrame has no recorded
-    source — ValueError says so)."""
+    source — ValueError says so). The sidecar is read unchecked, so
+    this also rebuilds an index whose format predates
+    ``store.FORMAT_VERSION``."""
     from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
         read_collection,
     )
 
-    meta = _sidecar_read(_local_sidecar_path(path))
+    meta = _read_unchecked(_local_sidecar_path(path), _SIDECAR)
     src = meta.get("source")
     if src is None:
         raise ValueError(
@@ -1510,10 +1354,9 @@ def band_index_append(
     can never hide rows behind it). The filter itself is re-merged
     with the WHOLE batch and persisted BEFORE the first data write,
     so a crash at any later point leaves the replay filter-positive
-    and routed into the exact path. Legacy indexes (no ``ids`` part
-    and/or no filter) fall back to ``sizes``/distinct ``bands`` ids
-    and are healed with a full ``ids`` dataset and a fresh filter by
-    their first append. ``on_existing="skip"`` (default) silently drops
+    and routed into the exact path. An index without a usable filter
+    anti-joins the whole batch against ``ids`` and gets a fresh
+    filter from that append. ``on_existing="skip"`` (default) silently drops
     re-appended ids so replaying a batch is idempotent;
     ``"error"`` raises ValueError naming the count, for pipelines
     where a replay indicates a bug. Without the guard a re-append
@@ -1560,12 +1403,6 @@ def band_index_append(
     marking a foreign mutation fresh.
 
     Returns the number of new documents indexed (after the guard).
-    (One cosmetic exception: replaying a torn FIRST append onto a
-    legacy pre-``ids`` index cannot distinguish the torn batch's docs
-    from anciently-indexed ones, so the returned count may include
-    batch docs that were already indexed before the torn attempt —
-    the data itself still converges exactly-once via the per-part
-    dedupe.)
     """
     from vector_databases___hydrate_chroma_db_collection_spark.operators.dedup import (
         _band_rows_from_shingles,
@@ -1573,37 +1410,22 @@ def band_index_append(
     )
 
     p = _local_sidecar_path(path)
-    meta = _sidecar_read(p)
+    meta = read_sidecar(p, _SIDECAR)
     if on_existing not in ("skip", "error"):
         raise ValueError(
             f"on_existing must be 'skip' or 'error', got {on_existing!r}"
         )
-    if expected_prev_etag is not None:
-        from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-            StaleIndexError,
-        )
-
-        src = meta.get("source")
-        recorded = src["etag"] if src else None
-        if recorded != expected_prev_etag:
-            raise StaleIndexError(
-                f"band index at {path!r} records etag "
-                f"{str(recorded)[:12]!r} but the append expected "
-                f"{expected_prev_etag[:12]!r}: the source collection "
-                "was mutated by something other than this append "
-                "since the index was last stamped — run "
-                "band_index_refresh instead"
-            )
+    _check_expected_etag(meta, path, _SIDECAR, expected_prev_etag, "append")
     ic = id_col or meta["id_col"]
     tc = text_col or meta["text_col"]
-    id_type = meta.get("id_type")
+    id_type = meta["id_type"]
     # in-batch duplicate ids would double band/posting/size rows —
     # drop them before the digest, the guard, and the shingling; the
     # batch is materialized ONCE here (the digest aggregation, the
     # guard probe, the filter merge, and the shingle pass all consume
     # it — without this each re-executes the caller's upstream plan)
     new_docs = new_docs.dropDuplicates([ic]).localCheckpoint(eager=True)
-    inc_id = F.col(ic).cast(id_type) if id_type else F.col(ic)
+    inc_id = F.col(ic).cast(id_type)
     # tombstoned ids refuse to re-append until a compact purges their
     # old rows — the id-granular delete mask cannot tell a NEW doc's
     # rows from the deleted one's under the same id (ann.ivf_append
@@ -1650,14 +1472,7 @@ def band_index_append(
     )
     digest = f"{_d['c']}:{_d['x']}"
     pending = list(meta.get("pending_appends") or [])
-    # legacy boolean marker (pre-batch-scoped format): no batch
-    # identity recorded, so conservatively heal THIS append and clear
-    # it on commit — the only unsafe window is a different torn batch
-    # replayed after this one, from an index written by the short-lived
-    # intermediate format.
-    torn = bool(meta.get("pending_append")) or any(
-        e.get("digest") == digest for e in pending
-    )
+    torn = any(e.get("digest") == digest for e in pending)
     # Per-tag appended-id attribution: the post-guard id set this
     # batch contributes is persisted (tiny, batch-sized) so a replayed
     # streaming batch can exclude EXACTLY its own contribution from
@@ -1685,10 +1500,7 @@ def band_index_append(
     # state appends CORPUS-INDEPENDENT: at 10^9 indexed docs the old
     # per-batch full-ids anti-join was a multi-GB scan per micro-
     # batch. Torn replays bypass the filter (their healing is exact
-    # by construction); legacy pre-ids indexes derive the set once
-    # and are healed below.
-    locations = dict(meta.get("locations") or {})
-    heal_ids = "ids" not in locations
+    # by construction).
     bloom_meta = meta.get("id_bloom")
     if not idguard.filter_usable(bloom_meta):
         # missing OR hash-incompatible filter (probing a different
@@ -1701,34 +1513,15 @@ def band_index_append(
         # constructed LAZILY: the filter-clean steady state settles
         # the guard without even opening the ids dataset's footers
         if not _have_cache:
-            if not heal_ids:
-                df = _read_part(spark, path, "ids", meta).select(
+            _have_cache.append(
+                _read_part(spark, path, "ids", meta).select(
                     F.col(meta["id_col"]).alias("_have_id")
                 )
-            elif meta.get("has_shingles"):
-                df = _read_part(spark, path, "sizes", meta).select(
-                    F.col(meta["id_col"]).alias("_have_id")
-                )
-            else:
-                df = (
-                    _read_part(spark, path, "bands", meta)
-                    .select(F.col(meta["id_col"]).alias("_have_id"))
-                    .distinct()
-                )
-            _have_cache.append(df)
+            )
         return _have_cache[0]
 
-    maybe = ig_state = None
-    if torn and heal_ids:
-        # Legacy pre-ids index whose FIRST versioned append tore: the
-        # fallback guard reads the very parts the crashed attempt
-        # half-wrote (a band-only layout's bands-derived guard would
-        # hide the batch and leave bucket_keys short forever). Treat
-        # the whole batch as fresh — the per-part replay dedupe below
-        # drops whatever each part already holds.
-        fresh = new_docs
-        maybe = new_docs  # on_existing='error' keeps its exact count
-    elif bloom_meta is not None and not torn and not heal_ids:
+    ig_state = None
+    if bloom_meta is not None and not torn:
         # steady state: prescreen the batch (zero corpus IO for
         # filter-negative ids), exact-check only the accepted subset
         neg, maybe, ig_state = idguard.bloom_split(
@@ -1742,8 +1535,8 @@ def band_index_append(
             )
         )
     else:
-        # torn replay (healing is exact by construction) or a
-        # pre-filter index's first append: the full anti-join
+        # torn replay (healing is exact by construction) or an index
+        # without a usable filter: the full anti-join
         maybe = new_docs
         fresh = new_docs.join(
             have(), inc_id == F.col("_have_id"), "left_anti"
@@ -1781,14 +1574,12 @@ def band_index_append(
             meta["pending_appends"] = remaining
         else:
             meta.pop("pending_appends", None)
-        meta.pop("pending_append", None)  # legacy boolean marker
         if tag is not None:
             meta["last_append_tag"] = tag
             if not replay_of_completed or n > 0:
                 # dir of this batch's recorded contribution; None
-                # means "recorded as empty" (all-duplicate batch) —
-                # distinct from the key being absent (pre-r11 index,
-                # unrecorded). A pure replay of a COMPLETED append
+                # means "recorded as empty" (all-duplicate batch). A
+                # pure replay of a COMPLETED append
                 # must not overwrite the first attempt's record (its
                 # own post-guard set is empty by then) — but a REUSED
                 # tag that contributed NEW rows (n > 0) is not a
@@ -1798,8 +1589,6 @@ def band_index_append(
                 # (idguard.batch_digest), making such collisions
                 # unreachable through the stream path.
                 meta["last_append_ids"] = app_dir
-        if locations != (meta.get("locations") or {}):
-            meta["locations"] = locations
         src = meta.get("source")
         if src is not None:
             meta["source"] = _source_stamp((src["root"], src["name"]))
@@ -1838,11 +1627,7 @@ def band_index_append(
     # Appended files must carry the EXISTING parquet schema — the id
     # is cast to the recorded type (e.g. int doc_ids appended to a
     # collection-backed index whose ids are strings).
-    sh = (
-        sh_cached.withColumn("_id", F.col("_id").cast(id_type))
-        if id_type
-        else sh_cached
-    )
+    sh = sh_cached.withColumn("_id", F.col("_id").cast(id_type))
     band_rows = _band_rows_from_shingles(
         sh, meta["id_col"], meta["num_hashes"], meta["bands"]
     )
@@ -1885,10 +1670,8 @@ def band_index_append(
                 fresh_ids,
             )
 
-    appended_ids = (
-        fresh_ids.select(F.col("_fid").cast(id_type).alias(meta["id_col"]))
-        if id_type
-        else fresh_ids.select(F.col("_fid").alias(meta["id_col"]))
+    appended_ids = fresh_ids.select(
+        F.col("_fid").cast(id_type).alias(meta["id_col"])
     )
     # -- merge the batch into the id-guard filter BEFORE any data
     # write: a COMMITTED filter must stay a SUPERSET of the indexed
@@ -1906,8 +1689,8 @@ def band_index_append(
         meta,
         ig_state,
         new_docs.select(inc_id.cast("string").alias("_s")),
-        # pre-filter index migration source: the existing guard ids
-        # (the last corpus-sized id scan this index's appends pay)
+        # no usable filter: size a fresh one over the existing guard
+        # ids (the one corpus-sized id scan, paid once)
         fallback_ids=(
             None
             if ig_state is not None
@@ -1951,27 +1734,20 @@ def band_index_append(
     # a ~100 GB read per micro-batch). band_index_compact re-distincts
     # the key table when duplicate bloat warrants it; torn replays may
     # double a batch's keys, which the same semantics absorb.
-    if _keys_have_cnt(meta):
-        # r13 layout: one row per batch-key with the batch's contributor
-        # count — summing cnt rows per key across append generations
-        # counts contributors exactly (append batches never share doc
-        # ids, the guard above enforces it). A torn REPLAY re-appends
-        # the whole batch's cnt rows (bucket_keys rows carry no id to
-        # heal against), over-counting the crashed attempt's landed
-        # keys — conservative: an over-counted key can only RETIRE
-        # LATE (keeps gating until band_index_compact's exact recount),
-        # never retire early / serve wrong.
-        new_keys = (
-            all_band_rows.groupBy("band", "h")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        new_keys = (
-            all_band_rows.select("band", "h")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    # One row per batch-key with the batch's contributor count —
+    # summing cnt rows per key across append generations counts
+    # contributors exactly (append batches never share doc ids, the
+    # guard above enforces it). A torn REPLAY re-appends the whole
+    # batch's cnt rows (bucket_keys rows carry no id to heal against),
+    # over-counting the crashed attempt's landed keys — conservative:
+    # an over-counted key can only RETIRE LATE (keeps gating until
+    # band_index_compact's exact recount), never retire early / serve
+    # wrong.
+    new_keys = (
+        all_band_rows.groupBy("band", "h")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .localCheckpoint(eager=True)
+    )
     _append_part(new_keys, path, "bucket_keys", nb, meta)
     # UN-remove any retired key this batch re-introduces: the serving
     # mask (band_index_bucket_keys anti-joins removed_keys) would
@@ -2017,48 +1793,32 @@ def band_index_append(
         _append_part(sh_rows, path, "shingles", None, meta)
         _append_part(size_rows, path, "sizes", None, meta)
     # -- guard source of truth LAST ----------------------------------
-    if heal_ids:
-        # One-time migration for pre-ids indexes: persist the FULL id
-        # set (existing + this batch) into a fresh directory and point
-        # the sidecar at it in the final commit.
-        full = (
-            have().select(F.col("_have_id").alias(meta["id_col"]))
-            .unionByName(appended_ids)
-            .distinct()  # torn+legacy replays overlap the two sides
+    # each id row carries the doc's (band, h) key array — the delete
+    # path's per-doc key source. Derived from the whole batch's band
+    # rows (exactly the fresh docs' rows — the guard already trimmed
+    # the batch).
+    id_rows = all_band_rows.groupBy(meta["id_col"]).agg(
+        F.collect_list(F.struct("band", "h")).alias("_keys")
+    )
+    if torn:
+        present_i = _present_ids(
+            _read_part(spark, path, "ids", meta), meta["id_col"], fresh_ids
         )
-        locations["ids"] = _write_new_part(
-            full, path, "ids", None, locations.get("ids")
+        id_rows = id_rows.join(
+            present_i,
+            id_rows[meta["id_col"]] == F.col("_pid"),
+            "left_anti",
         )
-    else:
-        if _ids_have_keys(spark, path, meta):
-            # r13 layout: each id row carries the doc's (band, h) key
-            # array — the delete path's per-doc key source. Derived
-            # from the whole batch's band rows (exactly the fresh
-            # docs' rows — the guard already trimmed the batch).
-            id_rows = all_band_rows.groupBy(meta["id_col"]).agg(
-                F.collect_list(F.struct("band", "h")).alias("_keys")
-            )
-        else:
-            id_rows = appended_ids
-        if torn:
-            present_i = _present_ids(
-                _read_part(spark, path, "ids", meta), meta["id_col"], fresh_ids
-            )
-            id_rows = id_rows.join(
-                present_i,
-                id_rows[meta["id_col"]] == F.col("_pid"),
-                "left_anti",
-            )
-        _append_part(
-            id_rows.localCheckpoint(eager=True), path, "ids", None, meta
-        )
+    _append_part(
+        id_rows.localCheckpoint(eager=True), path, "ids", None, meta
+    )
     sh_cached.unpersist()
     return _commit(n_new)
 
 
 def band_index_appended_ids(
     spark: SparkSession, path: str, tag: str
-) -> DataFrame | None:
+) -> DataFrame:
     """The id set a TAGGED append actually contributed to the index
     (its post-guard fresh ids, recorded by ``band_index_append``
     before the batch's first data write) — what a replayed streaming
@@ -2072,15 +1832,12 @@ def band_index_appended_ids(
     Looks the tag up in the sidecar's pending markers (torn append)
     and, failing that, in ``last_append_tag`` (completed append).
     Returns the recorded set as a one-column DataFrame (empty when
-    the append was recorded as all-duplicate), or ``None`` when the
-    tag matches but carries no recording (an append written by a
-    pre-recording version of this module) — the caller falls back to
-    batch-id exclusion. Raises ``KeyError`` when the tag is unknown
-    (no such append is in flight or last-committed), because gating a
-    NON-replayed batch through an exclusion is a correctness bug the
-    caller should hit loudly."""
+    the append was recorded as all-duplicate). Raises ``KeyError``
+    when the tag is unknown (no such append is in flight or
+    last-committed), because gating a NON-replayed batch through an
+    exclusion is a correctness bug the caller should hit loudly."""
     p = _local_sidecar_path(path)
-    meta = _sidecar_read(p)
+    meta = read_sidecar(p, _SIDECAR)
     entry = next(
         (
             e
@@ -2090,12 +1847,8 @@ def band_index_appended_ids(
         None,
     )
     if entry is not None:
-        if "appended_ids" not in entry:
-            return None
         d = entry["appended_ids"]
     elif meta.get("last_append_tag") == tag:
-        if "last_append_ids" not in meta:
-            return None
         d = meta["last_append_ids"]
     else:
         raise KeyError(
@@ -2104,7 +1857,7 @@ def band_index_appended_ids(
         )
     if d is None:  # recorded as an all-duplicate (empty) contribution
         return spark.createDataFrame(
-            [], f"`{meta['id_col']}` {meta.get('id_type', 'string')}"
+            [], f"`{meta['id_col']}` {meta['id_type']}"
         )
     return spark.read.parquet(os.path.join(p, d))
 
@@ -2149,8 +1902,7 @@ def band_index_audit(
       id count the filter was SIZED for (recorded by
       ``idguard.rebuild_filter``/``bloom_extend``), so
       ``expected_ids``-sized filters are measured against their own
-      sizing, not the global density constant; legacy sidecars
-      without a recording fall back to ``m / BITS_PER_ID``.
+      sizing, not the global density constant.
     * file counts per bucketed part: the small-files growth itself
       (NOT content-derived — operational signal only).
 
@@ -2159,19 +1911,10 @@ def band_index_audit(
     over bucket_keys — never the bands table. Indexes without a
     usable filter report ``filter_capacity_used`` NULL."""
     p = _local_sidecar_path(path)
-    meta = _sidecar_read(p)
-    locations = meta.get("locations") or {}
-    if "ids" in locations:
-        n_docs = spark.read.parquet(
-            os.path.join(p, locations["ids"])
-        ).count()
-    else:  # legacy pre-ids index
-        n_docs = (
-            _read_part(spark, path, "bands", meta)
-            .select(meta["id_col"])
-            .distinct()
-            .count()
-        )
+    meta = read_sidecar(p, _SIDECAR)
+    n_docs = spark.read.parquet(
+        os.path.join(p, meta["locations"]["ids"])
+    ).count()
     krow = (
         _read_part(spark, path, "bucket_keys", meta)
         .agg(
@@ -2191,10 +1934,7 @@ def band_index_audit(
     bloom_meta = meta.get("id_bloom")
     used = None
     if idguard.filter_usable(bloom_meta):
-        cap = int(
-            bloom_meta.get("capacity")
-            or bloom_meta["m"] // idguard.BITS_PER_ID
-        )
+        cap = int(bloom_meta["capacity"])
         used = float(np_round_half_up(n_docs / float(cap), 4))
     f_bands = _part_files(_part_loc(path, "bands", meta))
     f_keys = _part_files(_part_loc(path, "bucket_keys", meta))
@@ -2252,7 +1992,7 @@ def band_index_compact(spark: SparkSession, path: str) -> dict:
     and the double-ingest guard keeps working because ``ids`` is
     rewritten with everything it held.
 
-    Refuses a torn index (``pending_append`` set): the torn batch's
+    Refuses a torn index (a ``pending_appends`` entry): the torn batch's
     rows are only partially on disk, and compacting would launder the
     marker away — replay the append first; its healing path is the
     fix.
@@ -2260,8 +2000,8 @@ def band_index_compact(spark: SparkSession, path: str) -> dict:
     Returns ``{part: (files_before, files_after)}``.
     """
     p = _local_sidecar_path(path)
-    meta = _sidecar_read(p)
-    if meta.get("pending_append") or meta.get("pending_appends"):
+    meta = read_sidecar(p, _SIDECAR)
+    if meta.get("pending_appends"):
         raise ValueError(
             f"band index at {path!r} has a torn append in flight "
             "(a pending-append marker is set); replay the interrupted "
@@ -2270,12 +2010,11 @@ def band_index_compact(spark: SparkSession, path: str) -> dict:
         )
     nb = meta.get("num_buckets")
     plain_target = nb or spark.sparkContext.defaultParallelism
-    old_locations = dict(meta.get("locations") or {})
+    old_locations = dict(meta["locations"])
     parts = ["bands", "bucket_keys"]
     if meta.get("has_shingles"):
         parts += ["shingles", "sizes"]
-    if "ids" in old_locations or os.path.isdir(os.path.join(p, "ids")):
-        parts.append("ids")
+    parts.append("ids")
     if meta.get("deferred_updates"):
         # a pending text-update queue (band_index_defer_updates):
         # compaction is its drain point, and the drain IS a full part
@@ -2284,7 +2023,7 @@ def band_index_compact(spark: SparkSession, path: str) -> dict:
         # tombstones and bounds file counts identically).
         before = {part: _part_files(_part_loc(path, part, meta)) for part in parts}
         band_index_apply(spark, path)
-        meta2 = _sidecar_read(p)
+        meta2 = read_sidecar(p, _SIDECAR)
         return {
             part: (
                 before[part],
@@ -2301,10 +2040,8 @@ def band_index_compact(spark: SparkSession, path: str) -> dict:
     ts = _band_ts_ids(spark, p, meta)
     if ts is not None:
         idc = meta["id_col"]
-        survivors = (
-            spark.read.parquet(os.path.join(p, old_locations["ids"]))
-            if "ids" in old_locations
-            else _read_part(spark, path, "bands", meta).select(idc).distinct()
+        survivors = spark.read.parquet(
+            os.path.join(p, old_locations["ids"])
         ).join(
             F.broadcast(ts),
             F.col(idc).cast("string") == F.col("_ts_id"),
@@ -2321,48 +2058,27 @@ def band_index_compact(spark: SparkSession, path: str) -> dict:
                 "empty parts; drop the index directory and rebuild "
                 "when new documents arrive instead"
             )
-    def _purged_bands() -> DataFrame:
-        df = _read_part(spark, path, "bands", meta)
+    report = {}
+    new_locations = dict(old_locations)
+    for part in parts:
+        before = _part_files(_part_loc(path, part, meta))
+        # bucket_keys is re-derived from the survivors' band rows:
+        # squeezes out the cross-batch duplicate key rows appends
+        # accumulate (corpus-independent by design), drops deleted-only
+        # docs' keys (replacing the removed-keys serving mask), and
+        # recounts the per-key ``cnt`` contributor refcounts EXACTLY
+        # (the heal point for torn-append over-counts).
+        df = _read_part(
+            spark, path, "bands" if part == "bucket_keys" else part, meta
+        )
         if ts is not None:
             df = df.join(
                 F.broadcast(ts),
                 F.col(meta["id_col"]).cast("string") == F.col("_ts_id"),
                 "left_anti",
             )
-        return df
-
-    report = {}
-    new_locations = dict(old_locations)
-    for part in parts:
-        before = _part_files(_part_loc(path, part, meta))
-        df = _read_part(spark, path, part, meta)
-        if ts is not None and part != "bucket_keys":
-            df = df.join(
-                F.broadcast(ts),
-                F.col(meta["id_col"]).cast("string") == F.col("_ts_id"),
-                "left_anti",
-            )
         if part == "bucket_keys":
-            # re-derived from the survivors' band rows: squeezes out
-            # the cross-batch duplicate key rows appends accumulate
-            # (corpus-independent by design), drops deleted-only docs'
-            # keys (replacing the removed-keys serving mask), recounts
-            # the per-key ``cnt`` contributor refcounts EXACTLY (the
-            # heal point for torn-append over-counts), and migrates
-            # legacy cnt-less layouts forward.
-            df = _purged_bands().groupBy("band", "h").agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-            meta.setdefault("ddl", {})["bucket_keys"] = ", ".join(
-                f"`{c}` {t}" for c, t in df.dtypes
-            )
-        if part == "ids" and not _ids_have_keys(spark, path, meta):
-            # legacy id-only layout: upgrade to the r13 schema (each
-            # doc's (band, h) key array — the delete path's per-doc
-            # key source) from the same purged band rows
-            df = _purged_bands().groupBy(meta["id_col"]).agg(
-                F.collect_list(F.struct("band", "h")).alias("_keys")
-            )
+            df = df.groupBy("band", "h").agg(F.count(F.lit(1)).alias("cnt"))
         part_nb = nb if part in ("bands", "bucket_keys") else None
         if part == "ids":
             # range-clustered + sorted on the id: the delete path's
@@ -2377,18 +2093,17 @@ def band_index_compact(spark: SparkSession, path: str) -> dict:
         )
         after = _part_files(os.path.join(p, new_locations[part]))
         report[part] = (before, after)
-    if "ids" in new_locations:
-        # re-size the id-guard Bloom from the CURRENT id count:
-        # append-grown indexes outlive their build-time capacity, and
-        # past capacity the filter only degrades (more exact
-        # fallbacks, never wrong) — compaction is the natural point
-        # to restore the designed false-positive rate.
-        meta["id_bloom"] = idguard.rebuild_filter(
-            spark.read.parquet(os.path.join(p, new_locations["ids"])),
-            F.col(meta["id_col"]).cast("string"),
-            p,
-            (meta.get("id_bloom") or {}).get("location"),
-        )
+    # re-size the id-guard Bloom from the CURRENT id count:
+    # append-grown indexes outlive their build-time capacity, and
+    # past capacity the filter only degrades (more exact fallbacks,
+    # never wrong) — compaction is the natural point to restore the
+    # designed false-positive rate.
+    meta["id_bloom"] = idguard.rebuild_filter(
+        spark.read.parquet(os.path.join(p, new_locations["ids"])),
+        F.col(meta["id_col"]).cast("string"),
+        p,
+        (meta.get("id_bloom") or {}).get("location"),
+    )
     meta["locations"] = new_locations
     meta.pop("tombstones", None)  # purged physically above
     _sidecar_write(p, meta)

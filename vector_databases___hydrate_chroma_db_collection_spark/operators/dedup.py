@@ -915,10 +915,12 @@ def minhash_lsh_pairs(
     # a self-join on the bucket key (two more sorted branches) — the
     # probe measured that chain at 135 cpu-s per 1M docs where this
     # single groupBy(collect_list) + pair explode measures 60 for the
-    # IDENTICAL candidate set. Each doc emits each band key at most
-    # once, so members are distinct; the sorted array makes
-    # (id_a < id_b) a positional property (posexplode + tail slice),
-    # never a join condition. Mega-bucket guard unchanged: buckets
+    # IDENTICAL candidate set. Each id emits each band key at most
+    # once (the signature aggregate is per id, so a repeated input id
+    # collapses to one member); the sorted array makes (id_a < id_b) a
+    # positional property (posexplode + tail slice), never a join
+    # condition, and the strict filter keeps a self-pair out even if
+    # a member ever repeated. Mega-bucket guard unchanged: buckets
     # over ``max_bucket_size`` STAR-expand — every member pairs with
     # the bucket minimum only (element 1 of the sorted array), linear
     # in the bucket. Memory note: the transient agg state is one
@@ -947,6 +949,7 @@ def minhash_lsh_pairs(
                 F.slice(F.col("_m"), F.col("_i") + 2, F.size("_m"))
             ).alias("id_b"),
         )
+        .filter(F.col("id_a") < F.col("id_b"))
     )
     star_pairs = (
         members.filter(F.col("_sz") > max_bucket_size)

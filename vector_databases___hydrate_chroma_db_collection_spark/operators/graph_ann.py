@@ -276,23 +276,22 @@ def graph_index_write(
         idguard,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _atomic_sidecar_write,
         _drop_old_cells,
         _fresh_cells_dir,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _atomic_sidecar_write,
         _local_sidecar_path,
+        _read_unchecked,
         _source_stamp,
     )
 
     p = _local_sidecar_path(path)
     os.makedirs(p, exist_ok=True)
-    old_meta = None
-    sc_file = os.path.join(p, _SIDECAR)
-    if os.path.exists(sc_file):
-        import json
-
-        with open(sc_file) as f:
-            old_meta = json.load(f)
-    cells_dir = _fresh_cells_dir(p, (old_meta or {}).get("location"))
+    old_meta = {}
+    if os.path.exists(os.path.join(p, _SIDECAR)):
+        old_meta = _read_unchecked(p, _SIDECAR)
+    cells_dir = _fresh_cells_dir(p, old_meta.get("location"))
     # No cluster-by-cell exchange needed here (unlike ivf_write): the
     # input is _build_cell_graphs' groupBy("ivf_cell").applyInPandas
     # output, already hash-clustered by cell, so the dynamic-partition
@@ -306,7 +305,7 @@ def graph_index_write(
         cells_back,
         F.col("id").cast("string"),
         p,
-        ((old_meta or {}).get("id_bloom") or {}).get("location"),
+        (old_meta.get("id_bloom") or {}).get("location"),
     )
     C = np.asarray(centroids, dtype=np.float64)
     _atomic_sidecar_write(
@@ -325,7 +324,7 @@ def graph_index_write(
             "id_bloom": id_bloom,
         },
     )
-    _drop_old_cells(p, old_meta, cells_dir)
+    _drop_old_cells(p, old_meta.get("location"), cells_dir)
     idguard.gc_bloom_files(p, {id_bloom["location"]})
     for d_ in os.listdir(p):
         if d_.startswith("graph_tombstones_v"):
@@ -340,17 +339,16 @@ def graph_index_read(
     cells INCLUDE tombstoned rows — the beam must traverse through
     them (module doc); serving masks at emission via
     ``meta['tombstones']``."""
-    import json
     import os
 
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
         _check_source_stamp,
         _local_sidecar_path,
+        read_sidecar,
     )
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, _SIDECAR)) as f:
-        meta = json.load(f)
+    meta = read_sidecar(p, _SIDECAR)
     _check_source_stamp(meta, p, verify_source)
     cells = spark.read.parquet(os.path.join(p, meta["location"]))
     return cells, np.asarray(meta["centroids"], dtype=np.float64), meta
@@ -409,12 +407,10 @@ def graph_append(
     Cost: O(touched cells' rows^2 / chunk) graph rebuild + O(files)
     clone metadata — bounded by the batch's cell spread, never a
     corpus rebuild."""
-    import json
     import os
     import shutil
 
     from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-        StaleIndexError,
         TombstonedIdError,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators import (
@@ -422,29 +418,22 @@ def graph_append(
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _assign_to_centroids,
-        _atomic_sidecar_write,
         _clone_untouched_cells,
         _drop_old_cells,
         _fresh_cells_dir,
+        _tombstones_df,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _atomic_sidecar_write,
+        _check_expected_etag,
         _local_sidecar_path,
         _source_stamp,
-        _tombstones_df,
+        read_sidecar,
     )
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, _SIDECAR)) as f:
-        meta = json.load(f)
-    if expected_prev_etag is not None:
-        src = meta.get("source")
-        recorded = src["etag"] if src else None
-        if recorded != expected_prev_etag:
-            raise StaleIndexError(
-                f"graph index at {path!r} records etag "
-                f"{str(recorded)[:12]!r} but the append expected "
-                f"{expected_prev_etag[:12]!r}: the source collection "
-                "was mutated by something else since the index was "
-                "stamped — rebuild instead"
-            )
+    meta = read_sidecar(p, _SIDECAR)
+    _check_expected_etag(meta, path, _SIDECAR, expected_prev_etag, "append")
     C = np.asarray(meta["centroids"], dtype=np.float64)
     batch = (
         new_rows.select(
@@ -524,7 +513,7 @@ def graph_append(
     rebuilt = _build_cell_graphs(
         rebuilt_src, C, int(meta["M"]), max_cell_rows
     )
-    new_dir = _fresh_cells_dir(p, meta.get("location"))
+    new_dir = _fresh_cells_dir(p, meta["location"])
     new_loc = os.path.join(p, new_dir)
     rebuilt.write.mode("append").partitionBy("ivf_cell").parquet(new_loc)
     _clone_untouched_cells(loc, new_loc, touched)
@@ -534,13 +523,13 @@ def graph_append(
         idguard.bloom_extend(
             p, meta, st, fresh.select(F.col("id").alias("_s"))
         )
-    old_meta_loc = {"location": meta.get("location")}
+    old_dir = meta["location"]
     meta["location"] = new_dir
     src = meta.get("source")
     if src is not None:
         meta["source"] = _source_stamp((src["root"], src["name"]))
     _atomic_sidecar_write(p, _SIDECAR, meta)
-    _drop_old_cells(p, old_meta_loc, new_dir)
+    _drop_old_cells(p, old_dir, new_dir)
     idguard.gc_bloom_files(
         p, {(meta.get("id_bloom") or {}).get("location")}
     )
@@ -654,7 +643,7 @@ def _serve_cells(
     if ts and int(ts.get("n") or 0):
         import os
 
-        from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
             _local_sidecar_path,
         )
 
@@ -859,7 +848,7 @@ def graph_recall_audit(
         _sample_queries,
         ivf_knn_join,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
         _local_sidecar_path,
     )
 

@@ -107,19 +107,7 @@ def batch_digest(df: DataFrame, id_col: str) -> str:
     pairs with equal pairwise xor collide — constructible); colliding
     BOTH independently-seeded xors simultaneously is not. Two xors
     rather than a modular sum because BIGINT sums overflow-raise
-    under ANSI; xor cannot. ``batch_digests`` additionally returns
-    the pre-r12 single-xor LEGACY form (derived from the SAME one
-    aggregation) so streaming callers can match a batch recorded by
-    the old format across a code upgrade — without it, a checkpoint
-    replay spanning the upgrade would gate as a fresh batch and
-    silently flip its republished verdicts (the stores stay
-    exactly-once either way; this is about verdict stability)."""
-    return batch_digests(df, id_col)[0]
-
-
-def batch_digests(df: DataFrame, id_col: str) -> tuple[str, str]:
-    """(current two-seed digest, legacy single-xor digest) from ONE
-    aggregation — see ``batch_digest`` for the contract."""
+    under ANSI; xor cannot."""
     r = (
         df.select(F.col(id_col).cast("string").alias("_s"))
         .distinct()
@@ -132,7 +120,7 @@ def batch_digests(df: DataFrame, id_col: str) -> tuple[str, str]:
         )
         .first()
     )
-    return f"{r['c']}:{r['x']}:{r['x2']}", f"{r['c']}:{r['x']}"
+    return f"{r['c']}:{r['x']}:{r['x2']}"
 
 
 def bloom_params(
@@ -475,9 +463,9 @@ def bloom_extend(
     must stay a superset of the indexed ids — supersets are safe
     (false positives fall back to the exact check), a subset would
     let a replay double-ingest. ``state`` is ``bloom_split``'s loaded
-    filter; for a pre-filter index pass ``state=None`` and
-    ``fallback_ids`` (the existing indexed ids) — the one-time
-    migration scan that makes every later append corpus-independent.
+    filter; for an index without a usable filter pass ``state=None``
+    and ``fallback_ids`` (the existing indexed ids) — the one scan
+    that makes every later append corpus-independent.
     Both id frames must be single-column, string-typed.
 
     Sharded-append contract (r15): the steady-state append persists
@@ -515,9 +503,8 @@ def bloom_extend(
         return
     words, m, k = state
     # same (m, k) carries forward: capacity is a property of the
-    # sizing moment (legacy sidecars without one fall back to the
-    # design-density equivalent)
-    capacity = int(prev_bloom.get("capacity") or m // BITS_PER_ID)
+    # sizing moment
+    capacity = int(prev_bloom["capacity"])
     h1, h2 = _batch_hash_pairs(batch_ids, bcol)
     segs = list(prev_bloom.get("segments") or [])
     delta_total = int(prev_bloom.get("delta_ids") or 0) + int(h1.size)
@@ -647,16 +634,17 @@ def gc_bloom_files(p: str, keep: set, base: str = "ids_bloom") -> None:
     references (two index kinds can cohabit one directory; deleting a
     sibling's filter or segment would brick its appends). Run only
     after a sidecar commit; a crash before it leaks a file, never
-    breaks a reader."""
-    import json
+    breaks a reader. Sidecars of any format count: GC must not break
+    an index that still awaits its rebuild."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _read_unchecked,
+    )
 
     keep = set(keep)
     for sc in _SIDECARS:
-        fp = os.path.join(p, sc)
-        if os.path.exists(fp):
+        if os.path.exists(os.path.join(p, sc)):
             try:
-                with open(fp) as f:
-                    ib = json.load(f).get("id_bloom") or {}
+                ib = _read_unchecked(p, sc).get("id_bloom") or {}
             except (OSError, ValueError):
                 continue
             if ib.get("location"):
@@ -683,7 +671,6 @@ __all__ = [
     "DELTA_MAX_SEGMENTS",
     "HASH_SPEC",
     "batch_digest",
-    "batch_digests",
     "bloom_params",
     "bloom_build",
     "bloom_or",

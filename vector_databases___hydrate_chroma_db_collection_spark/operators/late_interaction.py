@@ -156,10 +156,11 @@ def maxsim_corpus_write(
     ``n_buckets`` directories no matter how large the corpus grows.
     Written as a versioned dir + atomic sidecar swap
     (``maxsim_corpus.json``), the module's standard crash discipline."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
         _atomic_sidecar_write,
         _fresh_versioned_dir,
         _local_sidecar_path,
+        _read_unchecked,
     )
     import os
     import shutil
@@ -168,10 +169,7 @@ def maxsim_corpus_write(
     os.makedirs(p, exist_ok=True)
     prev = None
     try:
-        import json
-
-        with open(os.path.join(p, "maxsim_corpus.json")) as f:
-            prev = json.load(f).get("location")
+        prev = _read_unchecked(p, "maxsim_corpus.json").get("location")
     except (OSError, ValueError):
         pass
     loc = _fresh_versioned_dir(p, "rerank_corpus", floor_names=[prev])
@@ -205,23 +203,21 @@ def maxsim_corpus_read(
 ) -> tuple[DataFrame, int]:
     """Load the bucketed rerank corpus -> (df with ``id``/``tokens``/
     ``_bucket``, n_buckets)."""
-    import json
     import os
 
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
         _local_sidecar_path,
+        read_sidecar,
     )
 
     p = _local_sidecar_path(path)
-    fp = os.path.join(p, "maxsim_corpus.json")
-    if not os.path.exists(fp):
+    if not os.path.exists(os.path.join(p, "maxsim_corpus.json")):
         raise EngineError(
             "maxsim_search: no rerank_corpus persisted at this index "
             "(write one with maxsim_corpus_write, or pass "
             "rerank_corpus= explicitly)"
         )
-    with open(fp) as f:
-        meta = json.load(f)
+    meta = read_sidecar(p, "maxsim_corpus.json")
     df = spark.read.parquet(os.path.join(p, meta["location"]))
     return df, int(meta["n_buckets"])
 

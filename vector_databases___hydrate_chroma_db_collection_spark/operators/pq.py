@@ -867,20 +867,18 @@ def ivf_pq_recall_audit(
     reading and alert on the DROP. Cost: one exact pass of the
     corpus against ``n_queries`` vectors plus the pruned ADC probe —
     audit cadence, not per batch."""
-    import json
-    import os
-
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _local_sidecar_path,
         _recall_report,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import (
         knn_join,
     )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _local_sidecar_path,
+        read_sidecar,
+    )
 
-    p = _local_sidecar_path(path)
-    with open(os.path.join(p, "ivf_pq_index.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(_local_sidecar_path(path), "ivf_pq_index.json")
     if corpus is None:
         src = meta.get("source")
         if src is None:
@@ -948,27 +946,28 @@ def ivf_pq_write(
     the OPQ rotation from ``ivf_pq_build(opq=True)`` — persisted in
     the sidecar so every serve/append/upsert path rotates residuals
     identically without the caller re-threading it."""
-    import json
     import os
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _atomic_sidecar_write,
         _drop_old_cells,
         _fresh_cells_dir,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _atomic_sidecar_write,
         _local_sidecar_path,
+        _read_unchecked,
         _source_stamp,
     )
 
     path = _local_sidecar_path(path)
     os.makedirs(path, exist_ok=True)
-    old_meta = None
+    old_meta = {}
     if os.path.exists(os.path.join(path, "ivf_pq_index.json")):
-        with open(os.path.join(path, "ivf_pq_index.json")) as f:
-            old_meta = json.load(f)
+        old_meta = _read_unchecked(path, "ivf_pq_index.json")
     stamp = _source_stamp(source)
     # Rebuild-is-atomic-for-readers: same versioned-dir + sidecar-swap
     # lifecycle as ivf_write / band_index_write.
-    cells_dir = _fresh_cells_dir(path, (old_meta or {}).get("location"))
+    cells_dir = _fresh_cells_dir(path, old_meta.get("location"))
     # One task per cell -> one data file per cell dir (ivf_compact
     # idiom); otherwise the dynamic-partition write fans every map
     # task into every cell it touches (tasks x n_cells files) and the
@@ -993,7 +992,7 @@ def ivf_pq_write(
         cells_back,
         F.col(idc).cast("string"),
         path,
-        ((old_meta or {}).get("id_bloom") or {}).get("location"),
+        (old_meta.get("id_bloom") or {}).get("location"),
     )
     # build-time per-cell stats: occupancy + mean reconstructed-
     # residual norm — the baseline ivf_pq_balance_audit measures
@@ -1030,7 +1029,7 @@ def ivf_pq_write(
             ),
         },
     )
-    _drop_old_cells(path, old_meta, cells_dir)
+    _drop_old_cells(path, old_meta.get("location"), cells_dir)
     idguard.gc_bloom_files(path, {id_bloom["location"]})
     # a rebuild supersedes the tombstone recordings (fresh cells hold
     # only current-collection rows; the fresh sidecar carries none)
@@ -1066,44 +1065,33 @@ def ivf_pq_append(
     ``new_rows`` must carry the embedding (codes store only its
     quantization); ``id_col`` defaults to the persisted code table's
     id column. Returns the number of new vectors indexed."""
-    import json
     import os
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _assign_to_centroids,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
         _atomic_sidecar_write,
+        _check_expected_etag,
         _local_sidecar_path,
         _source_stamp,
+        read_sidecar,
     )
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, "ivf_pq_index.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(p, "ivf_pq_index.json")
     if on_existing not in ("skip", "error"):
         raise ValueError(
             f"on_existing must be 'skip' or 'error', got {on_existing!r}"
         )
-    if expected_prev_etag is not None:
-        from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-            StaleIndexError,
-        )
-
-        src = meta.get("source")
-        recorded = src["etag"] if src else None
-        if recorded != expected_prev_etag:
-            raise StaleIndexError(
-                f"IVF-PQ index at {path!r} records etag "
-                f"{str(recorded)[:12]!r} but the append expected "
-                f"{expected_prev_etag[:12]!r}: the source collection "
-                "was mutated by something other than this append "
-                "since the index was last stamped — run a full "
-                "rebuild (ivf_pq_build + ivf_pq_write) instead"
-            )
+    _check_expected_etag(
+        meta, path, "ivf_pq_index.json", expected_prev_etag, "append"
+    )
     from vector_databases___hydrate_chroma_db_collection_spark.operators import (
         idguard,
     )
 
-    loc = os.path.join(p, meta.get("location", "cells"))
+    loc = os.path.join(p, meta["location"])
     existing = spark.read.parquet(loc)
     exist_id = [c for c in existing.columns if c not in ("ivf_cell", "pq_code")][0]
     ic = id_col or exist_id
@@ -1165,7 +1153,7 @@ def ivf_pq_append(
             )
         )
     else:
-        maybe = batch  # pre-filter index: exact path for the whole batch
+        maybe = batch  # no usable filter: exact path for the whole batch
         fresh = batch.join(
             have, F.col(exist_id) == F.col("_have_id"), "left_anti"
         )
@@ -1235,23 +1223,21 @@ def ivf_pq_read(
     ``with_rotation=True`` appends the sidecar's OPQ rotation (or
     ``None``) as a fourth element — pass it to the search functions'
     ``rotation=`` so OPQ-encoded codes score correctly."""
-    import json
     import os
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        _mask_tombstones,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
         _check_source_stamp,
         _local_sidecar_path,
-        _mask_tombstones,
+        read_sidecar,
     )
 
     path = _local_sidecar_path(path)
-    with open(os.path.join(path, "ivf_pq_index.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(path, "ivf_pq_index.json")
     _check_source_stamp(meta, path, verify_source)
-    # pre-versioning sidecars have no "location" — cells at bare name
-    encoded = spark.read.parquet(
-        os.path.join(path, meta.get("location", "cells"))
-    )
+    encoded = spark.read.parquet(os.path.join(path, meta["location"]))
     if not include_tombstoned:
         idc = [
             c for c in encoded.columns if c not in ("ivf_cell", "pq_code")
@@ -1288,35 +1274,24 @@ def ivf_pq_upsert(
     residual-encode with the EXISTING codebooks (no retraining), and
     replace only the touched cell partitions of the 8-byte code
     table. Returns ``(n_updated, n_added)``."""
-    import json
     import os
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _assign_to_centroids,
-        _local_sidecar_path,
         _surgical_replace,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _check_expected_etag,
+        _local_sidecar_path,
+        read_sidecar,
     )
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, "ivf_pq_index.json")) as f:
-        meta = json.load(f)
-    if expected_prev_etag is not None:
-        from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-            StaleIndexError,
-        )
-
-        src = meta.get("source")
-        recorded = src["etag"] if src else None
-        if recorded != expected_prev_etag:
-            raise StaleIndexError(
-                f"IVF-PQ index at {path!r} records etag "
-                f"{str(recorded)[:12]!r} but the upsert expected "
-                f"{expected_prev_etag[:12]!r}: the source collection "
-                "was mutated by something other than this upsert "
-                "since the index was last stamped — run a full "
-                "rebuild (ivf_pq_build + ivf_pq_write) instead"
-            )
-    loc = os.path.join(p, meta.get("location", "cells"))
+    meta = read_sidecar(p, "ivf_pq_index.json")
+    _check_expected_etag(
+        meta, path, "ivf_pq_index.json", expected_prev_etag, "upsert"
+    )
+    loc = os.path.join(p, meta["location"])
     existing = spark.read.parquet(loc)
     exist_id = [c for c in existing.columns if c not in ("ivf_cell", "pq_code")][0]
     ic = id_col or exist_id
@@ -1444,25 +1419,24 @@ def ivf_pq_balance_audit(
     mean_res_norm, trained_n_rows, trained_mean_res_norm,
     refresh_recommended)`` — the flag flips on occupancy skew past
     ``skew_threshold`` (bounded by n_centroids — pick below it) or
-    saturation past ``drift_threshold`` x trained. Pre-train_stats
-    indexes audit occupancy only. One scan of the code table (m element_at LUT
-    lookups per row, codegen); the report is assembled driver-side
-    from <= n_centroids aggregate rows."""
-    import json
+    saturation past ``drift_threshold`` x trained. One scan of the
+    code table (m element_at LUT lookups per row, codegen); the
+    report is assembled driver-side from <= n_centroids aggregate
+    rows."""
     import os
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _local_sidecar_path,
         _mask_tombstones,
         np_round_half_up,
     )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _local_sidecar_path,
+        read_sidecar,
+    )
 
     p = _local_sidecar_path(path)
-    with open(os.path.join(p, "ivf_pq_index.json")) as f:
-        meta = json.load(f)
-    cells = spark.read.parquet(
-        os.path.join(p, meta.get("location", "cells"))
-    )
+    meta = read_sidecar(p, "ivf_pq_index.json")
+    cells = spark.read.parquet(os.path.join(p, meta["location"]))
     # logical rows only — same rationale as ann.ivf_balance_audit
     cells = _mask_tombstones(
         spark, p, meta, cells,
@@ -1476,7 +1450,7 @@ def ivf_pq_balance_audit(
         int(r["ivf_cell"]): (int(r["n_rows"]), float(r["mean_res_norm"]))
         for r in stat_rows
     }
-    trained = meta.get("train_stats")
+    trained = meta["train_stats"]
     # the constant-occupancy re-cell hint, same contract as
     # ann.ivf_balance_audit: uniform decade growth past the build's
     # mean occupancy (per-cell skew can't see it) -> rebuild with
@@ -1486,7 +1460,7 @@ def ivf_pq_balance_audit(
     )
 
     mean_occ = total / max(n_cells, 1)
-    if trained is not None and sum(trained["cell_rows"]):
+    if sum(trained["cell_rows"]):
         recell = mean_occ >= 10.0 * max(
             sum(trained["cell_rows"]) / n_cells, 1.0
         )
@@ -1496,16 +1470,9 @@ def ivf_pq_balance_audit(
     for i in range(n_cells):
         n, rn = by_cell.get(i, (0, None))
         occ = float(np_round_half_up(n * n_cells / max(total, 1), 4))
-        tn = tr = None
-        if trained is not None:
-            tn = int(trained["cell_rows"][i])
-            tr = float(trained["cell_mean_res_norm"][i])
-        drifted = bool(
-            rn is not None
-            and tr is not None
-            and tr > 0
-            and rn > drift_threshold * tr
-        )
+        tn = int(trained["cell_rows"][i])
+        tr = float(trained["cell_mean_res_norm"][i])
+        drifted = bool(rn is not None and tr > 0 and rn > drift_threshold * tr)
         out.append(
             (
                 i,
@@ -1515,9 +1482,7 @@ def ivf_pq_balance_audit(
                 if rn is not None
                 else None,
                 tn,
-                float(np_round_half_up(tr, dist_decimals))
-                if tr is not None
-                else None,
+                float(np_round_half_up(tr, dist_decimals)),
                 occ > skew_threshold or drifted,
                 bool(recell),
             )

@@ -1291,11 +1291,11 @@ def _fence_etag(
         raise EngineError(
             f"fence must be 'collection' or 'recorded', got {fence!r}"
         )
-    import json
-    import os
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        read_sidecar,
+    )
 
-    with open(os.path.join(p, sidecar)) as fh:
-        src = json.load(fh).get("source")
+    src = read_sidecar(p, sidecar).get("source")
     return src["etag"] if src else None
 
 
@@ -1349,8 +1349,10 @@ def collection_delete_indexed(
     identical to the crashed one (the CDC WAL's content-qualified
     tag). Returns the number of collection rows deleted."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _local_sidecar_path,
         ivf_delete,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _local_sidecar_path,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
         collection_etag,
@@ -1496,9 +1498,11 @@ def collection_update_indexed(
     against its own first attempt's etag movement forever. Returns
     the number of collection rows updated."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _local_sidecar_path,
         ivf_delete,
         ivf_upsert,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _local_sidecar_path,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
         band_index_delete,
@@ -1803,7 +1807,7 @@ def _band_guard_documents(index_paths, documents, n: int) -> None:
 
     if documents is not None and not any(d is None for d in documents):
         return
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
         _local_sidecar_path,
     )
 
@@ -1843,8 +1847,10 @@ def _indexes_insert(
     import os as _os
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _local_sidecar_path,
         ivf_upsert,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _local_sidecar_path,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
         ivf_pq_upsert,

@@ -588,11 +588,12 @@ def export_collection(
         from vector_databases___hydrate_chroma_db_collection_spark.errors import (
             StaleIndexError,
         )
-        from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-            _source_stamp,
-        )
         from vector_databases___hydrate_chroma_db_collection_spark.operators.idguard import (
             _SIDECARS,
+        )
+        from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+            _source_stamp,
+            read_sidecar,
         )
 
         cur_etag = None
@@ -611,11 +612,9 @@ def export_collection(
             # imported collection — exactly what the etag fence
             # exists to refuse. Refuse at the source instead.
             for sc in _SIDECARS:
-                scp = os.path.join(src, sc)
-                if not os.path.exists(scp):
+                if not os.path.exists(os.path.join(src, sc)):
                     continue
-                with open(scp) as f:
-                    stamp = json.load(f).get("source")
+                stamp = read_sidecar(src, sc).get("source")
                 if stamp is None:
                     continue  # unstamped index: ships as-is
                 if stamp.get("name") != name:
@@ -737,12 +736,13 @@ def _install_snapshot_indexes(snapshot: str, root: str, target: str) -> None:
     (the copy completes before any stamp is touched)."""
     import shutil
 
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _atomic_sidecar_write,
-        _source_stamp,
-    )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.idguard import (
         _SIDECARS,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _atomic_sidecar_write,
+        _source_stamp,
+        read_sidecar,
     )
 
     idx_root = os.path.join(snapshot, "indexes")
@@ -758,13 +758,15 @@ def _install_snapshot_indexes(snapshot: str, root: str, target: str) -> None:
                 f"import target already holds an index dir {dst!r}; "
                 "refusing to overwrite"
             )
+        # read (and format-check) before copying: an index of another
+        # format refuses without leaving a half-installed copy
+        metas = {
+            sc: read_sidecar(src, sc)
+            for sc in _SIDECARS
+            if os.path.exists(os.path.join(src, sc))
+        }
         shutil.copytree(src, dst)
-        for sc in _SIDECARS:
-            sc_path = os.path.join(dst, sc)
-            if not os.path.exists(sc_path):
-                continue
-            with open(sc_path) as f:
-                meta = json.load(f)
+        for sc, meta in metas.items():
             if meta.get("source") is not None:
                 meta["source"] = _source_stamp((root, target))
                 _atomic_sidecar_write(dst, sc, meta)

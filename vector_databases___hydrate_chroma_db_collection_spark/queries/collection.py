@@ -2845,8 +2845,6 @@ def collection_ivf_delete_compact_lifecycle(
     deleted id stays gone. Each row is one observable fact
     ``(stage, metric, value)`` the oracle recomputes from the
     fixture tables."""
-    import json as _json
-    import os
     import tempfile
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
@@ -2854,6 +2852,9 @@ def collection_ivf_delete_compact_lifecycle(
         ivf_build,
         ivf_read,
         ivf_write,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        read_sidecar,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
         HydrationConfig,
@@ -2901,7 +2902,7 @@ def collection_ivf_delete_compact_lifecycle(
     n_del = collection_delete_indexed(
         spark, root, "dellife", where={"lang": "fr"}, index_paths=[idx]
     )
-    meta = _json.load(open(os.path.join(idx, "ivf_index.json")))
+    meta = read_sidecar(idx, "ivf_index.json")
     n_ts = int(meta["tombstones"]["n"])
     # every fr doc is tombstoned -> fraction = fr/total; threshold
     # far below it so the tick MUST compact (file budget neutralized
@@ -2917,7 +2918,7 @@ def collection_ivf_delete_compact_lifecycle(
         ),
         audit=False,
     )
-    meta2 = _json.load(open(os.path.join(idx, "ivf_index.json")))
+    meta2 = read_sidecar(idx, "ivf_index.json")
     ts_left = int((meta2.get("tombstones") or {}).get("n") or 0)
     logical_rows = ivf_read(spark, idx)[0].count()
     # the purge cleared the mask AND the id-guard filter: the deleted
@@ -3643,7 +3644,6 @@ def collection_sharded_guard_append(spark: SparkSession, sf_dir: str) -> DataFra
     top-5 exhaustively over the extended index must equal the
     oracle's brute-force over the full corpus. Every contract is
     asserted in the body; the driver's hash gate checks the serve."""
-    import json as _json
     import os as _os
     import tempfile
 
@@ -3657,6 +3657,9 @@ def collection_sharded_guard_append(spark: SparkSession, sf_dir: str) -> DataFra
         ivf_search,
         ivf_write,
     )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        read_sidecar,
+    )
 
     e = load_table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") < 200).select("vec_id", "embedding")
@@ -3667,8 +3670,7 @@ def collection_sharded_guard_append(spark: SparkSession, sf_dir: str) -> DataFra
     idx = tempfile.mkdtemp(prefix="vdb_shard_guard_") + "/idx"
     ivf_write(assigned, C, idx, metric="cosine",
               build={"metric": "l2", "seed": 42, "sample_fraction": None})
-    with open(_os.path.join(idx, "ivf_index.json")) as f:
-        main_loc = _json.load(f)["id_bloom"]["location"]
+    main_loc = read_sidecar(idx, "ivf_index.json")["id_bloom"]["location"]
     main_bytes = open(_os.path.join(idx, main_loc), "rb").read()
 
     batches = [
@@ -3682,8 +3684,7 @@ def collection_sharded_guard_append(spark: SparkSession, sf_dir: str) -> DataFra
         )
         if n != 50:
             raise EngineError(f"append {i}: expected 50 rows, got {n}")
-        with open(_os.path.join(idx, "ivf_index.json")) as f:
-            ib = _json.load(f)["id_bloom"]
+        ib = read_sidecar(idx, "ivf_index.json")["id_bloom"]
         if len(ib.get("segments") or []) != i:
             raise EngineError(
                 f"append {i}: expected {i} delta segments, got "

@@ -73,12 +73,8 @@ collection commit and its index mutation; self-fencing is sound here
 exactly because the WAL's content-qualified tag proves the retried
 mutation identical (see ``collection_delete_indexed``). Stores
 converge; published verdicts equal the first attempt's exactly.
-Migration posture: pre-upgrade recordings (the per-id-latest tag
-basis) are still recognized — a DONE one republishes fine (its
-verdict columns exist in both schemas); a PENDING one lacks ``_e0``
-and the half-mutated store makes recomputing it impossible, so the
-replay refuses with a typed error naming the entry instead of
-crash-looping or re-judging.
+The WAL carries ``store.FORMAT_VERSION`` like every index sidecar; a
+WAL of another format refuses with ``StaleIndexError``.
 
 WAL retention: completed entries of THIS sink are kept for the last
 batch only (Structured Streaming replays at most the last uncommitted
@@ -101,29 +97,29 @@ CRUD paths.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    _atomic_sidecar_write,
+    _fresh_versioned_dir,
+    _local_sidecar_path,
+    read_sidecar,
+)
+
 _LOG = "cdc_log.json"
 
 
 def _log_read(p: str) -> dict:
-    f = os.path.join(p, _LOG)
-    if not os.path.exists(f):
+    if not os.path.exists(os.path.join(p, _LOG)):
         return {"entries": []}
-    with open(f) as fh:
-        return json.load(fh)
+    return read_sidecar(p, _LOG)
 
 
 def _log_write(p: str, log: dict) -> None:
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _atomic_sidecar_write,
-    )
-
     _atomic_sidecar_write(p, _LOG, log)
 
 
@@ -236,10 +232,6 @@ def cdc_ingest_batch_fn(
     from vector_databases___hydrate_chroma_db_collection_spark.errors import (
         EngineError,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _fresh_versioned_dir,
-        _local_sidecar_path,
-    )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
         hydrate,
     )
@@ -309,29 +301,10 @@ def cdc_ingest_batch_fn(
                 F.col("seq").cast("string"),
             ).alias("_k")
         )
-        digest, _legacy = idguard.batch_digests(tagged, "_k")
+        digest = idguard.batch_digest(tagged, "_k")
         tag = f"{sink_table}#{batch_id}#{digest}"
-        # pre-r14 tags digested the per-id LATEST (id:op:seq) set, not
-        # all events — recognize them too, or a batch that crashed
-        # before an upgrade would be re-judged as fresh against the
-        # half-mutated store (the exact failure the WAL exists to
-        # prevent)
-        tagged_v1 = grouped.select(
-            F.concat_ws(
-                ":", "id", "op", F.col("seq").cast("string")
-            ).alias("_k")
-        )
-        digest_v1, _ = idguard.batch_digests(tagged_v1, "_k")
-        tag_v1 = f"{sink_table}#{batch_id}#{digest_v1}"
         log = _log_read(p)
-        entry = next(
-            (
-                e
-                for e in log["entries"]
-                if e.get("tag") in (tag, tag_v1)
-            ),
-            None,
-        )
+        entry = next((e for e in log["entries"] if e.get("tag") == tag), None)
         is_replay = entry is not None
         if is_replay:
             # replay (crashed or completed): republish the recorded
@@ -343,25 +316,7 @@ def cdc_ingest_batch_fn(
             if entry.get("state") == "done":
                 # the first attempt committed every mutation before
                 # flipping the entry to done — republish and stop.
-                # (Also what makes replaying a pre-r14 DONE recording
-                # safe: its verdict columns exist in both schemas.)
                 return verdicts
-            if "_e0" not in recorded.columns:
-                # a pre-r14 PENDING recording: the old schema did not
-                # persist pre-batch existence, and the store has been
-                # half-mutated by the crashed attempt, so the net
-                # mutations cannot be reconstructed — refuse loudly
-                # instead of crash-looping on a missing column or
-                # silently re-judging against corrupted state.
-                raise EngineError(
-                    "stream_cdc_ingest: pending WAL entry "
-                    f"{entry['tag']!r} was recorded by a pre-upgrade "
-                    "engine (no _e0 column) and its net mutations "
-                    "cannot be reconstructed; finish or roll back the "
-                    "batch with the old engine version, or remove the "
-                    "entry and its recording dir after manually "
-                    "reconciling the stores"
-                )
             e0 = recorded.select("id", "_e0")
         else:
             held = read_collection(spark, cfg.root, cfg.collection_name)

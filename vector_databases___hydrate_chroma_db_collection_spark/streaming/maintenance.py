@@ -138,10 +138,7 @@ def band_maintenance(spark, index_path: str, policy: MaintenancePolicy) -> dict:
         # that batch's replay heals it. Same defer when EVERY doc is
         # tombstoned (the purge would empty the parts — the compactor
         # refuses loudly; a later batch's fresh docs unblock it).
-        torn = bool(
-            meta.get("pending_append") or meta.get("pending_appends")
-        )
-        if not torn and ts_fraction < 1.0:
+        if not meta.get("pending_appends") and ts_fraction < 1.0:
             band_index_compact(spark, index_path)
             compacted = True
     return {
@@ -185,11 +182,14 @@ def ivf_maintenance(
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _data_files,
-        _local_sidecar_path,
         _parquet_rows,
         ivf_balance_audit,
         ivf_compact,
         ivf_recall_audit,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _local_sidecar_path,
+        read_sidecar,
     )
 
     refresh = None
@@ -220,12 +220,9 @@ def ivf_maintenance(
         if row is not None:
             mean_recall = row["mean_recall"]
             refresh = bool(refresh) or bool(row["refresh_recommended"])
-    import json
-
     p = _local_sidecar_path(index_path)
-    with open(os.path.join(p, "ivf_index.json")) as f:
-        meta = json.load(f)
-    loc = os.path.join(p, meta.get("location", "cells"))
+    meta = read_sidecar(p, "ivf_index.json")
+    loc = os.path.join(p, meta["location"])
     files = _data_files(loc)
     budget = policy.files_per_cell_threshold * int(meta["n_centroids"])
     # tombstone bloat is the second compaction trigger: deleted rows

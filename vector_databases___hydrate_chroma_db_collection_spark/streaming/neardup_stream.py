@@ -137,17 +137,16 @@ def stream_novelty_ingest(
     the batch carries (doc ingested by an EARLIER batch, re-emitted
     here) keeps that earlier batch's rows in the reference and stays
     duplicate on replay — excluding the whole batch id set would
-    discount those rows too and flip it novel. Appends recorded by a
-    pre-recording version of the index fall back to batch-id-set
-    exclusion. A FRESH batch (no tag match) gates through the plain
-    ``bucket_keys`` fast path, so a document REDELIVERED by an
-    at-least-once source in a LATER batch is flagged duplicate (its
-    rows are in the index and its id is not excluded) — id-set
-    exclusion alone would wrongly re-gate it novel. The index is read
-    with ``verify_source=False``: inside the loop the sidecar stamp
-    is transiently stale by design (between hydrate and the append's
-    re-stamp), and the loop itself is the only writer that matters —
-    the staleness check is for OUT-OF-BAND readers. The
+    discount those rows too and flip it novel. A FRESH batch (no tag
+    match) gates through the plain ``bucket_keys`` fast path, so a
+    document REDELIVERED by an at-least-once source in a LATER batch
+    is flagged duplicate (its rows are in the index and its id is not
+    excluded) — id-set exclusion alone would wrongly re-gate it novel.
+    The index is read with ``verify_source=False``: inside the loop
+    the sidecar stamp is transiently stale by design (between hydrate
+    and the append's re-stamp), and the loop itself is the only
+    writer that matters — the staleness check is for OUT-OF-BAND
+    readers. The
     ``expected_prev_etag`` fence is deliberately NOT used here — on
     replay the observed etag is already post-hydrate, so the fence
     would false-positive; the append guard provides the idempotence
@@ -227,27 +226,17 @@ def _novelty_ingest_batch_fn(
         # restarted stream (fresh checkpoint, same sink/batch numbers,
         # different content) gates as a fresh batch instead of
         # wrongly excluding the old run's recorded contribution
-        batch_tag = matched_tag = None
+        batch_tag = None
+        replayed = False
         if not probe_only:
-            # both digest formats from ONE aggregation: the current
-            # two-seed form tags new appends, the legacy single-xor
-            # form matches a batch RECORDED before the r12 digest
-            # upgrade — a cross-upgrade checkpoint replay must still
-            # be detected or its republished verdicts silently flip
-            dg_new, dg_old = idguard.batch_digests(batch_docs, ic)
-            prefix = f"{sink_table}#{batch_id}#"
-            batch_tag = prefix + dg_new
-            pend = meta.get("pending_appends") or []
-            matched_tag = next(
-                (
-                    t
-                    for t in (batch_tag, prefix + dg_old)
-                    if t == meta.get("last_append_tag")
-                    or any(e.get("tag") == t for e in pend)
-                ),
-                None,
+            batch_tag = (
+                f"{sink_table}#{batch_id}#"
+                f"{idguard.batch_digest(batch_docs, ic)}"
             )
-        replayed = matched_tag is not None
+            replayed = batch_tag == meta.get("last_append_tag") or any(
+                e.get("tag") == batch_tag
+                for e in meta.get("pending_appends") or []
+            )
         if replayed:
             # This very batch already appended (fully or torn): gate
             # against the band table MINUS exactly the rows the
@@ -255,8 +244,6 @@ def _novelty_ingest_batch_fn(
             # post-guard id set) so the first attempt's verdicts
             # republish — including "duplicate" for a same-id
             # redelivery whose rows an EARLIER batch contributed.
-            # None = pre-recording index: fall back to excluding the
-            # whole batch id set (the pre-r11 behavior).
             bands_t, _ = band_index_read(
                 spark, index_path, verify_source=False
             )
@@ -270,7 +257,7 @@ def _novelty_ingest_batch_fn(
                 num_hashes=meta["num_hashes"],
                 bands=meta["bands"],
                 exclude_ids=band_index_appended_ids(
-                    spark, index_path, matched_tag
+                    spark, index_path, batch_tag
                 ),
             )
         else:
@@ -305,11 +292,9 @@ def _novelty_ingest_batch_fn(
         # rows — the append's own double-ingest guard (not hydrate's
         # outcome) decides what is genuinely new on the index side.
         # The tag records WHICH batch appended, for replay detection.
-        # a legacy-format replay re-commits under ITS recorded tag so
-        # a further replay of the same batch keeps matching it
         band_index_append(
             spark, index_path, novel_docs.select(ic, tc),
-            id_col=ic, text_col=tc, tag=matched_tag or batch_tag,
+            id_col=ic, text_col=tc, tag=batch_tag,
         )
         if maintenance is not None and maintenance.due(batch_id):
             # post-append, pre-return: the verdicts above are already
@@ -532,12 +517,10 @@ def _semantic_ingest_batch_fn(
     at module level so tests and the oracle-checked batch twin can
     drive first-attempt vs replay invocations of the SAME
     ``(batch, batch_id)`` directly."""
-    import json
     import os
     from dataclasses import replace
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _local_sidecar_path,
         ivf_append,
         ivf_appended_ids,
         ivf_knn_join,
@@ -545,6 +528,10 @@ def _semantic_ingest_batch_fn(
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
         hydrate,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _local_sidecar_path,
+        read_sidecar,
     )
 
     cfg = replace(hydration_cfg, on_duplicate="first")
@@ -562,8 +549,7 @@ def _semantic_ingest_batch_fn(
         # stores are already guarded; the PUBLISHED table is per-doc)
         uniq = batch_docs.dropDuplicates([ic])
         p = _local_sidecar_path(index_path)
-        with open(os.path.join(p, "ivf_index.json")) as f:
-            meta = json.load(f)
+        meta = read_sidecar(p, "ivf_index.json")
         # ONE emptiness probe; the construction-time schema call must
         # run no jobs (so no digest aggregation either)
         probe_only = batch_docs.isEmpty()
@@ -571,31 +557,18 @@ def _semantic_ingest_batch_fn(
         # a restarted stream (fresh checkpoint, same sink/batch ids,
         # different content) must gate as a FRESH batch — tag-string
         # equality alone would wrongly exclude the OLD run's recorded
-        # ids and mis-gate near-duplicates of them as novel.
-        # pending crashed-append records are a LIST keyed by tag
-        # (r12, mirroring the band index); legacy single-slot sidecars
-        # still read. Replay detection accepts the pre-r12 single-xor
-        # digest form too (one aggregation yields both) so a
-        # checkpoint replay spanning the digest upgrade republishes
-        # its first attempt's verdicts instead of gating fresh.
-        pending = list(meta.get("pending_appends") or [])
-        if meta.get("pending_append"):
-            pending.append(meta["pending_append"])
-        batch_tag = matched_tag = None
+        # ids and mis-gate near-duplicates of them as novel. A crashed
+        # attempt is found by its tag in the pending_appends list.
+        batch_tag = None
+        replayed = False
         if not probe_only:
-            dg_new, dg_old = idguard.batch_digests(uniq, ic)
-            prefix = f"{sink_table}#{batch_id}#"
-            batch_tag = prefix + dg_new
-            matched_tag = next(
-                (
-                    t
-                    for t in (batch_tag, prefix + dg_old)
-                    if t == meta.get("last_append_tag")
-                    or any(e.get("tag") == t for e in pending)
-                ),
-                None,
+            batch_tag = (
+                f"{sink_table}#{batch_id}#{idguard.batch_digest(uniq, ic)}"
             )
-        replayed = matched_tag is not None
+            replayed = batch_tag == meta.get("last_append_tag") or any(
+                e.get("tag") == batch_tag
+                for e in meta.get("pending_appends") or []
+            )
         # ONE sidecar parse per batch (the sidecar embeds the full
         # centroid matrix — multi-MB at production cell counts):
         # assemble what ivf_read(verify_source=False) would return
@@ -608,9 +581,7 @@ def _semantic_ingest_batch_fn(
             _mask_tombstones,
         )
 
-        assigned = spark.read.parquet(
-            os.path.join(p, meta.get("location", "cells"))
-        )
+        assigned = spark.read.parquet(os.path.join(p, meta["location"]))
         C = np.asarray(meta["centroids"])
         metric = meta["metric"]
         idx_id, idx_emb = [
@@ -621,9 +592,7 @@ def _semantic_ingest_batch_fn(
             # exclude exactly what this batch's own earlier attempt
             # contributed — rows an EARLIER batch contributed for a
             # redelivered id must stay in the reference
-            rec = ivf_appended_ids(spark, index_path, matched_tag)
-            if rec is None:  # pre-recording index: batch-id fallback
-                rec = uniq.select(ic)
+            rec = ivf_appended_ids(spark, index_path, batch_tag)
             idx_type = dict(assigned.dtypes)[idx_id]
             assigned = assigned.join(
                 F.broadcast(
@@ -687,14 +656,13 @@ def _semantic_ingest_batch_fn(
         # append still owes the INDEX its rows; the append's own
         # guard decides what is genuinely new. The tag records WHICH
         # batch appended, for replay detection + exclusion.
-        # a legacy-format replay re-commits under ITS recorded tag
         ivf_append(
             spark,
             index_path,
             novel_docs.select(ic, ec),
             id_col=ic,
             embedding_col=ec,
-            tag=matched_tag or batch_tag,
+            tag=batch_tag,
         )
         if maintenance is not None:
             flag = None
