@@ -1544,3 +1544,128 @@ def test_include_parameter_parity(spark, tmp_path):
         collection_query(
             spark, root, "api", [1.0, 0.0], include=["uris"]
         )
+
+
+def test_delete_every_row_of_one_bucket(spark, tmp_path):
+    """A bucketed id delete that empties one touched bucket writes no
+    file for it; the other buckets clone forward. Count and rows equal
+    the retained parent version minus the deleted ids."""
+    from pyspark.sql import functions as F
+
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+        collection_versions,
+    )
+
+    root = _hydrated(spark, tmp_path, n_buckets=4)
+    raw = read_collection(spark, root, "api", include_bucket=True)
+    by_bucket = {}
+    for r in raw.collect():
+        by_bucket.setdefault(r["id_bucket"], []).append(r["id"])
+    assert len(by_bucket) > 1
+    bucket, doomed = min(by_bucket.items())
+    assert collection_delete(
+        spark, root, "api", ids=doomed, retain_previous=True
+    ) == len(doomed)
+    prev = next(d for d, active in collection_versions(root, "api") if not active)
+    want = sorted(
+        read_collection(spark, root, "api", version=prev)
+        .filter(~F.col("id").isin(doomed))
+        .collect()
+    )
+    assert collection_count(spark, root, "api") == len(want)
+    assert sorted(read_collection(spark, root, "api").collect()) == want
+    assert bucket not in {
+        r["id_bucket"]
+        for r in read_collection(
+            spark, root, "api", include_bucket=True
+        ).collect()
+    }
+
+
+# Spark jobs per call of each front door on a 50-row bucketed
+# collection with an IVF-PQ index. They do not depend on row count:
+# a rise means a new fixed per-call action (a list-backed client frame,
+# a schema-inference read, a bookkeeping count).
+ADD_JOBS = 13
+UPSERT_JOBS = 19
+DELETE_JOBS = 15
+QUERY_JOBS = 5
+
+
+def _jobs_in(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_indexed_front_doors_job_budget(spark, tmp_path):
+    import numpy as np
+    from pyspark.sql.types import _parse_datatype_string
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
+        ivf_pq_build,
+        ivf_pq_write,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        _chroma_items_df,
+        collection_add,
+        collection_delete_indexed,
+        collection_query_ivf_pq,
+        collection_upsert,
+    )
+
+    dim, root, name, idx = 8, str(tmp_path), "budget", str(tmp_path / "idx")
+    X = np.random.default_rng(5).standard_normal((60, dim)).round(3)
+
+    def items(lo, hi):
+        return dict(
+            ids=[f"d{i}" for i in range(lo, hi)],
+            embeddings=X[lo:hi].tolist(),
+            documents=[f"doc {i}" for i in range(lo, hi)],
+            metadatas=[{"i": i} for i in range(lo, hi)],
+        )
+
+    hydrate(
+        spark,
+        _chroma_items_df(spark, **items(0, 50)),
+        HydrationConfig(
+            collection_name=name, root=root, metadata_col="metadata",
+            n_buckets=4,
+        ),
+    )
+    enc, C, B = ivf_pq_build(
+        read_collection(spark, root, name), n_centroids=4, m=4, n_codes=16,
+        seed=1,
+    )
+    ivf_pq_write(enc, C, B, idx, source=(root, name))
+
+    frame = _chroma_items_df(spark, **items(50, 55))
+    assert frame.schema == _parse_datatype_string(
+        "id string, document string, embedding array<float>, "
+        "metadata map<string,string>"
+    )
+    plan = frame._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+
+    got = {
+        "add": _jobs_in(spark, "budget_add", lambda: collection_add(
+            spark, root, name, index_paths=[idx], **items(50, 55))),
+        "upsert": _jobs_in(spark, "budget_upsert", lambda: collection_upsert(
+            spark, root, name, index_paths=[idx], **items(45, 55))),
+        "delete": _jobs_in(spark, "budget_delete", lambda: collection_delete_indexed(
+            spark, root, name, ids=["d1", "d2", "d52"], index_paths=[idx])),
+        "query": _jobs_in(spark, "budget_query", lambda: collection_query_ivf_pq(
+            spark, root, name, X[7].tolist(), 5, index_path=idx, nprobe=4,
+        ).collect()),
+    }
+    assert collection_count(spark, root, name) == 52
+    assert got == {
+        "add": ADD_JOBS, "upsert": UPSERT_JOBS,
+        "delete": DELETE_JOBS, "query": QUERY_JOBS,
+    }

@@ -133,6 +133,35 @@ def test_upsert_touches_only_affected_cells(spark, tmp_path):
     assert rewritten > 0  # the touched cell was rewritten
 
 
+def test_upsert_writes_one_file_per_touched_cell(spark, tmp_path):
+    """A multi-partition batch still lands as ONE data file per cell it
+    touches (the ivf_write / ivf_compact layout rule): without the
+    per-cell shuffle every map task writes its own file into every
+    cell it reaches."""
+    idx = _mk_index(spark, tmp_path)
+    loc0 = os.path.join(idx, json.load(open(os.path.join(idx, "ivf_index.json")))["location"])
+    before = {
+        d: sorted(os.listdir(os.path.join(loc0, d)))
+        for d in os.listdir(loc0) if d.startswith("ivf_cell=")
+    }
+    pairs = [
+        (str(i), [float((i * 5 + j) % 9) + 0.5 * j for j in range(4)])
+        for i in list(range(0, 40, 3)) + list(range(100, 112))
+    ]
+    batch = _batch(spark, pairs).repartition(4)
+    assert batch.rdd.getNumPartitions() == 4
+    ivf_upsert(spark, idx, batch)
+    loc1 = os.path.join(idx, json.load(open(os.path.join(idx, "ivf_index.json")))["location"])
+    touched = {
+        d: [f for f in os.listdir(os.path.join(loc1, d)) if f.endswith(".parquet")]
+        for d in os.listdir(loc1)
+        if d.startswith("ivf_cell=")
+        and sorted(os.listdir(os.path.join(loc1, d))) != before.get(d)
+    }
+    assert len(touched) >= 2
+    assert {d: len(fs) for d, fs in touched.items()} == {d: 1 for d in touched}
+
+
 def test_upsert_resurrects_tombstoned_id(spark, tmp_path):
     idx = _mk_index(spark, tmp_path)
     ivf_delete(spark, idx, ["7", "8"])

@@ -27,6 +27,8 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate imp
 )
 from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
     FORMAT_VERSION,
+    read_parquet,
+    read_sidecar,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
     export_collection,
@@ -225,3 +227,135 @@ def test_every_mutating_writer_stamps_format_version(spark, coll, tmp_path):
         meta = json.load(f)
     assert meta["source"]["root"] == root2
     assert meta["format_version"] == FORMAT_VERSION
+
+
+def _same_schema(spark, loc):
+    got = read_parquet(spark, loc)
+    assert got.schema == spark.read.parquet(loc).schema
+    return got
+
+
+def test_read_parquet_schema_equals_inferred_read(spark, coll, tmp_path):
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+        current_data_dir,
+    )
+
+    root, name, df = coll
+    _same_schema(spark, current_data_dir(root, name))
+    hydrate(
+        spark, df,
+        HydrationConfig(
+            collection_name="b", root=root, metadata_col="metadata",
+            n_buckets=4,
+        ),
+    )
+    bucketed = _same_schema(spark, current_data_dir(root, "b"))
+    assert "id_bucket" in bucketed.columns
+    # the partition column still prunes
+    plan = (
+        bucketed.filter(F.col("id_bucket") == 1)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "PartitionFilters: [isnotnull(id_bucket" in plan
+    for id_type in ("string", "bigint"):
+        p = str(tmp_path / f"ivf_{id_type}")
+        assigned, C = ann.ivf_build(
+            df.select(F.col("id").cast(id_type).alias("id"), "embedding"),
+            n_centroids=2, seed=1,
+        )
+        ann.ivf_write(assigned, C, p, metric="cosine")
+        cells = _same_schema(
+            spark, os.path.join(p, read_sidecar(p, "ivf_index.json")["location"])
+        )
+        assert dict(cells.dtypes)["id"] == id_type
+        assert dict(cells.dtypes)["ivf_cell"] == "int"
+    p = str(tmp_path / "pq")
+    _ivf_pq(spark, coll, p)
+    meta = read_sidecar(p, "ivf_pq_index.json")
+    _same_schema(spark, os.path.join(p, meta["location"]))
+    ann.ivf_delete(spark, p, ["1", "2"], sidecar="ivf_pq_index.json")
+    meta = read_sidecar(p, "ivf_pq_index.json")
+    ts = _same_schema(spark, os.path.join(p, meta["tombstones"]["location"]))
+    assert sorted(r["_ts_id"] for r in ts.collect()) == ["1", "2"]
+
+
+def test_read_parquet_falls_back_without_spark_footer(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+    from pyspark.errors import AnalysisException
+
+    foreign = tmp_path / "foreign"
+    foreign.mkdir()
+    papq.write_table(
+        pa.table({"id": ["a", "b"], "x": [1.5, 2.5]}),
+        str(foreign / "part-0.parquet"),
+    )
+    kv = papq.read_metadata(str(foreign / "part-0.parquet")).metadata or {}
+    assert b"org.apache.spark.sql.parquet.row.metadata" not in kv
+    got = _same_schema(spark, str(foreign))
+    assert sorted(tuple(r) for r in got.collect()) == [("a", 1.5), ("b", 2.5)]
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    with pytest.raises(AnalysisException) as plain:
+        spark.read.parquet(str(empty))
+    with pytest.raises(AnalysisException) as ours:
+        read_parquet(spark, str(empty))
+    assert ours.value.getCondition() == plain.value.getCondition()
+
+
+@pytest.mark.parametrize("n_buckets", [None, 4])
+def test_collection_count_is_footer_exact(spark, tmp_path, n_buckets):
+    """``collection_count`` sums footers; it must equal a Spark count
+    after every mutation, with Spark's bookkeeping files (and files
+    Spark skips by name) beside the data."""
+    import glob
+    import shutil
+
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        collection_add,
+        collection_delete,
+        collection_upsert,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+        collection_count,
+        current_data_dir,
+    )
+
+    root, name = str(tmp_path), "fc"
+
+    def items(lo, hi):
+        return dict(
+            ids=[str(i) for i in range(lo, hi)],
+            embeddings=[[float(i), 1.0] for i in range(lo, hi)],
+        )
+
+    def check():
+        d = current_data_dir(root, name)
+        files = glob.glob(os.path.join(d, "**", "part-*.parquet"), recursive=True)
+        shutil.copy(files[0], os.path.join(d, "_skipped.parquet"))
+        shutil.copy(files[0], os.path.join(d, ".skipped.parquet"))
+        assert os.path.exists(os.path.join(d, "_SUCCESS"))
+        assert glob.glob(os.path.join(d, "**", ".*.crc"), recursive=True)
+        n = collection_count(spark, root, name)
+        assert n == read_collection(spark, root, name).count()
+        return n
+
+    hydrate(
+        spark,
+        spark.createDataFrame(
+            [(str(i), f"doc {i}", [float(i), 1.0]) for i in range(10)],
+            "id string, document string, embedding array<float>",
+        ),
+        HydrationConfig(collection_name=name, root=root, n_buckets=n_buckets),
+    )
+    assert check() == 10
+    collection_add(spark, root, name, **items(10, 14))
+    assert check() == 14
+    collection_upsert(spark, root, name, **items(12, 16))
+    assert check() == 16
+    collection_delete(spark, root, name, ids=["1", "13"], retain_previous=True)
+    assert check() == 14
+    collection_delete(spark, root, name, where={"nope": "x"}, retain_previous=True)
+    assert check() == 14

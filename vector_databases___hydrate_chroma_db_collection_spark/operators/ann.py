@@ -38,8 +38,11 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.store impor
     _check_source_stamp,
     _fresh_versioned_dir,
     _local_sidecar_path,
+    _parquet_files,
+    _parquet_rows,
     _read_unchecked,
     _source_stamp,
+    read_parquet,
     read_sidecar,
 )
 
@@ -1063,7 +1066,7 @@ def ivf_write(
     )
 
     spark = assigned.sparkSession
-    cells_back = spark.read.parquet(os.path.join(path, cells_dir))
+    cells_back = read_parquet(spark, os.path.join(path, cells_dir))
     idc = [c for c in cells_back.columns if c != "ivf_cell"][0]
     id_bloom = idguard.rebuild_filter(
         cells_back,
@@ -1139,7 +1142,7 @@ def ivf_read(
     path = _local_sidecar_path(path)
     meta = read_sidecar(path, "ivf_index.json")
     _check_source_stamp(meta, path, verify_source)
-    assigned = spark.read.parquet(os.path.join(path, meta["location"]))
+    assigned = read_parquet(spark, os.path.join(path, meta["location"]))
     if not include_tombstoned:
         idc = [c for c in assigned.columns if c != "ivf_cell"][0]
         assigned = _mask_tombstones(spark, path, meta, assigned, idc)
@@ -1236,7 +1239,7 @@ def ivf_append(
     )
 
     loc = os.path.join(p, meta["location"])
-    existing = spark.read.parquet(loc)
+    existing = read_parquet(spark, loc)
     exist_id, exist_emb = [c for c in existing.columns if c != "ivf_cell"][:2]
     ic = id_col or exist_id
     ec = embedding_col or exist_emb
@@ -1481,10 +1484,10 @@ def ivf_appended_ids(spark, path: str, tag: str) -> DataFrame:
             f"IVF index at {path!r} records no append tagged {tag!r}"
         )
     if d is None:
-        cells = spark.read.parquet(os.path.join(p, meta["location"]))
+        cells = read_parquet(spark, os.path.join(p, meta["location"]))
         idc = [c for c in cells.columns if c != "ivf_cell"][0]
         return cells.select(idc).limit(0)
-    return spark.read.parquet(os.path.join(p, d))
+    return read_parquet(spark, os.path.join(p, d))
 
 
 def _tombstone_prefix(sidecar: str) -> str:
@@ -1510,7 +1513,7 @@ def _tombstones_df(spark, p: str, meta: dict) -> DataFrame | None:
     ts = meta.get("tombstones")
     if not ts or not int(ts.get("n") or 0):
         return None
-    return spark.read.parquet(os.path.join(p, ts["location"]))
+    return read_parquet(spark, os.path.join(p, ts["location"]))
 
 
 def _mask_tombstones(spark, p: str, meta: dict, df: DataFrame, id_col: str) -> DataFrame:
@@ -1528,24 +1531,6 @@ def _mask_tombstones(spark, p: str, meta: dict, df: DataFrame, id_col: str) -> D
         F.col(id_col).cast("string") == F.col("_ts_id"),
         "left_anti",
     )
-
-
-def _parquet_rows(loc: str) -> int:
-    """Row count from parquet FOOTERS only (O(files) metadata reads,
-    zero data IO) — what lets a maintenance tick price the tombstone
-    fraction without a corpus scan."""
-    import os
-
-    import pyarrow.parquet as papq
-
-    n = 0
-    for root_, _dirs, files in os.walk(loc):
-        for f in files:
-            if f.endswith(".parquet"):
-                n += papq.ParquetFile(
-                    os.path.join(root_, f)
-                ).metadata.num_rows
-    return n
 
 
 @_serialized_writer()
@@ -1608,8 +1593,10 @@ def ivf_delete(
         first = ids.columns[0]
         batch = ids.select(F.col(first).cast("string").alias("_del_id"))
     else:
+        import pyarrow as pa
+
         batch = spark.createDataFrame(
-            [(str(i),) for i in ids], "_del_id string"
+            pa.table({"_del_id": pa.array([str(i) for i in ids], pa.string())})
         )
     batch = batch.where(F.col("_del_id").isNotNull()).dropDuplicates(
         ["_del_id"]
@@ -1651,7 +1638,7 @@ def ivf_delete(
     )
 
     loc = os.path.join(p, meta["location"])
-    cells = spark.read.parquet(loc)
+    cells = read_parquet(spark, loc)
     idc = [c for c in cells.columns if c not in ("ivf_cell", "pq_code")][0]
     have = cells.select(F.col(idc).cast("string").alias("_have_id"))
     bloom_meta = meta.get("id_bloom")
@@ -1688,7 +1675,7 @@ def ivf_delete(
             floor_names=[(meta.get("tombstones") or {}).get("location")],
         )
         merged.write.mode("overwrite").parquet(os.path.join(p, ts_dir))
-        n_ts = spark.read.parquet(os.path.join(p, ts_dir)).count()
+        n_ts = _parquet_rows(os.path.join(p, ts_dir))
         meta["tombstones"] = {"location": ts_dir, "n": int(n_ts)}
     # re-stamp even when the batch tombstoned nothing NEW in the
     # index (the caller's collection delete may have removed rows the
@@ -1752,19 +1739,20 @@ def _surgical_replace(
     p: str,
     sidecar: str,
     meta: dict,
-    batch_ids: DataFrame,
+    cells: DataFrame,
     new_rows: DataFrame,
 ) -> int:
     """The shared core of ``ivf_upsert`` / ``pq.ivf_pq_upsert``:
-    replace every physical row whose id is in ``batch_ids`` with the
-    (already cell-assigned, already encoded) ``new_rows``, touching
-    only the CELL PARTITIONS involved. One id-column scan finds the
-    old rows' cells; those cells' survivors plus ALL new rows land in
-    a fresh versioned dir in one write; every untouched cell dir is
-    hardlink-cloned forward (O(files) metadata ops, no data read);
-    the sidecar swap is the single atomic commit point — delete and
-    re-add publish together, readers see the whole upsert or none of
-    it. Updated ids leave the tombstone set (an upsert RESURRECTS a
+    replace every physical row of ``cells`` (the index's current cells,
+    as the caller read them) whose id is in ``new_rows`` with the
+    (already cell-assigned, already encoded, checkpointed)
+    ``new_rows``, touching only the CELL PARTITIONS involved. One
+    id-column scan finds the old rows' cells; those cells' survivors
+    plus ALL new rows land in a fresh versioned dir in one write, one
+    file per cell; every untouched cell dir is hardlink-cloned forward
+    (O(files) metadata ops, no data read); the sidecar swap is the
+    single atomic commit point — delete and re-add publish together,
+    readers see the whole upsert or none of it. Updated ids leave the tombstone set (an upsert RESURRECTS a
     deleted id — the new row is the only physical row, so the
     id-granular mask ambiguity that blocks plain re-appends does not
     arise), and the id-guard filter is extended with the batch
@@ -1777,8 +1765,8 @@ def _surgical_replace(
     )
 
     loc = os.path.join(p, meta["location"])
-    cells = spark.read.parquet(loc)
     idc = [c for c in cells.columns if c not in ("ivf_cell", "pq_code")][0]
+    batch_ids = new_rows.select(F.col(idc).cast("string").alias("_up_id"))
     # no broadcast hint on the batch: unlike the tombstone recordings
     # (policy-bounded small), an upsert batch is caller-sized — a bulk
     # re-embed can be millions of rows, and a forced broadcast would
@@ -1807,7 +1795,12 @@ def _surgical_replace(
         if survivors is None
         else survivors.unionByName(new_rows)
     )
-    payload.write.mode("append").partitionBy("ivf_cell").parquet(new_loc)
+    # one task per touched cell -> one data file per cell dir (the
+    # ivf_pq_write / ivf_compact rule); otherwise every map task of
+    # the batch writes its own file into every cell it touches
+    payload.repartition("ivf_cell").write.mode("append").partitionBy(
+        "ivf_cell"
+    ).parquet(new_loc)
     _clone_untouched_cells(loc, new_loc, touched)
     # filter superset BEFORE the swap (same invariant as appends)
     bloom_meta = meta.get("id_bloom")
@@ -1911,36 +1904,32 @@ def ivf_upsert(
     _check_expected_etag(
         meta, path, "ivf_index.json", expected_prev_etag, "upsert"
     )
-    loc = os.path.join(p, meta["location"])
-    existing = spark.read.parquet(loc)
-    exist_id, exist_emb = [c for c in existing.columns if c != "ivf_cell"][:2]
+    from pyspark.sql import Observation
+
+    cells = read_parquet(spark, os.path.join(p, meta["location"]))
+    exist_id, exist_emb = [c for c in cells.columns if c != "ivf_cell"][:2]
     ic = id_col or exist_id
     ec = embedding_col or exist_emb
-    types = dict(existing.dtypes)
-    batch = (
-        rows.select(
-            F.col(ic).cast(types[exist_id]).alias(exist_id),
-            F.col(ec).cast(types[exist_emb]).alias(exist_emb),
-        )
-        .dropDuplicates([exist_id])
-        .localCheckpoint(eager=True)
-    )
-    n_batch = batch.count()
-    if n_batch == 0:
-        return (0, 0)
+    types = dict(cells.dtypes)
+    batch = rows.select(
+        F.col(ic).cast(types[exist_id]).alias(exist_id),
+        F.col(ec).cast(types[exist_emb]).alias(exist_emb),
+    ).dropDuplicates([exist_id])
     build = meta.get("build") or {}
+    # the batch is counted inside its one checkpoint job
+    obs = Observation("ivf_upsert_batch")
     assigned = _assign_to_centroids(
-        batch,
+        batch.observe(obs, F.count(F.lit(1)).alias("n")),
         np.asarray(meta["centroids"]),
         id_col=exist_id,
         embedding_col=exist_emb,
         metric=build.get("metric", meta["metric"]),
     ).localCheckpoint(eager=True)
-    batch_ids = batch.select(
-        F.col(exist_id).cast("string").alias("_up_id")
-    ).localCheckpoint(eager=True)
+    n_batch = int(obs.get["n"])
+    if n_batch == 0:
+        return (0, 0)
     n_updated = _surgical_replace(
-        spark, p, "ivf_index.json", meta, batch_ids, assigned
+        spark, p, "ivf_index.json", meta, cells, assigned
     )
     return (n_updated, n_batch - n_updated)
 
@@ -2108,7 +2097,7 @@ def ivf_balance_audit(
 
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, "ivf_index.json")
-    cells = spark.read.parquet(os.path.join(p, meta["location"]))
+    cells = read_parquet(spark, os.path.join(p, meta["location"]))
     # audit the LOGICAL index (tombstones masked): occupancy and
     # drift verdicts drive refresh decisions about SERVABLE content —
     # rows a delete already masked must not keep a cell looking hot
@@ -2308,7 +2297,7 @@ def ivf_recall_audit(
 
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, "ivf_index.json")
-    cells = spark.read.parquet(os.path.join(p, meta["location"]))
+    cells = read_parquet(spark, os.path.join(p, meta["location"]))
     C = np.asarray(meta["centroids"])
     metric = meta["metric"]
     idc, embc = [c for c in cells.columns if c != "ivf_cell"][:2]
@@ -2347,12 +2336,7 @@ def ivf_recall_audit(
 def _data_files(loc: str) -> int:
     """Parquet data-file count under a directory (bookkeeping files
     excluded) — the quantity compaction exists to bound."""
-    import os
-
-    n = 0
-    for _root, _dirs, files in os.walk(loc):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
+    return sum(1 for _ in _parquet_files(loc))
 
 
 @_serialized_writer()
@@ -2396,7 +2380,7 @@ def ivf_compact(
     old_dir = meta["location"]
     old_loc = os.path.join(p, old_dir)
     before = _data_files(old_loc)
-    df = spark.read.parquet(old_loc)
+    df = read_parquet(spark, old_loc)
     # compaction is also the tombstone PURGE point (Lucene merge
     # semantics): ivf_delete's masked rows are physically dropped
     # here, the recording cleared, and the id-guard filter rebuilt
@@ -2431,7 +2415,7 @@ def ivf_compact(
         .partitionBy("ivf_cell")
         .parquet(new_loc)
     )
-    cells_back = spark.read.parquet(new_loc)
+    cells_back = read_parquet(spark, new_loc)
     idc = [c for c in cells_back.columns if c not in ("ivf_cell", "pq_code")][0]
     meta["id_bloom"] = idguard.rebuild_filter(
         cells_back,

@@ -83,8 +83,10 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.store impor
     _check_source_stamp,
     _fresh_versioned_dir,
     _local_sidecar_path,
+    _parquet_rows,
     _read_unchecked,
     _source_stamp,
+    read_parquet,
     read_sidecar,
 )
 
@@ -234,7 +236,7 @@ def _read_part(
     nb = meta.get("num_buckets")
     loc = _part_loc(path, part, meta)
     if nb is None or part not in ("bands", "bucket_keys"):
-        return spark.read.parquet(loc)
+        return read_parquet(spark, loc)
     tbl = _register_bucketed(spark, loc, meta["ddl"][part], nb)
     return spark.table(tbl)
 
@@ -401,7 +403,7 @@ def band_index_write(
         )
         pre_clustered = True
     else:
-        written = spark.read.parquet(bands_loc)
+        written = read_parquet(spark, bands_loc)
         pre_clustered = False
     keys = written.groupBy("band", "h").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -450,7 +452,7 @@ def band_index_write(
     # id-guard Bloom over the persisted set (read back from the fresh
     # parquet: one bounded column scan; the count is metadata-only)
     id_bloom = idguard.rebuild_filter(
-        spark.read.parquet(os.path.join(p, locations["ids"])),
+        read_parquet(spark, os.path.join(p, locations["ids"])),
         F.col(id_col).cast("string"),
         p,
         (old_meta.get("id_bloom") or {}).get("location"),
@@ -501,7 +503,7 @@ def _band_ts_ids(spark: SparkSession, p: str, meta: dict) -> DataFrame | None:
     ts = meta.get("tombstones")
     if not ts or not int(ts.get("n") or 0):
         return None
-    return spark.read.parquet(os.path.join(p, ts["ids_location"]))
+    return read_parquet(spark, os.path.join(p, ts["ids_location"]))
 
 
 def _band_key_decs(spark: SparkSession, p: str, meta: dict) -> DataFrame | None:
@@ -513,7 +515,7 @@ def _band_key_decs(spark: SparkSession, p: str, meta: dict) -> DataFrame | None:
     ts = meta.get("tombstones")
     if not ts or not ts.get("decs_location"):
         return None
-    return spark.read.parquet(os.path.join(p, ts["decs_location"]))
+    return read_parquet(spark, os.path.join(p, ts["decs_location"]))
 
 
 def _band_removed_keys(spark: SparkSession, p: str, meta: dict) -> DataFrame | None:
@@ -525,7 +527,7 @@ def _band_removed_keys(spark: SparkSession, p: str, meta: dict) -> DataFrame | N
     ts = meta.get("tombstones")
     if not ts or not int(ts.get("n_keys") or 0):
         return None
-    return spark.read.parquet(os.path.join(p, ts["keys_location"]))
+    return read_parquet(spark, os.path.join(p, ts["keys_location"]))
 
 
 def band_index_delete(
@@ -587,9 +589,13 @@ def band_index_delete(
         first = ids.columns[0]
         batch = ids.select(F.col(first).cast("string").alias("_del_id"))
     else:
+        import pyarrow as pa
+
         id_list = list(ids)
         batch = spark.createDataFrame(
-            [(str(i),) for i in id_list], "_del_id string"
+            pa.table(
+                {"_del_id": pa.array([str(i) for i in id_list], pa.string())}
+            )
         )
     batch = (
         batch.where(F.col("_del_id").isNotNull())
@@ -624,7 +630,7 @@ def band_index_delete(
     # retirement arithmetic's whole input, so the delete never opens
     # the corpus-order ``bands`` part at all.
     idc = meta["id_col"]
-    have = spark.read.parquet(os.path.join(p, meta["locations"]["ids"]))
+    have = read_parquet(spark, os.path.join(p, meta["locations"]["ids"]))
     if id_list is not None and 0 < len(id_list) <= 10_000:
         # bounded LITERAL batch: push a typed isin into the scan —
         # the ids part is written range-clustered on the id (see
@@ -712,7 +718,7 @@ def band_index_delete(
         merged_decs.write.mode("overwrite").parquet(
             os.path.join(p, decs_dir)
         )
-        merged_decs = spark.read.parquet(os.path.join(p, decs_dir))
+        merged_decs = read_parquet(spark, os.path.join(p, decs_dir))
         cand = dec_delta.select("band", "h").localCheckpoint(eager=True)
         totals = (
             _read_part(spark, path, "bucket_keys", meta)
@@ -856,7 +862,7 @@ def _resolve_deferred(
     parts = []
     for i, e in enumerate(queued):
         parts.append(
-            spark.read.parquet(os.path.join(p, e["location"])).withColumn(
+            read_parquet(spark, os.path.join(p, e["location"])).withColumn(
                 "_qi", F.lit(i)
             )
         )
@@ -996,7 +1002,7 @@ def band_index_apply(
     )
     old_locations = dict(meta["locations"])
     have = (
-        spark.read.parquet(os.path.join(p, old_locations["ids"]))
+        read_parquet(spark, os.path.join(p, old_locations["ids"]))
         .select(F.col(idc).cast("string").alias("_have_id"))
         .localCheckpoint(eager=True)
     )
@@ -1093,7 +1099,7 @@ def band_index_apply(
             df, path, part, part_nb, old_locations.get(part)
         )
     meta["id_bloom"] = idguard.rebuild_filter(
-        spark.read.parquet(os.path.join(p, new_locations["ids"])),
+        read_parquet(spark, os.path.join(p, new_locations["ids"])),
         F.col(idc).cast("string"),
         p,
         (meta.get("id_bloom") or {}).get("location"),
@@ -1859,7 +1865,7 @@ def band_index_appended_ids(
         return spark.createDataFrame(
             [], f"`{meta['id_col']}` {meta['id_type']}"
         )
-    return spark.read.parquet(os.path.join(p, d))
+    return read_parquet(spark, os.path.join(p, d))
 
 
 def _part_files(loc: str) -> int:
@@ -1912,9 +1918,7 @@ def band_index_audit(
     usable filter report ``filter_capacity_used`` NULL."""
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, _SIDECAR)
-    n_docs = spark.read.parquet(
-        os.path.join(p, meta["locations"]["ids"])
-    ).count()
+    n_docs = _parquet_rows(os.path.join(p, meta["locations"]["ids"]))
     krow = (
         _read_part(spark, path, "bucket_keys", meta)
         .agg(
@@ -2040,8 +2044,8 @@ def band_index_compact(spark: SparkSession, path: str) -> dict:
     ts = _band_ts_ids(spark, p, meta)
     if ts is not None:
         idc = meta["id_col"]
-        survivors = spark.read.parquet(
-            os.path.join(p, old_locations["ids"])
+        survivors = read_parquet(
+            spark, os.path.join(p, old_locations["ids"])
         ).join(
             F.broadcast(ts),
             F.col(idc).cast("string") == F.col("_ts_id"),
@@ -2099,7 +2103,7 @@ def band_index_compact(spark: SparkSession, path: str) -> dict:
     # never wrong) — compaction is the natural point to restore the
     # designed false-positive rate.
     meta["id_bloom"] = idguard.rebuild_filter(
-        spark.read.parquet(os.path.join(p, new_locations["ids"])),
+        read_parquet(spark, os.path.join(p, new_locations["ids"])),
         F.col(meta["id_col"]).cast("string"),
         p,
         (meta.get("id_bloom") or {}).get("location"),

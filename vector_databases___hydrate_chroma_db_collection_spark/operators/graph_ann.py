@@ -73,6 +73,9 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import 
     _cell_order,
     _serialized_writer as _ann_serialized_writer,
 )
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    read_parquet,
+)
 
 _SIDECAR = "graph_index.json"
 
@@ -300,7 +303,7 @@ def graph_index_write(
         os.path.join(p, cells_dir)
     )
     spark = assigned.sparkSession
-    cells_back = spark.read.parquet(os.path.join(p, cells_dir))
+    cells_back = read_parquet(spark, os.path.join(p, cells_dir))
     id_bloom = idguard.rebuild_filter(
         cells_back,
         F.col("id").cast("string"),
@@ -350,7 +353,7 @@ def graph_index_read(
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, _SIDECAR)
     _check_source_stamp(meta, p, verify_source)
-    cells = spark.read.parquet(os.path.join(p, meta["location"]))
+    cells = read_parquet(spark, os.path.join(p, meta["location"]))
     return cells, np.asarray(meta["centroids"], dtype=np.float64), meta
 
 
@@ -445,7 +448,7 @@ def graph_append(
         .localCheckpoint(eager=True)
     )
     loc = os.path.join(p, meta["location"])
-    cells = spark.read.parquet(loc)
+    cells = read_parquet(spark, loc)
     ts_prev = _tombstones_df(spark, p, meta)
     if ts_prev is not None:
         dead_hit = batch.join(
@@ -648,8 +651,8 @@ def _serve_cells(
         )
 
         dead_df = (
-            spark.read.parquet(
-                os.path.join(_local_sidecar_path(path), ts["location"])
+            read_parquet(
+                spark, os.path.join(_local_sidecar_path(path), ts["location"])
             )
             .select(F.col("_ts_id").alias("id"))
             .dropDuplicates(["id"])

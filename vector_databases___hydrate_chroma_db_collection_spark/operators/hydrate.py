@@ -61,6 +61,12 @@ class HydrationConfig:
       duplicates collapsed the same deterministic way; implemented
       as an anti-join rewrite into a fresh versioned data dir
       swapped in atomically). Any other value raises EngineError.
+    - ``dim``: the embedding dimension rows must have; ``None`` infers
+      it from the first non-empty input vector (one Spark job), or
+      from the existing manifest when the input is empty. The Chroma
+      front doors (``plans.chroma_api.collection_add`` /
+      ``collection_upsert``) pass it: they have already checked every
+      vector's length on the driver.
     - ``near_dup_index``/``near_dup_policy``/``near_dup_threshold``:
       content-level dedup-on-ingest — gate the incoming batch against
       a PERSISTED MinHash band index (``operators.band_index``) built

@@ -57,6 +57,9 @@ from pyspark.sql import functions as F
 from vector_databases___hydrate_chroma_db_collection_spark.errors import (
     EngineError,
 )
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    read_parquet,
+)
 
 _SEP = "\x1f"  # unit separator: token_id = doc_id SEP token_position
 
@@ -218,7 +221,7 @@ def maxsim_corpus_read(
             "rerank_corpus= explicitly)"
         )
     meta = read_sidecar(p, "maxsim_corpus.json")
-    df = spark.read.parquet(os.path.join(p, meta["location"]))
+    df = read_parquet(spark, os.path.join(p, meta["location"]))
     return df, int(meta["n_buckets"])
 
 

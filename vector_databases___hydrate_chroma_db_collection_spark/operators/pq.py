@@ -43,6 +43,9 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import 
     _cell_order,
     _serialized_writer,
 )
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    read_parquet,
+)
 
 # ADC LUTs up to this many entries (m * n_codes) are inlined as literal
 # arrays into a codegen expression; larger ones fall back to an
@@ -986,7 +989,7 @@ def ivf_pq_write(
     )
 
     spark = encoded.sparkSession
-    cells_back = spark.read.parquet(os.path.join(path, cells_dir))
+    cells_back = read_parquet(spark, os.path.join(path, cells_dir))
     idc = [c for c in cells_back.columns if c not in ("ivf_cell", "pq_code")][0]
     id_bloom = idguard.rebuild_filter(
         cells_back,
@@ -1092,7 +1095,7 @@ def ivf_pq_append(
     )
 
     loc = os.path.join(p, meta["location"])
-    existing = spark.read.parquet(loc)
+    existing = read_parquet(spark, loc)
     exist_id = [c for c in existing.columns if c not in ("ivf_cell", "pq_code")][0]
     ic = id_col or exist_id
     id_type = dict(existing.dtypes)[exist_id]
@@ -1237,7 +1240,7 @@ def ivf_pq_read(
     path = _local_sidecar_path(path)
     meta = read_sidecar(path, "ivf_pq_index.json")
     _check_source_stamp(meta, path, verify_source)
-    encoded = spark.read.parquet(os.path.join(path, meta["location"]))
+    encoded = read_parquet(spark, os.path.join(path, meta["location"]))
     if not include_tombstoned:
         idc = [
             c for c in encoded.columns if c not in ("ivf_cell", "pq_code")
@@ -1276,6 +1279,8 @@ def ivf_pq_upsert(
     table. Returns ``(n_updated, n_added)``."""
     import os
 
+    from pyspark.sql import Observation
+
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _assign_to_centroids,
         _surgical_replace,
@@ -1291,35 +1296,30 @@ def ivf_pq_upsert(
     _check_expected_etag(
         meta, path, "ivf_pq_index.json", expected_prev_etag, "upsert"
     )
-    loc = os.path.join(p, meta["location"])
-    existing = spark.read.parquet(loc)
-    exist_id = [c for c in existing.columns if c not in ("ivf_cell", "pq_code")][0]
+    cells = read_parquet(spark, os.path.join(p, meta["location"]))
+    exist_id = [c for c in cells.columns if c not in ("ivf_cell", "pq_code")][0]
     ic = id_col or exist_id
-    id_type = dict(existing.dtypes)[exist_id]
-    batch = (
-        rows.select(
-            F.col(ic).cast(id_type).alias(exist_id), F.col(embedding_col)
-        )
-        .dropDuplicates([exist_id])
-        .localCheckpoint(eager=True)
-    )
-    n_batch = batch.count()
-    if n_batch == 0:
-        return (0, 0)
+    id_type = dict(cells.dtypes)[exist_id]
+    batch = rows.select(
+        F.col(ic).cast(id_type).alias(exist_id), F.col(embedding_col)
+    ).dropDuplicates([exist_id])
     C = np.asarray(meta["centroids"])
     books = np.asarray(meta["codebooks"])
+    # the batch is counted inside its one checkpoint job
+    obs = Observation("ivf_pq_upsert_batch")
     assigned = _assign_to_centroids(
-        batch, C, id_col=exist_id, embedding_col=embedding_col, metric="l2"
+        batch.observe(obs, F.count(F.lit(1)).alias("n")),
+        C, id_col=exist_id, embedding_col=embedding_col, metric="l2",
     )
     encoded = _encode_assigned(
         assigned, C, books, id_col=exist_id, embedding_col=embedding_col,
         rotation=meta.get("rotation"),
     ).localCheckpoint(eager=True)
-    batch_ids = batch.select(
-        F.col(exist_id).cast("string").alias("_up_id")
-    ).localCheckpoint(eager=True)
+    n_batch = int(obs.get["n"])
+    if n_batch == 0:
+        return (0, 0)
     n_updated = _surgical_replace(
-        spark, p, "ivf_pq_index.json", meta, batch_ids, encoded
+        spark, p, "ivf_pq_index.json", meta, cells, encoded
     )
     return (n_updated, n_batch - n_updated)
 
@@ -1436,7 +1436,7 @@ def ivf_pq_balance_audit(
 
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, "ivf_pq_index.json")
-    cells = spark.read.parquet(os.path.join(p, meta["location"]))
+    cells = read_parquet(spark, os.path.join(p, meta["location"]))
     # logical rows only — same rationale as ann.ivf_balance_audit
     cells = _mask_tombstones(
         spark, p, meta, cells,

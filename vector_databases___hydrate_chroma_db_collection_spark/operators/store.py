@@ -21,6 +21,11 @@ The format rule:
 The rebuild calls themselves (``*_write``/``*_refresh``) read the old
 sidecar unchecked: they only take the build record and the data
 locations to supersede from it.
+
+The Parquet the engine writes (collection data dirs, index cells,
+tombstone and id recordings) is read back through ``read_parquet``
+and counted through ``_parquet_rows``: both take what they need from
+the Parquet footers on the driver, so neither launches a Spark job.
 """
 
 from __future__ import annotations
@@ -33,6 +38,57 @@ from vector_databases___hydrate_chroma_db_collection_spark.errors import (
 )
 
 FORMAT_VERSION = 1
+
+# the footer key Spark's Parquet writer stores the row schema under
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_files(loc: str):
+    """The Parquet data files Spark would scan under ``loc``, walking
+    hive partition dirs; names starting with ``_`` or ``.`` are skipped
+    the way Spark's file index skips them (``_SUCCESS``, ``.crc``
+    checksums, ``_temporary``), except ``_``-named partition dirs."""
+    for root_, dirs, files in os.walk(loc):
+        dirs[:] = sorted(
+            d for d in dirs
+            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+        )
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                yield os.path.join(root_, f)
+
+
+def _parquet_rows(loc: str) -> int:
+    """Row count from Parquet FOOTERS only (O(files) metadata reads,
+    zero data IO, no Spark job). Exact for everything this engine
+    writes: it writes no deletion vectors, so every footer row is a
+    live row."""
+    import pyarrow.parquet as papq
+
+    return sum(papq.read_metadata(f).num_rows for f in _parquet_files(loc))
+
+
+def read_parquet(spark, loc: str):
+    """``spark.read.parquet(loc)`` for Parquet the engine wrote itself,
+    minus the one-task schema-inference job: the schema is read on the
+    driver from one data file's Spark footer key and handed to
+    ``spark.read.schema``. Hive partition columns (``id_bucket``,
+    ``ivf_cell``) are not in the footer: Spark discovers them from the
+    paths with the type it infers on a plain read, and still prunes on
+    them. Falls back to the plain read when there is no data file or
+    the footer carries no Spark schema (a file another writer
+    produced), so an empty dir raises Spark's usual
+    ``AnalysisException``."""
+    import pyarrow.parquet as papq
+    from pyspark.sql.types import StructType
+
+    first = next(_parquet_files(loc), None)
+    kv = (papq.read_metadata(first).metadata or {}) if first else {}
+    if _SPARK_SCHEMA_KEY not in kv:
+        return spark.read.parquet(loc)
+    schema = StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(loc)
+
 
 # how each sidecar gets back to the current format: its index kind's
 # rebuild call (the CDC log has none — it is replay state)

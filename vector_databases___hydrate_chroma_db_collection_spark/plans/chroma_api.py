@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import numbers
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -169,15 +170,16 @@ def _buckets_for_ids(
     spark: SparkSession, ids: list[str], n_buckets: int
 ) -> list[int]:
     """The distinct bucket set an id list hashes into, computed with
-    the layout's own expression (one tiny local job over a literal
-    frame — never a scan of the collection); bounded by n_buckets."""
-    return [
-        r["b"]
-        for r in spark.createDataFrame([(str(i),) for i in ids], "id string")
-        .select(F.pmod(F.xxhash64("id"), F.lit(n_buckets)).alias("b"))
-        .distinct()
-        .collect()
-    ]
+    the layout's own expression over a local Arrow relation — the
+    projection is folded on the driver, so no Spark job runs and the
+    collection is never scanned; bounded by n_buckets."""
+    frame = spark.createDataFrame(
+        pa.table({"id": pa.array([str(i) for i in ids], pa.string())})
+    )
+    rows = frame.select(
+        F.pmod(F.xxhash64("id"), F.lit(n_buckets)).alias("b")
+    ).collect()
+    return sorted({r["b"] for r in rows})
 
 
 def _prune_buckets_for_ids(
@@ -560,10 +562,17 @@ def _query_frame(
     ``qids`` (default all) index ``query_vectors``. Doubles, like the
     single doors' literal query vector, so a batch score equals its
     single-query twin's exactly."""
-    qids = range(len(query_vectors)) if qids is None else qids
+    qids = range(len(query_vectors)) if qids is None else list(qids)
     return spark.createDataFrame(
-        [(int(i), [float(x) for x in query_vectors[i]]) for i in qids],
-        "qid int, q_embedding array<double>",
+        pa.table(
+            {
+                "qid": pa.array([int(i) for i in qids], pa.int32()),
+                "q_embedding": pa.array(
+                    [[float(x) for x in query_vectors[i]] for i in qids],
+                    pa.list_(pa.float64()),
+                ),
+            }
+        )
     )
 
 
@@ -1247,12 +1256,12 @@ def collection_delete(
         )
         if deleted == 0:
             return 0
-        survivors = scoped.filter(~doomed)
         staging = next_data_dir(root, manifest.name)
-        if survivors.limit(1).count() > 0:
-            survivors.write.mode("overwrite").partitionBy("id_bucket").parquet(
-                staging
-            )
+        # touched buckets left empty write no data file (a partitioned
+        # write of zero rows creates no partition dir)
+        scoped.filter(~doomed).write.mode("overwrite").partitionBy(
+            "id_bucket"
+        ).parquet(staging)
         clone_untouched_buckets(
             current_data_dir(root, manifest.name), staging, set(touched)
         )
@@ -1369,7 +1378,7 @@ def collection_delete_indexed(
         # pure id-list delete: the doomed set IS the list — no scan
         # (ids absent from an index are dropped by its Bloom prescreen)
         doomed = spark.createDataFrame(
-            [(str(i),) for i in ids], "id string"
+            pa.table({"id": pa.array([str(i) for i in ids], pa.string())})
         )
     else:
         cond = F.lit(True)
@@ -1756,36 +1765,45 @@ def _chroma_items_df(
             f"{sorted(dims)} — Chroma rejects the call, nothing was "
             "written"
         )
-    rows = []
-    for i in range(n):
-        meta = metadatas[i] if metadatas is not None else None
-        rows.append(
-            (
-                str(ids[i]),
-                documents[i] if documents is not None else None,
-                [float(x) for x in embeddings[i]],
-                {str(k): str(v) for k, v in meta.items()}
-                if meta is not None
-                else {},
-            )
-        )
+    metas = metadatas if metadatas is not None else [None] * n
     return spark.createDataFrame(
-        rows,
-        "id string, document string, embedding array<float>, "
-        "metadata map<string,string>",
+        pa.table(
+            {
+                "id": pa.array([str(i) for i in ids], pa.string()),
+                "document": pa.array(
+                    documents if documents is not None else [None] * n,
+                    pa.string(),
+                ),
+                "embedding": pa.array(
+                    [[float(x) for x in e] for e in embeddings],
+                    pa.list_(pa.float32()),
+                ),
+                "metadata": pa.array(
+                    [
+                        [(str(k), str(v)) for k, v in m.items()]
+                        if m is not None
+                        else []
+                        for m in metas
+                    ],
+                    pa.map_(pa.string(), pa.string()),
+                ),
+            }
+        )
     )
 
 
-def _check_dim_vs_manifest(root, name, embeddings, who: str) -> None:
+def _check_dim_vs_manifest(root, name, embeddings, who: str) -> int | None:
     """Raise BEFORE any write when the batch's (uniform) dimension
     contradicts an existing collection's manifest — Chroma rejects
     the whole call; hydrate's lake-scan null policy would silently
     drop the rows instead, which is wrong for literal client
-    input."""
+    input. Returns the batch's dimension for ``HydrationConfig.dim``
+    (``None`` for an empty batch: hydrate then takes the manifest's)."""
+    batch_dim = (len(embeddings[0]) if len(embeddings) else 0) or None
     try:
         dim = load_manifest(root, name).dim
     except Exception:
-        return  # new collection: hydrate infers the dim from the batch
+        return batch_dim  # new collection: created at the batch's dim
     bad = {len(e) for e in embeddings} - {dim}
     if bad:
         raise EngineError(
@@ -1793,6 +1811,7 @@ def _check_dim_vs_manifest(root, name, embeddings, who: str) -> None:
             f"collection {name!r} stores dim {dim} — nothing was "
             "written"
         )
+    return batch_dim
 
 
 def _band_guard_documents(index_paths, documents, n: int) -> None:
@@ -1950,7 +1969,7 @@ def collection_add(
     )
 
     items = _chroma_items_df(spark, ids, embeddings, documents, metadatas)
-    _check_dim_vs_manifest(root, name, embeddings, "collection_add")
+    dim = _check_dim_vs_manifest(root, name, embeddings, "collection_add")
     if index_paths:
         _band_guard_documents(index_paths, documents, len(ids))
     cfg = HydrationConfig(
@@ -1961,6 +1980,7 @@ def collection_add(
         embedding_col="embedding",
         metadata_col="metadata",
         on_duplicate="error",
+        dim=dim,
     )
     report = hydrate(spark, items, cfg)
     if index_paths:
@@ -2001,7 +2021,7 @@ def collection_upsert(
     )
 
     items = _chroma_items_df(spark, ids, embeddings, documents, metadatas)
-    _check_dim_vs_manifest(root, name, embeddings, "collection_upsert")
+    dim = _check_dim_vs_manifest(root, name, embeddings, "collection_upsert")
     if index_paths:
         _band_guard_documents(index_paths, documents, len(ids))
     cfg = HydrationConfig(
@@ -2012,6 +2032,7 @@ def collection_upsert(
         embedding_col="embedding",
         metadata_col="metadata",
         on_duplicate="upsert",
+        dim=dim,
     )
     report = hydrate(spark, items, cfg)
     if index_paths:

@@ -457,6 +457,10 @@ def read_collection(
     ``version`` time-travels to a retained previous data dir (a
     dir name from ``collection_versions``); versions exist after
     ``retain_previous=True`` rewrites and until vacuum."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        read_parquet,
+    )
+
     manifest = load_manifest(root, name)
     if version is None:
         data_dir = current_data_dir(root, manifest.name)
@@ -468,28 +472,25 @@ def read_collection(
                 f"unknown collection version {version!r}; "
                 f"available: {sorted(known)}"
             )
-    df = spark.read.parquet(data_dir)
+    df = read_parquet(spark, data_dir)
     if manifest.n_buckets and not include_bucket:
         df = df.select("id", "document", "embedding", "metadata")
     return df
 
 
 def collection_count(spark: SparkSession, root: str, name: str) -> int:
-    """Reference's count() observable (sas:134, 193)."""
+    """Reference's count() observable (sas:134, 193), summed from the
+    Parquet footers of the current data dir on the driver — no Spark
+    job. Footer-exact, not an estimate: the engine never writes
+    deletion vectors or any other row-level mask, so every delete and
+    upsert rewrites the affected files and every footer row is a live
+    row. An empty collection (no data file yet) counts 0."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _parquet_rows,
+    )
+
     manifest = load_manifest(root, name)
-    data_dir = current_data_dir(root, manifest.name)
-    # Empty collection: the data dir exists but holds no parquet yet —
-    # check before asking Spark (an inference failure would be caught
-    # but still logs an alarming async-listener stack). Bucketed
-    # layouts nest files under id_bucket=N/ dirs, so walk.
-    has_data = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(data_dir)
-        for f in files
-    ) if os.path.isdir(data_dir) else False
-    if not has_data:
-        return 0
-    return spark.read.parquet(data_dir).count()
+    return _parquet_rows(current_data_dir(root, manifest.name))
 
 
 def compact_collection(
@@ -512,12 +513,17 @@ def compact_collection(
     dir is garbage-collected by the next rewrite, never data loss).
     Returns the row count (which must be preserved).
     """
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _parquet_rows,
+        read_parquet,
+    )
+
     manifest = load_manifest(root, name)
     data_dir = current_data_dir(root, manifest.name)
     staging = next_data_dir(root, manifest.name)
 
-    df = spark.read.parquet(data_dir)
-    n_before = df.count()
+    df = read_parquet(spark, data_dir)
+    n_before = _parquet_rows(data_dir)
     parts = target_partitions or max(1, spark.sparkContext.defaultParallelism // 4)
     if manifest.n_buckets:
         # Preserve the bucketed layout: cluster by bucket so each hive
@@ -529,7 +535,7 @@ def compact_collection(
         df.repartition(parts).write.mode("overwrite").parquet(staging)
     swap_data_dir(root, manifest.name, staging, retain=retain_previous)
 
-    n_after = spark.read.parquet(current_data_dir(root, manifest.name)).count()
+    n_after = _parquet_rows(current_data_dir(root, manifest.name))
     if n_after != n_before:  # pragma: no cover - safety net
         raise EngineError(
             f"compaction row-count drift: {n_before} -> {n_after} in {name!r}"
@@ -676,6 +682,10 @@ def import_collection(
     source stamp are touched (unstamped indexes ship as-is), and the
     stamp rewrite uses the same atomic temp+fsync+rename commit as
     every index mutation."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        read_parquet,
+    )
+
     snapshot = validate_path(snapshot)
     mf_path = os.path.join(snapshot, MANIFEST_NAME)
     if not os.path.exists(mf_path):
@@ -708,7 +718,7 @@ def import_collection(
     )
     if snap.metadata:
         manifest = modify_collection(root, target, metadata=snap.metadata)
-    df = spark.read.parquet(os.path.join(snapshot, DATA_DIR)).select(
+    df = read_parquet(spark, os.path.join(snapshot, DATA_DIR)).select(
         "id", "document", "embedding", "metadata"
     )
     staging = next_data_dir(root, target)

@@ -107,6 +107,7 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.store impor
     _atomic_sidecar_write,
     _fresh_versioned_dir,
     _local_sidecar_path,
+    read_parquet,
     read_sidecar,
 )
 
@@ -311,7 +312,7 @@ def cdc_ingest_batch_fn(
             # verdicts verbatim — outcomes were judged against the
             # pre-batch state only the first attempt could observe —
             # and rebuild the net mutations from the recorded _e0
-            recorded = spark.read.parquet(os.path.join(p, entry["dir"]))
+            recorded = read_parquet(spark, os.path.join(p, entry["dir"]))
             verdicts = recorded.select("id", "op", "seq", "outcome")
             if entry.get("state") == "done":
                 # the first attempt committed every mutation before

@@ -35,6 +35,9 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators._cache impo
 from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import (
     knn_join,
 )
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    read_parquet,
+)
 
 
 def stream_knn_serve(
@@ -191,9 +194,7 @@ def stream_knn_serve(
         # release per batch or a long stream pins one cache entry per
         # micro-batch. No-op for plans without attached caches.
         release_cache(out)
-        spark.read.option("basePath", base).parquet(base).createOrReplaceTempView(
-            sink_table
-        )
+        read_parquet(spark, base).createOrReplaceTempView(sink_table)
 
     writer = query_stream.writeStream.foreachBatch(serve_batch)
     if checkpoint_dir is not None:

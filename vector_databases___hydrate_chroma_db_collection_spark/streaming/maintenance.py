@@ -182,13 +182,13 @@ def ivf_maintenance(
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _data_files,
-        _parquet_rows,
         ivf_balance_audit,
         ivf_compact,
         ivf_recall_audit,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
         _local_sidecar_path,
+        _parquet_rows,
         read_sidecar,
     )
 

@@ -32,6 +32,9 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.dedup impor
     novelty_gate,
     release_cache,
 )
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    read_parquet,
+)
 from vector_databases___hydrate_chroma_db_collection_spark.streaming.knn_stream import (
     stream_knn_serve,
 )
@@ -581,7 +584,7 @@ def _semantic_ingest_batch_fn(
             _mask_tombstones,
         )
 
-        assigned = spark.read.parquet(os.path.join(p, meta["location"]))
+        assigned = read_parquet(spark, os.path.join(p, meta["location"]))
         C = np.asarray(meta["centroids"])
         metric = meta["metric"]
         idx_id, idx_emb = [

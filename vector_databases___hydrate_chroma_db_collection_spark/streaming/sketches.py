@@ -31,6 +31,9 @@ from pyspark.sql import functions as F
 from vector_databases___hydrate_chroma_db_collection_spark.operators.sketch import (
     cms_counters,
 )
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    read_parquet,
+)
 
 _POINTER = "_current"
 
@@ -50,7 +53,7 @@ def read_cms_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     head = _read_pointer(state_dir)
     if head is None:
         return None
-    return spark.read.parquet(os.path.join(state_dir, head[0]))
+    return read_parquet(spark, os.path.join(state_dir, head[0]))
 
 
 def _version_name(batch_id: int, run_token: str) -> str:
