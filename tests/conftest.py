@@ -129,6 +129,8 @@ SLOW_TESTS = {
     "test_recall_audit.py::test_ivf_pq_recall_audit_sees_drift_saturation_cannot",
     "test_retrieval.py::test_phrase_bm25_batch_equals_single_path",
     "test_shingle_arrow.py::test_shingle_arrow_matches_expression_random",
+    # 9.3-11.3 s per kind (ivf, ivf_pq, graph) in a test_store.py run
+    "test_store.py::test_cells_index_lifecycle",
     "test_streaming.py::test_stream_cms_matches_batch_sketch",
     "test_streaming.py::test_stream_hydrate_upsert_with_ts_col_latest_wins",
     "test_streaming.py::test_stream_novelty_ingest_loop_across_batches",

@@ -1588,7 +1588,7 @@ def test_delete_every_row_of_one_bucket(spark, tmp_path):
 # a schema-inference read, a bookkeeping count).
 ADD_JOBS = 13
 UPSERT_JOBS = 19
-DELETE_JOBS = 15
+DELETE_JOBS = 13
 QUERY_JOBS = 5
 
 

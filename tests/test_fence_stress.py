@@ -128,20 +128,20 @@ def test_delete_kill_point_before_sidecar_swap_replays(
     import sys
 
     root, cfg, idx = _setup(spark, tmp_path)
-    ann = sys.modules[
-        "vector_databases___hydrate_chroma_db_collection_spark.operators.ann"
+    store = sys.modules[
+        "vector_databases___hydrate_chroma_db_collection_spark.operators.store"
     ]
-    real = ann._atomic_sidecar_write
+    real = store._atomic_sidecar_write
     calls = {"n": 0}
 
     def boom(p, fname, meta):
         calls["n"] += 1
         raise RuntimeError("injected crash before sidecar swap")
 
-    monkeypatch.setattr(ann, "_atomic_sidecar_write", boom)
+    monkeypatch.setattr(store, "_atomic_sidecar_write", boom)
     with pytest.raises(RuntimeError, match="injected"):
         ivf_delete(spark, idx, ["4"])
-    monkeypatch.setattr(ann, "_atomic_sidecar_write", real)
+    monkeypatch.setattr(store, "_atomic_sidecar_write", real)
     assert calls["n"] == 1
     # old sidecar intact: id 4 still served (the delete never commits)
     a, _, _ = ivf_read(spark, idx)
@@ -181,7 +181,7 @@ def test_writer_lock_mutual_exclusion_across_processes(tmp_path):
     worker = r"""
 import json, os, sys
 sys.path.insert(0, %r)
-from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
     _writer_lock,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
@@ -214,7 +214,7 @@ print("done")
 def test_writer_lock_reentrant_same_thread(tmp_path):
     # the pq-delete-delegates-to-ivf_delete nesting must not
     # self-deadlock: nested acquisition on one thread is re-entrant
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
         _writer_lock,
     )
 
@@ -230,7 +230,7 @@ def test_writer_lock_reentrant_same_thread(tmp_path):
     probe = r"""
 import os, sys, time
 sys.path.insert(0, %r)
-from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import _writer_lock
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import _writer_lock
 open(os.path.join(sys.argv[1], "ready"), "w").close()
 t0 = time.time()
 with _writer_lock(sys.argv[1], "ivf_index.json"):

@@ -359,3 +359,150 @@ def test_collection_count_is_footer_exact(spark, tmp_path, n_buckets):
     assert check() == 14
     collection_delete(spark, root, name, where={"nope": "x"}, retain_previous=True)
     assert check() == 14
+
+
+def test_rebuild_waits_for_the_writer_lock(spark, coll, tmp_path):
+    """A rebuild is a mutation like any other: ``ivf_pq_write`` blocks
+    while another thread holds the IVF-PQ writer lock (a locked
+    append or delete that already read the sidecar would otherwise
+    commit over the rebuild), and commits once the lock is released."""
+    import threading
+    import time
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _writer_lock,
+    )
+
+    _root, _name, df = coll
+    enc, C, books = pq.ivf_pq_build(df, n_centroids=2, m=2, n_codes=4, seed=1)
+    enc = enc.localCheckpoint(eager=True)
+    p = str(tmp_path / "pq")
+    done, errors = threading.Event(), []
+
+    def rebuild():
+        try:
+            pq.ivf_pq_write(enc, C, books, p)
+        except BaseException as e:  # surfaced by the assert below
+            errors.append(e)
+        finally:
+            done.set()
+
+    with _writer_lock(p, "ivf_pq_index.json"):
+        threading.Thread(target=rebuild, daemon=True).start()
+        time.sleep(1.5)
+        assert not done.is_set(), "the rebuild ran beside a held lock"
+        assert os.listdir(p) == ["ivf_pq_index.json.writer_lock"]
+    assert done.wait(120) and not errors, errors
+    assert pq.ivf_pq_read(spark, p)[0].count() == N
+
+
+def _assert_dir_is_referenced(p, fname):
+    """The index dir holds exactly what its sidecar references — the
+    cells dir, recordings and Bloom files — plus the sidecar and its
+    writer-lock file: nothing superseded or orphaned is left behind."""
+    meta = read_sidecar(p, fname)
+    bloom = meta["id_bloom"]
+    want = {
+        fname,
+        meta["location"],
+        bloom["location"],
+        (meta.get("tombstones") or {}).get("location"),
+        meta.get("last_append_ids"),
+    }
+    want |= {s["location"] for s in bloom.get("segments") or []}
+    want |= {e["appended_ids"] for e in meta.get("pending_appends") or []}
+    got = set(os.listdir(p)) - {fname + ".writer_lock"}
+    assert got == want - {None}
+
+
+def _ids(spark, p, fname):
+    """Every physical row's id (sorted, duplicates kept) and the ids
+    a reader serves (tombstones masked)."""
+    meta = read_sidecar(p, fname)
+    cells = read_parquet(spark, os.path.join(p, meta["location"]))
+    rows = sorted(r[0] for r in cells.select("id").collect())
+    dead = {
+        r[0] for r in ann.ivf_tombstoned_ids(spark, p, sidecar=fname).collect()
+    }
+    return rows, [i for i in rows if i not in dead]
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivf_pq", "graph"])
+def test_cells_index_lifecycle(spark, coll, tmp_path, kind):
+    """One lifecycle for the three cells kinds: write, append and its
+    replay, the ``on_existing='error'`` refusal, delete, the refused
+    re-append of a deleted id naming the kind's purge call, the
+    upsert that resurrects it, then compact (rebuild for the graph).
+    After every step the index dir holds only what the sidecar
+    references."""
+    from vector_databases___hydrate_chroma_db_collection_spark.errors import (
+        TombstonedIdError,
+    )
+
+    _root, _name, df = coll
+    p = str(tmp_path / kind)
+    rows = df.select("id", "embedding")
+    first = rows.filter(F.col("id").cast("int") < 12)
+    batch = rows.filter(F.col("id").cast("int") >= 12)
+    every = sorted(str(i) for i in range(N))
+    before = sorted(str(i) for i in range(12))
+    if kind == "ivf":
+        fname, purge = "ivf_index.json", "ivf_compact"
+        assigned, C = ann.ivf_build(first, n_centroids=2, seed=1)
+        ann.ivf_write(assigned, C, p)
+        append = lambda b, **kw: ann.ivf_append(spark, p, b, **kw)  # noqa: E731
+        upsert = lambda b: ann.ivf_upsert(spark, p, b)  # noqa: E731
+        delete = lambda ids: ann.ivf_delete(spark, p, ids)  # noqa: E731
+    elif kind == "ivf_pq":
+        fname, purge = "ivf_pq_index.json", "ivf_pq_compact"
+        enc, C, books = pq.ivf_pq_build(
+            first, n_centroids=2, m=2, n_codes=4, seed=1
+        )
+        pq.ivf_pq_write(enc, C, books, p)
+        append = lambda b, **kw: pq.ivf_pq_append(spark, p, b, **kw)  # noqa: E731
+        upsert = lambda b: pq.ivf_pq_upsert(spark, p, b)  # noqa: E731
+        delete = lambda ids: pq.ivf_pq_delete(spark, p, ids)  # noqa: E731
+    else:
+        fname, purge = "graph_index.json", "graph_index_write"
+
+        def rebuild(src):
+            cells, C = graph_ann.graph_index_build(src, n_centroids=2, M=4)
+            graph_ann.graph_index_write(cells, C, p, M=4)
+
+        rebuild(first)
+        append = lambda b: graph_ann.graph_append(spark, p, b)  # noqa: E731
+        delete = lambda ids: graph_ann.graph_delete(spark, p, ids)  # noqa: E731
+    assert _ids(spark, p, fname) == (before, before)
+    _assert_dir_is_referenced(p, fname)
+
+    assert append(batch) == 4
+    _assert_dir_is_referenced(p, fname)
+    assert append(batch) == 0
+    assert _ids(spark, p, fname) == (every, every)
+    _assert_dir_is_referenced(p, fname)
+
+    if kind != "graph":
+        with pytest.raises(ValueError, match="already indexed"):
+            append(batch, on_existing="error")
+        _assert_dir_is_referenced(p, fname)
+
+    assert delete(["3", "5"]) == 2
+    live = sorted(set(every) - {"3", "5"})
+    assert _ids(spark, p, fname) == (every, live)
+    _assert_dir_is_referenced(p, fname)
+
+    with pytest.raises(TombstonedIdError, match=purge):
+        append(rows.filter(F.col("id") == "3"))
+    _assert_dir_is_referenced(p, fname)
+
+    if kind != "graph":
+        assert upsert(rows.filter(F.col("id") == "3")) == (1, 0)
+        live = sorted(set(every) - {"5"})
+        assert _ids(spark, p, fname) == (every, live)
+        _assert_dir_is_referenced(p, fname)
+        (ann.ivf_compact if kind == "ivf" else pq.ivf_pq_compact)(spark, p)
+    else:
+        rebuild(rows.filter(F.col("id").isin(live)))
+    assert _ids(spark, p, fname) == (live, live)
+    assert "tombstones" not in read_sidecar(p, fname)
+    _assert_dir_is_referenced(p, fname)

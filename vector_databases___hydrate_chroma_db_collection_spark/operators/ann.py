@@ -32,16 +32,28 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators._arrow impo
     rows_matrix as _rows_matrix,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import knn_query
+from vector_databases___hydrate_chroma_db_collection_spark.operators import idguard
 from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
     _atomic_sidecar_write,
+    _cells_cols,
     _check_expected_etag,
     _check_source_stamp,
+    _commit_cells_build,
+    _extend_guard,
     _fresh_versioned_dir,
+    _gc,
+    _guard_append,
     _local_sidecar_path,
+    _mask_tombstones,
     _parquet_files,
-    _parquet_rows,
     _read_unchecked,
+    _record_tombstones,
+    _restamp,
+    _serialized_writer,
     _source_stamp,
+    _surgical_replace,
+    _swap,
+    _tombstones_df,
     read_parquet,
     read_sidecar,
 )
@@ -902,108 +914,6 @@ def mllib_minhash_dedup_join(
     )
 
 
-_WRITER_LOCK_STATE = None  # lazily a threading.local with per-thread depth
-
-
-def _writer_lock(p: str, sidecar: str):
-    """Cross-PROCESS writer serialization for one index sidecar: an
-    ``flock`` on ``<sidecar>.writer_lock`` held for the whole
-    read-modify-write mutation. The r14 fence covered foreign SOURCE
-    mutations (etag pin) and the sidecar swap itself is atomic, but
-    two concurrent writers that both read generation N of the sidecar
-    would each commit an N+1 derived from N — last replace wins and
-    the first writer's tombstones / pending records / guard segments
-    silently vanish (a real lost-update under true syscall
-    interleaving). Serializing whole mutations is the honest local
-    answer: index mutations are micro-batch-sized, writers queue for
-    seconds, and every committed op derives from the committed state
-    before it — exactly-one-winner per generation by construction.
-    Reentrant per THREAD (a pq delete delegating to ``ivf_delete``
-    must not self-deadlock); a second thread or process blocks until
-    release. Local-filesystem scope, like the sidecar layout itself —
-    an object-store port would use conditional puts instead."""
-    import contextlib
-    import threading
-
-    global _WRITER_LOCK_STATE
-    if _WRITER_LOCK_STATE is None:
-        _WRITER_LOCK_STATE = threading.local()
-
-    @contextlib.contextmanager
-    def _ctx():
-        import fcntl
-        import os
-
-        os.makedirs(p, exist_ok=True)
-        key = os.path.join(os.path.realpath(p), sidecar)
-        held = getattr(_WRITER_LOCK_STATE, "held", None)
-        if held is None:
-            held = _WRITER_LOCK_STATE.held = {}
-        if key in held:
-            held[key][1] += 1
-            try:
-                yield
-            finally:
-                held[key][1] -= 1
-                if held[key][1] == 0:
-                    del held[key]
-            return
-        lf = open(key + ".writer_lock", "w")
-        try:
-            fcntl.flock(lf, fcntl.LOCK_EX)
-            held[key] = [lf, 1]
-            try:
-                yield
-            finally:
-                held[key][1] -= 1
-                if held[key][1] == 0:
-                    del held[key]
-                    fcntl.flock(lf, fcntl.LOCK_UN)
-        finally:
-            lf.close()
-
-    return _ctx()
-
-
-def _serialized_writer(default_sidecar: str = "ivf_index.json"):
-    """Decorator applying ``_writer_lock`` around a whole mutation
-    function of shape ``fn(spark, path, *...)`` — the sidecar name
-    follows the function's own ``sidecar=`` kwarg when present (the
-    IVF-PQ delegation pattern)."""
-    import functools
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapper(spark, path, *args, **kwargs):
-            sidecar = kwargs.get("sidecar", default_sidecar)
-            with _writer_lock(_local_sidecar_path(path), sidecar):
-                return fn(spark, path, *args, **kwargs)
-
-        return wrapper
-
-    return deco
-
-
-def _fresh_cells_dir(p: str, prev: str | None = None) -> str:
-    """``prev`` = the sidecar's CURRENT cells location: floors the new
-    version above it so repeated compact/refresh cycles (each GCs the
-    superseded dir) can never recycle a freed ``cells_vN`` name under
-    a reader holding an older sidecar."""
-    return _fresh_versioned_dir(p, "cells", floor_names=[prev])
-
-
-def _drop_old_cells(p: str, old_dir: str | None, new_dir: str) -> None:
-    """Post-commit cleanup of a rebuild: remove the superseded data
-    directory. Runs only AFTER the new sidecar is committed, so a
-    crash here leaks a directory (safe) rather than breaking
-    readers."""
-    import os
-    import shutil
-
-    if old_dir and old_dir != new_dir:
-        shutil.rmtree(os.path.join(p, old_dir), ignore_errors=True)
-
-
 def ivf_write(
     assigned: DataFrame,
     centroids: np.ndarray,
@@ -1030,94 +940,32 @@ def ivf_write(
     the build metric (e.g. l2-trained cells served with cosine
     scoring) — without the explicit ``build`` record a refresh would
     have to guess, and guessing the wrong training metric silently
-    swaps the cell layout."""
-    import os
+    swaps the cell layout.
 
-    path = _local_sidecar_path(path)
-    os.makedirs(path, exist_ok=True)
-    old_meta = {}
-    if os.path.exists(os.path.join(path, "ivf_index.json")):
-        old_meta = _read_unchecked(path, "ivf_index.json")
-    stamp = _source_stamp(source)
-    # Rebuild-is-atomic-for-readers: fresh versioned data dir, sidecar
-    # location swapped last, superseded dir removed after the commit
-    # (the same lifecycle as band_index_write; the r9 in-place
-    # overwrite gave concurrent readers read failures mid-rebuild).
-    cells_dir = _fresh_cells_dir(path, old_meta.get("location"))
-    # One task per cell -> exactly one data file per cell dir (the
-    # ivf_compact idiom). Without the cluster-by-cell exchange the
-    # dynamic-partition write fans every map task into every cell it
-    # touches — up to tasks x n_cells files — and the Bloom/cell-stats
-    # read-backs below plus every serve pay the per-file open cost.
-    (
-        assigned.repartition(int(np.asarray(centroids).shape[0]), F.col("ivf_cell"))
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(os.path.join(path, cells_dir))
-    )
-    # id-guard Bloom over the persisted ids (operators/idguard.py):
-    # what lets ivf_append prescreen its double-ingest guard with
-    # zero corpus IO instead of anti-joining every batch against the
-    # full cells id column. Built from the freshly-written parquet
-    # (one bounded column scan); capacity 4x the build count gives
-    # append headroom, ivf_compact re-sizes from the current count.
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        idguard,
-    )
-
+    The write is the shared build commit (``store`` module doc):
+    versioned cells dir, id-guard Bloom rebuilt from the written ids,
+    build-time per-cell training stats (the baseline
+    ``ivf_balance_audit`` compares drift against, with the ASSIGNMENT
+    metric's math), one sidecar swap under the writer lock."""
+    C = np.asarray(centroids)
     spark = assigned.sparkSession
-    cells_back = read_parquet(spark, os.path.join(path, cells_dir))
-    idc = [c for c in cells_back.columns if c != "ivf_cell"][0]
-    id_bloom = idguard.rebuild_filter(
-        cells_back,
-        F.col(idc).cast("string"),
-        path,
-        (old_meta.get("id_bloom") or {}).get("location"),
-    )
-    # build-time per-cell training stats: the baseline
-    # ivf_balance_audit compares appended drift against. One scan of
-    # the freshly-written cells with the ASSIGNMENT metric's math.
-    assign_metric = (build or {}).get("metric", metric)
-    stats = {
-        int(r["ivf_cell"]): (int(r["n_rows"]), float(r["mean_dist"]))
-        for r in _cell_stats(spark, cells_back, centroids, assign_metric)
-        .collect()
-    }
-    n_cells = int(centroids.shape[0])
-    train_stats = {
-        "cell_rows": [stats.get(i, (0, 0.0))[0] for i in range(n_cells)],
-        "cell_mean_dist": [
-            stats.get(i, (0, 0.0))[1] for i in range(n_cells)
-        ],
-    }
-    _atomic_sidecar_write(
-        path,
+    _commit_cells_build(
+        _local_sidecar_path(path),
         "ivf_index.json",
+        # one task per cell -> exactly one data file per cell dir
+        assigned.repartition(int(C.shape[0]), F.col("ivf_cell")),
         {
             "metric": metric,
-            "n_centroids": n_cells,
-            "dim": int(centroids.shape[1]),
-            "centroids": centroids.tolist(),
-            "source": stamp,
+            "n_centroids": int(C.shape[0]),
+            "dim": int(C.shape[1]),
+            "centroids": C.tolist(),
+            "source": _source_stamp(source),
             "build": build,
-            "location": cells_dir,
-            "train_stats": train_stats,
-            "id_bloom": id_bloom,
         },
+        stats=lambda cells: _cell_stats(
+            spark, cells, C, (build or {}).get("metric", metric)
+        ),
     )
-    _drop_old_cells(path, old_meta.get("location"), cells_dir)
-    idguard.gc_bloom_files(path, {id_bloom["location"]})
-    # a rebuild supersedes every recorded per-tag append contribution
-    # (the fresh sidecar carries no last_append_*) AND every tombstone
-    # recording (the fresh cells hold only current-collection rows):
-    # GC both recording families
-    import shutil
-
-    for d_ in os.listdir(path):
-        if d_.startswith("ivf_append_ids_v") or d_.startswith(
-            "ivf_tombstones_v"
-        ):
-            shutil.rmtree(os.path.join(path, d_), ignore_errors=True)
 
 
 def ivf_read(
@@ -1144,8 +992,9 @@ def ivf_read(
     _check_source_stamp(meta, path, verify_source)
     assigned = read_parquet(spark, os.path.join(path, meta["location"]))
     if not include_tombstoned:
-        idc = [c for c in assigned.columns if c != "ivf_cell"][0]
-        assigned = _mask_tombstones(spark, path, meta, assigned, idc)
+        assigned = _mask_tombstones(
+            spark, path, meta, assigned, _cells_cols(assigned)[0]
+        )
     return assigned, np.asarray(meta["centroids"]), meta["metric"]
 
 
@@ -1227,118 +1076,41 @@ def ivf_append(
 
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, "ivf_index.json")
-    if on_existing not in ("skip", "error"):
-        raise ValueError(
-            f"on_existing must be 'skip' or 'error', got {on_existing!r}"
-        )
     _check_expected_etag(
         meta, path, "ivf_index.json", expected_prev_etag, "append"
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        idguard,
-    )
-
-    loc = os.path.join(p, meta["location"])
-    existing = read_parquet(spark, loc)
-    exist_id, exist_emb = [c for c in existing.columns if c != "ivf_cell"][:2]
-    ic = id_col or exist_id
-    ec = embedding_col or exist_emb
+    existing = read_parquet(spark, os.path.join(p, meta["location"]))
+    exist_id, exist_emb = _cells_cols(existing)[:2]
     types = dict(existing.dtypes)
-    inc_id = F.col(ic).cast(types[exist_id])
-    batch = (
-        new_rows.select(
-            inc_id.alias(exist_id),
-            F.col(ec).cast(types[exist_emb]).alias(exist_emb),
-        )
-        # guarded, not caller-trusted — including WITHIN the batch: a
-        # source retry folded into one micro-batch must not index an
-        # id twice (duplicate cells rows would waste top-k slots and
-        # can never be removed by a replay)
-        .dropDuplicates([exist_id])
-        # materialized ONCE: the guard probe, the filter merge, and
-        # the assignment all consume the batch — without this each
-        # re-executes the caller's upstream lineage
-        .localCheckpoint(eager=True)
+    # pending crashed-append recordings: a LIST keyed by tag (the
+    # band-index design) — a single slot would let a second writer's
+    # tagged append overwrite a crashed batch's record, making that
+    # batch's replay gate as fresh against an index already holding
+    # its partial rows.
+    pending = list(meta.get("pending_appends") or [])
+    # A REPLAY of a tagged append (completed or crashed) BYPASSES the
+    # tombstone refusal: its rows already landed — they may be the
+    # very rows a later delete tombstoned — the guard skips them, and
+    # the replay contract is republish, not raise.
+    replay = tag is not None and (
+        tag == meta.get("last_append_tag")
+        or any(e.get("tag") == tag for e in pending)
     )
-    # tombstoned ids refuse to re-append until a compact purges their
-    # old physical rows: the id-granular serve mask (ivf_delete)
-    # cannot tell a NEW row from the old one under the same id, so a
-    # re-append would be silently invisible. Zero extra jobs when the
-    # index carries no tombstones. A REPLAY of a tagged append
-    # (completed or crashed) BYPASSES the refusal: its rows already
-    # landed — they may be the very rows a later delete tombstoned —
-    # the id-guard below skips them, and the replay contract is
-    # republish, not raise.
-    ts = _tombstones_df(spark, p, meta)
-    if ts is not None and tag is not None:
-        if tag == meta.get("last_append_tag") or any(
-            e.get("tag") == tag for e in meta.get("pending_appends") or []
-        ):
-            ts = None
-    if ts is not None:
-        n_dead = batch.join(
-            F.broadcast(ts),
-            F.col(exist_id).cast("string") == F.col("_ts_id"),
-            "left_semi",
-        ).count()
-        if n_dead:
-            from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-                TombstonedIdError,
-            )
-
-            raise TombstonedIdError(
-                f"ivf_append: {n_dead} incoming id(s) are TOMBSTONED "
-                f"in the index at {path!r} (deleted but not yet "
-                "physically purged) — run ivf_compact to purge them, "
-                "then retry the append"
-            )
-    have = existing.select(F.col(exist_id).alias("_have_id"))
-    bloom_meta = meta.get("id_bloom")
-    if not idguard.filter_usable(bloom_meta):
-        # missing OR hash-incompatible filter (probing a different
-        # hash family can yield false negatives = double ingest):
-        # exact path now, fresh filter rebuilt below
-        bloom_meta = None
-    ig_state = None
-    if bloom_meta is not None:
-        # corpus-independent prescreen (operators/idguard.py): the
-        # committed filter is a superset of the indexed ids, so
-        # filter-negative = definitely new with ZERO corpus IO; only
-        # filter-positive ids (replays + false positives) pay the
-        # exact anti-join against the cells id column.
-        neg, maybe, ig_state = idguard.bloom_split(
-            batch, p, bloom_meta, exist_id
-        )
-        fresh = (
-            neg
-            if maybe is None
-            else neg.unionByName(
-                maybe.join(
-                    have, F.col(exist_id) == F.col("_have_id"), "left_anti"
-                )
-            )
-        )
-    else:
-        maybe = batch  # no usable filter: exact path for the whole batch
-        fresh = batch.join(
-            have, F.col(exist_id) == F.col("_have_id"), "left_anti"
-        )
-    if on_existing == "error":
-        n_dup = (
-            maybe.join(
-                have, F.col(exist_id) == F.col("_have_id"), "left_semi"
-            ).count()
-            if maybe is not None
-            else 0
-        )
-        if n_dup:
-            raise ValueError(
-                f"ivf_append: {n_dup} incoming id(s) are already indexed "
-                f"at {path!r}; re-appending would duplicate cell rows "
-                "(pass on_existing='skip' to make replays idempotent)"
-            )
-    fresh = fresh.localCheckpoint(eager=True)
-    n_new = fresh.count()
+    batch, fresh, n_new, state = _guard_append(
+        p,
+        meta,
+        new_rows.select(
+            F.col(id_col or exist_id).cast(types[exist_id]).alias(exist_id),
+            F.col(embedding_col or exist_emb)
+            .cast(types[exist_emb])
+            .alias(exist_emb),
+        ),
+        existing,
+        "ivf_append",
+        tombstones=None if replay else _tombstones_df(spark, p, meta),
+        purge="run ivf_compact",
+        on_existing=on_existing,
+    )
     # A true verbatim replay of a COMPLETED append contributes nothing
     # new (every id is guarded away). A reused tag carrying NEW ids is
     # NOT a replay — it is a fresh append that must RE-record its
@@ -1353,12 +1125,6 @@ def ivf_append(
         and tag == meta.get("last_append_tag")
         and n_new == 0
     )
-    # pending crashed-append recordings: a LIST keyed by tag (the
-    # band-index design) — a single slot would let a second writer's
-    # tagged append overwrite a crashed batch's record, making that
-    # batch's replay gate as fresh against an index already holding
-    # its partial rows.
-    pending = list(meta.get("pending_appends") or [])
     prev_entry = next((e for e in pending if e.get("tag") == tag), None)
     app_dir = (prev_entry or {}).get("appended_ids")
     if n_new:
@@ -1371,17 +1137,10 @@ def ivf_append(
             if app_dir is None or not os.path.exists(
                 os.path.join(p, app_dir)
             ):
-                # namespaced per index kind: a cohabiting band index
-                # owns the bare "append_ids_v*" prefix, and recording
-                # GC must never cross sidecars
                 app_dir = _fresh_versioned_dir(
                     p,
                     "ivf_append_ids",
-                    floor_names=[
-                        e.get("appended_ids")
-                        for e in pending
-                        if e.get("appended_ids")
-                    ]
+                    floor_names=[e.get("appended_ids") for e in pending]
                     + [meta.get("last_append_ids")],
                 )
                 fresh.select(exist_id).write.mode("overwrite").parquet(
@@ -1390,38 +1149,19 @@ def ivf_append(
             meta["pending_appends"] = [
                 e for e in pending if e.get("tag") != tag
             ] + [{"tag": tag, "appended_ids": app_dir}]
-        # -- persist the merged id-guard filter BEFORE the data append:
-        # a committed filter must stay a SUPERSET of the indexed ids
-        # (a missing id would let its replay skip the exact check and
-        # double-ingest); supersets are safe, so the WHOLE batch goes
-        # in and a crash mid-append leaves the replay filter-positive,
-        # routed into the exact id-granular convergence path.
-        idguard.bloom_extend(
-            p,
-            meta,
-            ig_state,
-            batch.select(F.col(exist_id).cast("string").alias("_s")),
-            fallback_ids=existing.select(F.col(exist_id).cast("string")),
-        )
-        _atomic_sidecar_write(p, "ivf_index.json", meta)
+        _extend_guard(p, "ivf_index.json", meta, existing, batch, state)
         build = meta.get("build") or {}
-        assign_metric = build.get("metric", meta["metric"])
-        assigned = _assign_to_centroids(
+        _assign_to_centroids(
             fresh,
             np.asarray(meta["centroids"]),
             id_col=exist_id,
             embedding_col=exist_emb,
-            metric=assign_metric,
+            metric=build.get("metric", meta["metric"]),
+        ).write.mode("append").partitionBy("ivf_cell").parquet(
+            os.path.join(p, meta["location"])
         )
-        assigned.write.mode("append").partitionBy("ivf_cell").parquet(loc)
     # -- final commit: re-stamp, promote the tag, GC recordings --------
-    import shutil
-
-    commit = False
-    src = meta.get("source")
-    if src is not None:
-        meta["source"] = _source_stamp((src["root"], src["name"]))
-        commit = True
+    commit = _restamp(meta)
     if tag is not None:
         # clear only THIS tag's pending entry — other writers'
         # crashed-batch recordings must survive until their replays
@@ -1443,16 +1183,7 @@ def ivf_append(
         commit = True
     if commit:
         _atomic_sidecar_write(p, "ivf_index.json", meta)
-        keep = {meta.get("last_append_ids")} | {
-            e.get("appended_ids")
-            for e in (meta.get("pending_appends") or [])
-        }
-        for d_ in os.listdir(p):
-            if d_.startswith("ivf_append_ids_v") and d_ not in keep:
-                shutil.rmtree(os.path.join(p, d_), ignore_errors=True)
-    idguard.gc_bloom_files(
-        p, {(meta.get("id_bloom") or {}).get("location")}
-    )
+    _gc(p, "ivf_index.json", meta)
     return n_new
 
 
@@ -1485,52 +1216,8 @@ def ivf_appended_ids(spark, path: str, tag: str) -> DataFrame:
         )
     if d is None:
         cells = read_parquet(spark, os.path.join(p, meta["location"]))
-        idc = [c for c in cells.columns if c != "ivf_cell"][0]
-        return cells.select(idc).limit(0)
+        return cells.select(_cells_cols(cells)[0]).limit(0)
     return read_parquet(spark, os.path.join(p, d))
-
-
-def _tombstone_prefix(sidecar: str) -> str:
-    """Tombstone recording dirs are NAMESPACED per sidecar kind — an
-    IVF, an IVF-PQ, and a graph index cohabiting one directory must
-    never GC each other's recordings (the same isolation rule as the
-    ``ivf_append_ids`` vs bare ``append_ids`` prefixes)."""
-    s = str(sidecar)
-    if s.startswith("ivf_pq"):
-        return "ivf_pq_tombstones"
-    if s.startswith("graph"):
-        return "graph_tombstones"
-    return "ivf_tombstones"
-
-
-def _tombstones_df(spark, p: str, meta: dict) -> DataFrame | None:
-    """The sidecar's tombstone recording as a one-column DataFrame
-    (``_ts_id`` string) — ``None`` when the index carries no
-    tombstones. The set is bounded by compaction cadence (``
-    ivf_compact`` purges it), never by corpus size."""
-    import os
-
-    ts = meta.get("tombstones")
-    if not ts or not int(ts.get("n") or 0):
-        return None
-    return read_parquet(spark, os.path.join(p, ts["location"]))
-
-
-def _mask_tombstones(spark, p: str, meta: dict, df: DataFrame, id_col: str) -> DataFrame:
-    """Serve-time tombstone mask: anti-join the cells dataset against
-    the (small, compaction-bounded) tombstoned-id set. Broadcast is
-    explicit — the set's size is a POLICY invariant
-    (``MaintenancePolicy.tombstone_threshold`` compacts before it
-    grows past a fraction of the corpus ids, and ids are tiny next to
-    embeddings), so the mask never shuffles the corpus."""
-    ts = _tombstones_df(spark, p, meta)
-    if ts is None:
-        return df
-    return df.join(
-        F.broadcast(ts),
-        F.col(id_col).cast("string") == F.col("_ts_id"),
-        "left_anti",
-    )
 
 
 @_serialized_writer()
@@ -1543,8 +1230,8 @@ def ivf_delete(
     expected_prev_etag: str | None = None,
 ) -> int:
     """Incremental vector DELETE: tombstone ``ids`` in a persisted
-    IVF (or, via ``sidecar``, IVF-PQ) index — the delete-side twin of
-    ``ivf_append``. The reference's collection is mutable
+    IVF (or, via ``sidecar``, IVF-PQ or graph) index — the delete-side
+    twin of ``ivf_append``. The reference's collection is mutable
     (``collection.delete`` — the get-or-create surface at sas:132
     implies the full Chroma CRUD), and before this the only honest
     answers to "the collection deleted rows" were a full
@@ -1587,6 +1274,8 @@ def ivf_delete(
     tombstoned ids."""
     import os
 
+    from pyspark.sql import Observation
+
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, sidecar)
     if isinstance(ids, DataFrame):
@@ -1620,27 +1309,20 @@ def ivf_delete(
         # stamp differs, the etag movement belongs to someone else's
         # mutation, and healing over it would launder exactly what
         # the fence exists to catch (the index stays honestly stale).
-        src = meta.get("source")
-        if src is not None and (
-            expected_prev_etag is None
-            or src.get("etag") == expected_prev_etag
-        ):
-            stamp = _source_stamp((src["root"], src["name"]))
-            if stamp != src:
-                meta["source"] = stamp
-                _atomic_sidecar_write(p, sidecar, meta)
+        fenced = expected_prev_etag is not None and (
+            meta.get("source") or {}
+        ).get("etag") != expected_prev_etag
+        if not fenced and _restamp(meta):
+            _atomic_sidecar_write(p, sidecar, meta)
         return 0
 
     _check_expected_etag(meta, path, sidecar, expected_prev_etag, "delete")
 
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        idguard,
+    cells = read_parquet(spark, os.path.join(p, meta["location"]))
+    have = cells.select(
+        F.col(_cells_cols(cells)[0]).cast("string").alias("_have_id")
     )
-
-    loc = os.path.join(p, meta["location"])
-    cells = read_parquet(spark, loc)
-    idc = [c for c in cells.columns if c not in ("ivf_cell", "pq_code")][0]
-    have = cells.select(F.col(idc).cast("string").alias("_have_id"))
+    indexed = F.col("_del_id") == F.col("_have_id")
     bloom_meta = meta.get("id_bloom")
     if idguard.filter_usable(bloom_meta):
         # corpus-independent prescreen: filter-negative ids are
@@ -1649,205 +1331,37 @@ def ivf_delete(
             fresh_batch, p, bloom_meta, "_del_id"
         )
         present = (
-            maybe.join(
-                have, F.col("_del_id") == F.col("_have_id"), "left_semi"
-            )
+            maybe.join(have, indexed, "left_semi")
             if maybe is not None
             else fresh_batch.limit(0)
         )
     else:
-        present = fresh_batch.join(
-            have, F.col("_del_id") == F.col("_have_id"), "left_semi"
-        )
-    present = present.select(
-        F.col("_del_id").alias("_ts_id")
-    ).localCheckpoint(eager=True)
-    n_new = present.count()
-    commit = n_new > 0
-    prefix = _tombstone_prefix(sidecar)
-    if commit:
-        merged = (
-            present if ts_prev is None else ts_prev.unionByName(present)
-        ).dropDuplicates(["_ts_id"])
-        ts_dir = _fresh_versioned_dir(
+        present = fresh_batch.join(have, indexed, "left_semi")
+    # counted inside its one checkpoint job
+    obs = Observation("ivf_delete_present")
+    present = (
+        present.select(F.col("_del_id").alias("_ts_id"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    n_new = int(obs.get["n"])
+    if n_new:
+        _record_tombstones(
             p,
-            prefix,
-            floor_names=[(meta.get("tombstones") or {}).get("location")],
+            sidecar,
+            meta,
+            (
+                present if ts_prev is None else ts_prev.unionByName(present)
+            ).dropDuplicates(["_ts_id"]),
         )
-        merged.write.mode("overwrite").parquet(os.path.join(p, ts_dir))
-        n_ts = _parquet_rows(os.path.join(p, ts_dir))
-        meta["tombstones"] = {"location": ts_dir, "n": int(n_ts)}
     # re-stamp even when the batch tombstoned nothing NEW in the
     # index (the caller's collection delete may have removed rows the
     # index never held — e.g. hydration-gated docs): the index is
     # consistent with the post-delete collection either way, and the
     # stamp is what lets the etag fence pass again
-    src = meta.get("source")
-    if src is not None:
-        meta["source"] = _source_stamp((src["root"], src["name"]))
-        commit = True
-    if commit:
-        _atomic_sidecar_write(p, sidecar, meta)
-        import shutil
-
-        keep = {(meta.get("tombstones") or {}).get("location")}
-        for d_ in os.listdir(p):
-            if d_.startswith(prefix + "_v") and d_ not in keep:
-                shutil.rmtree(os.path.join(p, d_), ignore_errors=True)
+    if _restamp(meta) or n_new:
+        _swap(p, sidecar, meta)
     return n_new
-
-
-def _clone_untouched_cells(data_dir: str, staging: str, touched: set) -> int:
-    """Carry every ``ivf_cell=N`` partition dir NOT in ``touched``
-    forward by hardlink (copy fallback) — the cells-layout twin of
-    ``plans.collection.clone_untouched_buckets`` (see that docstring
-    for the crash-atomicity argument and the object-store note).
-    Returns the number of files cloned."""
-    import os
-    import shutil
-
-    if not os.path.isdir(data_dir):
-        return 0
-    os.makedirs(staging, exist_ok=True)
-    cloned = 0
-    for d in os.listdir(data_dir):
-        if not d.startswith("ivf_cell="):
-            continue
-        try:
-            cell = int(d.split("=", 1)[1])
-        except ValueError:
-            continue
-        if cell in touched:
-            continue
-        src = os.path.join(data_dir, d)
-        dst = os.path.join(staging, d)
-        os.makedirs(dst, exist_ok=True)
-        for f in os.listdir(src):
-            s = os.path.join(src, f)
-            if not os.path.isfile(s):
-                continue
-            try:
-                os.link(s, os.path.join(dst, f))
-            except OSError:
-                shutil.copy2(s, os.path.join(dst, f))
-            cloned += 1
-    return cloned
-
-
-def _surgical_replace(
-    spark,
-    p: str,
-    sidecar: str,
-    meta: dict,
-    cells: DataFrame,
-    new_rows: DataFrame,
-) -> int:
-    """The shared core of ``ivf_upsert`` / ``pq.ivf_pq_upsert``:
-    replace every physical row of ``cells`` (the index's current cells,
-    as the caller read them) whose id is in ``new_rows`` with the
-    (already cell-assigned, already encoded, checkpointed)
-    ``new_rows``, touching only the CELL PARTITIONS involved. One
-    id-column scan finds the old rows' cells; those cells' survivors
-    plus ALL new rows land in a fresh versioned dir in one write, one
-    file per cell; every untouched cell dir is hardlink-cloned forward
-    (O(files) metadata ops, no data read); the sidecar swap is the
-    single atomic commit point — delete and re-add publish together,
-    readers see the whole upsert or none of it. Updated ids leave the tombstone set (an upsert RESURRECTS a
-    deleted id — the new row is the only physical row, so the
-    id-granular mask ambiguity that blocks plain re-appends does not
-    arise), and the id-guard filter is extended with the batch
-    (superset invariant). Returns the number of ids that had an old
-    row (the rest are pure adds)."""
-    import os
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        idguard,
-    )
-
-    loc = os.path.join(p, meta["location"])
-    idc = [c for c in cells.columns if c not in ("ivf_cell", "pq_code")][0]
-    batch_ids = new_rows.select(F.col(idc).cast("string").alias("_up_id"))
-    # no broadcast hint on the batch: unlike the tombstone recordings
-    # (policy-bounded small), an upsert batch is caller-sized — a bulk
-    # re-embed can be millions of rows, and a forced broadcast would
-    # OOM the driver; AQE broadcasts the small common case on its own
-    old = cells.join(
-        batch_ids,
-        F.col(idc).cast("string") == F.col("_up_id"),
-        "left_semi",
-    )
-    # <= one row per updated id: the touched-cell list and the
-    # updated count are both bounded by the batch
-    old_facts = old.groupBy("ivf_cell").agg(
-        F.count(F.lit(1)).alias("n")
-    ).collect()
-    touched = {int(r["ivf_cell"]) for r in old_facts}
-    n_updated = int(sum(r["n"] for r in old_facts))
-    new_dir = _fresh_cells_dir(p, meta.get("location"))
-    new_loc = os.path.join(p, new_dir)
-    survivors = cells.filter(F.col("ivf_cell").isin(list(touched))).join(
-        batch_ids,
-        F.col(idc).cast("string") == F.col("_up_id"),
-        "left_anti",
-    ) if touched else None
-    payload = (
-        new_rows
-        if survivors is None
-        else survivors.unionByName(new_rows)
-    )
-    # one task per touched cell -> one data file per cell dir (the
-    # ivf_pq_write / ivf_compact rule); otherwise every map task of
-    # the batch writes its own file into every cell it touches
-    payload.repartition("ivf_cell").write.mode("append").partitionBy(
-        "ivf_cell"
-    ).parquet(new_loc)
-    _clone_untouched_cells(loc, new_loc, touched)
-    # filter superset BEFORE the swap (same invariant as appends)
-    bloom_meta = meta.get("id_bloom")
-    if idguard.filter_usable(bloom_meta):
-        st = idguard.bloom_read(p, bloom_meta["location"])
-        idguard.bloom_extend(
-            p, meta, st, batch_ids.select(F.col("_up_id").alias("_s"))
-        )
-    ts_prev = _tombstones_df(spark, p, meta)
-    if ts_prev is not None:
-        # resurrect: updated ids leave the tombstone set
-        still = ts_prev.join(
-            batch_ids,
-            F.col("_ts_id") == F.col("_up_id"),
-            "left_anti",
-        ).localCheckpoint(eager=True)
-        n_still = still.count()
-        prefix = _tombstone_prefix(sidecar)
-        if n_still != int((meta.get("tombstones") or {}).get("n") or 0):
-            if n_still:
-                ts_dir = _fresh_versioned_dir(
-                    p,
-                    prefix,
-                    floor_names=[(meta.get("tombstones") or {}).get("location")],
-                )
-                still.write.mode("overwrite").parquet(
-                    os.path.join(p, ts_dir)
-                )
-                meta["tombstones"] = {"location": ts_dir, "n": int(n_still)}
-            else:
-                meta.pop("tombstones", None)
-    old_dir = meta["location"]
-    meta["location"] = new_dir
-    src = meta.get("source")
-    if src is not None:
-        meta["source"] = _source_stamp((src["root"], src["name"]))
-    _atomic_sidecar_write(p, sidecar, meta)
-    _drop_old_cells(p, old_dir, new_dir)
-    idguard.gc_bloom_files(p, {(meta.get("id_bloom") or {}).get("location")})
-    prefix = _tombstone_prefix(sidecar)
-    keep = {(meta.get("tombstones") or {}).get("location")}
-    import shutil
-
-    for d_ in os.listdir(p):
-        if d_.startswith(prefix + "_v") and d_ not in keep:
-            shutil.rmtree(os.path.join(p, d_), ignore_errors=True)
-    return n_updated
 
 
 @_serialized_writer()
@@ -1907,7 +1421,7 @@ def ivf_upsert(
     from pyspark.sql import Observation
 
     cells = read_parquet(spark, os.path.join(p, meta["location"]))
-    exist_id, exist_emb = [c for c in cells.columns if c != "ivf_cell"][:2]
+    exist_id, exist_emb = _cells_cols(cells)[:2]
     ic = id_col or exist_id
     ec = embedding_col or exist_emb
     types = dict(cells.dtypes)
@@ -2036,7 +1550,7 @@ def _cell_stats(
     cells dataset: one broadcast join against the (tiny) centroid
     table + one map-side-combinable aggregate — a single scan however
     large the corpus."""
-    emb = [c for c in cells.columns if c not in ("ivf_cell",)][1]
+    emb = _cells_cols(cells)[1]
     return (
         cells.join(F.broadcast(_centroid_df(spark, C)), "ivf_cell")
         .select(
@@ -2101,10 +1615,7 @@ def ivf_balance_audit(
     # audit the LOGICAL index (tombstones masked): occupancy and
     # drift verdicts drive refresh decisions about SERVABLE content —
     # rows a delete already masked must not keep a cell looking hot
-    cells = _mask_tombstones(
-        spark, p, meta, cells,
-        [c for c in cells.columns if c != "ivf_cell"][0],
-    )
+    cells = _mask_tombstones(spark, p, meta, cells, _cells_cols(cells)[0])
     C = np.asarray(meta["centroids"])
     build = meta.get("build") or {}
     metric = build.get("metric", meta["metric"])
@@ -2300,7 +1811,7 @@ def ivf_recall_audit(
     cells = read_parquet(spark, os.path.join(p, meta["location"]))
     C = np.asarray(meta["centroids"])
     metric = meta["metric"]
-    idc, embc = [c for c in cells.columns if c != "ivf_cell"][:2]
+    idc, embc = _cells_cols(cells)[:2]
     # logical rows only: a tombstoned vector is neither a valid query
     # draw nor a valid ground-truth neighbor (serving masks it), and
     # leaving it in would deflate measured recall with unservable hits
@@ -2371,14 +1882,9 @@ def ivf_compact(
     """
     import os
 
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        idguard,
-    )
-
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, sidecar)
-    old_dir = meta["location"]
-    old_loc = os.path.join(p, old_dir)
+    old_loc = os.path.join(p, meta["location"])
     before = _data_files(old_loc)
     df = read_parquet(spark, old_loc)
     # compaction is also the tombstone PURGE point (Lucene merge
@@ -2387,14 +1893,8 @@ def ivf_compact(
     # from the survivors — after which the purged ids are
     # re-appendable. Purging everything would leave an unreadable
     # empty dataset; refuse loudly instead.
-    ts = _tombstones_df(spark, p, meta)
-    if ts is not None:
-        idc0 = [c for c in df.columns if c not in ("ivf_cell", "pq_code")][0]
-        df = df.join(
-            F.broadcast(ts),
-            F.col(idc0).cast("string") == F.col("_ts_id"),
-            "left_anti",
-        )
+    if _tombstones_df(spark, p, meta) is not None:
+        df = _mask_tombstones(spark, p, meta, df, _cells_cols(df)[0])
         if df.limit(1).count() == 0:
             from vector_databases___hydrate_chroma_db_collection_spark.errors import (
                 EngineError,
@@ -2406,36 +1906,15 @@ def ivf_compact(
                 "dataset; drop the index directory and rebuild when "
                 "new vectors arrive instead"
             )
-    new_dir = _fresh_cells_dir(p, old_dir)
-    new_loc = os.path.join(p, new_dir)
-    (
-        # one task per cell -> exactly one data file per cell dir
-        df.repartition(int(meta["n_centroids"]), F.col("ivf_cell"))
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(new_loc)
-    )
-    cells_back = read_parquet(spark, new_loc)
-    idc = [c for c in cells_back.columns if c not in ("ivf_cell", "pq_code")][0]
-    meta["id_bloom"] = idguard.rebuild_filter(
-        cells_back,
-        F.col(idc).cast("string"),
-        p,
-        (meta.get("id_bloom") or {}).get("location"),
-    )
-    meta["location"] = new_dir
     meta.pop("tombstones", None)
-    _atomic_sidecar_write(p, sidecar, meta)
-    _drop_old_cells(p, old_dir, new_dir)
-    idguard.gc_bloom_files(p, {meta["id_bloom"]["location"]})
-    if ts is not None:
-        import shutil
-
-        prefix = _tombstone_prefix(sidecar)
-        for d_ in os.listdir(p):
-            if d_.startswith(prefix + "_v"):
-                shutil.rmtree(os.path.join(p, d_), ignore_errors=True)
-    return before, _data_files(new_loc)
+    new = _commit_cells_build(
+        p,
+        sidecar,
+        # one task per cell -> exactly one data file per cell dir
+        df.repartition(int(meta["n_centroids"]), F.col("ivf_cell")),
+        meta,
+    )
+    return before, _data_files(os.path.join(p, new["location"]))
 
 
 @_serialized_writer()

@@ -82,15 +82,21 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.store impor
     _check_expected_etag,
     _check_source_stamp,
     _fresh_versioned_dir,
+    _gc_recordings,
     _local_sidecar_path,
     _parquet_rows,
     _read_unchecked,
+    _restamp,
     _source_stamp,
     read_parquet,
     read_sidecar,
 )
 
 _SIDECAR = "band_index.json"
+# the recordings a rebuild, apply or compact supersedes wholesale
+_PURGED_RECORDINGS = (
+    "band_tombstones", "removed_keys", "key_decs", "deferred_updates",
+)
 _BUCKET_COLS = ("band", "h")
 
 
@@ -482,17 +488,7 @@ def band_index_write(
     # (the fresh sidecar carries no last_append_*) AND every tombstone
     # recording (fresh parts hold only current-collection rows): GC
     # both recording families
-    for d in os.listdir(p):
-        if d.startswith(
-            (
-                "append_ids_v",
-                "band_tombstones_v",
-                "removed_keys_v",
-                "key_decs_v",
-                "deferred_updates_v",
-            )
-        ):
-            shutil.rmtree(os.path.join(p, d), ignore_errors=True)
+    _gc_recordings(p, ("append_ids",) + _PURGED_RECORDINGS)
     idguard.gc_bloom_files(p, {id_bloom["location"]})
 
 
@@ -613,15 +609,11 @@ def band_index_delete(
     if fresh_batch.limit(1).count() == 0:
         # replay / all-tombstoned / empty: heal the stamp under the
         # fence, write nothing (same contract as ann.ivf_delete)
-        src = meta.get("source")
-        if src is not None and (
-            expected_prev_etag is None
-            or src.get("etag") == expected_prev_etag
-        ):
-            stamp = _source_stamp((src["root"], src["name"]))
-            if stamp != src:
-                meta["source"] = stamp
-                _sidecar_write(p, meta)
+        fenced = expected_prev_etag is not None and (
+            meta.get("source") or {}
+        ).get("etag") != expected_prev_etag
+        if not fenced and _restamp(meta):
+            _sidecar_write(p, meta)
         return 0
     _check_expected_etag(meta, path, _SIDECAR, expected_prev_etag, "delete")
     # which batch ids are actually indexed: Bloom prescreen (negative
@@ -754,25 +746,18 @@ def band_index_delete(
             "n_keys": int(n_keys),
             "decs_location": decs_dir,
         }
-    src = meta.get("source")
-    if src is not None:
-        meta["source"] = _source_stamp((src["root"], src["name"]))
-        commit = True
-    if commit:
+    if _restamp(meta) or commit:
         _sidecar_write(p, meta)
         ts_now = meta.get("tombstones") or {}
-        keep = {
-            ts_now.get("ids_location"),
-            ts_now.get("keys_location"),
-            ts_now.get("decs_location"),
-        }
-        for d in os.listdir(p):
-            if (
-                d.startswith("band_tombstones_v")
-                or d.startswith("removed_keys_v")
-                or d.startswith("key_decs_v")
-            ) and d not in keep:
-                shutil.rmtree(os.path.join(p, d), ignore_errors=True)
+        _gc_recordings(
+            p,
+            ("band_tombstones", "removed_keys", "key_decs"),
+            {
+                ts_now.get("ids_location"),
+                ts_now.get("keys_location"),
+                ts_now.get("decs_location"),
+            },
+        )
     return n_new
 
 
@@ -833,9 +818,7 @@ def band_index_defer_updates(
     batch.write.mode("overwrite").parquet(os.path.join(p, d))
     queued.append({"location": d, "n": int(n)})
     meta["deferred_updates"] = queued
-    src = meta.get("source")
-    if src is not None:
-        meta["source"] = _source_stamp((src["root"], src["name"]))
+    _restamp(meta)
     _sidecar_write(p, meta)
     return int(n)
 
@@ -1107,23 +1090,12 @@ def band_index_apply(
     meta["locations"] = new_locations
     meta.pop("tombstones", None)  # purged by this rewrite
     meta.pop("deferred_updates", None)  # drained by this rewrite
-    src = meta.get("source")
-    if src is not None:
-        meta["source"] = _source_stamp((src["root"], src["name"]))
+    _restamp(meta)
     _sidecar_write(p, meta)
     old_meta = dict(meta, locations=old_locations)
     _drop_part_dirs(spark, path, old_meta, new_locations)
     idguard.gc_bloom_files(p, {(meta.get("id_bloom") or {}).get("location")})
-    for d in os.listdir(p):
-        if d.startswith(
-            (
-                "band_tombstones_v",
-                "removed_keys_v",
-                "key_decs_v",
-                "deferred_updates_v",
-            )
-        ):
-            shutil.rmtree(os.path.join(p, d), ignore_errors=True)
+    _gc_recordings(p, _PURGED_RECORDINGS)
     if sh_cached is not None:
         sh_cached.unpersist()
     return {
@@ -1595,26 +1567,25 @@ def band_index_append(
                 # (idguard.batch_digest), making such collisions
                 # unreachable through the stream path.
                 meta["last_append_ids"] = app_dir
-        src = meta.get("source")
-        if src is not None:
-            meta["source"] = _source_stamp((src["root"], src["name"]))
+        _restamp(meta)
         _sidecar_write(p, meta)
         # GC superseded appended-id recordings: anything not the
         # committed record and not referenced by a still-pending
         # (other-batch) marker. Runs after the sidecar commit, so a
         # crash here leaks a tiny directory, never breaks a reader.
-        keep = {meta.get("last_append_ids")} | {
-            e.get("appended_ids") for e in remaining
-        }
-        for d in os.listdir(p):
-            if d.startswith("append_ids_v") and d not in keep:
-                shutil.rmtree(os.path.join(p, d), ignore_errors=True)
+        _gc_recordings(
+            p,
+            ("append_ids",),
+            {meta.get("last_append_ids")}
+            | {e.get("appended_ids") for e in remaining},
+        )
         # ... and removed-keys recordings superseded by this append's
         # shrink (only the sidecar's current dir is ever referenced)
-        keep_rk = {(meta.get("tombstones") or {}).get("keys_location")}
-        for d in os.listdir(p):
-            if d.startswith("removed_keys_v") and d not in keep_rk:
-                shutil.rmtree(os.path.join(p, d), ignore_errors=True)
+        _gc_recordings(
+            p,
+            ("removed_keys",),
+            {(meta.get("tombstones") or {}).get("keys_location")},
+        )
         idguard.gc_bloom_files(
             p, {(meta.get("id_bloom") or {}).get("location")}
         )
@@ -2116,16 +2087,7 @@ def band_index_compact(spark: SparkSession, path: str) -> dict:
     idguard.gc_bloom_files(
         p, {(meta.get("id_bloom") or {}).get("location")}
     )
-    for d in os.listdir(p):
-        if d.startswith(
-            (
-                "band_tombstones_v",
-                "removed_keys_v",
-                "key_decs_v",
-                "deferred_updates_v",
-            )
-        ):
-            shutil.rmtree(os.path.join(p, d), ignore_errors=True)
+    _gc_recordings(p, _PURGED_RECORDINGS)
     return report
 
 

@@ -14,10 +14,9 @@ walk reaches the true neighbors an unguided cell scan of the same
 budget misses — which is exactly hnswlib's win, realized per cell
 (Malkov & Yashunin 2016, public).
 
-Layout: the persisted artifact is an IVF cells dataset
-(``ivf_cell``-partitioned parquet, versioned dir, id-guard Bloom,
-atomic ``graph_index.json`` sidecar swap — the ``ivf_write``
-lifecycle re-expressed) whose rows carry two extra columns:
+Layout: the persisted artifact is a cells index
+(``graph_index.json``; the shared lifecycle is in the ``store``
+module doc) whose rows carry two extra columns:
 
 - ``nbrs``  — the row's ``M`` nearest in-cell neighbor ids
   (cosine; exact per-cell GEMM at build, row-chunked so memory stays
@@ -39,14 +38,12 @@ and take the global top-k. Two honesty contracts:
   recall-vs-budget claims are measured, never assumed
   (``graph_recall_audit`` reports candidates-scored next to recall).
 
-Deletes: ``graph_delete`` tombstones through the shared
-``ann.ivf_delete`` (sidecar-parametric; recordings namespaced
-``graph_tombstones_v*``). The beam TRAVERSES THROUGH tombstoned
-nodes but never emits them — soft deletes must not disconnect the
-graph (the hnswlib/Lucene posture); a compact-time purge would
-re-dangle edges, so the honest purge unit is a cell-graph rebuild
-(``graph_index_build`` + ``graph_index_write`` — rebuild-is-atomic
-for readers via the versioned-dir swap).
+Deletes: ``graph_delete`` tombstones like the other cells kinds.
+The beam TRAVERSES THROUGH tombstoned nodes but never emits them —
+soft deletes must not disconnect the graph (the hnswlib/Lucene
+posture); a compact-time purge would re-dangle edges, so the honest
+purge unit is a cell-graph rebuild (``graph_index_build`` +
+``graph_index_write``).
 
 Scale shape: build is one k-means assign pass plus one GEMM per cell
 (chunked, O(|cell|^2) compute bounded by ``max_cell_rows`` — size
@@ -69,12 +66,24 @@ from vector_databases___hydrate_chroma_db_collection_spark.errors import (
     EngineError,
 )
 
-from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (  # noqa: E402
+from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
     _cell_order,
-    _serialized_writer as _ann_serialized_writer,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    _atomic_sidecar_write,
+    _check_expected_etag,
+    _check_source_stamp,
+    _commit_cells_build,
+    _guard_append,
+    _local_sidecar_path,
+    _mask_tombstones,
+    _replace_cells,
+    _restamp,
+    _serialized_writer,
+    _source_stamp,
+    _tombstones_df,
     read_parquet,
+    read_sidecar,
 )
 
 _SIDECAR = "graph_index.json"
@@ -266,54 +275,18 @@ def graph_index_write(
     source: tuple[str, str] | None = None,
     build: dict | None = None,
 ) -> None:
-    """Persist the graph index with the ``ivf_write`` lifecycle:
-    fresh versioned cells dir partitioned by ``ivf_cell``, id-guard
-    Bloom rebuilt from the written parquet, one atomic
-    ``graph_index.json`` swap, superseded dirs GC'd after commit. A
-    rebuild supersedes every tombstone recording (fresh cells hold
-    only current rows)."""
-    import os
-    import shutil
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        idguard,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _drop_old_cells,
-        _fresh_cells_dir,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _atomic_sidecar_write,
-        _local_sidecar_path,
-        _read_unchecked,
-        _source_stamp,
-    )
-
-    p = _local_sidecar_path(path)
-    os.makedirs(p, exist_ok=True)
-    old_meta = {}
-    if os.path.exists(os.path.join(p, _SIDECAR)):
-        old_meta = _read_unchecked(p, _SIDECAR)
-    cells_dir = _fresh_cells_dir(p, old_meta.get("location"))
-    # No cluster-by-cell exchange needed here (unlike ivf_write): the
-    # input is _build_cell_graphs' groupBy("ivf_cell").applyInPandas
-    # output, already hash-clustered by cell, so the dynamic-partition
-    # write emits exactly one file per cell as-is.
-    assigned.write.mode("overwrite").partitionBy("ivf_cell").parquet(
-        os.path.join(p, cells_dir)
-    )
-    spark = assigned.sparkSession
-    cells_back = read_parquet(spark, os.path.join(p, cells_dir))
-    id_bloom = idguard.rebuild_filter(
-        cells_back,
-        F.col("id").cast("string"),
-        p,
-        (old_meta.get("id_bloom") or {}).get("location"),
-    )
+    """Persist the graph index through the shared build commit
+    (``store`` module doc). A rebuild supersedes every tombstone
+    recording (fresh cells hold only current rows)."""
     C = np.asarray(centroids, dtype=np.float64)
-    _atomic_sidecar_write(
-        p,
+    _commit_cells_build(
+        _local_sidecar_path(path),
         _SIDECAR,
+        # no cluster-by-cell exchange needed (unlike ivf_write): the
+        # input is _build_cell_graphs' groupBy("ivf_cell").applyInPandas
+        # output, already hash-clustered by cell, so the write emits
+        # exactly one file per cell as-is
+        assigned,
         {
             "kind": "graph",
             "metric": "cosine",
@@ -323,15 +296,8 @@ def graph_index_write(
             "centroids": C.tolist(),
             "source": _source_stamp(source),
             "build": build,
-            "location": cells_dir,
-            "id_bloom": id_bloom,
         },
     )
-    _drop_old_cells(p, old_meta.get("location"), cells_dir)
-    idguard.gc_bloom_files(p, {id_bloom["location"]})
-    for d_ in os.listdir(p):
-        if d_.startswith("graph_tombstones_v"):
-            shutil.rmtree(os.path.join(p, d_), ignore_errors=True)
 
 
 def graph_index_read(
@@ -344,12 +310,6 @@ def graph_index_read(
     ``meta['tombstones']``."""
     import os
 
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _check_source_stamp,
-        _local_sidecar_path,
-        read_sidecar,
-    )
-
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, _SIDECAR)
     _check_source_stamp(meta, p, verify_source)
@@ -357,7 +317,7 @@ def graph_index_read(
     return cells, np.asarray(meta["centroids"], dtype=np.float64), meta
 
 
-@_ann_serialized_writer(_SIDECAR)
+@_serialized_writer(_SIDECAR)
 def graph_delete(
     spark: SparkSession,
     path: str,
@@ -365,11 +325,10 @@ def graph_delete(
     *,
     expected_prev_etag: str | None = None,
 ) -> int:
-    """Tombstone ``ids`` in the graph index — the shared
-    ``ann.ivf_delete`` machinery verbatim (Bloom prescreen + exact
-    semi-join, versioned ``graph_tombstones_v*`` recording, atomic
-    sidecar swap, etag fence). Serving keeps traversing through
-    tombstoned nodes and stops emitting them."""
+    """Tombstone ``ids`` in the graph index through ``ann.ivf_delete``
+    (``store`` module doc; recordings ``graph_tombstones_v*``).
+    Serving keeps traversing through tombstoned nodes and stops
+    emitting them."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         ivf_delete,
     )
@@ -383,7 +342,7 @@ def graph_delete(
     )
 
 
-@_ann_serialized_writer(_SIDECAR)
+@_serialized_writer(_SIDECAR)
 def graph_append(
     spark: SparkSession,
     path: str,
@@ -399,108 +358,46 @@ def graph_append(
     cells (no retrain), REBUILD the touched cells' kNN graphs over
     (surviving ∪ new) rows — edges of existing rows in a touched cell
     legitimately change, which is why a plain row-append (the IVF
-    shape) would silently degrade the beam — and carry every
-    untouched cell forward by hardlink into a fresh versioned dir;
-    ONE sidecar swap commits. Duplicate ids are guard-skipped (Bloom
-    prescreen + exact anti-join — idempotent replays); re-appending a
-    TOMBSTONED id raises ``TombstonedIdError`` until a rebuild purges
-    (the ``ivf_append`` contract); ``expected_prev_etag`` is the same
-    foreign-mutation fence. Returns the number of rows appended.
+    shape) would silently degrade the beam — and commit them through
+    the shared cell replace. The batch passes the shared append guard
+    (``store`` module doc): duplicate ids are skipped (idempotent
+    replays); re-appending a TOMBSTONED id raises
+    ``TombstonedIdError`` until a rebuild purges it;
+    ``expected_prev_etag`` is the same foreign-mutation fence.
+    Returns the number of rows appended.
 
     Cost: O(touched cells' rows^2 / chunk) graph rebuild + O(files)
     clone metadata — bounded by the batch's cell spread, never a
     corpus rebuild."""
     import os
-    import shutil
 
-    from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-        TombstonedIdError,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        idguard,
-    )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _assign_to_centroids,
-        _clone_untouched_cells,
-        _drop_old_cells,
-        _fresh_cells_dir,
-        _tombstones_df,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _atomic_sidecar_write,
-        _check_expected_etag,
-        _local_sidecar_path,
-        _source_stamp,
-        read_sidecar,
     )
 
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, _SIDECAR)
     _check_expected_etag(meta, path, _SIDECAR, expected_prev_etag, "append")
-    C = np.asarray(meta["centroids"], dtype=np.float64)
-    batch = (
+    cells = read_parquet(spark, os.path.join(p, meta["location"]))
+    _batch, fresh, n_fresh, _state = _guard_append(
+        p,
+        meta,
         new_rows.select(
             F.col(id_col).cast("string").alias("id"),
             F.col(embedding_col).cast("array<float>").alias("embedding"),
-        )
-        .where(F.col("id").isNotNull())
-        .dropDuplicates(["id"])
-        .localCheckpoint(eager=True)
+        ).where(F.col("id").isNotNull()),
+        cells,
+        "graph_append",
+        tombstones=_tombstones_df(spark, p, meta),
+        purge="rebuild the index (graph_index_build + graph_index_write)",
     )
-    loc = os.path.join(p, meta["location"])
-    cells = read_parquet(spark, loc)
-    ts_prev = _tombstones_df(spark, p, meta)
-    if ts_prev is not None:
-        dead_hit = batch.join(
-            ts_prev, F.col("id") == F.col("_ts_id"), "left_semi"
-        )
-        if dead_hit.limit(1).count() > 0:
-            raise TombstonedIdError(
-                "graph_append: the batch re-introduces tombstoned "
-                "ids — rebuild the index (graph_index_build + write) "
-                "to purge before re-ingesting them"
-            )
-    # duplicate-id guard: Bloom prescreen (filter-negative = new,
-    # zero corpus IO), exact semi-join only on the maybes
-    bloom_meta = meta.get("id_bloom")
-    if idguard.filter_usable(bloom_meta):
-        neg, maybe, _st = idguard.bloom_split(batch, p, bloom_meta, "id")
-        if maybe is not None:
-            dup = maybe.join(
-                cells.select(F.col("id").alias("_have")),
-                F.col("id") == F.col("_have"),
-                "left_semi",
-            )
-            maybe_fresh = maybe.join(
-                dup.select("id"), "id", "left_anti"
-            )
-            fresh = (
-                maybe_fresh
-                if neg is None
-                else neg.unionByName(maybe_fresh.select(neg.columns))
-            )
-        else:
-            fresh = neg if neg is not None else batch.limit(0)
-    else:
-        fresh = batch.join(
-            cells.select(F.col("id").alias("_have")),
-            F.col("id") == F.col("_have"),
-            "left_anti",
-        )
-    fresh = fresh.select("id", "embedding").localCheckpoint(eager=True)
-    n_fresh = fresh.count()
     if n_fresh == 0:
-        # replay / all-known batch: heal the stamp like ivf_delete
-        src = meta.get("source")
-        if src is not None and (
-            expected_prev_etag is None
-            or src.get("etag") == expected_prev_etag
-        ):
-            stamp = _source_stamp((src["root"], src["name"]))
-            if stamp != src:
-                meta["source"] = stamp
-                _atomic_sidecar_write(p, _SIDECAR, meta)
+        # replay / all-known batch: heal the stamp like ivf_delete (the
+        # etag fence above has already passed)
+        if _restamp(meta):
+            _atomic_sidecar_write(p, _SIDECAR, meta)
         return 0
+    C = np.asarray(meta["centroids"], dtype=np.float64)
     assigned_new = _assign_to_centroids(
         fresh, C, id_col="id", embedding_col="embedding", metric="cosine"
     ).localCheckpoint(eager=True)
@@ -508,34 +405,15 @@ def graph_append(
         int(r["ivf_cell"])
         for r in assigned_new.select("ivf_cell").distinct().collect()
     }
-    rebuilt_src = (
+    rebuilt = _build_cell_graphs(
         cells.filter(F.col("ivf_cell").isin(sorted(touched)))
         .select("id", "embedding", "ivf_cell")
-        .unionByName(assigned_new)
+        .unionByName(assigned_new),
+        C,
+        int(meta["M"]),
+        max_cell_rows,
     )
-    rebuilt = _build_cell_graphs(
-        rebuilt_src, C, int(meta["M"]), max_cell_rows
-    )
-    new_dir = _fresh_cells_dir(p, meta["location"])
-    new_loc = os.path.join(p, new_dir)
-    rebuilt.write.mode("append").partitionBy("ivf_cell").parquet(new_loc)
-    _clone_untouched_cells(loc, new_loc, touched)
-    # filter superset BEFORE the swap (the append-guard invariant)
-    if idguard.filter_usable(bloom_meta):
-        st = idguard.bloom_read(p, bloom_meta["location"])
-        idguard.bloom_extend(
-            p, meta, st, fresh.select(F.col("id").alias("_s"))
-        )
-    old_dir = meta["location"]
-    meta["location"] = new_dir
-    src = meta.get("source")
-    if src is not None:
-        meta["source"] = _source_stamp((src["root"], src["name"]))
-    _atomic_sidecar_write(p, _SIDECAR, meta)
-    _drop_old_cells(p, old_dir, new_dir)
-    idguard.gc_bloom_files(
-        p, {(meta.get("id_bloom") or {}).get("location")}
-    )
+    _replace_cells(p, _SIDECAR, meta, rebuilt, touched, fresh.select("id"))
     return n_fresh
 
 
@@ -642,19 +520,10 @@ def _serve_cells(
         for c in order:
             by_cell.setdefault(int(c), []).append((qid, vn))
     src = cells_df
-    ts = meta.get("tombstones")
-    if ts and int(ts.get("n") or 0):
-        import os
-
-        from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-            _local_sidecar_path,
-        )
-
+    ts = _tombstones_df(spark, _local_sidecar_path(path), meta)
+    if ts is not None:
         dead_df = (
-            read_parquet(
-                spark, os.path.join(_local_sidecar_path(path), ts["location"])
-            )
-            .select(F.col("_ts_id").alias("id"))
+            ts.select(F.col("_ts_id").alias("id"))
             .dropDuplicates(["id"])
             .withColumn("_dead", F.lit(True))
         )
@@ -846,13 +715,9 @@ def graph_recall_audit(
     sentinel row. Query draw: the shared deterministic md5-rank
     sample."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _mask_tombstones,
         _recall_report,
         _sample_queries,
         ivf_knn_join,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _local_sidecar_path,
     )
 
     cells, C, meta = graph_index_read(spark, path)

@@ -587,6 +587,9 @@ def _apply_semantic_dup_gate(
         ivf_knn_join,
         ivf_read,
     )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _cells_cols,
+    )
 
     if cfg.semantic_dup_policy not in ("skip", "error"):
         raise EngineError(
@@ -594,7 +597,7 @@ def _apply_semantic_dup_gate(
             f"{cfg.semantic_dup_policy!r}"
         )
     assigned, C, metric = ivf_read(spark, cfg.semantic_dup_index)
-    idx_cols = [c for c in assigned.columns if c != "ivf_cell"]
+    idx_cols = _cells_cols(assigned)
     nn = ivf_knn_join(
         good.select(
             F.col("id").alias("qid"), F.col("embedding").alias("q_embedding")

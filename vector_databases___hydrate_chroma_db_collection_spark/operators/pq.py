@@ -41,10 +41,25 @@ from pyspark.sql import functions as F
 
 from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
     _cell_order,
-    _serialized_writer,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    _atomic_sidecar_write,
+    _cells_cols,
+    _check_expected_etag,
+    _check_source_stamp,
+    _commit_cells_build,
+    _extend_guard,
+    _gc,
+    _guard_append,
+    _local_sidecar_path,
+    _mask_tombstones,
+    _restamp,
+    _serialized_writer,
+    _source_stamp,
+    _surgical_replace,
+    _tombstones_df,
     read_parquet,
+    read_sidecar,
 )
 
 # ADC LUTs up to this many entries (m * n_codes) are inlined as literal
@@ -876,11 +891,6 @@ def ivf_pq_recall_audit(
     from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import (
         knn_join,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _local_sidecar_path,
-        read_sidecar,
-    )
-
     meta = read_sidecar(_local_sidecar_path(path), "ivf_pq_index.json")
     if corpus is None:
         src = meta.get("source")
@@ -909,7 +919,7 @@ def ivf_pq_recall_audit(
         C,
         books,
         k=k,
-        id_col=[c for c in encoded.columns if c not in ("ivf_cell", "pq_code")][0],
+        id_col=_cells_cols(encoded)[0],
         nprobe=nprobe,
         score_decimals=score_decimals,
         slack=slack,
@@ -940,107 +950,39 @@ def ivf_pq_write(
 ) -> None:
     """Persist an IVF-PQ index: codes partitioned by ``ivf_cell`` (so
     searches get static partition pruning on the 8-byte rows) plus a
-    JSON sidecar with centroids + codebooks. Same contract as
-    ``ann.ivf_write``: the index is just a dataset — it scans, joins,
-    and replicates like any other table, and the sidecar is a few MB
-    at FAISS-typical sizes. ``source=(root, name)`` stamps the
-    sidecar with the source collection's etag so ``ivf_pq_read``
-    refuses a stale index after collection mutations. ``rotation``:
-    the OPQ rotation from ``ivf_pq_build(opq=True)`` — persisted in
-    the sidecar so every serve/append/upsert path rotates residuals
-    identically without the caller re-threading it."""
-    import os
-
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _drop_old_cells,
-        _fresh_cells_dir,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _atomic_sidecar_write,
-        _local_sidecar_path,
-        _read_unchecked,
-        _source_stamp,
-    )
-
-    path = _local_sidecar_path(path)
-    os.makedirs(path, exist_ok=True)
-    old_meta = {}
-    if os.path.exists(os.path.join(path, "ivf_pq_index.json")):
-        old_meta = _read_unchecked(path, "ivf_pq_index.json")
-    stamp = _source_stamp(source)
-    # Rebuild-is-atomic-for-readers: same versioned-dir + sidecar-swap
-    # lifecycle as ivf_write / band_index_write.
-    cells_dir = _fresh_cells_dir(path, old_meta.get("location"))
-    # One task per cell -> one data file per cell dir (ivf_compact
-    # idiom); otherwise the dynamic-partition write fans every map
-    # task into every cell it touches (tasks x n_cells files) and the
-    # Bloom/cell-stats read-backs plus every serve pay per-file opens.
-    (
-        encoded.repartition(int(np.asarray(centroids).shape[0]), F.col("ivf_cell"))
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(os.path.join(path, cells_dir))
-    )
-    # id-guard Bloom over the persisted ids: lets ivf_pq_append
-    # prescreen its double-ingest guard with zero corpus IO (see
-    # operators/idguard.py for the superset/durability contract).
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        idguard,
-    )
-
-    spark = encoded.sparkSession
-    cells_back = read_parquet(spark, os.path.join(path, cells_dir))
-    idc = [c for c in cells_back.columns if c not in ("ivf_cell", "pq_code")][0]
-    id_bloom = idguard.rebuild_filter(
-        cells_back,
-        F.col(idc).cast("string"),
-        path,
-        (old_meta.get("id_bloom") or {}).get("location"),
-    )
-    # build-time per-cell stats: occupancy + mean reconstructed-
-    # residual norm — the baseline ivf_pq_balance_audit measures
-    # appended saturation drift against. One scan of the fresh codes.
-    stats = {
-        int(r["ivf_cell"]): (int(r["n_rows"]), float(r["mean_res_norm"]))
-        for r in _pq_cell_stats(cells_back, codebooks).collect()
+    JSON sidecar with centroids + codebooks, through the shared build
+    commit (``store`` module doc). The index is just a dataset — it
+    scans, joins, and replicates like any other table, and the
+    sidecar is a few MB at FAISS-typical sizes. ``source=(root,
+    name)`` stamps the sidecar with the source collection's etag so
+    ``ivf_pq_read`` refuses a stale index after collection mutations.
+    ``rotation``: the OPQ rotation from ``ivf_pq_build(opq=True)`` —
+    persisted in the sidecar so every serve/append/upsert path
+    rotates residuals identically without the caller re-threading
+    it. The build-time per-cell stats (occupancy + mean
+    reconstructed-residual norm) are the baseline
+    ``ivf_pq_balance_audit`` measures saturation drift against."""
+    C = np.asarray(centroids)
+    books = np.asarray(codebooks)
+    fields = {
+        "n_centroids": int(C.shape[0]),
+        "dim": int(C.shape[1]),
+        "m": int(books.shape[0]),
+        "n_codes": int(books.shape[1]),
+        "centroids": C.tolist(),
+        "codebooks": books.tolist(),
+        "source": _source_stamp(source),
     }
-    n_cells = int(centroids.shape[0])
-    train_stats = {
-        "cell_rows": [stats.get(i, (0, 0.0))[0] for i in range(n_cells)],
-        "cell_mean_res_norm": [
-            stats.get(i, (0, 0.0))[1] for i in range(n_cells)
-        ],
-    }
-    _atomic_sidecar_write(
-        path,
+    if rotation is not None:
+        fields["rotation"] = np.asarray(rotation).tolist()
+    _commit_cells_build(
+        _local_sidecar_path(path),
         "ivf_pq_index.json",
-        {
-            "n_centroids": int(centroids.shape[0]),
-            "dim": int(centroids.shape[1]),
-            "m": int(codebooks.shape[0]),
-            "n_codes": int(codebooks.shape[1]),
-            "centroids": centroids.tolist(),
-            "codebooks": codebooks.tolist(),
-            "source": stamp,
-            "location": cells_dir,
-            "train_stats": train_stats,
-            "id_bloom": id_bloom,
-            **(
-                {"rotation": np.asarray(rotation).tolist()}
-                if rotation is not None
-                else {}
-            ),
-        },
+        # one task per cell -> one data file per cell dir
+        encoded.repartition(int(C.shape[0]), F.col("ivf_cell")),
+        fields,
+        stats=lambda cells: _pq_cell_stats(cells, books),
     )
-    _drop_old_cells(path, old_meta.get("location"), cells_dir)
-    idguard.gc_bloom_files(path, {id_bloom["location"]})
-    # a rebuild supersedes the tombstone recordings (fresh cells hold
-    # only current-collection rows; the fresh sidecar carries none)
-    import shutil
-
-    for d_ in os.listdir(path):
-        if d_.startswith("ivf_pq_tombstones_v"):
-            shutil.rmtree(os.path.join(path, d_), ignore_errors=True)
 
 
 @_serialized_writer("ivf_pq_index.json")
@@ -1058,12 +1000,14 @@ def ivf_pq_append(
     EXISTING coarse centroid and residual-encode them with the
     EXISTING codebooks (no retraining — FAISS ``index.add``
     semantics), appending only the new 8-byte code rows. Same
-    contract as ``ann.ivf_append``: id-guarded (replays idempotent,
-    ``on_existing='error'`` to raise), batch materialized before the
-    write, optional ``expected_prev_etag`` fence, sidecar re-stamped
-    so a stale index transitions fresh without the full rebuild.
-    Quantization quality degrades only as far as the data drifts from
-    the trained centroids/codebooks — refresh on drift audits.
+    contract as ``ann.ivf_append``, through the shared append guard
+    (``store`` module doc): id-guarded (replays idempotent,
+    ``on_existing='error'`` to raise), tombstoned ids refused until
+    ``ivf_pq_compact``, optional ``expected_prev_etag`` fence, sidecar
+    re-stamped so a stale index transitions fresh without the full
+    rebuild. Quantization quality degrades only as far as the data
+    drifts from the trained centroids/codebooks — refresh on drift
+    audits.
 
     ``new_rows`` must carry the embedding (codes store only its
     quantization); ``id_col`` defaults to the persisted code table's
@@ -1073,139 +1017,49 @@ def ivf_pq_append(
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _assign_to_centroids,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _atomic_sidecar_write,
-        _check_expected_etag,
-        _local_sidecar_path,
-        _source_stamp,
-        read_sidecar,
-    )
 
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, "ivf_pq_index.json")
-    if on_existing not in ("skip", "error"):
-        raise ValueError(
-            f"on_existing must be 'skip' or 'error', got {on_existing!r}"
-        )
     _check_expected_etag(
         meta, path, "ivf_pq_index.json", expected_prev_etag, "append"
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators import (
-        idguard,
-    )
-
-    loc = os.path.join(p, meta["location"])
-    existing = read_parquet(spark, loc)
-    exist_id = [c for c in existing.columns if c not in ("ivf_cell", "pq_code")][0]
-    ic = id_col or exist_id
+    existing = read_parquet(spark, os.path.join(p, meta["location"]))
+    exist_id = _cells_cols(existing)[0]
     id_type = dict(existing.dtypes)[exist_id]
-    batch = (
+    batch, fresh, n_new, state = _guard_append(
+        p,
+        meta,
         new_rows.select(
-            F.col(ic).cast(id_type).alias(exist_id), F.col(embedding_col)
-        )
-        # in-batch duplicate ids are part of the double-ingest guard's
-        # contract too (same as ann.ivf_append)
-        .dropDuplicates([exist_id])
-        # materialized ONCE for the guard probe, the filter merge,
-        # and the encode (same as ann.ivf_append)
-        .localCheckpoint(eager=True)
+            F.col(id_col or exist_id).cast(id_type).alias(exist_id),
+            F.col(embedding_col),
+        ),
+        existing,
+        "ivf_pq_append",
+        tombstones=_tombstones_df(spark, p, meta),
+        purge="run ivf_pq_compact",
+        on_existing=on_existing,
     )
-    # same tombstone refusal as ann.ivf_append: a re-append of a
-    # deleted id would hide the new code row behind the id-granular
-    # mask — ivf_pq_compact purges first
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _tombstones_df,
-    )
-
-    ts = _tombstones_df(spark, p, meta)
-    if ts is not None:
-        n_dead = batch.join(
-            F.broadcast(ts),
-            F.col(exist_id).cast("string") == F.col("_ts_id"),
-            "left_semi",
-        ).count()
-        if n_dead:
-            from vector_databases___hydrate_chroma_db_collection_spark.errors import (
-                TombstonedIdError,
-            )
-
-            raise TombstonedIdError(
-                f"ivf_pq_append: {n_dead} incoming id(s) are "
-                f"TOMBSTONED in the index at {path!r} (deleted but "
-                "not yet physically purged) — run ivf_pq_compact to "
-                "purge them, then retry the append"
-            )
-    have = existing.select(F.col(exist_id).alias("_have_id"))
-    bloom_meta = meta.get("id_bloom")
-    if not idguard.filter_usable(bloom_meta):
-        bloom_meta = None  # exact path; fresh filter rebuilt below
-    ig_state = None
-    if bloom_meta is not None:
-        # corpus-independent prescreen — same contract as ivf_append
-        # (filter-negative = definitely new, zero corpus IO)
-        neg, maybe, ig_state = idguard.bloom_split(
-            batch, p, bloom_meta, exist_id
-        )
-        fresh = (
-            neg
-            if maybe is None
-            else neg.unionByName(
-                maybe.join(
-                    have, F.col(exist_id) == F.col("_have_id"), "left_anti"
-                )
-            )
-        )
-    else:
-        maybe = batch  # no usable filter: exact path for the whole batch
-        fresh = batch.join(
-            have, F.col(exist_id) == F.col("_have_id"), "left_anti"
-        )
-    if on_existing == "error":
-        n_dup = (
-            maybe.join(
-                have, F.col(exist_id) == F.col("_have_id"), "left_semi"
-            ).count()
-            if maybe is not None
-            else 0
-        )
-        if n_dup:
-            raise ValueError(
-                f"ivf_pq_append: {n_dup} incoming id(s) are already "
-                f"indexed at {path!r}; re-appending would duplicate code "
-                "rows (pass on_existing='skip' to make replays idempotent)"
-            )
-    fresh = fresh.localCheckpoint(eager=True)
-    n_new = fresh.count()
     if n_new:
-        # filter committed BEFORE the data append (superset invariant
-        # survives a crash mid-append; see idguard.bloom_extend)
-        idguard.bloom_extend(
-            p,
-            meta,
-            ig_state,
-            batch.select(F.col(exist_id).cast("string").alias("_s")),
-            fallback_ids=existing.select(F.col(exist_id).cast("string")),
-        )
-        _atomic_sidecar_write(p, "ivf_pq_index.json", meta)
+        _extend_guard(p, "ivf_pq_index.json", meta, existing, batch, state)
         C = np.asarray(meta["centroids"])
-        books = np.asarray(meta["codebooks"])
         # IVF-PQ cells are always l2-trained (ivf_pq_build hardcodes
         # metric='l2'); assignment must use the same math.
         assigned = _assign_to_centroids(
             fresh, C, id_col=exist_id, embedding_col=embedding_col, metric="l2"
         )
-        encoded = _encode_assigned(
-            assigned, C, books, id_col=exist_id, embedding_col=embedding_col,
+        _encode_assigned(
+            assigned,
+            C,
+            np.asarray(meta["codebooks"]),
+            id_col=exist_id,
+            embedding_col=embedding_col,
             rotation=meta.get("rotation"),
+        ).write.mode("append").partitionBy("ivf_cell").parquet(
+            os.path.join(p, meta["location"])
         )
-        encoded.write.mode("append").partitionBy("ivf_cell").parquet(loc)
-    src = meta.get("source")
-    if src is not None:
-        meta["source"] = _source_stamp((src["root"], src["name"]))
+    if _restamp(meta):
         _atomic_sidecar_write(p, "ivf_pq_index.json", meta)
-    idguard.gc_bloom_files(
-        p, {(meta.get("id_bloom") or {}).get("location")}
-    )
+    _gc(p, "ivf_pq_index.json", meta)
     return n_new
 
 
@@ -1228,24 +1082,14 @@ def ivf_pq_read(
     ``rotation=`` so OPQ-encoded codes score correctly."""
     import os
 
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _mask_tombstones,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _check_source_stamp,
-        _local_sidecar_path,
-        read_sidecar,
-    )
-
     path = _local_sidecar_path(path)
     meta = read_sidecar(path, "ivf_pq_index.json")
     _check_source_stamp(meta, path, verify_source)
     encoded = read_parquet(spark, os.path.join(path, meta["location"]))
     if not include_tombstoned:
-        idc = [
-            c for c in encoded.columns if c not in ("ivf_cell", "pq_code")
-        ][0]
-        encoded = _mask_tombstones(spark, path, meta, encoded, idc)
+        encoded = _mask_tombstones(
+            spark, path, meta, encoded, _cells_cols(encoded)[0]
+        )
     if with_rotation:
         rot = meta.get("rotation")
         return (
@@ -1271,8 +1115,8 @@ def ivf_pq_upsert(
     embedding_col: str = "embedding",
     expected_prev_etag: str | None = None,
 ) -> tuple[int, int]:
-    """IVF-PQ twin of ``ann.ivf_upsert`` (same surgical cell rewrite,
-    same single-swap atomicity, same tombstone resurrection): assign
+    """IVF-PQ twin of ``ann.ivf_upsert`` (the shared cell replace,
+    ``store`` module doc, with its tombstone resurrection): assign
     the new vectors to their nearest EXISTING coarse centroid,
     residual-encode with the EXISTING codebooks (no retraining), and
     replace only the touched cell partitions of the 8-byte code
@@ -1283,12 +1127,6 @@ def ivf_pq_upsert(
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _assign_to_centroids,
-        _surgical_replace,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _check_expected_etag,
-        _local_sidecar_path,
-        read_sidecar,
     )
 
     p = _local_sidecar_path(path)
@@ -1297,7 +1135,7 @@ def ivf_pq_upsert(
         meta, path, "ivf_pq_index.json", expected_prev_etag, "upsert"
     )
     cells = read_parquet(spark, os.path.join(p, meta["location"]))
-    exist_id = [c for c in cells.columns if c not in ("ivf_cell", "pq_code")][0]
+    exist_id = _cells_cols(cells)[0]
     ic = id_col or exist_id
     id_type = dict(cells.dtypes)[exist_id]
     batch = rows.select(
@@ -1327,9 +1165,9 @@ def ivf_pq_upsert(
 def ivf_pq_delete(
     spark, path: str, ids, *, expected_prev_etag: str | None = None
 ) -> int:
-    """IVF-PQ twin of ``ann.ivf_delete`` (same sidecar lifecycle,
-    namespaced ``ivf_pq_tombstones_v*`` recordings): tombstone ids in
-    the compressed index, mask at read, purge at ``ivf_pq_compact``.
+    """IVF-PQ twin of ``ann.ivf_delete`` (``store`` module doc;
+    recordings ``ivf_pq_tombstones_v*``): tombstone ids in the
+    compressed index, mask at read, purge at ``ivf_pq_compact``.
     Returns the number of newly tombstoned ids."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         ivf_delete,
@@ -1345,11 +1183,10 @@ def ivf_pq_delete(
 
 
 def ivf_pq_compact(spark, path: str) -> tuple[int, int]:
-    """IVF-PQ twin of ``ann.ivf_compact`` (same cells layout, same
-    sidecar lifecycle — only the sidecar name and the extra
-    ``pq_code`` column differ): rewrite the append-grown code table
-    to one data file per cell behind an atomic sidecar swap, re-size
-    the id-guard filter, return ``(files_before, files_after)``."""
+    """IVF-PQ twin of ``ann.ivf_compact`` (the shared build commit,
+    ``store`` module doc): rewrite the append-grown code table to one
+    data file per cell, purge tombstoned rows, re-size the id-guard
+    filter, return ``(files_before, files_after)``."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         ivf_compact,
     )
@@ -1426,22 +1263,14 @@ def ivf_pq_balance_audit(
     import os
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _mask_tombstones,
         np_round_half_up,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _local_sidecar_path,
-        read_sidecar,
     )
 
     p = _local_sidecar_path(path)
     meta = read_sidecar(p, "ivf_pq_index.json")
     cells = read_parquet(spark, os.path.join(p, meta["location"]))
     # logical rows only — same rationale as ann.ivf_balance_audit
-    cells = _mask_tombstones(
-        spark, p, meta, cells,
-        [c for c in cells.columns if c not in ("ivf_cell", "pq_code")][0],
-    )
+    cells = _mask_tombstones(spark, p, meta, cells, _cells_cols(cells)[0])
     books = np.asarray(meta["codebooks"])
     stat_rows = _pq_cell_stats(cells, books).collect()
     n_cells = int(meta["n_centroids"])

@@ -55,6 +55,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_databases___hydrate_chroma_db_collection_spark.errors import EngineError
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    _cells_cols,
+)
 from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
     clone_untouched_buckets,
     current_data_dir,
@@ -690,19 +693,13 @@ def _kfill(
     return out, p
 
 
-def _index_cols(index_rows: DataFrame) -> list[str]:
-    """An IVF/IVF-PQ index's row columns: id first, then (IVF) the
-    embedding."""
-    return [c for c in index_rows.columns if c not in ("ivf_cell", "pq_code")]
-
-
 def _probed(filtered: DataFrame, index_rows: DataFrame, order):
     """Single IVF/IVF-PQ ``_kfill`` candidates: the filtered collection
     rows whose ids sit in the ``p`` nearest cells of ``order``. The
     index scan prunes to those cell partitions, and the predicate runs
     on the candidates only through one semi-join (Catalyst broadcasts
     the small side)."""
-    idx_id = _index_cols(index_rows)[0]
+    idx_id = _cells_cols(index_rows)[0]
 
     def candidates(_pending, p, _ef):
         ids = index_rows.filter(
@@ -724,7 +721,7 @@ def _pairs(nn: DataFrame) -> DataFrame:
 def _restrict(index_rows: DataFrame, filtered: DataFrame) -> DataFrame:
     """The index rows whose ids survive the filter (cells layout kept)
     — how the batch doors evaluate the predicate once."""
-    idx_id = _index_cols(index_rows)[0]
+    idx_id = _cells_cols(index_rows)[0]
     return index_rows.join(
         filtered.select(
             F.col("id").cast(dict(index_rows.dtypes)[idx_id]).alias(idx_id)
@@ -847,7 +844,7 @@ def collection_query_batch_ivf(
         spark, root, name, query_vectors, where, where_document
     )
     assigned, C = _ivf_index(spark, index_path, manifest, verify_source)
-    idx_id, emb = _index_cols(assigned)[:2]
+    idx_id, emb = _cells_cols(assigned)[:2]
     rows = _restrict(assigned, filtered)
     cand, _ = _kfill(
         lambda pending, p, _ef: _pairs(
@@ -912,7 +909,7 @@ def collection_query_ivf_pq(
     encoded, C, books, rot = ivf_pq_read(
         spark, index_path, verify_source=verify_source, with_rotation=True,
     )
-    idx_id = _index_cols(encoded)[0]
+    idx_id = _cells_cols(encoded)[0]
     order = _cell_order(C, query_vector, "l2")[0]
     cand, p = _kfill(
         _probed(filtered, encoded, order), 1, k=int(n_results),
@@ -981,7 +978,7 @@ def collection_query_batch_ivf_pq(
     encoded, C, books, rot = ivf_pq_read(
         spark, index_path, verify_source=verify_source, with_rotation=True,
     )
-    idx_id = _index_cols(encoded)[0]
+    idx_id = _cells_cols(encoded)[0]
     codes = _restrict(encoded, filtered)
     cand, _ = _kfill(
         lambda pending, p, _ef: _pairs(

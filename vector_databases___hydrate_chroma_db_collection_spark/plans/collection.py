@@ -243,6 +243,14 @@ def clone_untouched_buckets(
     the store) — the pointer protocol is unchanged. Returns the number
     of files cloned.
     """
+    return _clone_untouched_parts(data_dir, staging, touched, "id_bucket")
+
+
+def _clone_untouched_parts(
+    data_dir: str, staging: str, touched: set[int], column: str
+) -> int:
+    """``clone_untouched_buckets`` for any int hive partition column
+    (``id_bucket`` here, ``ivf_cell`` for the index cells)."""
     import shutil
 
     if not os.path.isdir(data_dir):
@@ -250,13 +258,13 @@ def clone_untouched_buckets(
     os.makedirs(staging, exist_ok=True)
     cloned = 0
     for d in os.listdir(data_dir):
-        if not d.startswith("id_bucket="):
+        if not d.startswith(column + "="):
             continue
         try:
-            bucket = int(d.split("=", 1)[1])
+            part = int(d.split("=", 1)[1])
         except ValueError:
             continue
-        if bucket in touched:
+        if part in touched:
             continue
         src = os.path.join(data_dir, d)
         dst = os.path.join(staging, d)

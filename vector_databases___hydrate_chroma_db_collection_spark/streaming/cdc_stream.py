@@ -106,6 +106,7 @@ from pyspark.sql.streaming import StreamingQuery
 from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
     _atomic_sidecar_write,
     _fresh_versioned_dir,
+    _gc_recordings,
     _local_sidecar_path,
     read_parquet,
     read_sidecar,
@@ -539,24 +540,13 @@ def cdc_ingest_batch_fn(
                 # append order == commit order: latest done wins
                 last_foreign_done[e["tag"].split("#", 1)[0]] = e
         keep.extend(last_foreign_done.values())
-        dropped = [
-            e["dir"]
-            for e in log["entries"]
-            if not any(k["dir"] == e["dir"] for k in keep)
-        ]
         log["entries"] = keep
         _log_write(p, log)
-        import shutil
-
-        for d_ in dropped:
-            shutil.rmtree(os.path.join(p, d_), ignore_errors=True)
-        # orphan recordings (a crash between the verdict write and the
-        # WAL commit leaves an unreferenced dir; its replay wrote a
-        # fresh one) are unreachable by construction — GC them too
-        referenced = {e["dir"] for e in log["entries"]}
-        for d_ in os.listdir(p):
-            if d_.startswith("cdc_verdicts_v") and d_ not in referenced:
-                shutil.rmtree(os.path.join(p, d_), ignore_errors=True)
+        # GC every verdict dir the committed log no longer names: the
+        # dropped entries' and the orphans (a crash between the verdict
+        # write and the WAL commit leaves an unreferenced dir; its
+        # replay wrote a fresh one)
+        _gc_recordings(p, ("cdc_verdicts",), {e["dir"] for e in keep})
         return verdicts
 
     return ingest

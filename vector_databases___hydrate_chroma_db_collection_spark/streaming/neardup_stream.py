@@ -33,6 +33,8 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.dedup impor
     release_cache,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    _cells_cols,
+    _mask_tombstones,
     read_parquet,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.streaming.knn_stream import (
@@ -380,7 +382,7 @@ def stream_vector_ingest(
     def serve_current(spark) -> DataFrame:
         assigned, C, _m = ivf_read(spark, index_path, verify_source=False)
         # the index's own id column — never assume it is named 'id'
-        idx_id = [c for c in assigned.columns if c != "ivf_cell"][0]
+        idx_id = _cells_cols(assigned)[0]
         if exclude_id is not None:
             assigned = assigned.filter(F.col(idx_id) != exclude_id)
         return ivf_search(
@@ -580,16 +582,10 @@ def _semantic_ingest_batch_fn(
         # a re-submission of its content as semantic-duplicate
         # (deleted content would otherwise block its own re-ingestion
         # forever — the exact failure the masking exists to prevent).
-        from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-            _mask_tombstones,
-        )
-
         assigned = read_parquet(spark, os.path.join(p, meta["location"]))
         C = np.asarray(meta["centroids"])
         metric = meta["metric"]
-        idx_id, idx_emb = [
-            c for c in assigned.columns if c != "ivf_cell"
-        ][:2]
+        idx_id, idx_emb = _cells_cols(assigned)[:2]
         assigned = _mask_tombstones(spark, p, meta, assigned, idx_id)
         if replayed:
             # exclude exactly what this batch's own earlier attempt
