@@ -1277,26 +1277,46 @@ def test_collection_add_creates_and_roundtrips_metadata(spark, tmp_path):
     assert sorted(r["id"] for r in hits) == ["c1", "c2"]
 
 
-def test_collection_add_duplicate_id_raises(spark, tmp_path):
+_LAYOUTS = [pytest.param(None, id="flat"), pytest.param(4, id="bucketed")]
+
+
+@pytest.mark.parametrize("n_buckets", _LAYOUTS)
+def test_collection_add_duplicate_id_raises(spark, tmp_path, n_buckets):
     from vector_databases___hydrate_chroma_db_collection_spark.errors import (
         DuplicateIdError,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
         collection_add,
     )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+        current_data_dir,
+        get_or_create_collection,
+    )
 
-    collection_add(spark, str(tmp_path), "capi", **_add_kwargs())
+    root = str(tmp_path)
+    get_or_create_collection(root, "capi", 2, n_buckets=n_buckets)
+    collection_add(spark, root, "capi", **_add_kwargs())
     # held id
-    with pytest.raises(DuplicateIdError):
-        collection_add(spark, str(tmp_path), "capi", **_add_kwargs(n0=2, n=1))
+    with pytest.raises(
+        DuplicateIdError, match="id 'c2' already present in collection 'capi'"
+    ):
+        collection_add(spark, root, "capi", **_add_kwargs(n0=2, n=1))
     # in-batch duplicate
-    with pytest.raises(DuplicateIdError):
+    with pytest.raises(
+        DuplicateIdError, match="duplicate id in hydration input: 'x'"
+    ):
         collection_add(
-            spark, str(tmp_path), "capi",
+            spark, root, "capi",
             ids=["x", "x"],
             embeddings=[[1.0, 0.0], [0.0, 1.0]],
         )
-    assert collection_count(spark, str(tmp_path), "capi") == 3
+    assert collection_count(spark, root, "capi") == 3
+    # an empty add and a delete that matches nothing move no pointer
+    current = current_data_dir(root, "capi")
+    assert collection_add(spark, root, "capi", ids=[], embeddings=[]) == 0
+    assert collection_delete(spark, root, "capi", ids=["nope"]) == 0
+    assert current_data_dir(root, "capi") == current
+    assert collection_count(spark, root, "capi") == 3
 
 
 def test_collection_add_validates_before_writing(spark, tmp_path):
@@ -1351,20 +1371,34 @@ def test_collection_upsert_replaces_and_inserts(spark, tmp_path):
     assert got["c9"] == ("fresh", {})
 
 
-def test_collection_add_upsert_keep_ivf_index_servable(spark, tmp_path):
+@pytest.mark.parametrize("n_buckets", _LAYOUTS)
+def test_collection_add_upsert_keep_ivf_index_servable(spark, tmp_path, n_buckets):
+    import json
+    import os
+
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         ivf_build,
         ivf_read,
         ivf_search,
         ivf_write,
     )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
+        ivf_pq_build,
+        ivf_pq_read,
+        ivf_pq_write,
+    )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
         collection_add,
         collection_delete_indexed,
         collection_upsert,
     )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+        current_data_dir,
+        get_or_create_collection,
+    )
 
     root = str(tmp_path)
+    get_or_create_collection(root, "capi", 2, n_buckets=n_buckets)
     collection_add(spark, root, "capi", **_add_kwargs(n=6))
     coll = read_collection(spark, root, "capi")
     assigned, C = ivf_build(coll, n_centroids=2, seed=7)
@@ -1373,24 +1407,36 @@ def test_collection_add_upsert_keep_ivf_index_servable(spark, tmp_path):
         assigned, C, idx, metric="cosine", source=(root, "capi"),
         build={"metric": "l2", "seed": 7, "sample_fraction": None},
     )
-    # delete c2, then ADD it back: per Chroma it is not a duplicate,
-    # and the index resurrection rides the upsert path
-    collection_delete_indexed(
-        spark, root, "capi", ids=["c2"], index_paths=[idx]
-    )
+    enc, C_pq, books = ivf_pq_build(coll, n_centroids=2, m=2, n_codes=4, seed=7)
+    pq_idx = f"{root}/capi/_pq"
+    ivf_pq_write(enc, C_pq, books, pq_idx, source=(root, "capi"))
+    both = [idx, pq_idx]
+    # delete c2 and c3, then ADD c2 back: per Chroma it is not a
+    # duplicate, and the index resurrection rides the upsert path
+    assert collection_delete_indexed(
+        spark, root, "capi", ids=["c2", "c3"], index_paths=both
+    ) == 2
+    # replaying the completed delete: nothing left to delete, no
+    # pointer move, and both indexes stay servable
+    current = current_data_dir(root, "capi")
+    assert collection_delete_indexed(
+        spark, root, "capi", ids=["c2", "c3"], index_paths=both
+    ) == 0
+    assert current_data_dir(root, "capi") == current
     collection_add(
         spark, root, "capi",
         ids=["c2"], embeddings=[[0.0, 1.0]], documents=["back"],
-        index_paths=[idx],
+        index_paths=both,
     )
-    # upsert moves c0's vector; the index must serve the NEW one
+    # upsert moves c0's vector (the index must serve the NEW one) and
+    # resurrects the tombstoned c3
     collection_upsert(
         spark, root, "capi",
-        ids=["c0"], embeddings=[[1.0, 0.0]], documents=["moved"],
-        index_paths=[idx],
+        ids=["c0", "c3"], embeddings=[[1.0, 0.0], [0.5, 0.5]],
+        documents=["moved", "again"], index_paths=both,
     )
     a, C2, metric = ivf_read(spark, idx)  # fence passes: re-stamped
-    assert a.count() == 6  # c0..c5 with c2 deleted then re-added
+    assert a.count() == 6  # c0..c5: c2 and c3 deleted, then back
     top = ivf_search(
         a, C2, [1.0, 0.0], k=1, nprobe=2, metric=metric
     ).first()
@@ -1400,6 +1446,11 @@ def test_collection_add_upsert_keep_ivf_index_servable(spark, tmp_path):
     ).first()
     assert back["id"] in ("c2", "c1")  # c2 resurrected and scored
     assert a.filter("id = 'c2'").count() == 1
+    e, _, _ = ivf_pq_read(spark, pq_idx)
+    assert sorted(r["id"] for r in e.collect()) == [f"c{i}" for i in range(6)]
+    for path, sc in ((idx, "ivf_index.json"), (pq_idx, "ivf_pq_index.json")):
+        meta = json.load(open(os.path.join(path, sc)))
+        assert "tombstones" not in meta
 
 
 def test_graph_doors_refuse_non_cosine_collections(spark, tmp_path):
@@ -1585,10 +1636,14 @@ def test_delete_every_row_of_one_bucket(spark, tmp_path):
 # Spark jobs per call of each front door on a 50-row bucketed
 # collection with an IVF-PQ index. They do not depend on row count:
 # a rise means a new fixed per-call action (a list-backed client frame,
-# a schema-inference read, a bookkeeping count).
-ADD_JOBS = 13
-UPSERT_JOBS = 19
-DELETE_JOBS = 13
+# a schema-inference read, a bookkeeping count). The write doors settle
+# their ids on the driver: add = stored-id probe + append + cell write;
+# upsert = bucket rewrite + index id probe + cell write (shuffle and
+# write); delete = bucket rewrite + index id probe + tombstone
+# recording write.
+ADD_JOBS = 3
+UPSERT_JOBS = 4
+DELETE_JOBS = 3
 QUERY_JOBS = 5
 
 

@@ -840,3 +840,53 @@ def test_gc_respects_graph_sidecar_segments(spark, tmp_path):
         json.dump(meta, f)
     ig.gc_bloom_files(p, {meta["id_bloom"]["location"]})
     assert os.path.exists(os.path.join(p, seg))
+
+
+def test_driver_and_executor_bloom_probes_agree(spark, tmp_path):
+    """A client batch is prescreened on the driver (``_bloom_maybe``),
+    a distributed one by the pandas UDF (``bloom_split``). Both run
+    ``_maybe_hits``; on an index whose guard has a main filter and a
+    delta segment they must mark the same ids, and the hash pairs a
+    LocalRelation folds on the driver must equal the collected ones."""
+    import json
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        ivf_append,
+        ivf_build,
+        ivf_delete,
+        ivf_write,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _driver_rows,
+        _id_frame,
+    )
+
+    rows = [(str(i), [float(i % 5), float(i % 3), 1.0]) for i in range(35)]
+    corpus = spark.createDataFrame(rows[:30], "id string, embedding array<float>")
+    assigned, C = ivf_build(corpus, n_centroids=2, seed=3)
+    idx = str(tmp_path / "idx")
+    ivf_write(assigned, C, idx, metric="l2")
+    ivf_append(
+        spark, idx,
+        spark.createDataFrame(rows[30:], "id string, embedding array<float>"),
+    )
+    assert ivf_delete(spark, idx, ["2", "7", "31"]) == 3
+    ib = json.load(open(os.path.join(idx, "ivf_index.json")))["id_bloom"]
+    assert ib["segments"], "the append must leave a delta segment"
+
+    indexed = [str(i) for i in range(0, 35, 3)]
+    tombstoned = ["2", "7", "31"]
+    new = [f"new-{i}" for i in range(12)]
+    ids = indexed + tombstoned + new
+    driver = set(ig._bloom_maybe(spark, idx, ib, ids))
+    distributed = spark.createDataFrame([(i,) for i in ids], "s string")
+    _neg, maybe, _st = ig.bloom_split(distributed, idx, ib, "s")
+    executor = set() if maybe is None else {r["s"] for r in maybe.collect()}
+    assert driver == executor
+    assert set(indexed + tombstoned) <= driver
+
+    local = _id_frame(spark, ids, "s")
+    assert _driver_rows(local) is not None  # folded on the driver
+    h_local = ig._batch_hash_pairs(local, F.col("s"))
+    h_dist = ig._batch_hash_pairs(distributed, F.col("s"))
+    assert all(np.array_equal(a, b) for a, b in zip(h_local, h_dist))

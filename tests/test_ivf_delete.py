@@ -71,20 +71,31 @@ def test_delete_masks_read_but_keeps_physical_rows(spark, tmp_path):
     assert ts == {"3", "11", "29"}
 
 
-def test_delete_replay_and_unknown_ids_are_noops(spark, tmp_path):
+@pytest.mark.parametrize("as_frame", [False, True], ids=["list", "frame"])
+def test_delete_replay_and_unknown_ids_are_noops(spark, tmp_path, as_frame):
+    # a list is settled on the driver, a DataFrame in Spark
+    def ids(*xs):
+        if not as_frame:
+            return list(xs)
+        return spark.createDataFrame([(x,) for x in xs], "id string")
+
     idx, _df = _mk_index(spark, tmp_path)
-    assert ivf_delete(spark, idx, ["5"]) == 1
+    assert ivf_delete(spark, idx, ids("5")) == 1
     meta_before = json.load(open(os.path.join(idx, "ivf_index.json")))
     # replay of the same delete: already tombstoned -> 0, sidecar
     # byte-identical (no new recording version)
-    assert ivf_delete(spark, idx, ["5"]) == 0
+    assert ivf_delete(spark, idx, ids("5")) == 0
     meta_after = json.load(open(os.path.join(idx, "ivf_index.json")))
     assert meta_after == meta_before
     # ids the index never held: dropped by the Bloom prescreen +
     # exact check, nothing recorded
-    assert ivf_delete(spark, idx, ["no-such-id", "also-missing"]) == 0
+    assert ivf_delete(spark, idx, ids("no-such-id", "also-missing", "5")) == 0
     meta_after2 = json.load(open(os.path.join(idx, "ivf_index.json")))
     assert meta_after2["tombstones"]["n"] == 1
+    # a second delete extends the recording with exactly its new id
+    assert ivf_delete(spark, idx, ids("6", "6", "5", "nope")) == 1
+    ts = {r["_ts_id"] for r in ivf_tombstoned_ids(spark, idx).collect()}
+    assert ts == {"5", "6"}
 
 
 def test_append_of_tombstoned_id_refused_until_compact(spark, tmp_path):

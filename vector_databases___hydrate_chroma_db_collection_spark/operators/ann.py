@@ -43,17 +43,20 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.store impor
     _fresh_versioned_dir,
     _gc,
     _guard_append,
+    _id_frame,
     _local_sidecar_path,
     _mask_tombstones,
     _parquet_files,
+    _probe_ids,
     _read_unchecked,
     _record_tombstones,
     _restamp,
     _serialized_writer,
     _source_stamp,
-    _surgical_replace,
     _swap,
+    _tombstone_ids,
     _tombstones_df,
+    _upsert_rows,
     read_parquet,
     read_sidecar,
 )
@@ -1251,8 +1254,13 @@ def ivf_delete(
     ``ids``: a list OR a one-column DataFrame (first column is cast
     to string). Ids not physically present in the index are dropped
     via the id-guard Bloom prescreen (filter-negative = definitely
-    not indexed, zero corpus IO) + exact semi-join on the survivors,
+    not indexed, zero corpus IO) + an exact check on the survivors,
     so the recorded set stays minimal and the reported count honest.
+    Per-call cost of a list: O(batch) on the driver (dedupe, the
+    tombstone anti-join against the recording read with pyarrow, the
+    Bloom prescreen) plus one pushed ``IN`` probe of the cells' id
+    column and the recording write. A DataFrame keeps the batch in
+    Spark: a semi-join of the id column against the positives.
 
     Crash-safe and replay-idempotent: the merged tombstone recording
     lands in a fresh monotonic versioned dir FIRST, then one atomic
@@ -1280,25 +1288,30 @@ def ivf_delete(
     meta = read_sidecar(p, sidecar)
     if isinstance(ids, DataFrame):
         first = ids.columns[0]
-        batch = ids.select(F.col(first).cast("string").alias("_del_id"))
-    else:
-        import pyarrow as pa
-
-        batch = spark.createDataFrame(
-            pa.table({"_del_id": pa.array([str(i) for i in ids], pa.string())})
+        fresh = ids.select(F.col(first).cast("string").alias("_del_id"))
+        fresh = fresh.where(F.col("_del_id").isNotNull()).dropDuplicates(
+            ["_del_id"]
         )
-    batch = batch.where(F.col("_del_id").isNotNull()).dropDuplicates(
-        ["_del_id"]
-    ).localCheckpoint(eager=True)
-
-    ts_prev = _tombstones_df(spark, p, meta)
-    if ts_prev is not None:
-        fresh_batch = batch.join(
-            ts_prev, F.col("_del_id") == F.col("_ts_id"), "left_anti"
+        ts_prev = _tombstones_df(spark, p, meta)
+        if ts_prev is not None:
+            fresh = fresh.join(
+                ts_prev, F.col("_del_id") == F.col("_ts_id"), "left_anti"
+            )
+        # counted inside its checkpoint job
+        obs = Observation("ivf_delete_batch")
+        fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
         )
+        n_fresh = int(obs.get["n"])
     else:
-        fresh_batch = batch
-    if fresh_batch.limit(1).count() == 0:
+        prev = _tombstone_ids(p, meta)
+        dead = set(prev)
+        fresh = [
+            i for i in dict.fromkeys(str(i) for i in ids if i is not None)
+            if i not in dead
+        ]
+        n_fresh = len(fresh)
+    if n_fresh == 0:
         # replay of a completed delete (or an all-tombstoned / empty
         # batch): the index already masks every id — no recording
         # write. The stamp is still HEALED when the collection's etag
@@ -1319,41 +1332,48 @@ def ivf_delete(
     _check_expected_etag(meta, path, sidecar, expected_prev_etag, "delete")
 
     cells = read_parquet(spark, os.path.join(p, meta["location"]))
-    have = cells.select(
-        F.col(_cells_cols(cells)[0]).cast("string").alias("_have_id")
-    )
-    indexed = F.col("_del_id") == F.col("_have_id")
+    idc = _cells_cols(cells)[0]
     bloom_meta = meta.get("id_bloom")
-    if idguard.filter_usable(bloom_meta):
-        # corpus-independent prescreen: filter-negative ids are
-        # DEFINITELY not indexed -> nothing to tombstone for them
-        _neg, maybe, _ig_state = idguard.bloom_split(
-            fresh_batch, p, bloom_meta, "_del_id"
-        )
-        present = (
-            maybe.join(have, indexed, "left_semi")
-            if maybe is not None
-            else fresh_batch.limit(0)
-        )
+    if isinstance(fresh, list):
+        # the whole tombstone set, on the driver: the previous one plus
+        # every Bloom-positive id the probe finds in the cells
+        present = list(dict.fromkeys(
+            r["_id"]
+            for r in _probe_ids(
+                cells, idc, idguard._bloom_maybe(spark, p, bloom_meta, fresh)
+            )
+        ))
+        n_new = len(present)
+        recording = _id_frame(spark, prev + present, "_ts_id")
     else:
-        present = fresh_batch.join(have, indexed, "left_semi")
-    # counted inside its one checkpoint job
-    obs = Observation("ivf_delete_present")
-    present = (
-        present.select(F.col("_del_id").alias("_ts_id"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_new = int(obs.get["n"])
-    if n_new:
-        _record_tombstones(
-            p,
-            sidecar,
-            meta,
-            (
-                present if ts_prev is None else ts_prev.unionByName(present)
-            ).dropDuplicates(["_ts_id"]),
+        have = cells.select(F.col(idc).cast("string").alias("_have_id"))
+        indexed = F.col("_del_id") == F.col("_have_id")
+        if idguard.filter_usable(bloom_meta):
+            # corpus-independent prescreen: filter-negative ids are
+            # DEFINITELY not indexed -> nothing to tombstone for them
+            _neg, maybe, _ig_state = idguard.bloom_split(
+                fresh, p, bloom_meta, "_del_id"
+            )
+            found = (
+                maybe.join(have, indexed, "left_semi")
+                if maybe is not None
+                else fresh.limit(0)
+            )
+        else:
+            found = fresh.join(have, indexed, "left_semi")
+        # counted inside its one checkpoint job
+        obs = Observation("ivf_delete_present")
+        found = (
+            found.select(F.col("_del_id").alias("_ts_id"))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
         )
+        n_new = int(obs.get["n"])
+        recording = (
+            found if ts_prev is None else ts_prev.unionByName(found)
+        ).dropDuplicates(["_ts_id"])
+    if n_new:
+        _record_tombstones(p, sidecar, meta, recording)
     # re-stamp even when the batch tombstoned nothing NEW in the
     # index (the caller's collection delete may have removed rows the
     # index never held — e.g. hydration-gated docs): the index is
@@ -1418,8 +1438,6 @@ def ivf_upsert(
     _check_expected_etag(
         meta, path, "ivf_index.json", expected_prev_etag, "upsert"
     )
-    from pyspark.sql import Observation
-
     cells = read_parquet(spark, os.path.join(p, meta["location"]))
     exist_id, exist_emb = _cells_cols(cells)[:2]
     ic = id_col or exist_id
@@ -1428,24 +1446,15 @@ def ivf_upsert(
     batch = rows.select(
         F.col(ic).cast(types[exist_id]).alias(exist_id),
         F.col(ec).cast(types[exist_emb]).alias(exist_emb),
-    ).dropDuplicates([exist_id])
-    build = meta.get("build") or {}
-    # the batch is counted inside its one checkpoint job
-    obs = Observation("ivf_upsert_batch")
-    assigned = _assign_to_centroids(
-        batch.observe(obs, F.count(F.lit(1)).alias("n")),
-        np.asarray(meta["centroids"]),
-        id_col=exist_id,
-        embedding_col=exist_emb,
-        metric=build.get("metric", meta["metric"]),
-    ).localCheckpoint(eager=True)
-    n_batch = int(obs.get["n"])
-    if n_batch == 0:
-        return (0, 0)
-    n_updated = _surgical_replace(
-        spark, p, "ivf_index.json", meta, cells, assigned
     )
-    return (n_updated, n_batch - n_updated)
+    metric = (meta.get("build") or {}).get("metric", meta["metric"])
+    return _upsert_rows(
+        spark, p, "ivf_index.json", meta, cells, batch,
+        lambda b: _assign_to_centroids(
+            b, np.asarray(meta["centroids"]), id_col=exist_id,
+            embedding_col=exist_emb, metric=metric,
+        ),
+    )
 
 
 def ivf_tombstoned_ids(

@@ -27,8 +27,14 @@ from vector_databases___hydrate_chroma_db_collection_spark.errors import (
     DuplicateIdError,
     EmbeddingDimensionError,
 )
+from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+    _driver_rows,
+    _outside,
+    _probe_ids,
+)
 from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
     CollectionManifest,
+    _buckets_for_ids,
     clone_untouched_buckets,
     current_data_dir,
     get_or_create_collection,
@@ -287,6 +293,13 @@ def hydrate(spark: SparkSession, df: DataFrame, cfg: HydrationConfig) -> Hydrati
     frequent updates against a large collection. No driver
     materialization anywhere (the bucketed path collects only the
     affected bucket NUMBERS, bounded by n_buckets).
+
+    A client batch (a LocalRelation, as the Chroma doors build) is
+    neither cached nor counted: its ids are folded on the driver, so
+    the in-batch duplicate check, the row count and the touched
+    buckets cost no job, the check against stored ids is one pushed
+    ``id IN (batch)`` probe pruned to the batch's buckets, and the
+    upsert rewrite drops the batch ids with a literal filter.
     """
     if not cfg.enabled:
         raise DisabledError("hydration disabled via run-time trigger (cfg.enabled=False)")
@@ -303,12 +316,18 @@ def hydrate(spark: SparkSession, df: DataFrame, cfg: HydrationConfig) -> Hydrati
             f"got {cfg.on_duplicate!r}"
         )
 
+    data = build_hydration_input(df, cfg)
+    held = _driver_rows(data.select("id"))
+    if held is not None:
+        # a client batch: Spark computes it on the driver, where a
+        # cache or a count would only add jobs
+        return _hydrate_data(spark, data, cfg, len(held))
     # One cache of the canonical projection feeds dimension inference,
     # the input count, the dup-id guard, and the write — without it
     # each observable would rescan (and recompute) the source plan.
-    data = build_hydration_input(df, cfg).cache()
+    data = data.cache()
     try:
-        return _hydrate_cached(spark, data, cfg)
+        return _hydrate_data(spark, data, cfg, None)
     finally:
         # unpersist on EVERY exit — the expected validation errors
         # (DuplicateIdError, dimension policy) are retryable, and a
@@ -316,8 +335,8 @@ def hydrate(spark: SparkSession, df: DataFrame, cfg: HydrationConfig) -> Hydrati
         data.unpersist()
 
 
-def _hydrate_cached(
-    spark: SparkSession, data: DataFrame, cfg: HydrationConfig
+def _hydrate_data(
+    spark: SparkSession, data: DataFrame, cfg: HydrationConfig, rows_in
 ) -> HydrationReport:
     try:
         dim = _infer_dim(data, cfg)
@@ -339,7 +358,8 @@ def _hydrate_cached(
     manifest = get_or_create_collection(
         cfg.root, cfg.collection_name, dim, cfg.metric, n_buckets=cfg.n_buckets
     )
-    rows_in = data.count()
+    if rows_in is None:
+        rows_in = data.count()
 
     # Dimension policy (quirk Q1): every vector must be exactly
     # manifest.dim and null-free. Strictness is non-negotiable at
@@ -357,13 +377,42 @@ def _hydrate_cached(
         good, sd_note = _apply_semantic_dup_gate(spark, good, cfg)
 
     count_before = _count(spark, cfg)
+    # The ids to write, as a driver list when Spark computes them on
+    # the driver (a client batch the gates left whole): the duplicate
+    # checks and the touched-bucket set then run in Python, and the
+    # one look at stored data is a pushed `id IN (batch)` probe.
+    held = _driver_rows(good.select("id"))
+    ids = None if held is None else [r["id"] for r in held]
 
-    # Duplicate-id policy. Chroma's add() errors on duplicates both
-    # within the batch and vs the existing store; BOTH checks fold
-    # into ONE aggregation job — union the incoming ids (tagged) with
-    # the existing ids (tagged), group once, and look for any id that
-    # is either repeated in-batch or present on both sides.
-    if cfg.on_duplicate == "error":
+    if cfg.on_duplicate == "error" and ids is not None:
+        # Chroma's add() errors on duplicates both within the batch
+        # and vs the existing store
+        seen = set()
+        for i in ids:
+            if i in seen:
+                raise DuplicateIdError(f"duplicate id in hydration input: {i!r}")
+            seen.add(i)
+        if count_before > 0:
+            stored = read_collection(
+                spark, cfg.root, cfg.collection_name, include_bucket=True
+            )
+            if manifest.n_buckets:
+                stored = stored.filter(
+                    F.col("id_bucket").isin(
+                        _buckets_for_ids(spark, ids, manifest.n_buckets)
+                    )
+                )
+            hit = _probe_ids(stored, "id", ids)
+            if hit:
+                raise DuplicateIdError(
+                    f"id {hit[0]['_id']!r} already present in collection "
+                    f"{cfg.collection_name!r}"
+                )
+    elif cfg.on_duplicate == "error":
+        # BOTH checks fold into ONE aggregation job — union the
+        # incoming ids (tagged) with the existing ids (tagged), group
+        # once, and look for any id that is either repeated in-batch
+        # or present on both sides.
         checks = good.select(
             "id", F.lit(1).alias("_n_in"), F.lit(0).alias("_n_ex")
         )
@@ -401,12 +450,16 @@ def _hydrate_cached(
                 spark, cfg.root, cfg.collection_name
             ).select("id")
             good = good.join(existing_ids, on="id", how="left_anti")
-    elif cfg.on_duplicate == "upsert":
+    elif cfg.on_duplicate == "upsert" and (ids is None or len(set(ids)) < len(ids)):
         # Chroma's upsert() rejects in-batch duplicate ids; ours
         # collapses them deterministically (same rule as 'first') so
         # the replace-set is well-defined before the anti-join rewrite
         good = _collapse_in_batch(good)
 
+    if ids is not None:
+        # one task writes a client batch: one file per bucket, not one
+        # per slice of the local relation
+        good = good.coalesce(1)
     # observe() counts the written rows inside the write job itself —
     # no separate count action, no second cache.
     from pyspark.sql import Observation
@@ -420,10 +473,17 @@ def _hydrate_cached(
         )
 
     if cfg.on_duplicate == "upsert" and count_before > 0:
+        if ids is None:
+            def survivors(existing):
+                return existing.join(good.select("id"), on="id", how="left_anti")
+        else:
+            def survivors(existing):
+                return existing.filter(_outside(F.col("id"), ids))
         if manifest.n_buckets:
             # Bucketed upsert: rewrite ONLY the buckets the incoming
-            # ids hash into. The affected-bucket set is one bounded
-            # aggregation (<= n_buckets values); existing rows outside
+            # ids hash into. The affected-bucket set is folded on the
+            # driver for a client batch, else one bounded aggregation
+            # (<= n_buckets values); existing rows outside
             # it are never read (static hive-partition pruning) and
             # their files are never recomputed — they are carried
             # forward into a fresh versioned dir as hardlinks
@@ -434,19 +494,22 @@ def _hydrate_cached(
             # partition overwrite this replaces could expose both).
             # Cost still scales with |touched buckets| / n_buckets of
             # the collection plus O(untouched files) metadata ops.
-            affected = [
-                r["id_bucket"]
-                for r in with_bucket(good.select("id"))
-                .select("id_bucket")
-                .distinct()
-                .collect()
-            ]
+            affected = (
+                [
+                    r["id_bucket"]
+                    for r in with_bucket(good.select("id"))
+                    .select("id_bucket")
+                    .distinct()
+                    .collect()
+                ]
+                if ids is None
+                else _buckets_for_ids(spark, ids, manifest.n_buckets)
+            )
             existing = read_collection(
                 spark, cfg.root, cfg.collection_name, include_bucket=True
             ).filter(F.col("id_bucket").isin(affected))
-            survivors = existing.join(good.select("id"), on="id", how="left_anti")
             staging = next_data_dir(cfg.root, manifest.name)
-            survivors.select(*CANONICAL_COLUMNS, "id_bucket").unionByName(
+            survivors(existing).select(*CANONICAL_COLUMNS, "id_bucket").unionByName(
                 with_bucket(good_obs.select(*CANONICAL_COLUMNS))
             ).write.mode("overwrite").partitionBy("id_bucket").parquet(staging)
             clone_untouched_buckets(
@@ -458,15 +521,14 @@ def _hydrate_cached(
         else:
             # True upsert (Chroma upsert() semantics): incoming rows
             # REPLACE existing rows with the same id. Survivor set =
-            # existing ANTI-JOIN incoming, unioned with the incoming
+            # existing minus the incoming ids, unioned with the incoming
             # batch, written to a fresh versioned dir and swapped in
             # with one atomic pointer replace — readers never see a
             # mix, and the observe node still counts exactly the
             # incoming rows.
             existing = read_collection(spark, cfg.root, cfg.collection_name)
-            survivors = existing.join(good.select("id"), on="id", how="left_anti")
             staging = next_data_dir(cfg.root, manifest.name)
-            survivors.select(*CANONICAL_COLUMNS).unionByName(
+            survivors(existing).select(*CANONICAL_COLUMNS).unionByName(
                 good_obs.select(*CANONICAL_COLUMNS)
             ).write.mode("overwrite").parquet(staging)
             swap_data_dir(cfg.root, manifest.name, staging)

@@ -10,7 +10,8 @@ append shed in r10. With the Bloom sidecar the guard becomes:
 
 1. probe the batch's ids against the filter (one Arrow-batched pass
    over the BATCH — the filter rides along as a Spark broadcast,
-   corpus IO: zero);
+   corpus IO: zero; a client batch whose ids the driver holds is
+   probed on the driver by the same bit test, ``_bloom_maybe``);
 2. ids the filter rejects are DEFINITELY new (a Bloom filter has no
    false negatives) — no exact check needed;
 3. ids the filter accepts (true replays + false positives) fall back
@@ -287,8 +288,10 @@ def _batch_hash_pairs(
 ) -> tuple[np.ndarray, np.ndarray]:
     """The batch's raw hash pairs, computed by the SAME Catalyst
     expressions the filter build uses (one hash family, one
-    implementation) and collected to the driver — bounded by the
-    BATCH size, never the corpus. De-duplicated on the FULL (h1, h2)
+    implementation) and brought to the driver — bounded by the BATCH
+    size, never the corpus. A client batch (a LocalRelation) is
+    folded on the driver with no Spark job; any other frame is
+    collected through Arrow. De-duplicated on the FULL (h1, h2)
     pair, not h1 alone: two distinct ids colliding on 64-bit h1
     produce different h2 values, and dropping either pair would leave
     that id's fold-time bit positions incomplete — after a segment
@@ -296,13 +299,23 @@ def _batch_hash_pairs(
     double-ingest. Keeping both pairs costs 16 bytes and preserves
     the superset invariant unconditionally (duplicate IDs still
     collapse: identical ids produce identical pairs)."""
-    pdf = batch_ids.select(
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _driver_rows,
+    )
+
+    proj = batch_ids.select(
         F.xxhash64(bcol).alias("h1"),
         F.xxhash64(bcol, F.lit(_SALT)).alias("h2"),
-    ).toPandas()
-    h1 = pdf["h1"].to_numpy(dtype=np.int64)
-    h2 = pdf["h2"].to_numpy(dtype=np.int64)
-    pairs = np.stack([h1, h2], axis=1)
+    )
+    rows = _driver_rows(proj)
+    if rows is None:
+        pdf = proj.toPandas()
+        pairs = np.stack(
+            [pdf["h1"].to_numpy(dtype=np.int64), pdf["h2"].to_numpy(dtype=np.int64)],
+            axis=1,
+        )
+    else:
+        pairs = np.array([(r[0], r[1]) for r in rows], dtype=np.int64).reshape(-1, 2)
     uniq = np.unique(pairs, axis=0)
     return np.ascontiguousarray(uniq[:, 0]), np.ascontiguousarray(uniq[:, 1])
 
@@ -384,35 +397,74 @@ def bloom_might_contain(
     return _mc(F.array(*_bit_positions(id_str, m, k)))
 
 
+def _maybe_hits(
+    h1: np.ndarray, h2: np.ndarray, words: np.ndarray, m: int, k: int,
+    d1: np.ndarray,
+) -> np.ndarray:
+    """The one bit test of the sharded guard, per id from its raw hash
+    pair: main-filter bits (the k positions derived by the same
+    arithmetic as ``_bit_positions``, equivalence pinned by
+    ``test_numpy_fold_matches_catalyst_build``) OR h1 membership in
+    the sorted delta union ``d1``. Run by the executor-side pandas UDF
+    and by the driver-side ``_bloom_maybe``."""
+    b1 = np.mod(h1, m)[:, None]
+    step = np.mod(h2, m)[:, None]
+    P = np.mod(b1 + np.arange(k, dtype=np.int64)[None, :] * step, m)
+    bits = (words[P >> 6] >> (P & 63).astype(np.uint64)) & np.uint64(1)
+    hit = bits.all(axis=1)
+    if d1.size:
+        idx = np.clip(np.searchsorted(d1, h1), 0, d1.size - 1)
+        hit = hit | (d1[idx] == h1)
+    return hit
+
+
 def _might_contain_sharded(id_str: Column, bc) -> Column:
-    """Membership-probe column over the SHARDED guard: main-filter
-    bit test OR delta-segment h1 membership, one Arrow-batched pass.
-    ``bc`` broadcasts ``(words_bytes, m, k, delta_h1_bytes)``. The k
-    probe positions are derived in numpy from the raw hash pair by
-    the same arithmetic as ``_bit_positions`` (equivalence pinned by
-    ``test_numpy_fold_matches_catalyst_build``)."""
+    """Membership-probe column over the SHARDED guard (``_maybe_hits``
+    per Arrow batch). ``bc`` broadcasts ``(words_bytes, m, k,
+    delta_h1_bytes)``."""
 
     @pandas_udf("boolean")
     def _mc(hs: pd.Series) -> pd.Series:
         wb, m, k, d1b = bc.value
         if len(hs) == 0:
             return pd.Series([], dtype=bool)
-        w = np.frombuffer(wb, dtype=np.uint64)
-        d1 = np.frombuffer(d1b, dtype=np.int64)
         H = np.stack(hs.to_numpy()).astype(np.int64)  # (n, 2)
-        b1 = np.mod(H[:, 0], m)[:, None]
-        step = np.mod(H[:, 1], m)[:, None]
-        P = np.mod(b1 + np.arange(k, dtype=np.int64)[None, :] * step, m)
-        bits = (w[P >> 6] >> (P & 63).astype(np.uint64)) & np.uint64(1)
-        hit = bits.all(axis=1)
-        if d1.size:
-            idx = np.clip(np.searchsorted(d1, H[:, 0]), 0, d1.size - 1)
-            hit = hit | (d1[idx] == H[:, 0])
-        return pd.Series(hit)
+        return pd.Series(
+            _maybe_hits(
+                H[:, 0], H[:, 1], np.frombuffer(wb, dtype=np.uint64), m, k,
+                np.frombuffer(d1b, dtype=np.int64),
+            )
+        )
 
     return _mc(
         F.array(F.xxhash64(id_str), F.xxhash64(id_str, F.lit(_SALT)))
     )
+
+
+def _bloom_maybe(spark, p: str, bloom_meta: dict | None, ids: list) -> list:
+    """Driver twin of ``bloom_split`` for ids the caller already holds
+    as a list: the ids that MIGHT be indexed, in input order — all of
+    them when the filter is unusable. The hash pairs fold on the
+    driver over a LocalRelation and the bit test is ``_maybe_hits``,
+    the function the executor probe runs: no Spark job."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _id_frame,
+    )
+
+    if not ids or not filter_usable(bloom_meta):
+        return list(ids)
+    words, m, k = bloom_read(p, bloom_meta["location"])
+    d1 = _segments_h1(p, bloom_meta.get("segments"))
+    # a projection of a LocalRelation: collected with no job, one row
+    # per id
+    rows = (
+        _id_frame(spark, ids, "_s")
+        .select(F.xxhash64("_s"), F.xxhash64("_s", F.lit(_SALT)))
+        .collect()
+    )
+    H = np.array([(r[0], r[1]) for r in rows], dtype=np.int64)
+    hit = _maybe_hits(H[:, 0], H[:, 1], words, m, k, d1)
+    return [i for i, h in zip(ids, hit) if h]
 
 
 def bloom_split(
@@ -427,21 +479,29 @@ def bloom_split(
     (words, m, k)`` feeds ``bloom_extend``. The batch is materialized
     once (localCheckpoint) so the probe never re-executes upstream
     lineage."""
+    from pyspark.sql import Observation
+
     words, m, k = bloom_read(p, bloom_meta["location"])
     d1 = _segments_h1(p, bloom_meta.get("segments"))
     bc = df.sparkSession.sparkContext.broadcast(
         (words.tobytes(), m, k, d1.tobytes())
     )
-    probed = df.withColumn(
-        "_ig_maybe",
-        _might_contain_sharded(F.col(id_name).cast("string"), bc),
-    ).localCheckpoint(eager=True)
+    # the positives are counted inside the checkpoint job
+    obs = Observation("bloom_split")
+    probed = (
+        df.withColumn(
+            "_ig_maybe",
+            _might_contain_sharded(F.col(id_name).cast("string"), bc),
+        )
+        .observe(obs, F.sum(F.col("_ig_maybe").cast("long")).alias("n"))
+        .localCheckpoint(eager=True)
+    )
     # the eager checkpoint has materialized every probe result — drop
     # the filter-sized broadcast NOW, or a foreachBatch loop
     # accumulates one per micro-batch until Python GC
     bc.unpersist()
     maybe = probed.filter("_ig_maybe").drop("_ig_maybe")
-    if not maybe.take(1):
+    if not obs.get["n"]:
         return probed.drop("_ig_maybe"), None, (words, m, k)
     return (
         probed.filter(~F.col("_ig_maybe")).drop("_ig_maybe"),

@@ -56,8 +56,8 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.store impor
     _restamp,
     _serialized_writer,
     _source_stamp,
-    _surgical_replace,
     _tombstones_df,
+    _upsert_rows,
     read_parquet,
     read_sidecar,
 )
@@ -1123,8 +1123,6 @@ def ivf_pq_upsert(
     table. Returns ``(n_updated, n_added)``."""
     import os
 
-    from pyspark.sql import Observation
-
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _assign_to_centroids,
     )
@@ -1140,26 +1138,19 @@ def ivf_pq_upsert(
     id_type = dict(cells.dtypes)[exist_id]
     batch = rows.select(
         F.col(ic).cast(id_type).alias(exist_id), F.col(embedding_col)
-    ).dropDuplicates([exist_id])
+    )
     C = np.asarray(meta["centroids"])
     books = np.asarray(meta["codebooks"])
-    # the batch is counted inside its one checkpoint job
-    obs = Observation("ivf_pq_upsert_batch")
-    assigned = _assign_to_centroids(
-        batch.observe(obs, F.count(F.lit(1)).alias("n")),
-        C, id_col=exist_id, embedding_col=embedding_col, metric="l2",
+    return _upsert_rows(
+        spark, p, "ivf_pq_index.json", meta, cells, batch,
+        lambda b: _encode_assigned(
+            _assign_to_centroids(
+                b, C, id_col=exist_id, embedding_col=embedding_col, metric="l2"
+            ),
+            C, books, id_col=exist_id, embedding_col=embedding_col,
+            rotation=meta.get("rotation"),
+        ),
     )
-    encoded = _encode_assigned(
-        assigned, C, books, id_col=exist_id, embedding_col=embedding_col,
-        rotation=meta.get("rotation"),
-    ).localCheckpoint(eager=True)
-    n_batch = int(obs.get["n"])
-    if n_batch == 0:
-        return (0, 0)
-    n_updated = _surgical_replace(
-        spark, p, "ivf_pq_index.json", meta, cells, encoded
-    )
-    return (n_updated, n_batch - n_updated)
 
 
 def ivf_pq_delete(

@@ -151,6 +151,53 @@ def read_parquet(spark, loc: str):
     return spark.read.schema(schema).parquet(loc)
 
 
+def _driver_rows(df: DataFrame):
+    """``df.collect()`` when Spark computes ``df`` on the driver, else
+    ``None``. A client batch is a LocalRelation built from Arrow; the
+    optimizer folds projections and filters over it into another
+    LocalRelation, and collecting one runs no Spark job. A plan that
+    reads files, shuffles, checkpoints or runs a Python UDF does not
+    fold, and the caller keeps its distributed path."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    return df.collect()
+
+
+def _id_frame(spark, ids, name: str) -> DataFrame:
+    """A one-column string frame of ``ids`` (nulls kept), as a
+    LocalRelation."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(
+            {name: pa.array([None if i is None else str(i) for i in ids], pa.string())}
+        )
+    )
+
+
+def _probe_ids(df: DataFrame, id_col: str, ids, *cols) -> list:
+    """``(id, *cols)`` of every row of ``df`` whose id is in ``ids``:
+    one job, a pushed ``IN`` filter, so the Parquet reader skips the
+    row groups no id can be in (``get_spark`` raises the pushdown
+    threshold). The result is bounded by ``ids`` times their physical
+    copies. No job when ``ids`` is empty."""
+    if not ids:
+        return []
+    sid = F.col(id_col).cast("string")
+    return (
+        df.filter(sid.isin(list(ids))).select(sid.alias("_id"), *cols).collect()
+    )
+
+
+def _outside(col, ids):
+    """``col NOT IN ids`` as a filter that keeps null ids (as the
+    anti-join it replaces does) and ignores null entries of ``ids``."""
+    return ~F.coalesce(
+        col.isin(sorted({i for i in ids if i is not None})), F.lit(False)
+    )
+
+
 # how each sidecar gets back to the current format: its index kind's
 # rebuild call (the CDC log has none — it is replay state)
 _REMEDY = {
@@ -448,6 +495,21 @@ def _tombstones_df(spark, p: str, meta: dict) -> DataFrame | None:
     return read_parquet(spark, os.path.join(p, ts["location"]))
 
 
+def _tombstone_ids(p: str, meta: dict) -> list:
+    """The sidecar's tombstone recording as a driver list, read with
+    pyarrow (no Spark job); bounded like ``_tombstones_df``."""
+    import pyarrow.parquet as papq
+
+    ts = meta.get("tombstones")
+    if not ts or not int(ts.get("n") or 0):
+        return []
+    return [
+        v
+        for f in _parquet_files(os.path.join(p, ts["location"]))
+        for v in papq.read_table(f, columns=["_ts_id"]).column(0).to_pylist()
+    ]
+
+
 def _mask_tombstones(
     spark, p: str, meta: dict, df: DataFrame, id_col: str
 ) -> DataFrame:
@@ -478,7 +540,8 @@ def _record_tombstones(p: str, sidecar: str, meta: dict, ts_ids) -> None:
         _RECORDINGS[sidecar][0],
         floor_names=[(meta.get("tombstones") or {}).get("location")],
     )
-    ts_ids.write.mode("overwrite").parquet(os.path.join(p, ts_dir))
+    # one file: the set is small by compaction policy
+    ts_ids.coalesce(1).write.mode("overwrite").parquet(os.path.join(p, ts_dir))
     meta["tombstones"] = {
         "location": ts_dir,
         "n": _parquet_rows(os.path.join(p, ts_dir)),
@@ -680,58 +743,124 @@ def _replace_cells(
     _swap(p, sidecar, meta, old_dir)
 
 
+def _upsert_rows(
+    spark, p: str, sidecar: str, meta: dict, cells: DataFrame, batch, prepare
+) -> tuple[int, int]:
+    """The shared body of ``ann.ivf_upsert`` and ``pq.ivf_pq_upsert``:
+    dedupe ``batch`` (id first, typed as in ``cells``) by id, turn it
+    into cell rows with ``prepare`` (assign, encode) and replace them
+    in through ``_surgical_replace``. A client batch's ids are read on
+    the driver: their number is the batch count, and the prepared rows
+    feed the cell write directly. Any other batch is counted inside
+    the one checkpoint of its prepared rows. Returns ``(n_updated,
+    n_added)``."""
+    from pyspark.sql import Observation
+
+    idc = batch.columns[0]
+    held = _driver_rows(batch.select(F.col(idc).cast("string")))
+    if held is None:
+        ids = None
+        obs = Observation("upsert_batch")
+        new_rows = prepare(
+            batch.dropDuplicates([idc]).observe(obs, F.count(F.lit(1)).alias("n"))
+        ).localCheckpoint(eager=True)
+        n_batch = int(obs.get["n"])
+    else:
+        ids = list(dict.fromkeys(r[0] for r in held))
+        if len(ids) < len(held):
+            batch = batch.dropDuplicates([idc])
+        # one task prepares the client batch (one Python worker per
+        # mapInArrow step, not one per slice of the local relation)
+        new_rows = prepare(batch.coalesce(1))
+        n_batch = len(ids)
+    if n_batch == 0:
+        return (0, 0)
+    n_updated = _surgical_replace(spark, p, sidecar, meta, cells, new_rows, ids)
+    return (n_updated, n_batch - n_updated)
+
+
 def _surgical_replace(
-    spark, p: str, sidecar: str, meta: dict, cells: DataFrame, new_rows
+    spark, p: str, sidecar: str, meta: dict, cells: DataFrame, new_rows,
+    ids=None,
 ) -> int:
     """The upsert core of ``ann.ivf_upsert`` / ``pq.ivf_pq_upsert``:
     replace every physical row of ``cells`` (the index's current
     cells, as the caller read them) whose id is in ``new_rows`` with
-    the (already cell-assigned, already encoded, checkpointed)
-    ``new_rows``. One id-column scan finds the old rows' cells; those
-    cells' survivors plus ALL new rows go through ``_replace_cells``,
-    one file per cell. Updated ids leave the tombstone set (an upsert
-    RESURRECTS a deleted id — the new row is the only physical row,
-    so the id-granular mask ambiguity that blocks plain re-appends
-    does not arise). Returns the number of ids that had an old row
-    (the rest are pure adds)."""
+    the (already cell-assigned, already encoded) ``new_rows``. The
+    old rows' cells are found first; those cells' survivors plus ALL
+    new rows go through ``_replace_cells``, one file per cell.
+    Updated ids leave the tombstone set (an upsert RESURRECTS a
+    deleted id — the new row is the only physical row, so the
+    id-granular mask ambiguity that blocks plain re-appends does not
+    arise). Returns the number of old rows replaced (the other new
+    rows are pure adds).
+
+    ``ids``: the batch's distinct ids as a driver list, when the
+    caller holds them. Then only the Bloom-positive ids are probed,
+    in one pushed ``IN`` probe of the id column that returns their
+    cells (an add of new ids probes nothing), and the tombstone
+    update runs in Python. ``None``: one semi-join of the id column
+    against the batch finds the old rows' cells."""
     idc = _cells_cols(cells)[0]
-    batch_ids = new_rows.select(F.col(idc).cast("string").alias("_up_id"))
-    in_batch = F.col(idc).cast("string") == F.col("_up_id")
-    # no broadcast hint on the batch: unlike the tombstone recordings
-    # (policy-bounded small), an upsert batch is caller-sized — a bulk
-    # re-embed can be millions of rows, and a forced broadcast would
-    # OOM the driver; AQE broadcasts the small common case on its own.
-    # <= one row per updated id: the touched-cell list and the updated
-    # count are both bounded by the batch
-    old_facts = (
-        cells.join(batch_ids, in_batch, "left_semi")
-        .groupBy("ivf_cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    touched = {int(r["ivf_cell"]) for r in old_facts}
-    payload = new_rows
-    if touched:
-        payload = (
-            cells.filter(F.col("ivf_cell").isin(list(touched)))
-            .join(batch_ids, in_batch, "left_anti")
-            .unionByName(new_rows)
+    sid = F.col(idc).cast("string")
+    if ids is None:
+        batch_ids = new_rows.select(sid.alias("_up_id"))
+        in_batch = sid == F.col("_up_id")
+        # no broadcast hint on the batch: an upsert batch is
+        # caller-sized — a bulk re-embed can be millions of rows, and
+        # a forced broadcast would OOM the driver; AQE broadcasts the
+        # small common case on its own. <= one row per touched cell
+        old_facts = (
+            cells.join(batch_ids, in_batch, "left_semi")
+            .groupBy("ivf_cell")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
         )
-    ts_prev = _tombstones_df(spark, p, meta)
-    if ts_prev is not None:
-        still = ts_prev.join(
-            batch_ids, F.col("_ts_id") == F.col("_up_id"), "left_anti"
-        ).localCheckpoint(eager=True)
-        n_still = still.count()
-        if n_still != int(meta["tombstones"]["n"]):
-            if n_still:
-                _record_tombstones(p, sidecar, meta, still)
-            else:
-                meta.pop("tombstones")
+        touched = {int(r["ivf_cell"]) for r in old_facts}
+        n_old = int(sum(r["n"] for r in old_facts))
+
+        def survivors(c):
+            return c.join(batch_ids, in_batch, "left_anti")
+    else:
+        old = _probe_ids(
+            cells, idc,
+            idguard._bloom_maybe(spark, p, meta.get("id_bloom"), ids),
+            "ivf_cell",
+        )
+        touched = {int(r["ivf_cell"]) for r in old}
+        n_old = len(old)
+        batch_ids = _id_frame(spark, ids, "_up_id")
+        old_ids = {r["_id"] for r in old}
+
+        def survivors(c):
+            return c.filter(_outside(sid, old_ids))
     # one task per touched cell -> one data file per cell dir;
     # otherwise every map task of the batch writes its own file into
-    # every cell it touches
-    _replace_cells(
-        p, sidecar, meta, payload.repartition("ivf_cell"), touched, batch_ids
-    )
-    return int(sum(r["n"] for r in old_facts))
+    # every cell it touches. A client batch that touches no old cell
+    # is already one partition, and one task writes one file per cell.
+    if touched:
+        payload = survivors(
+            cells.filter(F.col("ivf_cell").isin(sorted(touched)))
+        ).unionByName(new_rows).repartition("ivf_cell")
+    elif ids is None:
+        payload = new_rows.repartition("ivf_cell")
+    else:
+        payload = new_rows
+    prev = _tombstone_ids(p, meta)
+    if prev:
+        # bounded by the tombstone set
+        back = (
+            set(prev) & set(ids)
+            if ids is not None
+            else {r["_id"] for r in _probe_ids(batch_ids, "_up_id", prev)}
+        )
+        if back:
+            still = [t for t in prev if t not in back]
+            if still:
+                _record_tombstones(
+                    p, sidecar, meta, _id_frame(spark, still, "_ts_id")
+                )
+            else:
+                meta.pop("tombstones")
+    _replace_cells(p, sidecar, meta, payload, touched, batch_ids)
+    return n_old

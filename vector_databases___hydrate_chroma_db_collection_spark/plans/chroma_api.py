@@ -49,6 +49,7 @@ identically; this engine just accepts a superset.
 from __future__ import annotations
 
 import numbers
+import shutil
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -57,8 +58,10 @@ from pyspark.sql import functions as F
 from vector_databases___hydrate_chroma_db_collection_spark.errors import EngineError
 from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
     _cells_cols,
+    _outside,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+    _buckets_for_ids,
     clone_untouched_buckets,
     current_data_dir,
     load_manifest,
@@ -167,22 +170,6 @@ def _filtered(
     if where_document is not None:
         df = df.filter(compile_where_document(where_document))
     return df
-
-
-def _buckets_for_ids(
-    spark: SparkSession, ids: list[str], n_buckets: int
-) -> list[int]:
-    """The distinct bucket set an id list hashes into, computed with
-    the layout's own expression over a local Arrow relation — the
-    projection is folded on the driver, so no Spark job runs and the
-    collection is never scanned; bounded by n_buckets."""
-    frame = spark.createDataFrame(
-        pa.table({"id": pa.array([str(i) for i in ids], pa.string())})
-    )
-    rows = frame.select(
-        F.pmod(F.xxhash64("id"), F.lit(n_buckets)).alias("b")
-    ).collect()
-    return sorted({r["b"] for r in rows})
 
 
 def _prune_buckets_for_ids(
@@ -1216,7 +1203,10 @@ def collection_delete(
     ops, no data rewrite), and the ``_current`` pointer swap commits —
     a bucket whose rows are ALL deleted is simply never written or
     cloned. Predicate deletes (and flat layouts) rewrite survivors
-    into a fresh versioned dir and swap the same pointer.
+    into a fresh versioned dir and swap the same pointer. Every path
+    counts the deleted rows inside its rewrite job; a delete that
+    matched nothing drops its staging dir and leaves the pointer (and
+    so the etag) where it was.
 
     Consistency contract: EVERY path commits through the atomic
     pointer swap — readers see the collection before the delete or
@@ -1224,6 +1214,8 @@ def collection_delete(
     leaves the pointer naming a complete dir (the stale staging dir is
     vacuum_collection's job).
     """
+    from pyspark.sql import Observation
+
     if ids is None and where is None and where_document is None:
         raise EngineError("delete needs ids and/or a where predicate")
     manifest = load_manifest(root, name)
@@ -1240,45 +1232,32 @@ def collection_delete(
     # NULL predicate (missing metadata key) means "not matched": keep.
     doomed = F.coalesce(cond, F.lit(False))
 
+    touched = None
     if bucketed and ids is not None and where is None and where_document is None:
         touched = _buckets_for_ids(spark, ids, manifest.n_buckets)
-        scoped = df.filter(F.col("id_bucket").isin(touched))
-        # One aggregation over the pruned buckets sizes the delete
-        # before any rewrite (nothing touched when no id matches).
-        deleted = int(
-            scoped.agg(F.sum(doomed.cast("long")).alias("n_del")).collect()[0][
-                "n_del"
-            ]
-            or 0
-        )
-        if deleted == 0:
-            return 0
-        staging = next_data_dir(root, manifest.name)
-        # touched buckets left empty write no data file (a partitioned
-        # write of zero rows creates no partition dir)
-        scoped.filter(~doomed).write.mode("overwrite").partitionBy(
-            "id_bucket"
-        ).parquet(staging)
-        clone_untouched_buckets(
-            current_data_dir(root, manifest.name), staging, set(touched)
-        )
-        swap_data_dir(root, manifest.name, staging, retain=retain_previous)
-        return deleted
-
-    from pyspark.sql import Observation
-
-    n_before = df.count()
-    # Count survivors inside the write job itself (as hydrate does) —
-    # two scans total (count + rewrite), no post-swap re-read.
-    obs = Observation("delete_survivors")
-    survivors = df.filter(~doomed).observe(obs, F.count(F.lit(1)).alias("rows"))
+        df = df.filter(F.col("id_bucket").isin(touched))
     staging = next_data_dir(root, manifest.name)
-    writer = survivors.write.mode("overwrite")
+    obs = Observation("delete_doomed")
+    writer = (
+        df.observe(obs, F.sum(doomed.cast("long")).alias("n"))
+        .filter(~doomed)
+        .write.mode("overwrite")
+    )
+    # touched buckets left empty write no data file (a partitioned
+    # write of zero rows creates no partition dir)
     if bucketed:
         writer = writer.partitionBy("id_bucket")
     writer.parquet(staging)
+    deleted = int(obs.get["n"] or 0)
+    if deleted == 0:
+        shutil.rmtree(staging, ignore_errors=True)
+        return 0
+    if touched is not None:
+        clone_untouched_buckets(
+            current_data_dir(root, manifest.name), staging, set(touched)
+        )
     swap_data_dir(root, manifest.name, staging, retain=retain_previous)
-    return int(n_before - obs.get["rows"])
+    return deleted
 
 
 def _fence_etag(
@@ -1319,8 +1298,8 @@ def collection_delete_indexed(
 ) -> int:
     """``collection.delete`` that keeps the collection's persisted
     ANN indexes SERVABLE: tombstone the deleted ids in every index at
-    ``index_paths`` (``ann.ivf_delete`` — one id-column scan plus
-    O(batch) bookkeeping, never a data rewrite) and re-stamp them to
+    ``index_paths`` (``ann.ivf_delete`` — never a data rewrite) and
+    re-stamp them to
     the post-delete etag, so the etag
     fence that would otherwise make every ``ivf_read`` raise
     ``StaleIndexError`` until a full k-means ``ivf_refresh`` passes
@@ -1353,7 +1332,14 @@ def collection_delete_indexed(
     fencing is sound ONLY when the caller serializes all writers and
     holds a durable record proving the retried mutation is byte-
     identical to the crashed one (the CDC WAL's content-qualified
-    tag). Returns the number of collection rows deleted."""
+    tag). Returns the number of collection rows deleted.
+
+    Per-call cost of an id-list delete: O(batch) on the driver plus
+    one id-column probe per index. The list goes to each index as is:
+    dedupe, the tombstone anti-join and the Bloom prescreen run in
+    Python, and one pushed ``IN`` probe of the cells' id column finds
+    the ids to record. The collection side rewrites the touched
+    buckets and counts the deleted rows in the same job."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         ivf_delete,
     )
@@ -1372,11 +1358,10 @@ def collection_delete_indexed(
         )
     etag_before = collection_etag(root, name)
     if where is None and where_document is None:
-        # pure id-list delete: the doomed set IS the list — no scan
-        # (ids absent from an index are dropped by its Bloom prescreen)
-        doomed = spark.createDataFrame(
-            pa.table({"id": pa.array([str(i) for i in ids], pa.string())})
-        )
+        # pure id-list delete: the doomed set IS the list — no scan,
+        # and each index settles it on the driver (ids absent from an
+        # index are dropped by its Bloom prescreen)
+        doomed = [str(i) for i in ids]
     else:
         cond = F.lit(True)
         if ids is not None:
@@ -1424,13 +1409,10 @@ def collection_delete_indexed(
             band_index_delete(
                 spark,
                 path,
-                # pure id-list deletes pass the LITERAL list so the
-                # band delete's isin pushdown can row-group-prune its
-                # ids-part lookup; predicate deletes pass the resolved
-                # frame
-                ids
-                if (where is None and where_document is None)
-                else doomed,
+                # the literal list of an id-list delete lets the band
+                # delete's isin pushdown row-group-prune its ids-part
+                # lookup
+                doomed,
                 expected_prev_etag=_fence_etag(
                     fence, etag_before, p, "band_index.json"
                 ),
@@ -1893,20 +1875,8 @@ def _indexes_insert(
                 band_index_tombstoned_ids,
             )
 
+            # the callers ran _band_guard_documents before any write
             docs = batch.select("id", "document")
-            if (
-                docs.filter(F.col("document").isNull()).limit(1).count()
-                > 0
-            ):
-                raise EngineError(
-                    "a band (near-dup) index cohabits at this "
-                    "index_path but the batch carries null documents "
-                    "(collection add/upsert with documents=None is "
-                    "legal in Chroma, but every row indexed by a band "
-                    "index needs text to minhash). Pass documents for "
-                    "the batch, or drop the band index from "
-                    "index_paths for document-less collections."
-                )
             if upsert_semantics:
                 band_index_apply(
                     spark, path, upserts=docs,
@@ -1914,18 +1884,20 @@ def _indexes_insert(
                 )
                 continue
             ts = band_index_tombstoned_ids(spark, path)
-            dead = docs.join(
-                ts, F.col("id") == F.col("_ts_id"), "left_semi"
-            ).localCheckpoint(eager=True)
-            live = docs.join(
-                ts, F.col("id") == F.col("_ts_id"), "left_anti"
-            )
+            # bounded by the batch
+            dead = [
+                r["id"]
+                for r in docs.join(
+                    ts, F.col("id") == F.col("_ts_id"), "left_semi"
+                ).select("id").collect()
+            ]
             band_index_append(
-                spark, path, live, id_col="id", text_col="document"
+                spark, path, docs.filter(_outside(F.col("id"), dead)),
+                id_col="id", text_col="document",
             )
-            if dead.limit(1).count() > 0:
+            if dead:
                 band_index_apply(
-                    spark, path, upserts=dead,
+                    spark, path, upserts=docs.filter(F.col("id").isin(dead)),
                     id_col="id", text_col="document",
                 )
 
@@ -1955,6 +1927,15 @@ def collection_add(
     in the canonical ``map<string,string>``. Every persisted index at
     ``index_paths`` is kept servable through its surgical
     upsert/append path. Returns the number of rows added.
+
+    Per-call cost: O(batch) on the driver plus one id-column probe.
+    The batch is a local Arrow relation, so its ids, buckets and hash
+    pairs are computed on the driver with no Spark job: the in-batch
+    duplicate check, the id-guard Bloom prescreen and the filter
+    extend run in Python. Stored ids are read by one pushed
+    ``id IN (batch)`` probe of the collection (pruned to the batch's
+    buckets) and, for Bloom-positive ids only, one of each index's id
+    column. Then the collection append and each index's cell write.
 
     Driver-side note: the parallel-list signature is for
     client-SIZED batches (it builds one local DataFrame); bulk loads
@@ -2011,7 +1992,12 @@ def collection_upsert(
     (held ids' text may have changed, and the id-free band layout's
     honest replacement unit is the atomic part rewrite — compact-
     cost per call; batch upserts accordingly). Returns the number of
-    rows written."""
+    rows written.
+
+    Per-call cost: O(batch) on the driver plus one id-column probe
+    per index, as in ``collection_add``. The touched buckets are
+    folded from the ids on the driver, and their rewrite drops the
+    batch ids with a literal filter."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
         HydrationConfig,
         hydrate,

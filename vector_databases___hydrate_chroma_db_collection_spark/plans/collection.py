@@ -282,6 +282,25 @@ def _clone_untouched_parts(
     return cloned
 
 
+def _buckets_for_ids(spark, ids, n_buckets: int) -> list[int]:
+    """The distinct bucket set an id list hashes into, computed with
+    the layout's own expression over a local Arrow relation — the
+    projection is folded on the driver, so no Spark job runs and the
+    collection is never scanned; bounded by n_buckets."""
+    from pyspark.sql import functions as F
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
+        _id_frame,
+    )
+
+    rows = (
+        _id_frame(spark, [str(i) for i in ids], "id")
+        .select(F.pmod(F.xxhash64("id"), F.lit(n_buckets)).alias("b"))
+        .collect()
+    )
+    return sorted({r["b"] for r in rows})
+
+
 def next_data_dir(root: str, name: str) -> str:
     """A fresh versioned data-dir path (``data-N``) for rewrites."""
     base = os.path.join(validate_path(root), name)

@@ -133,6 +133,16 @@ def get_spark(
         # Parquet TIMESTAMP(NANOS) (events.ts) is read as raw int64;
         # sources/parquet.py converts it to a microsecond timestamp.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Push `id IN (batch)` filters of up to 256 values into the
+        # Parquet reader as equality predicates (the default of 10
+        # pushes only a [min, max] range, which random ids span). The
+        # write doors' id probes rely on it: a duplicate check over
+        # 4M ids cost 13.5-32.1 cpu-s as a grouped shuffle and
+        # 3.7-5.2 cpu-s as a pushed 200-id IN (4 cores). The cap is
+        # stack depth: Parquet evaluates the pushed OR chain
+        # recursively, and a 1 MB task thread overflowed at 800 values
+        # (700 passed); larger lists fall back to the range.
+        .config("spark.sql.parquet.pushdown.inFilterThreshold", "256")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
