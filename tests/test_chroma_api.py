@@ -1640,11 +1640,16 @@ def test_delete_every_row_of_one_bucket(spark, tmp_path):
 # their ids on the driver: add = stored-id probe + append + cell write;
 # upsert = bucket rewrite + index id probe + cell write (shuffle and
 # write); delete = bucket rewrite + index id probe + tombstone
-# recording write.
+# recording write. The read doors make one collect per k-fill round,
+# and the delete's tombstones add the mask's broadcast to that round:
+# query = tombstone broadcast + ADC round + finalists' rerank; batch
+# query = tombstone broadcast + ADC round + the batch tail's
+# broadcast of the candidate rows + its scoring collect.
 ADD_JOBS = 3
 UPSERT_JOBS = 4
 DELETE_JOBS = 3
-QUERY_JOBS = 5
+QUERY_JOBS = 3
+BATCH_QUERY_JOBS = 4
 
 
 def _jobs_in(spark, group, fn):
@@ -1671,6 +1676,7 @@ def test_indexed_front_doors_job_budget(spark, tmp_path):
         _chroma_items_df,
         collection_add,
         collection_delete_indexed,
+        collection_query_batch_ivf_pq,
         collection_query_ivf_pq,
         collection_upsert,
     )
@@ -1718,9 +1724,14 @@ def test_indexed_front_doors_job_budget(spark, tmp_path):
         "query": _jobs_in(spark, "budget_query", lambda: collection_query_ivf_pq(
             spark, root, name, X[7].tolist(), 5, index_path=idx, nprobe=4,
         ).collect()),
+        "batch_query": _jobs_in(spark, "budget_batch", lambda: collection_query_batch_ivf_pq(
+            spark, root, name, [X[7].tolist(), X[9].tolist()], 5,
+            index_path=idx, nprobe=4,
+        ).collect()),
     }
     assert collection_count(spark, root, name) == 52
     assert got == {
         "add": ADD_JOBS, "upsert": UPSERT_JOBS,
         "delete": DELETE_JOBS, "query": QUERY_JOBS,
+        "batch_query": BATCH_QUERY_JOBS,
     }

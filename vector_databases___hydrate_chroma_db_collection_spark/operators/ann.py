@@ -37,7 +37,6 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.store impor
     _atomic_sidecar_write,
     _cells_cols,
     _check_expected_etag,
-    _check_source_stamp,
     _commit_cells_build,
     _extend_guard,
     _fresh_versioned_dir,
@@ -48,6 +47,7 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.store impor
     _mask_tombstones,
     _parquet_files,
     _probe_ids,
+    _read_cells,
     _read_unchecked,
     _record_tombstones,
     _restamp,
@@ -404,7 +404,6 @@ def ivf_knn_join(
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import (
         METRICS,
-        rank_merge,
     )
 
     if metric not in METRICS:
@@ -432,7 +431,38 @@ def ivf_knn_join(
     qcells = queries.select(
         F.col(query_id_col).alias("_qid"), F.col(query_embedding_col).alias("_qe")
     ).mapInPandas(assign_queries, schema=qcell_schema)
+    return _ivf_cells_join(
+        qcells, assigned, k, id_col=id_col, embedding_col=embedding_col,
+        metric=metric, score_decimals=score_decimals, slack=slack,
+        multi_assigned=multi_assigned,
+    )
 
+
+def _ivf_cells_join(
+    qcells: DataFrame,
+    assigned: DataFrame,
+    k: int,
+    *,
+    id_col: str,
+    embedding_col: str,
+    metric: str,
+    score_decimals: int | None,
+    slack: int = 32,
+    multi_assigned: bool = False,
+) -> DataFrame:
+    """Steps 2-3 of ``ivf_knn_join`` for a given query-to-cell
+    assignment: ``qcells`` holds one ``(_qid, _qe, ivf_cell int)`` row
+    per (query, cell) pair to score, so a caller that has already
+    picked each query's cells (the batch IVF door's k-fill rounds)
+    scores exactly those pairs. Output ``(qid, neighbor_id, score,
+    rank)``."""
+    import pandas as pd
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import (
+        rank_merge,
+    )
+
+    qid_type = qcells.schema["_qid"].dataType.simpleString()
     nid_type = assigned.schema[id_col].dataType.simpleString()
     out_schema = f"qid {qid_type}, neighbor_id {nid_type}, score double"
     m = k + slack
@@ -988,16 +1018,10 @@ def ivf_read(
     the semantic gate — is delete-correct for free); pass
     ``include_tombstoned=True`` for the physical rows (compaction and
     append internals read the raw parquet directly instead)."""
-    import os
-
-    path = _local_sidecar_path(path)
-    meta = read_sidecar(path, "ivf_index.json")
-    _check_source_stamp(meta, path, verify_source)
-    assigned = read_parquet(spark, os.path.join(path, meta["location"]))
-    if not include_tombstoned:
-        assigned = _mask_tombstones(
-            spark, path, meta, assigned, _cells_cols(assigned)[0]
-        )
+    assigned, meta = _read_cells(
+        spark, path, "ivf_index.json", verify_source=verify_source,
+        include_tombstoned=include_tombstoned,
+    )
     return assigned, np.asarray(meta["centroids"]), meta["metric"]
 
 

@@ -482,9 +482,11 @@ def _serve_cells(
     nprobe: int,
     ef: int,
     verify_source: bool = True,
+    cells=None,
 ) -> DataFrame:
     """Internal per-cell serving stage shared by ``graph_search`` /
-    ``graph_search_batch`` / ``graph_recall_audit``: one
+    ``graph_search_batch`` / ``graph_recall_audit`` and the filtered
+    graph doors: one
     ``applyInPandas`` pass over the union of the queries' probed
     cells runs the beam for every (cell, query probing it) pair and
     emits ``(qid, neighbor_id, score, scored, cell)`` — up to ``ef``
@@ -498,7 +500,10 @@ def _serve_cells(
     occupying ef slots. A pair whose beam yields zero live rows
     still emits ONE sentinel row (null neighbor_id) carrying its
     ``scored`` count, so budget audits never lose evaluations;
-    ranking callers drop sentinels on the null."""
+    ranking callers drop sentinels on the null. ``cells`` (one list
+    per query) names each query's probed cells in place of its
+    ``nprobe`` nearest — how a k-fill round probes only the cells it
+    has not probed yet."""
     import pandas as pd
 
     cells_df, C, meta = graph_index_read(
@@ -511,9 +516,11 @@ def _serve_cells(
         raise EngineError(
             f"graph search: every query must have dim {C.shape[1]}"
         )
-    n_cells = int(C.shape[0])
-    probe = min(max(int(nprobe), 1), n_cells)
-    orders = _cell_order(C, np.stack([v for _, v in qs]), "cosine")[:, :probe]
+    if cells is None:
+        probe = min(max(int(nprobe), 1), int(C.shape[0]))
+        orders = _cell_order(C, np.stack([v for _, v in qs]), "cosine")[:, :probe]
+    else:
+        orders = cells
     by_cell: dict[int, list[tuple[str, np.ndarray]]] = {}
     for (qid, v), order in zip(qs, orders):
         vn = v / max(float(np.linalg.norm(v)), 1e-300)

@@ -46,13 +46,13 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.store impor
     _atomic_sidecar_write,
     _cells_cols,
     _check_expected_etag,
-    _check_source_stamp,
     _commit_cells_build,
     _extend_guard,
     _gc,
     _guard_append,
     _local_sidecar_path,
     _mask_tombstones,
+    _read_cells,
     _restamp,
     _serialized_writer,
     _source_stamp,
@@ -632,6 +632,114 @@ def _encode_assigned(
     )
 
 
+def _residual_lut(q, centroid, codebooks, rotation) -> np.ndarray:
+    """ADC lookup table of one (query, cell) pair: ``LUT[j, c] =
+    ||r_j - codebook_j[c]||^2`` for the (rotated) residual
+    ``r = q - centroid``."""
+    m, _, dsub = codebooks.shape
+    r = _rotate((q - centroid)[None, :], rotation)[0]
+    return np.stack(
+        [
+            ((codebooks[j] - r[j * dsub : (j + 1) * dsub]) ** 2).sum(axis=1)
+            for j in range(m)
+        ]
+    )
+
+
+def _adc(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Residual squared-L2 ADC of ``codes`` (n, m) under one table —
+    the single definition of the score's bit arithmetic."""
+    acc = np.zeros(len(codes))
+    for j in range(lut.shape[0]):
+        acc += lut[j][codes[:, j]]
+    return acc
+
+
+def _adc_topk(
+    codes: DataFrame,
+    work,
+    centroids: np.ndarray,
+    codebooks: np.ndarray,
+    *,
+    id_col: str,
+    width: int,
+    rotation=None,
+) -> DataFrame:
+    """ADC scores of IVF-PQ code rows for several ``(qid, query
+    vector, cells)`` pairs in ``work``: each query scores only the
+    rows of its own cells, in one ``mapInArrow`` pass over ``codes``
+    (the caller prunes them to the union of the cells). Executors
+    build each pair's residual table (``_residual_lut``) from the
+    shipped query vectors, centroids and codebooks, so the closure
+    grows with ``|work|·dim``, never with ``|work|·cells·m·n_codes``.
+    Each task keeps, per qid, its top ``width`` rows by
+    ``(adc_score, id)``: a collect of the output is bounded by
+    ``|work| · width · scan tasks`` rows. Output ``(qid int,
+    <id_col>, adc_score double)``."""
+    import pyarrow as pa
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators._arrow import (
+        list_matrix,
+        rows_matrix,
+    )
+
+    C = np.asarray(centroids, dtype=np.float64)
+    books = np.asarray(codebooks, dtype=np.float64)
+    rot = None if rotation is None else np.asarray(rotation, dtype=np.float64)
+    queries = {int(q): np.asarray(v, dtype=np.float64) for q, v, _ in work}
+    by_cell: dict[int, list[int]] = {}
+    for q, _, cells in work:
+        for c in cells:
+            by_cell.setdefault(int(c), []).append(int(q))
+    id_type = codes.schema[id_col].dataType.simpleString()
+
+    def top(ids: np.ndarray, s: np.ndarray):
+        keep = np.lexsort((ids, s))[:width]
+        return ids[keep], s[keep]
+
+    def score(batches):
+        luts: dict = {}
+        kept: dict = {}  # qid -> (ids, scores), at most width each
+        id_arrow = None
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            id_arrow = rb.column(0).type
+            ids = np.asarray(rb.column(0).to_pylist(), dtype=object)
+            cell_arr = rb.column(1).to_numpy()
+            M = list_matrix(rb.column(2), np.int64)
+            if M is None:
+                M = rows_matrix(rb.column(2).to_pandas(), np.int64)
+            for cell in np.unique(cell_arr):
+                mask = cell_arr == cell
+                for q in by_cell.get(int(cell), ()):
+                    lut = luts.get((q, int(cell)))
+                    if lut is None:
+                        lut = luts[(q, int(cell))] = _residual_lut(
+                            queries[q], C[int(cell)], books, rot
+                        )
+                    s = _adc(lut, M[mask])
+                    old = kept.get(q)
+                    cand = (ids[mask], s) if old is None else (
+                        np.concatenate([old[0], ids[mask]]),
+                        np.concatenate([old[1], s]),
+                    )
+                    kept[q] = top(*cand)
+        for q, (ids, s) in kept.items():
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.full(len(ids), q, dtype=np.int32)),
+                    pa.array(ids.tolist(), type=id_arrow),
+                    pa.array(s, type=pa.float64()),
+                ],
+                names=["qid", id_col, "adc_score"],
+            )
+
+    return codes.select(id_col, "ivf_cell", "pq_code").mapInArrow(
+        score, schema=f"qid int, {id_col} {id_type}, adc_score double"
+    )
+
+
 def ivf_pq_search(
     encoded: DataFrame,
     centroids: np.ndarray,
@@ -652,56 +760,26 @@ def ivf_pq_search(
     residual codes with a PER-CELL lookup table (the query residual
     q − centroid differs per cell), optionally exact-rerank.
 
-    The shipped state is nprobe tables of m × n_codes doubles — a few
-    hundred KiB at FAISS-typical sizes — and the filter on ``ivf_cell``
-    is a literal IN-list, so a cell-partitioned layout statically
-    prunes. ``metric`` controls the RERANK scoring ("l2" or "cosine");
-    the ADC stage is always residual squared-L2, which ranks cosine
-    correctly for normalized corpora. With ``nprobe = n_centroids``
-    and a prescreen wide enough to cover the corpus the result is
-    exact — the oracle-checkable configuration.
+    Scoring is ``_adc_topk`` with this one query: executors build the
+    per-cell tables, each task keeps only the prescreen width, and the
+    filter on ``ivf_cell`` is a literal IN-list, so a cell-partitioned
+    layout statically prunes. ``metric`` controls the RERANK scoring
+    ("l2" or "cosine"); the ADC stage is always residual squared-L2,
+    which ranks cosine correctly for normalized corpora. With
+    ``nprobe = n_centroids`` and a prescreen wide enough to cover the
+    corpus the result is exact — the oracle-checkable configuration.
     """
-    import pandas as pd
-
-    m, n_codes, dsub = codebooks.shape
     q = np.asarray(query_vector, dtype=np.float64)
     cells = [int(c) for c in _cell_order(centroids, q, "l2")[0, :nprobe]]
-    # Per-cell LUT: ||r_j - codebook_j[c]||^2 for r = q - centroid_cell.
-    luts = {}
-    for cell in cells:
-        r = _rotate(q[None, :] - centroids[cell][None, :], rotation)[0]
-        luts[cell] = np.stack(
-            [
-                ((codebooks[j] - r[j * dsub : (j + 1) * dsub]) ** 2).sum(axis=1)
-                for j in range(m)
-            ]
-        )
-
-    id_type = encoded.schema[id_col].dataType.simpleString()
-
-    def score(batches):
-        for b in batches:
-            if len(b) == 0:
-                continue
-            codes = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in b["pq_code"]]
-            )
-            cell_arr = b["ivf_cell"].to_numpy()
-            s = np.zeros(len(codes))
-            for cell in np.unique(cell_arr):
-                mask = cell_arr == cell
-                lut = luts[int(cell)]
-                acc = np.zeros(mask.sum())
-                sub = codes[mask]
-                for j in range(m):
-                    acc += lut[j][sub[:, j]]
-                s[mask] = acc
-            yield pd.DataFrame({id_col: b[id_col], "adc_score": s})
-
-    pruned = encoded.filter(F.col("ivf_cell").isin(cells))
-    scored = pruned.select(id_col, "ivf_cell", "pq_code").mapInPandas(
-        score, schema=f"{id_col} {id_type}, adc_score double"
-    )
+    scored = _adc_topk(
+        encoded.filter(F.col("ivf_cell").isin(cells)),
+        [(0, q, cells)],
+        centroids,
+        codebooks,
+        id_col=id_col,
+        width=k * (rerank_factor if rerank_corpus is not None else 1),
+        rotation=rotation,
+    ).select(id_col, "adc_score")
 
     return _finish_adc(
         scored,
@@ -733,9 +811,10 @@ def ivf_pq_knn_join(
     rotation=None,
 ) -> DataFrame:
     """Batch ADC search through an IVF-PQ index — the compressed twin
-    of ``ann.ivf_knn_join`` for MANY queries at once (``ivf_pq_search``
-    ships one driver-built LUT set per call; a query BATCH must build
-    its residual LUTs executor-side, per (query, probed cell) pair).
+    of ``ann.ivf_knn_join`` for a DataFrame of queries (the recall
+    audit's sampled rows; a driver-held query list goes through
+    ``_adc_topk``). Scores use the same ``_residual_lut`` / ``_adc``
+    arithmetic, built executor-side per (query, probed cell) pair.
 
     Plan (all distributed, the code table is never collected):
     1. one Arrow pass assigns each query to its ``nprobe``
@@ -767,7 +846,6 @@ def ivf_pq_knn_join(
     rot_b = (
         None if rotation is None else np.asarray(rotation, dtype=np.float64)
     )
-    m, n_codes, dsub = books.shape
     npb = int(min(nprobe, C.shape[0]))
 
     qid_type = queries.schema[query_id_col].dataType.simpleString()
@@ -808,21 +886,12 @@ def ivf_pq_knn_join(
         keep = min(keep_m, len(ids))
         out_qid, out_nid, out_score = [], [], []
         for qid, qe in zip(q_pdf["_qid"], q_pdf["_qe"]):
-            r = _rotate(
-                (np.asarray(qe, dtype=np.float64) - C[cell])[None, :],
-                rot_b,
-            )[0]
-            lut = np.stack(
-                [
-                    ((books[j] - r[j * dsub : (j + 1) * dsub]) ** 2).sum(
-                        axis=1
-                    )
-                    for j in range(m)
-                ]
+            acc = _adc(
+                _residual_lut(
+                    np.asarray(qe, dtype=np.float64), C[cell], books, rot_b
+                ),
+                codes,
             )
-            acc = np.zeros(len(codes))
-            for j in range(m):
-                acc += lut[j][codes[:, j]]
             # tie-aware top-keep: lowest neighbor_id among boundary
             # ties, matching rank_merge's final (score, id) order
             top = np.lexsort((ids, acc))[:keep]
@@ -1080,16 +1149,10 @@ def ivf_pq_read(
     ``with_rotation=True`` appends the sidecar's OPQ rotation (or
     ``None``) as a fourth element — pass it to the search functions'
     ``rotation=`` so OPQ-encoded codes score correctly."""
-    import os
-
-    path = _local_sidecar_path(path)
-    meta = read_sidecar(path, "ivf_pq_index.json")
-    _check_source_stamp(meta, path, verify_source)
-    encoded = read_parquet(spark, os.path.join(path, meta["location"]))
-    if not include_tombstoned:
-        encoded = _mask_tombstones(
-            spark, path, meta, encoded, _cells_cols(encoded)[0]
-        )
+    encoded, meta = _read_cells(
+        spark, path, "ivf_pq_index.json", verify_source=verify_source,
+        include_tombstoned=include_tombstoned,
+    )
     if with_rotation:
         rot = meta.get("rotation")
         return (

@@ -529,6 +529,22 @@ def _mask_tombstones(
     )
 
 
+def _read_cells(
+    spark, path: str, sidecar: str, *, verify_source: bool,
+    include_tombstoned: bool = False,
+) -> tuple[DataFrame, dict]:
+    """The IVF / IVF-PQ read: the sidecar (source stamp checked, like
+    every reader) and its cells dataset, tombstones masked unless
+    ``include_tombstoned``. Returns ``(cells_df, meta)``."""
+    path = _local_sidecar_path(path)
+    meta = read_sidecar(path, sidecar)
+    _check_source_stamp(meta, path, verify_source)
+    cells = read_parquet(spark, os.path.join(path, meta["location"]))
+    if not include_tombstoned:
+        cells = _mask_tombstones(spark, path, meta, cells, _cells_cols(cells)[0])
+    return cells, meta
+
+
 def _record_tombstones(p: str, sidecar: str, meta: dict, ts_ids) -> None:
     """Write ``ts_ids`` (one ``_ts_id`` string column, the WHOLE new
     set) as the kind's next versioned tombstone recording and point

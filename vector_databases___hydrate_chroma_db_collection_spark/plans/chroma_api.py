@@ -51,6 +51,7 @@ from __future__ import annotations
 import numbers
 import shutil
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +60,7 @@ from vector_databases___hydrate_chroma_db_collection_spark.errors import EngineE
 from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
     _cells_cols,
     _outside,
+    _read_cells,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
     _buckets_for_ids,
@@ -501,10 +503,29 @@ def _serve_topk(
     return scored.orderBy(*order).limit(n_results).select(*cols)
 
 
+def _order_key(score, asc: bool):
+    """A double's position in Spark's ``asc()`` / ``desc()`` order as
+    a Python sort key: NaN above every number, null first ascending
+    and last descending."""
+    if score is None:
+        return (0, 0.0) if asc else (2, 0.0)
+    if score != score:  # NaN
+        return (2, 0.0) if asc else (0, 0.0)
+    return (1, score if asc else -score)
+
+
+def _best_first(scored, asc: bool, width: int | None = None) -> list:
+    """``(id, score)`` pairs best-first by (score, id), Spark's order
+    for the serve tails; the first ``width`` when given."""
+    out = sorted(scored, key=lambda r: (_order_key(r[1], asc), r[0]))
+    return out if width is None else out[:width]
+
+
 def _serve_topk_batch(
-    cand: DataFrame,
+    spark: SparkSession,
+    pairs: dict,
     filtered: DataFrame,
-    queries: DataFrame,
+    query_vectors: list,
     metric: str,
     n_results: int,
     *,
@@ -512,58 +533,115 @@ def _serve_topk_batch(
     include_distance: bool,
 ) -> DataFrame:
     """Batch twin of ``_serve_topk``, the rerank tail of the batch ANN
-    doors: ``(qid, id)`` candidates join their filtered collection rows
-    and (broadcast) query vector, the manifest metric is recomputed on
-    only those rows, and a per-qid window keeps the top ``n_results``
-    by (score, id) — ``_serve_topk``'s tie-breaks, and with
-    ``_query_frame``'s double query vectors its exact scores. Output
-    ``(qid, rank, id, document, metadata, score[, distance])`` ordered
-    (qid, rank)."""
-    from pyspark.sql import Window
-
+    doors: ``pairs`` maps a qid to its candidate ids. One collect
+    joins the pairs to their filtered collection rows and query
+    vectors and scores them with the Spark ``_score`` expression
+    (doubles, like the single doors' literal query vector, so a batch
+    score equals its single-query twin's exactly); the driver then
+    ranks each qid by (score, id) in Spark's order. Output ``(qid,
+    rank, id, document, metadata, score[, distance])`` ordered (qid,
+    rank), as an Arrow-built local relation."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.knn import (
         _score,
     )
 
-    rows = cand.join(
-        filtered.select("id", "document", "metadata", "embedding"), "id"
-    ).join(F.broadcast(queries.withColumnRenamed("q_embedding", "_qe")), "qid")
-    raw, asc = _score(metric, F.col("embedding"), F.col("_qe"))
-    score = F.round(raw, score_decimals) if score_decimals is not None else raw
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").asc() if asc else F.col("score").desc(), F.col("id").asc()
-    )
-    out = (
-        rows.withColumn("score", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_results)
-    )
-    cols = ["qid", "rank", "id", "document", "metadata", "score"]
+    cols = ["qid", "id", "document", "metadata", "score"]
     if include_distance:
-        out = out.withColumn("distance", _distance(metric, raw))
         cols.append("distance")
-    return out.select(*cols).orderBy("qid", "rank")
+    ids = sorted({i for v in pairs.values() for i in v})
+    got = []
+    if ids:
+        # the <= |ids| candidate rows are the broadcast side; the
+        # pairs stream from _query_pairs, so the plan carries each
+        # query vector once
+        rows = _query_pairs(spark, query_vectors, pairs, "id", pa.string()).join(
+            F.broadcast(
+                filtered.filter(F.col("id").isin(ids)).select(
+                    "id", "document", "metadata", "embedding"
+                )
+            ),
+            "id",
+        )
+        raw, _ = _score(metric, F.col("embedding"), F.col("q_embedding"))
+        rows = rows.withColumn(
+            "score",
+            F.round(raw, score_decimals) if score_decimals is not None else raw,
+        )
+        if include_distance:
+            rows = rows.withColumn("distance", _distance(metric, raw))
+        # bounded: one row per candidate pair, <= sum of |pairs[q]|
+        # (|pending| * width on the IVF / IVF-PQ doors); the plan holds
+        # |queries| * dim doubles plus the pair ids, the broadcast the
+        # candidate rows
+        got = rows.select(*cols).collect()
+    by_q: dict = {}
+    for r in got:
+        by_q.setdefault(r["qid"], {})[r["id"]] = r
+    out: dict = {c: [] for c in ["qid", "rank", *cols[1:]]}
+    for q in sorted(by_q):
+        ranked = _best_first(
+            ((i, r["score"]) for i, r in by_q[q].items()),
+            metric == "l2",
+            int(n_results),
+        )
+        for rank, (i, _) in enumerate(ranked, 1):
+            r = by_q[q][i]
+            out["qid"].append(q)
+            out["rank"].append(rank)
+            for c in cols[1:]:
+                v = r[c]
+                out[c].append(list(v.items()) if c == "metadata" and v is not None else v)
+    types = {
+        "qid": pa.int32(),
+        "rank": pa.int32(),
+        "id": pa.string(),
+        "document": pa.string(),
+        "metadata": pa.map_(pa.string(), pa.string()),
+        "score": pa.float64(),
+        "distance": pa.float64(),
+    }
+    return spark.createDataFrame(
+        pa.table({c: pa.array(v, types[c]) for c, v in out.items()})
+    )
 
 
-def _query_frame(
-    spark: SparkSession, query_vectors: list, qids=None
-) -> DataFrame:
-    """``(qid int, q_embedding array<double>)`` for the batch doors —
-    ``qids`` (default all) index ``query_vectors``. Doubles, like the
-    single doors' literal query vector, so a batch score equals its
-    single-query twin's exactly."""
-    qids = range(len(query_vectors)) if qids is None else list(qids)
+def _query_frame(spark: SparkSession, query_vectors: list) -> DataFrame:
+    """``(qid int, q_embedding array<double>)`` for the batch doors.
+    Doubles, like the single doors' literal query vector, so a batch
+    score equals its single-query twin's exactly."""
     return spark.createDataFrame(
         pa.table(
             {
-                "qid": pa.array([int(i) for i in qids], pa.int32()),
+                "qid": pa.array(range(len(query_vectors)), pa.int32()),
                 "q_embedding": pa.array(
-                    [[float(x) for x in query_vectors[i]] for i in qids],
+                    [[float(x) for x in v] for v in query_vectors],
                     pa.list_(pa.float64()),
                 ),
             }
         )
     )
+
+
+def _query_pairs(
+    spark: SparkSession, query_vectors: list, items: dict, col: str, typ
+) -> DataFrame:
+    """``(qid int, q_embedding array<double>, <col> typ)``, one row per
+    (qid, item) of ``items`` ({qid: [item, ...]}, qid indexing
+    ``query_vectors``). The local relation holds one row per query and
+    the pairs come from an explode on the executors, so the plan grows
+    as |queries| * dim + |pairs|, never |pairs| * dim."""
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "qid": pa.array(list(items), pa.int32()),
+                "q_embedding": pa.array(
+                    [[float(x) for x in query_vectors[q]] for q in items],
+                    pa.list_(pa.float64()),
+                ),
+                "_items": pa.array([list(v) for v in items.values()], pa.list_(typ)),
+            }
+        )
+    ).select("qid", "q_embedding", F.explode("_items").alias(col))
 
 
 def _query_prologue(
@@ -606,33 +684,44 @@ _EXHAUSTIVE_EF = 2**31  # saturates any graph cell: the exact-scan round
 
 
 def _kfill(
-    candidates,
-    n_queries: int,
+    score_round,
+    orders,
     *,
     k: int,
-    n_cells: int,
     nprobe: int,
+    width: int | None,
+    asc: bool = True,
     ef: int | None = None,
-    batch: bool,
     stats_out: dict | None,
-):
+) -> dict:
     """The k-fill loop of the six filtered ANN doors (single and batch
-    x IVF / IVF-PQ / graph). The door supplies its index read and
-    ``candidates(pending, p, ef)``: the round's candidates for the
-    pending query ids at ``p`` probed cells (and beam width ``ef`` on
-    the graph doors) — filtered collection rows for a single door,
-    ``(qid, id)`` rows for a batch door.
+    x IVF / IVF-PQ / graph). ``orders`` holds each query's cells
+    nearest-first (``(n_queries, n_cells)``, qid = row); the door
+    supplies its index read and ``score_round``.
 
-    - A query FILLS when it has at least ``k`` candidates. Single
-      doors check with an early-exit ``limit(k).count()``; batch
-      doors with one per-qid count, collecting <= |pending| rows.
-    - Filled queries settle and never re-score; the pending ids stay
-      a local list. The next round DOUBLES ``p`` for the unfilled
-      ones; once every cell is probed, the graph doors saturate
-      ``ef`` past the largest cell, which turns the beam into an exact
-      scan of each cell.
+    The round contract:
+
+    - ``score_round(work, p, ef)`` makes exactly ONE Spark action: it
+      collects the scored candidates of ``work``, a list of ``(qid,
+      cells)`` with ``cells`` the query's NEWLY probed cells
+      ``order[lo:p]``, as ``(qid, id, key)`` rows. Its size is bounded
+      by the query batch: the collect carries a comment stating the
+      bound in terms of ``|pending|`` and ``width``.
+    - The driver merges each query's rows, keeping its top ``width``
+      by ``(key, id)`` in Spark's order (``asc`` is the key's
+      direction; ``width=None`` keeps every row). An id seen twice
+      keeps its first key. Each cell's rows enter once, so the merged
+      set equals the top ``width`` over all of ``order[:p]``.
+    - A query FILLS once it holds ``k`` rows. Filled queries settle
+      and are never re-scored.
+    - The next round DOUBLES ``p`` for the unfilled ones and scores
+      only ``order[lo:p]``. Once every cell is probed, the graph doors
+      saturate ``ef`` past the largest cell, which turns the beam into
+      an exact scan of each cell; a round that changes ``ef`` scores
+      ``order[:p]`` again and REPLACES the query's rows, so the final
+      set equals the candidates of (final probe, final ``ef``).
     - EXHAUSTION stops the loop: every cell probed (and ``ef``
-      saturated, on the graph doors). That round is the exact
+      saturated, on the graph doors). That round completes the exact
       filtered scan, so a predicate that kills whole cells widens the
       probe until it finds its matches and a door never under-fills.
       Rounds are bounded by 1 + ceil(log2(n_cells / nprobe)), plus one
@@ -640,74 +729,91 @@ def _kfill(
     - ``stats_out`` receives ``rounds``, ``final_probe`` and
       ``n_cells`` (and ``final_ef`` on the graph doors).
 
-    Returns the union of the settled candidates and the final probe
-    width."""
+    Returns each query's finalists: ``{qid: [id, ...]}`` best-first."""
+    n_cells = int(orders.shape[1])
     p = max(1, min(int(nprobe), n_cells))
-    pending = list(range(n_queries))
-    settled = []
+    lo = 0
+    pending = list(range(len(orders)))
+    merged: dict = {q: {} for q in pending}
     rounds = 0
     while True:
         rounds += 1
-        cand = candidates(pending, p, ef)
+        work = [(q, [int(c) for c in orders[q][lo:p]]) for q in pending]
+        for q, i, key in score_round(work, p, ef):
+            merged[q].setdefault(i, key)
+        if width is not None:
+            for q in pending:
+                if len(merged[q]) > width:
+                    merged[q] = dict(_best_first(merged[q].items(), asc, width))
         if p >= n_cells and (ef is None or ef >= _EXHAUSTIVE_EF):
-            settled.append(cand)
             break
-        if batch:
-            filled = {
-                int(r["qid"])
-                for r in cand.groupBy("qid").count().filter(F.col("count") >= k).collect()
-            }
-        else:
-            filled = set(pending) if cand.limit(k).count() >= k else set()
-        unfilled = [q for q in pending if q not in filled]
-        if not unfilled:
-            settled.append(cand)
+        pending = [q for q in pending if len(merged[q]) < k]
+        if not pending:
             break
-        if filled:
-            settled.append(cand.filter(~F.col("qid").isin(unfilled)))
-        pending = unfilled
         if p < n_cells:
-            p = min(n_cells, p * 2)
+            lo, p = p, min(n_cells, p * 2)
         else:
-            ef = _EXHAUSTIVE_EF
+            lo, ef = 0, _EXHAUSTIVE_EF
+            for q in pending:
+                merged[q] = {}
     if stats_out is not None:
         stats_out.update(rounds=rounds, final_probe=p, n_cells=n_cells)
         if ef is not None:
             stats_out["final_ef"] = ef
-    out = settled[0]
-    for part in settled[1:]:
-        out = out.unionByName(part)
-    return out, p
+    return {
+        q: [i for i, _ in _best_first(m.items(), asc)] for q, m in merged.items()
+    }
 
 
-def _probed(filtered: DataFrame, index_rows: DataFrame, order):
-    """Single IVF/IVF-PQ ``_kfill`` candidates: the filtered collection
-    rows whose ids sit in the ``p`` nearest cells of ``order``. The
-    index scan prunes to those cell partitions, and the predicate runs
-    on the candidates only through one semi-join (Catalyst broadcasts
-    the small side)."""
-    idx_id = _cells_cols(index_rows)[0]
-
-    def candidates(_pending, p, _ef):
-        ids = index_rows.filter(
-            F.col("ivf_cell").isin([int(c) for c in order[:p]])
-        ).select(F.col(idx_id).cast("string").alias("id"))
-        return filtered.join(ids, "id", "left_semi")
-
-    return candidates
+def _check_ann_args(n_results, rerank_factor=None) -> int:
+    """The ANN doors' argument check: ``n_results`` (and, on the PQ
+    doors, ``rerank_factor``) must be at least 1. Returns k."""
+    if int(n_results) < 1:
+        raise EngineError(f"n_results must be >= 1, got {n_results!r}")
+    if rerank_factor is not None and int(rerank_factor) < 1:
+        raise EngineError(f"rerank_factor must be >= 1, got {rerank_factor!r}")
+    return int(n_results)
 
 
-def _pairs(nn: DataFrame) -> DataFrame:
-    """A batch kNN join's output as checkpointed ``(qid, id)``
-    ``_kfill`` candidates (bounded: <= |pending| * its k rows)."""
-    return nn.select(
-        "qid", F.col("neighbor_id").cast("string").alias("id")
-    ).localCheckpoint(eager=True)
+def _scores_cells_directly(
+    meta: dict, root: str, name: str, where, where_document, verify_source: bool
+) -> bool:
+    """Whether a door's rounds may score the index cells without the
+    filtered collection's id semi-join: with no ``where`` and no
+    ``where_document``, and the index's source stamp (naming this
+    collection) just verified against its etag by ``verify_source``,
+    the live index ids are a subset of the collection ids. An
+    unstamped index, or ``verify_source=False``, keeps the
+    semi-join. The rerank still reads the finalists from the
+    collection."""
+    import os
+
+    src = meta.get("source")
+    return (
+        where is None
+        and where_document is None
+        and verify_source
+        and src is not None
+        and src["name"] == name
+        and os.path.abspath(src["root"]) == os.path.abspath(root)
+    )
+
+
+def _exact_round(rows: DataFrame, metric: str, query_vector, k: int, score_decimals):
+    """A single IVF or graph door's round: the exact top ``k`` of
+    ``rows`` (``id``, ``embedding``) by (score, id), scored and rounded
+    as ``_serve_topk`` scores them."""
+    top = _serve_topk(
+        rows, metric, query_vector, k, score_decimals=score_decimals,
+        include_distance=False, payload_cols=(),
+    )
+    # bounded: k rows
+    return [(0, r["id"], r["score"]) for r in top.collect()]
 
 
 def _restrict(index_rows: DataFrame, filtered: DataFrame) -> DataFrame:
     """The index rows whose ids survive the filter (cells layout kept)
-    — how the batch doors evaluate the predicate once."""
+    — one semi-join against the filtered collection's ids."""
     idx_id = _cells_cols(index_rows)[0]
     return index_rows.join(
         filtered.select(
@@ -718,15 +824,34 @@ def _restrict(index_rows: DataFrame, filtered: DataFrame) -> DataFrame:
     )
 
 
-def _ivf_index(spark: SparkSession, index_path: str, manifest, verify_source: bool):
-    """``ivf_read`` for the IVF doors, which probe and rerank by the
-    manifest's metric: an index written to serve another metric is
-    refused rather than probed by one metric and ranked by another."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        ivf_read,
+def _in_cells(rows: DataFrame, work) -> DataFrame:
+    """``rows`` pruned to the union of a round's cells (a literal
+    IN-list on the ``ivf_cell`` partition column)."""
+    return rows.filter(
+        F.col("ivf_cell").isin(sorted({c for _, cells in work for c in cells}))
     )
 
-    assigned, C, metric = ivf_read(spark, index_path, verify_source=verify_source)
+
+def _orders(C, query_vectors, metric: str):
+    """Each query's cells nearest-first, one ``_cell_order`` row per
+    query, so a query's order is the same in a single and a batch
+    door."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        _cell_order,
+    )
+
+    return np.vstack([_cell_order(C, v, metric)[0] for v in query_vectors])
+
+
+def _ivf_index(spark: SparkSession, index_path: str, manifest, verify_source: bool):
+    """``ivf_read``'s read for the IVF doors, which probe and rerank by
+    the manifest's metric: an index written to serve another metric is
+    refused rather than probed by one metric and ranked by another.
+    Returns ``(assigned, centroids, meta)``."""
+    assigned, meta = _read_cells(
+        spark, index_path, "ivf_index.json", verify_source=verify_source
+    )
+    metric = meta["metric"]
     if metric != manifest.metric:
         raise EngineError(
             f"IVF index serve metric {metric!r} != collection metric "
@@ -734,7 +859,7 @@ def _ivf_index(spark: SparkSession, index_path: str, manifest, verify_source: bo
             "collection's metric. Rewrite the index with "
             f"ivf_write(..., metric={manifest.metric!r})."
         )
-    return assigned, C
+    return assigned, np.asarray(meta["centroids"]), meta
 
 
 def collection_query_ivf(
@@ -755,38 +880,54 @@ def collection_query_ivf(
 ) -> DataFrame:
     """``collection.query`` served THROUGH the persisted IVF index,
     with metadata/document pre-filters — the filtered-ANN shape
-    ``collection_query`` deliberately does not take at corpus scale
-    (its exact scan is the right interactive path at fixture scale;
-    at 10^9 rows every filtered query paying a full scan is not).
+    ``collection_query`` deliberately does not take at corpus scale.
 
     Cells rank by centroid proximity under the manifest's metric (the
     index must serve that metric — ``EngineError`` otherwise), and the
-    probe widens by the ``_kfill`` contract: each round scans ~p /
-    n_centroids of the corpus and evaluates the predicates only on
-    those candidates. Survivors rerank through ``collection_query``'s
-    own tail, so the two return byte-identical rows whenever the probe
-    reaches every matching cell. ``verify_source`` keeps ``ivf_read``'s
-    etag fence: a stale index refuses rather than serving deleted
-    rows. Returns ``(id, document, metadata, score[, distance])``
-    best-first — ``collection_query``'s contract."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _cell_order,
-    )
-
+    probe widens by the ``_kfill`` contract: each round scores only
+    its newly probed cells' rows and keeps their exact top
+    ``n_results``. The index side of a round is ~p / n_centroids of
+    the corpus, but a filtered round still semi-joins the filtered
+    collection's ids, so its candidate scan is O(collection ids +
+    predicate columns); only an unfiltered query on a verified index
+    scores the cells alone. The finalists rerank through
+    ``collection_query``'s own tail, so the two return byte-identical
+    rows whenever the probe reaches every matching cell.
+    ``verify_source`` keeps ``ivf_read``'s etag fence: a stale index
+    refuses rather than serving deleted rows. Returns ``(id,
+    document, metadata, score[, distance])`` best-first —
+    ``collection_query``'s contract."""
+    k = _check_ann_args(n_results)
     manifest, filtered = _query_prologue(
         spark, root, name, [query_vector], where, where_document
     )
-    assigned, C = _ivf_index(spark, index_path, manifest, verify_source)
-    order = _cell_order(C, query_vector, manifest.metric)[0]
-    cand, _ = _kfill(
-        _probed(filtered, assigned, order), 1, k=int(n_results),
-        n_cells=len(C), nprobe=nprobe, batch=False, stats_out=stats_out,
+    assigned, C, meta = _ivf_index(spark, index_path, manifest, verify_source)
+    idx_id, emb = _cells_cols(assigned)[:2]
+    cells = assigned.select(
+        F.col(idx_id).cast("string").alias("id"),
+        F.col(emb).alias("embedding"),
+        "ivf_cell",
     )
+    direct = _scores_cells_directly(
+        meta, root, name, where, where_document, verify_source
+    )
+
+    def score_round(work, _p, _ef):
+        rows = _in_cells(cells, work)
+        if not direct:
+            rows = filtered.join(rows.select("id"), "id", "left_semi")
+        return _exact_round(rows, manifest.metric, query_vector, k, score_decimals)
+
+    finalists = _kfill(
+        score_round, _orders(C, [query_vector], manifest.metric), k=k,
+        nprobe=nprobe, width=k, asc=manifest.metric == "l2",
+        stats_out=stats_out,
+    )[0]
     return _serve_topk(
-        cand,
+        filtered.filter(F.col("id").isin(finalists)),
         manifest.metric,
         query_vector,
-        n_results,
+        k,
         score_decimals=score_decimals,
         include_distance=include_distance,
     )
@@ -817,39 +958,90 @@ def collection_query_batch_ivf(
     ``(qid, rank, id, document, metadata, score[, distance])``.
 
     The filtered collection semi-restricts the index's cell-assigned
-    rows once (cells layout kept); each ``_kfill`` round runs
-    ``ann.ivf_knn_join`` for the pending queries against only their
-    ``p`` nearest cells (cogrouped per-cell GEMM), and the surviving
-    ids rerank through ``_serve_topk_batch`` under the manifest's
+    rows (cells layout kept; skipped for an unfiltered query on a
+    verified index); each ``_kfill`` round runs ``ivf_knn_join``'s
+    cogrouped per-cell GEMM (``ann._ivf_cells_join``) with each
+    pending query assigned exactly its newly probed cells and
+    collects its ``(qid, id)`` top ``n_results``, and
+    ``_serve_topk_batch`` reranks the finalists under the manifest's
     metric, which the index must serve (``EngineError`` otherwise) —
     so each query's rows equal ``collection_query_ivf``'s."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        ivf_knn_join,
+        _ivf_cells_join,
     )
 
+    k = _check_ann_args(n_results)
     manifest, filtered = _query_prologue(
         spark, root, name, query_vectors, where, where_document
     )
-    assigned, C = _ivf_index(spark, index_path, manifest, verify_source)
+    assigned, C, meta = _ivf_index(spark, index_path, manifest, verify_source)
     idx_id, emb = _cells_cols(assigned)[:2]
-    rows = _restrict(assigned, filtered)
-    cand, _ = _kfill(
-        lambda pending, p, _ef: _pairs(
-            ivf_knn_join(
-                _query_frame(spark, query_vectors, pending), rows, C,
-                k=int(n_results), id_col=idx_id, embedding_col=emb,
-                metric=manifest.metric, nprobe=p,
-                score_decimals=score_decimals,
-            )
-        ),
-        len(query_vectors), k=int(n_results), n_cells=len(C),
-        nprobe=nprobe, batch=True, stats_out=stats_out,
+    direct = _scores_cells_directly(
+        meta, root, name, where, where_document, verify_source
+    )
+    rows = assigned if direct else _restrict(assigned, filtered)
+
+    def score_round(work, _p, _ef):
+        # each query meets exactly its round cells, the ones its rows
+        # were pruned to
+        qcells = _query_pairs(
+            spark, query_vectors, dict(work), "ivf_cell", pa.int32()
+        ).select(
+            F.col("qid").alias("_qid"), F.col("q_embedding").alias("_qe"), "ivf_cell"
+        )
+        nn = _ivf_cells_join(
+            qcells, _in_cells(rows, work), k, id_col=idx_id,
+            embedding_col=emb, metric=manifest.metric,
+            score_decimals=score_decimals,
+        )
+        # bounded: the join keeps k rows per qid, <= |pending| * k
+        return [
+            (r["qid"], str(r["neighbor_id"]), r["score"])
+            for r in nn.select("qid", "neighbor_id", "score").collect()
+        ]
+
+    pairs = _kfill(
+        score_round, _orders(C, query_vectors, manifest.metric), k=k,
+        nprobe=nprobe, width=k, asc=manifest.metric == "l2",
+        stats_out=stats_out,
     )
     return _serve_topk_batch(
-        cand, filtered, _query_frame(spark, query_vectors), manifest.metric,
-        n_results, score_decimals=score_decimals,
-        include_distance=include_distance,
+        spark, pairs, filtered, query_vectors, manifest.metric, k,
+        score_decimals=score_decimals, include_distance=include_distance,
     )
+
+
+def _pq_index(spark, root, name, index_path, filtered, query_vectors, where,
+              where_document, verify_source, width):
+    """The IVF-PQ doors' index read and ``_kfill`` round: each round
+    ADC-scores the pending queries against their newly probed cells'
+    codes that pass the filter (``pq._adc_topk``) and keeps the top
+    ``width`` per query. Returns ``(C, score_round)``."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
+        _adc_topk,
+    )
+
+    encoded, meta = _read_cells(
+        spark, index_path, "ivf_pq_index.json", verify_source=verify_source
+    )
+    C, books = np.asarray(meta["centroids"]), np.asarray(meta["codebooks"])
+    rot = None if meta.get("rotation") is None else np.asarray(meta["rotation"])
+    idx_id = _cells_cols(encoded)[0]
+    direct = _scores_cells_directly(
+        meta, root, name, where, where_document, verify_source
+    )
+    codes = encoded if direct else _restrict(encoded, filtered)
+
+    def score_round(work, _p, _ef):
+        top = _adc_topk(
+            _in_cells(codes, work),
+            [(q, query_vectors[q], cells) for q, cells in work],
+            C, books, id_col=idx_id, width=width, rotation=rot,
+        )
+        # bounded: |pending| * width rows per scan task of the probed cells
+        return [(r["qid"], r[idx_id], r["adc_score"]) for r in top.collect()]
+
+    return C, score_round
 
 
 def collection_query_ivf_pq(
@@ -874,50 +1066,31 @@ def collection_query_ivf_pq(
     per-row twin of ``collection_query_ivf``. Cells rank by l2
     centroid proximity (ADC is residual squared-L2 whatever the rerank
     metric — FAISS semantics) and the probe widens by the ``_kfill``
-    contract. Survivors then go through the standard IVF-PQ+refine
-    recipe: ADC prescreens the filtered candidates' codes to
-    ``n_results * rerank_factor`` ids (the corpus's float vectors are
-    never scanned), and the exact rerank is ``collection_query``'s own
-    tail over just those rows. A ``rerank_factor`` covering the
-    filtered candidate count makes the result exact (the
-    oracle-checkable configuration). Returns ``(id, document,
-    metadata, score[, distance])`` best-first."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        _cell_order,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
-        ivf_pq_read,
-        ivf_pq_search,
-    )
-
+    contract. The standard IVF-PQ+refine recipe runs inside it: each
+    round ADC-scores only its newly probed cells' filtered codes and
+    keeps ``n_results * rerank_factor`` ids (the corpus's float
+    vectors are never scanned), and the exact rerank is
+    ``collection_query``'s own tail over just those finalists. A
+    ``rerank_factor`` covering the filtered candidate count makes the
+    result exact (the oracle-checkable configuration). Returns ``(id,
+    document, metadata, score[, distance])`` best-first."""
+    k = _check_ann_args(n_results, rerank_factor)
     manifest, filtered = _query_prologue(
         spark, root, name, [query_vector], where, where_document
     )
-    encoded, C, books, rot = ivf_pq_read(
-        spark, index_path, verify_source=verify_source, with_rotation=True,
+    C, score_round = _pq_index(
+        spark, root, name, index_path, filtered, [query_vector], where,
+        where_document, verify_source, k * int(rerank_factor),
     )
-    idx_id = _cells_cols(encoded)[0]
-    order = _cell_order(C, query_vector, "l2")[0]
-    cand, p = _kfill(
-        _probed(filtered, encoded, order), 1, k=int(n_results),
-        n_cells=len(C), nprobe=nprobe, batch=False, stats_out=stats_out,
-    )
-    # ADC prescreen over the settled cells' FILTERED codes only, then
-    # exact rerank through the shared tail
-    fil_codes = _restrict(
-        encoded.filter(F.col("ivf_cell").isin([int(c) for c in order[:p]])),
-        cand,
-    )
-    prescreen = ivf_pq_search(
-        fil_codes, C, books, query_vector,
-        k=int(n_results) * int(rerank_factor), id_col=idx_id, nprobe=p,
-        rotation=rot,
-    ).select(F.col(idx_id).cast("string").alias("id"))
+    finalists = _kfill(
+        score_round, _orders(C, [query_vector], "l2"), k=k, nprobe=nprobe,
+        width=k * int(rerank_factor), stats_out=stats_out,
+    )[0]
     return _serve_topk(
-        filtered.join(F.broadcast(prescreen), "id", "left_semi"),
+        filtered.filter(F.col("id").isin([str(i) for i in finalists])),
         manifest.metric,
         query_vector,
-        n_results,
+        k,
         score_decimals=score_decimals,
         include_distance=include_distance,
     )
@@ -946,43 +1119,71 @@ def collection_query_batch_ivf_pq(
     batch paths: ``(qid, rank, id, document, metadata, score[,
     distance])``.
 
-    The filtered collection semi-restricts the code table once (the
-    float vectors are never scanned for candidate generation); each
-    ``_kfill`` round runs ``pq.ivf_pq_knn_join`` for the pending
-    queries, ADC-prescreening them against their ``p`` nearest cells
-    to ``n_results * rerank_factor`` candidates, and
-    ``_serve_topk_batch`` reranks the survivors exactly under the
-    manifest's metric — so a ``rerank_factor`` covering the filtered
-    candidate count makes every row equal the exact batch path's."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
-        ivf_pq_knn_join,
-        ivf_pq_read,
-    )
-
+    The single door's round, for every pending query at once: one
+    ADC pass over the union of the queries' newly probed cells keeps
+    each query's top ``n_results * rerank_factor`` (the float vectors
+    are never scanned for candidate generation), and
+    ``_serve_topk_batch`` reranks the finalists exactly under the
+    manifest's metric — so each query's rows equal
+    ``collection_query_ivf_pq``'s, and a ``rerank_factor`` covering
+    the filtered candidate count makes every row equal the exact
+    batch path's."""
+    k = _check_ann_args(n_results, rerank_factor)
     manifest, filtered = _query_prologue(
         spark, root, name, query_vectors, where, where_document
     )
-    encoded, C, books, rot = ivf_pq_read(
-        spark, index_path, verify_source=verify_source, with_rotation=True,
+    C, score_round = _pq_index(
+        spark, root, name, index_path, filtered, query_vectors, where,
+        where_document, verify_source, k * int(rerank_factor),
     )
-    idx_id = _cells_cols(encoded)[0]
-    codes = _restrict(encoded, filtered)
-    cand, _ = _kfill(
-        lambda pending, p, _ef: _pairs(
-            ivf_pq_knn_join(
-                _query_frame(spark, query_vectors, pending), codes, C, books,
-                k=int(n_results) * int(rerank_factor),
-                id_col=idx_id, nprobe=p, rotation=rot,
-                score_decimals=score_decimals,
-            )
-        ),
-        len(query_vectors), k=int(n_results), n_cells=len(C),
-        nprobe=nprobe, batch=True, stats_out=stats_out,
+    pairs = _kfill(
+        score_round, _orders(C, query_vectors, "l2"), k=k, nprobe=nprobe,
+        width=k * int(rerank_factor), stats_out=stats_out,
     )
     return _serve_topk_batch(
-        cand, filtered, _query_frame(spark, query_vectors), manifest.metric,
-        n_results, score_decimals=score_decimals,
+        spark, {q: [str(i) for i in v] for q, v in pairs.items()}, filtered,
+        query_vectors, manifest.metric, k, score_decimals=score_decimals,
         include_distance=include_distance,
+    )
+
+
+def _graph_index(spark, root, name, index_path, query_vectors, where,
+                 where_document, verify_source, ef, k):
+    """The graph doors' index read: ``(cells, orders, direct, ef,
+    beam)``, where ``beam(work, ef)`` runs one per-cell beam pass
+    (``graph_ann._serve_cells``) for every ``(qid, cells)`` pair of a
+    round and yields its live ``(qid, id)`` rows."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
+        _serve_cells,
+        graph_index_read,
+    )
+
+    cells, C, meta = graph_index_read(
+        spark, index_path, verify_source=verify_source
+    )
+    direct = _scores_cells_directly(
+        meta, root, name, where, where_document, verify_source
+    )
+
+    def beam(work, e):
+        per_cell = _serve_cells(
+            spark, index_path,
+            [(str(q), query_vectors[q]) for q, _ in work],
+            k=k, nprobe=1, ef=e, cells=[c for _, c in work],
+            verify_source=False,  # fenced once above
+        )
+        return (
+            per_cell.filter(F.col("neighbor_id").isNotNull())
+            .select(
+                F.col("qid").cast("int").alias("qid"),
+                F.col("neighbor_id").alias("id"),
+            )
+            .dropDuplicates(["qid", "id"])
+        )
+
+    return (
+        cells, _orders(C, query_vectors, "cosine"), direct,
+        max(int(ef) if ef is not None else 4 * k, k), beam,
     )
 
 
@@ -1008,43 +1209,38 @@ def collection_query_graph(
     pre-filters; cosine collections only (``EngineError`` otherwise —
     the graph generates candidates by cosine). Each ``_kfill`` round
     runs the per-cell beam (``ef``, default 4 * n_results) over the
-    probed cells — ~probed_cells * ef rows scored, the budget rather
-    than the probed row count — and keeps the filtered rows it
-    reached. The k-fill is two-dimensional here: once every cell is
-    probed ``ef`` saturates, so with the filter off the exhausted
-    answer equals ``collection_query`` byte-for-byte. Survivors rerank
-    through the shared ``_serve_topk`` tail. Returns ``(id, document,
+    newly probed cells — ~cells * ef rows scored, the budget rather
+    than the probed row count — and keeps the exact top
+    ``n_results`` of the filtered rows it reached. The k-fill is
+    two-dimensional here: once every cell is probed ``ef`` saturates,
+    so with the filter off the exhausted answer equals
+    ``collection_query`` byte-for-byte. The finalists rerank through
+    the shared ``_serve_topk`` tail. Returns ``(id, document,
     metadata, score[, distance])`` — ``collection_query``'s
     contract."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
-        _serve_cells,
-        graph_index_read,
-    )
-
+    k = _check_ann_args(n_results)
     manifest, filtered = _query_prologue(
         spark, root, name, [query_vector], where, where_document,
         cosine_only=True,
     )
-    _cells, C, _meta = graph_index_read(
-        spark, index_path, verify_source=verify_source
+    cells, orders, direct, ef0, beam = _graph_index(
+        spark, root, name, index_path, [query_vector], where,
+        where_document, verify_source, ef, k,
     )
-    k = int(n_results)
 
-    def candidates(_pending, p, e):
-        per_cell = _serve_cells(
-            spark, index_path, [("0", query_vector)], k=k, nprobe=p, ef=e,
-            verify_source=False,  # fenced once above
+    def score_round(work, _p, e):
+        rows = _in_cells(cells, work).select("id", "embedding") if direct else filtered
+        return _exact_round(
+            rows.join(beam(work, e).select("id"), "id", "left_semi"),
+            manifest.metric, query_vector, k, score_decimals,
         )
-        ids = per_cell.select(F.col("neighbor_id").alias("id")).dropDuplicates(["id"])
-        return filtered.join(ids, "id", "left_semi")
 
-    cand, _ = _kfill(
-        candidates, 1, k=k, n_cells=len(C), nprobe=nprobe,
-        ef=max(int(ef) if ef is not None else 4 * k, k), batch=False,
-        stats_out=stats_out,
-    )
+    finalists = _kfill(
+        score_round, orders, k=k, nprobe=nprobe, width=k,
+        asc=manifest.metric == "l2", ef=ef0, stats_out=stats_out,
+    )[0]
     return _serve_topk(
-        cand,
+        filtered.filter(F.col("id").isin(finalists)),
         manifest.metric,
         query_vector,
         k,
@@ -1073,51 +1269,39 @@ def collection_query_batch_graph(
     """Batch ``collection.query`` through the persisted GRAPH index
     with optional pre-filters; cosine collections only. Each
     ``_kfill`` round runs one per-cell beam pass for every pending
-    query (``graph_ann._serve_cells``: the queries' probed cells union
-    into one partition-pruned scan), and ``_serve_topk_batch`` reranks
-    the filtered candidates under the manifest's metric — so each
-    query's rows equal ``collection_query_graph``'s, and exhausted
-    results equal the exact batch path byte-for-byte. Output:
-    ``(qid, rank, id, document, metadata, score[, distance])`` ordered
-    (qid, rank)."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
-        _serve_cells,
-        graph_index_read,
-    )
-
+    query over its newly probed cells (``graph_ann._serve_cells``:
+    the cells union into one partition-pruned scan) and collects the
+    filtered ``(qid, id)`` pairs the beams reached;
+    ``_serve_topk_batch`` reranks them under the manifest's metric —
+    so each query's rows equal ``collection_query_graph``'s, and
+    exhausted results equal the exact batch path byte-for-byte.
+    Output: ``(qid, rank, id, document, metadata, score[,
+    distance])`` ordered (qid, rank)."""
+    k = _check_ann_args(n_results)
     manifest, filtered = _query_prologue(
         spark, root, name, query_vectors, where, where_document,
         cosine_only=True,
     )
-    _cells, C, _meta = graph_index_read(
-        spark, index_path, verify_source=verify_source
+    _cells, orders, direct, ef0, beam = _graph_index(
+        spark, root, name, index_path, query_vectors, where,
+        where_document, verify_source, ef, k,
     )
-    k = int(n_results)
 
-    def candidates(pending, p, e):
-        per_cell = _serve_cells(
-            spark, index_path, [(str(q), query_vectors[q]) for q in pending],
-            k=k, nprobe=p, ef=e,
-            verify_source=False,  # fenced once above
-        )
-        return (
-            per_cell.select(
-                F.col("qid").cast("int").alias("qid"),
-                F.col("neighbor_id").alias("id"),
-            )
-            .dropDuplicates(["qid", "id"])
-            .join(filtered.select("id"), "id", "left_semi")
-            .localCheckpoint(eager=True)  # bounded: <= |pending|*p*ef
-        )
+    def score_round(work, _p, e):
+        pairs = beam(work, e)
+        if not direct:
+            pairs = pairs.join(filtered.select("id"), "id", "left_semi")
+        # bounded: <= |pending| * (newly probed cells) * ef pairs; the
+        # saturated-ef round is the exact scan, <= |pending| * filtered rows
+        return [(r["qid"], r["id"], None) for r in pairs.collect()]
 
-    cand, _ = _kfill(
-        candidates, len(query_vectors), k=k, n_cells=len(C), nprobe=nprobe,
-        ef=max(int(ef) if ef is not None else 4 * k, k), batch=True,
+    pairs = _kfill(
+        score_round, orders, k=k, nprobe=nprobe, width=None, ef=ef0,
         stats_out=stats_out,
     )
     return _serve_topk_batch(
-        cand, filtered, _query_frame(spark, query_vectors), manifest.metric,
-        k, score_decimals=score_decimals, include_distance=include_distance,
+        spark, pairs, filtered, query_vectors, manifest.metric, k,
+        score_decimals=score_decimals, include_distance=include_distance,
     )
 
 
