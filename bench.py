@@ -132,6 +132,30 @@ def _tree_cpu_delta(
     return total / clk
 
 
+def _tree_cpu_split(
+    start: dict[tuple[int, int], int], end: dict[tuple[int, int], int]
+) -> dict[str, float]:
+    """``_tree_cpu_delta`` split by process: ``driver`` is this
+    process, ``jvm`` a descendant whose command is ``java``, and
+    ``workers`` every other descendant — in local mode the JVM's
+    Python worker daemon and the workers it forks. The parts sum to
+    the delta; a process that exits before its command is read counts
+    as a worker."""
+    clk = os.sysconf("SC_CLK_TCK")
+    split = dict.fromkeys(("driver", "jvm", "workers"), 0.0)
+    for (pid, startt), ticks in end.items():
+        if pid == os.getpid():
+            part = "driver"
+        else:
+            try:
+                with open(f"/proc/{pid}/comm") as f:
+                    part = "jvm" if f.read().strip() == "java" else "workers"
+            except OSError:
+                part = "workers"
+        split[part] += max(0, ticks - start.get((pid, startt), 0)) / clk
+    return split
+
+
 def _tree_cpu_seconds() -> float:
     """Monotone convenience reading (kept for probes/tests): total
     CPU seconds currently accumulated by the live tree. Deltas of
@@ -213,15 +237,18 @@ def main() -> None:
     timings_min: dict[str, float] = {}
     timings_cpu: dict[str, float] = {}
     timings_cpu_min: dict[str, float] = {}
+    timings_cpu_split: dict[str, dict[str, float]] = {}
 
     def timed(fn, trials: int = 3) -> float:
-        ts, cs = [], []
+        ts, cs, splits = [], [], []
         for _ in range(trials):
             c0 = _tree_cpu_sample()
             t0 = time.perf_counter()
             fn()
             ts.append(time.perf_counter() - t0)
-            cs.append(_tree_cpu_delta(c0, _tree_cpu_sample()))
+            c1 = _tree_cpu_sample()
+            cs.append(_tree_cpu_delta(c0, c1))
+            splits.append(_tree_cpu_split(c0, c1))
         # Median is the contract number; min-of-3 is recorded alongside
         # because it is far more robust to host load spikes for
         # CPU-bound queries (a concurrent job inflates every trial's
@@ -231,6 +258,11 @@ def main() -> None:
         timed.last_min = round(min(ts), 3)
         timed.last_cpu = round(statistics.median(cs), 3)
         timed.last_cpu_min = round(min(cs), 3)
+        # where the CPU went: median of each part over the trials
+        timed.last_cpu_split = {
+            k: round(statistics.median(sp[k] for sp in splits), 3)
+            for k in splits[0]
+        }
         return round(statistics.median(ts), 3)
 
     def record(
@@ -260,6 +292,7 @@ def main() -> None:
             timings_min[name] = timed.last_min
             timings_cpu[name] = timed.last_cpu
             timings_cpu_min[name] = timed.last_cpu_min
+            timings_cpu_split[name] = timed.last_cpu_split
         except Exception as e:  # noqa: BLE001 — containment is the point
             msg = f"{type(e).__name__}: {e}"
             errors[name] = msg[:400]
@@ -1675,6 +1708,7 @@ def main() -> None:
         "queries_min": timings_min,
         "queries_cpu": timings_cpu,
         "queries_cpu_min": timings_cpu_min,
+        "queries_cpu_split": timings_cpu_split,
         "sf": sf,
         "load_avg_start": [round(x, 2) for x in load_start],
         "load_avg_end": [round(x, 2) for x in os.getloadavg()],

@@ -5,6 +5,7 @@ tail always fits the driver's 2000-char capture. No Spark needed."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import time
 
@@ -95,3 +96,22 @@ def test_tree_cpu_delta_counts_live_and_newborn():
     p.stdin.close()
     p.wait()
     assert d >= 1.2, d
+
+
+def test_tree_cpu_split_puts_a_python_child_in_workers():
+    start = bench._tree_cpu_sample()
+    child = (
+        "import time\nt=time.time()\nwhile time.time()-t<0.6: pass\n"
+        "import sys; sys.stdin.read()"
+    )
+    p = subprocess.Popen(["python", "-c", child], stdin=subprocess.PIPE)
+    time.sleep(1.0)
+    end = bench._tree_cpu_sample()
+    split = bench._tree_cpu_split(start, end)
+    total = bench._tree_cpu_delta(start, end)
+    p.stdin.close()
+    p.wait()
+    assert set(split) == {"driver", "jvm", "workers"}
+    assert split["workers"] >= 0.4, split
+    tick = 1 / os.sysconf("SC_CLK_TCK")
+    assert abs(sum(split.values()) - total) <= tick * len(end), (split, total)
