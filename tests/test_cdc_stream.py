@@ -489,3 +489,37 @@ def test_cdc_delete_insert_null_field_clears_stored_value(spark, tmp_path):
     coll2 = read_collection(spark, root, "c")
     assert coll2.count() == 20
     assert coll2.filter(F.col("id") == "4").first()["document"] is None
+
+
+def test_cdc_refuses_a_path_without_vector_index_before_the_wal(spark, tmp_path):
+    # a band-only index path cannot take the batch's vectors: the
+    # batch raises before the verdict recording, the WAL entry and
+    # the collection commit, so no replay re-raises on a pending entry
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
+        band_index_build,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+        collection_etag,
+    )
+
+    root, cfg, _ = _setup(spark, tmp_path, n=6)
+    bidx = str(tmp_path / "band")
+    band_index_build(
+        read_collection(spark, root, "c"), bidx, id_col="id",
+        text_col="document", source=(root, "c"),
+    )
+    before = collection_etag(root, "c")
+    fn = cdc_ingest_batch_fn(bidx, cfg, "cdc_band_only")
+    with pytest.raises(EngineError, match="no vector index sidecar"):
+        fn(
+            spark.createDataFrame(
+                [("insert", 1, "100", "new doc", [1.0] * 4),
+                 ("delete", 1, "2", None, None)],
+                EV_SCHEMA,
+            ),
+            0,
+        )
+    assert collection_etag(root, "c") == before
+    assert read_collection(spark, root, "c").count() == 6
+    log = os.path.join(bidx, "cdc_log.json")
+    assert not os.path.exists(log) or json.load(open(log))["entries"] == []

@@ -1548,6 +1548,126 @@ def test_band_index_refuses_documentless_batches(spark, tmp_path):
     assert n == 1
 
 
+
+@pytest.fixture(scope="module")
+def refusal_paths(spark, tmp_path_factory):
+    """A 6-row collection, a graph index over it and an empty dir."""
+    import os
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.graph_ann import (
+        graph_index_build,
+        graph_index_write,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        collection_add,
+    )
+
+    root = str(tmp_path_factory.mktemp("refuse"))
+    collection_add(spark, root, "r", **_add_kwargs(n=6))
+    assigned, C = graph_index_build(
+        read_collection(spark, root, "r"), n_centroids=2, M=2, seed=1
+    )
+    graph = f"{root}/r/_graph"
+    graph_index_write(
+        assigned, C, graph, M=2, source=(root, "r"), build={"seed": 1}
+    )
+    empty = f"{root}/r/_empty"
+    os.makedirs(empty)
+    return root, {"no sidecar": empty, "graph sidecar": graph}
+
+
+def _write_through(door, spark, root, paths):
+    from vector_databases___hydrate_chroma_db_collection_spark.plans import (
+        chroma_api as api,
+    )
+
+    if door == "add":
+        return api.collection_add(
+            spark, root, "r", ids=["n1"], embeddings=[[0.5, 0.5]],
+            documents=["new"], index_paths=paths,
+        )
+    if door == "upsert":
+        return api.collection_upsert(
+            spark, root, "r", ids=["c0"], embeddings=[[0.5, 0.5]],
+            documents=["moved"], index_paths=paths,
+        )
+    if door == "update":
+        return api.collection_update_indexed(
+            spark, root, "r",
+            spark.createDataFrame(
+                [("c0", [0.5, 0.5])], "id string, embedding array<float>"
+            ),
+            index_paths=paths,
+        )
+    return api.collection_delete_indexed(
+        spark, root, "r", ids=["c1"], index_paths=paths
+    )
+
+
+@pytest.mark.parametrize("door", ["add", "upsert", "update", "delete"])
+def test_write_doors_refuse_bad_index_paths_before_writing(
+    spark, refusal_paths, door
+):
+    """An index path that holds no maintained sidecar, or holds a graph
+    index (which no write door maintains), is refused before the
+    collection commits."""
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+        collection_etag,
+    )
+
+    root, paths = refusal_paths
+    for what, path in paths.items():
+        before = collection_etag(root, "r")
+        with pytest.raises(EngineError, match="Nothing was written"):
+            _write_through(door, spark, root, [path])
+        assert collection_etag(root, "r") == before, what
+    assert collection_count(spark, root, "r") == 6
+
+
+def test_indexed_update_indexes_the_row_the_collection_took(spark, tmp_path):
+    """Two update rows for one id: the collection keeps one of them
+    (per-id dedupe, then a NULL field keeps the stored value), and the
+    index must hold the embedding the collection ended up with."""
+    from pyspark.sql import functions as F
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        ivf_build,
+        ivf_read,
+        ivf_write,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        collection_update_indexed,
+    )
+
+    root = str(tmp_path / "root")
+    hydrate(
+        spark,
+        spark.createDataFrame(
+            [(str(i), f"text {i}", [float(i + j) for j in range(4)])
+             for i in range(12)],
+            "id string, text string, embedding array<float>",
+        ),
+        HydrationConfig(
+            collection_name="c", root=root, id_col="id",
+            text_col="text", embedding_col="embedding",
+        ),
+    )
+    assigned, C = ivf_build(read_collection(spark, root, "c"), n_centroids=2, seed=1)
+    idx = str(tmp_path / "ivf")
+    ivf_write(assigned, C, idx, metric="cosine", source=(root, "c"))
+    updates = spark.createDataFrame(
+        [("2", "new text", None), ("2", None, [9.0] * 4)],
+        "id string, document string, embedding array<float>",
+    )
+    assert collection_update_indexed(
+        spark, root, "c", updates, index_paths=[idx]
+    ) == 1
+    stored = read_collection(spark, root, "c").filter(F.col("id") == "2").first()
+    a, _, _ = ivf_read(spark, idx)  # fence passes
+    assert a.count() == 12
+    assert a.filter(F.col("id") == "2").first()["embedding"] == stored["embedding"]
+
+
 def test_include_parameter_parity(spark, tmp_path):
     """Chroma's literal include=[...] on get/peek/query (r15): the
     caller controls the payload columns (ids always return); unknown
@@ -1644,12 +1764,16 @@ def test_delete_every_row_of_one_bucket(spark, tmp_path):
 # and the delete's tombstones add the mask's broadcast to that round:
 # query = tombstone broadcast + ADC round + finalists' rerank; batch
 # query = tombstone broadcast + ADC round + the batch tail's
-# broadcast of the candidate rows + its scoring collect.
+# broadcast of the candidate rows + its scoring collect. An embedding
+# update of two held ids takes the held rows from one checkpoint
+# (dim check + bucket set + held-rows checkpoint + bucket rewrite,
+# then the index's surgical upsert).
 ADD_JOBS = 3
 UPSERT_JOBS = 4
 DELETE_JOBS = 3
 QUERY_JOBS = 3
 BATCH_QUERY_JOBS = 4
+UPDATE_JOBS = 26
 
 
 def _jobs_in(spark, group, fn):
@@ -1678,6 +1802,7 @@ def test_indexed_front_doors_job_budget(spark, tmp_path):
         collection_delete_indexed,
         collection_query_batch_ivf_pq,
         collection_query_ivf_pq,
+        collection_update_indexed,
         collection_upsert,
     )
 
@@ -1713,6 +1838,10 @@ def test_indexed_front_doors_job_budget(spark, tmp_path):
     )
     plan = frame._jdf.queryExecution().optimizedPlan().toString()
     assert plan.startswith("LocalRelation"), plan
+    updates = spark.createDataFrame(
+        [("d3", X[56].tolist()), ("d4", X[57].tolist())],
+        "id string, embedding array<float>",
+    )
 
     got = {
         "add": _jobs_in(spark, "budget_add", lambda: collection_add(
@@ -1728,10 +1857,12 @@ def test_indexed_front_doors_job_budget(spark, tmp_path):
             spark, root, name, [X[7].tolist(), X[9].tolist()], 5,
             index_path=idx, nprobe=4,
         ).collect()),
+        "update": _jobs_in(spark, "budget_update", lambda: collection_update_indexed(
+            spark, root, name, updates, index_paths=[idx])),
     }
     assert collection_count(spark, root, name) == 52
     assert got == {
         "add": ADD_JOBS, "upsert": UPSERT_JOBS,
         "delete": DELETE_JOBS, "query": QUERY_JOBS,
-        "batch_query": BATCH_QUERY_JOBS,
+        "batch_query": BATCH_QUERY_JOBS, "update": UPDATE_JOBS,
     }

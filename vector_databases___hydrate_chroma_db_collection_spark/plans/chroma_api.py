@@ -1,4 +1,4 @@
-"""Chroma's read-side and delete API over managed collections.
+"""Chroma's client API over managed collections.
 
 The reference only ever WRITES a collection (``collection.add``,
 sas:177-190) and counts it (sas:134,193); retrieval is delegated to
@@ -19,12 +19,46 @@ re-expresses it Spark-first over the managed Parquet layout:
   an id-list lookup filters on the ``id_bucket`` hive-partition
   column, so the scan prunes to the O(|ids|) buckets the ids hash
   into — a point read touches ~1/n_buckets of a 100 TB collection.
-- ``collection_delete`` = ``collection.delete(ids=..., where=...)``.
-  On a bucketed layout an id-list delete rewrites ONLY the affected
-  buckets (dynamic partition overwrite, same pruning contract as
-  upsert); predicate deletes and flat layouts rewrite into a fresh
-  versioned dir and atomically swap the ``_current`` pointer, so
-  readers never observe a half-deleted collection.
+- ``collection_add`` / ``collection_upsert`` / ``collection_update``
+  / ``collection_delete`` = Chroma's four write calls, each keeping
+  the persisted indexes at its ``index_paths`` servable.
+
+Write path. Every write door, and each batch of the CDC loop
+(``streaming/cdc_stream.py``), runs the same steps:
+
+1. ``_index_targets`` lists each ``index_paths`` entry once and,
+   before any write, refuses a path that holds none of
+   ``ivf_index.json`` / ``ivf_pq_index.json`` / ``band_index.json``
+   (several may share a directory), or that holds a graph index,
+   which no write door maintains.
+2. The collection commits: hydrate's append, or the atomic swap of
+   the ``_current`` pointer to a fresh versioned dir. Readers see the
+   collection before the write or after it, never in between.
+3. Each index then takes the change and is re-stamped to the new
+   collection etag: inserts through ``_indexes_insert``, deletes as
+   tombstones, updates as a surgical cell upsert or a band text
+   apply / deferral; an index whose content the write left valid is
+   only re-stamped. With no ``index_paths`` a door is the plain
+   collection write.
+
+``fence`` picks the etag each index mutation expects the index to
+record. ``"collection"`` (default) pins it to the collection etag
+read before step 2, so a foreign mutation since the index's last
+stamp raises ``StaleIndexError``. ``"recorded"`` pins it to the etag
+the index itself records. That exists for WAL-recorded replays (the
+CDC loop): a retry after a crash between steps 2 and 3 finds the
+collection etag moved by its own first attempt, so the default
+fence would refuse forever. Self-fencing is sound ONLY when the
+caller serializes all writers and holds a durable record proving
+the retried write identical to the crashed one (the CDC WAL's
+content-qualified tag).
+
+Crash posture: a crash between the collection commit and an index's
+commit leaves that index honestly stale — its fence refuses to
+serve, so it never serves rows the collection no longer holds. Heal
+it by re-running the index mutation (``ivf_delete`` /
+``ivf_upsert`` with the same rows) or rebuilding it; the CDC loop's
+replay heals it with ``fence="recorded"``.
 
 ``where`` compilation covers Chroma's documented operator set
 (implicit equality, ``$eq/$ne/$gt/$gte/$lt/$lte/$in/$nin``, and
@@ -49,22 +83,26 @@ identically; this engine just accepts a superset.
 from __future__ import annotations
 
 import numbers
+import os
 import shutil
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from vector_databases___hydrate_chroma_db_collection_spark.errors import EngineError
 from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
     _cells_cols,
+    _local_sidecar_path,
     _outside,
     _read_cells,
+    read_sidecar,
 )
 from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
     _buckets_for_ids,
     clone_untouched_buckets,
+    collection_etag,
     current_data_dir,
     load_manifest,
     next_data_dir,
@@ -298,115 +336,6 @@ def collection_peek(
     )
     df = read_collection(spark, root, name)
     return df.orderBy("id").limit(n).select("id", *payload)
-
-
-def collection_update(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    updates: DataFrame,
-    *,
-    retain_previous: bool = False,
-) -> int:
-    """``collection.update``: overwrite document / metadata /
-    embedding for EXISTING ids; ids not present in the collection are
-    ignored (Chroma logs-and-skips rather than inserting — use the
-    hydrate ``on_duplicate='upsert'`` path for insert-or-update).
-    Returns how many rows were updated.
-
-    ``updates`` must have an ``id`` column plus any subset of
-    ``document`` / ``metadata`` / ``embedding``; unmentioned fields
-    keep their stored values (per-row coalesce after a left join).
-    Embedding updates are dim-validated against the manifest before
-    any rewrite. Bucketed layouts rewrite only the buckets the
-    updated ids hash into, hardlink-clone the untouched buckets into
-    the same fresh versioned dir, and swap the ``_current`` pointer;
-    flat layouts rewrite the whole set into a fresh dir and swap.
-    Either way the swap is the single atomic commit point — readers
-    see the whole update or none of it, and a crash mid-rewrite
-    leaves the collection on its prior complete state.
-    """
-    manifest = load_manifest(root, name)
-    bucketed = bool(manifest.n_buckets)
-    upd_cols = set(updates.columns)
-    if "id" not in upd_cols:
-        raise EngineError("updates needs an 'id' column")
-    payload = [c for c in ("document", "metadata", "embedding") if c in upd_cols]
-    if not payload:
-        raise EngineError("updates needs document, metadata and/or embedding")
-
-    u = updates.select(
-        F.col("id").cast("string").alias("id"),
-        *[F.col(c).alias(f"_u_{c}") for c in payload],
-    ).dropDuplicates(["id"])
-    if "embedding" in payload:
-        bad = (
-            u.filter(
-                F.col("_u_embedding").isNotNull()
-                & (F.size("_u_embedding") != manifest.dim)
-            ).limit(1).count()
-        )
-        if bad:
-            raise EngineError(
-                f"update embeddings must have dim {manifest.dim}"
-            )
-        u = u.withColumn("_u_embedding", F.col("_u_embedding").cast("array<float>"))
-
-    df = read_collection(spark, root, name, include_bucket=bucketed)
-    scoped = df
-    if bucketed:
-        # Distributed bucket pruning: hash each update id to its bucket
-        # ON THE UPDATE FRAME and collect only the DISTINCT bucket set
-        # (bounded by n_buckets, never O(updates)) — a bulk update with
-        # millions of ids ships a few hundred ints to the driver, not
-        # the id list. The literal IN-list on the hive-partition column
-        # keeps static partition pruning.
-        buckets = [
-            r["b"]
-            for r in u.select(
-                F.pmod(F.xxhash64("id"), F.lit(manifest.n_buckets)).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        scoped = df.filter(F.col("id_bucket").isin(buckets))
-    # Cheap existence probe only — the exact matched count is observed
-    # inside the rewrite job itself (below), so an update costs the
-    # probe plus ONE pass over the scoped rows, not a separate
-    # full-count job (same Observation pattern as collection_delete).
-    if scoped.join(u, "id", "left_semi").limit(1).count() == 0:
-        return 0
-
-    from pyspark.sql import Observation
-
-    obs = Observation("update_matched")
-    matched_flag = F.col("_u_hit").isNotNull()
-    merged = (
-        scoped.join(u.withColumn("_u_hit", F.lit(True)), "id", "left")
-        .observe(obs, F.sum(matched_flag.cast("long")).alias("matched"))
-        .select(
-            "id",
-            *[
-                (
-                    F.coalesce(F.col(f"_u_{c}"), F.col(c)).alias(c)
-                    if c in payload
-                    else F.col(c)
-                )
-                for c in ("document", "embedding", "metadata")
-            ],
-            *(["id_bucket"] if bucketed else []),
-        )
-    )
-    staging = next_data_dir(root, manifest.name)
-    if bucketed:
-        merged.write.mode("overwrite").partitionBy("id_bucket").parquet(staging)
-        clone_untouched_buckets(
-            current_data_dir(root, manifest.name), staging, set(buckets)
-        )
-    else:
-        merged.write.mode("overwrite").parquet(staging)
-    swap_data_dir(root, manifest.name, staging, retain=retain_previous)
-    return int(obs.get["matched"])
 
 
 def collection_query(
@@ -786,8 +715,6 @@ def _scores_cells_directly(
     unstamped index, or ``verify_source=False``, keeps the
     semi-join. The rerank still reads the finalists from the
     collection."""
-    import os
-
     src = meta.get("source")
     return (
         where is None
@@ -1366,6 +1293,53 @@ def collection_query_batch(
     return out.select(*cols).orderBy("qid", "rank")
 
 
+_VECTOR_SIDECARS = ("ivf_index.json", "ivf_pq_index.json")
+_BAND = "band_index.json"
+
+
+def _index_targets(index_paths, who: str) -> list[tuple[str, str, set]]:
+    """``(path, local dir, sidecar kinds held)`` per ``index_paths``
+    entry, from one directory listing each. Raises before any write
+    when a path holds no maintained sidecar, or holds a graph index."""
+    targets = []
+    for path in index_paths:
+        p = _local_sidecar_path(path)
+        held = set(os.listdir(p)) if os.path.isdir(p) else set()
+        if "graph_index.json" in held:
+            raise EngineError(
+                f"{who}: {path!r} holds a graph index (graph_index.json), "
+                "which the write doors cannot maintain; leave it out of "
+                "index_paths and rebuild it with graph_index_write after "
+                "the write. Nothing was written."
+            )
+        kinds = held.intersection((*_VECTOR_SIDECARS, _BAND))
+        if not kinds:
+            raise EngineError(
+                f"{who}: no index sidecar found at {path!r} (expected "
+                "ivf_index.json, ivf_pq_index.json or band_index.json). "
+                "Nothing was written."
+            )
+        targets.append((path, p, kinds))
+    return targets
+
+
+def _fence_etag(fence: str, root: str, name: str, targets):
+    """Validate ``fence`` and return the ``(local dir, sidecar) ->
+    expected_prev_etag`` of the doors' index mutations (module
+    docstring); ``None`` when there is no index to fence."""
+    if fence not in ("collection", "recorded"):
+        raise EngineError(
+            f"fence must be 'collection' or 'recorded', got {fence!r}"
+        )
+    if not targets:
+        return None
+    if fence == "recorded":
+        # a sidecar built without a source stamp fences nothing
+        return lambda p, sc: (read_sidecar(p, sc).get("source") or {}).get("etag")
+    before = collection_etag(root, name)
+    return lambda p, sc: before
+
+
 def collection_delete(
     spark: SparkSession,
     root: str,
@@ -1374,11 +1348,17 @@ def collection_delete(
     ids: list[str] | None = None,
     where: dict | None = None,
     where_document: dict | None = None,
+    index_paths: list[str] | tuple[str, ...] = (),
     retain_previous: bool = False,
+    fence: str = "collection",
 ) -> int:
-    """``collection.delete``: remove matching rows, return how many.
-    ``retain_previous`` keeps the pre-delete data dir readable as a
-    version (``read_collection(version=...)``) until vacuum.
+    """``collection.delete``: remove matching rows, return how many,
+    and tombstone them in every index at ``index_paths`` (vector
+    indexes via ``ann.ivf_delete``, a band index via
+    ``band_index_delete``, which also retires the deleted docs'
+    unshared bucket keys). ``retain_previous`` keeps the pre-delete
+    data dir readable as a version (``read_collection(version=...)``)
+    until vacuum.
 
     Bucketed layout + id-list: rewrites only the buckets the ids hash
     into; cost scales with touched buckets, not collection size. The
@@ -1390,19 +1370,19 @@ def collection_delete(
     into a fresh versioned dir and swap the same pointer. Every path
     counts the deleted rows inside its rewrite job; a delete that
     matched nothing drops its staging dir and leaves the pointer (and
-    so the etag) where it was.
+    so the etag) where it was, and the indexes still take the ids (a
+    replay heals an index a crashed call left stale).
 
-    Consistency contract: EVERY path commits through the atomic
-    pointer swap — readers see the collection before the delete or
-    after it, never mixed bucket state, and a crash at any point
-    leaves the pointer naming a complete dir (the stale staging dir is
-    vacuum_collection's job).
-    """
-    from pyspark.sql import Observation
-
+    With indexes, an id-list delete hands each index the list as is
+    (dedupe, the tombstone anti-join and the Bloom prescreen run on
+    the driver, then one pushed ``IN`` probe of the cells' id column);
+    a predicate delete first captures the doomed ids in one
+    checkpointed scan, before the rows vanish."""
     if ids is None and where is None and where_document is None:
         raise EngineError("delete needs ids and/or a where predicate")
+    targets = _index_targets(index_paths, "collection_delete")
     manifest = load_manifest(root, name)
+    fenced = _fence_etag(fence, root, name, targets)
     bucketed = bool(manifest.n_buckets)
     df = read_collection(spark, root, name, include_bucket=bucketed)
 
@@ -1416,8 +1396,13 @@ def collection_delete(
     # NULL predicate (missing metadata key) means "not matched": keep.
     doomed = F.coalesce(cond, F.lit(False))
 
+    id_list = where is None and where_document is None
+    if id_list:
+        gone = [str(i) for i in ids]
+    elif targets:
+        gone = df.filter(doomed).select("id").localCheckpoint(eager=True)
     touched = None
-    if bucketed and ids is not None and where is None and where_document is None:
+    if bucketed and id_list:
         touched = _buckets_for_ids(spark, ids, manifest.n_buckets)
         df = df.filter(F.col("id_bucket").isin(touched))
     staging = next_data_dir(root, manifest.name)
@@ -1435,184 +1420,36 @@ def collection_delete(
     deleted = int(obs.get["n"] or 0)
     if deleted == 0:
         shutil.rmtree(staging, ignore_errors=True)
-        return 0
-    if touched is not None:
-        clone_untouched_buckets(
-            current_data_dir(root, manifest.name), staging, set(touched)
-        )
-    swap_data_dir(root, manifest.name, staging, retain=retain_previous)
-    return deleted
-
-
-def _fence_etag(
-    fence: str, etag_before: str, p: str, sidecar: str
-) -> str | None:
-    """Resolve the ``expected_prev_etag`` an indexed mutation should
-    pin, per the composed front doors' ``fence`` contract:
-    ``"collection"`` -> the collection etag observed before the
-    collection mutation (foreign-mutation fence); ``"recorded"`` ->
-    the etag the sidecar at ``p/sidecar`` itself records (WAL-recorded
-    replay heal — see ``collection_delete_indexed``). A sidecar built
-    without a source stamp fences nothing under ``"recorded"``."""
-    if fence == "collection":
-        return etag_before
-    if fence != "recorded":
-        raise EngineError(
-            f"fence must be 'collection' or 'recorded', got {fence!r}"
-        )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        read_sidecar,
-    )
-
-    src = read_sidecar(p, sidecar).get("source")
-    return src["etag"] if src else None
-
-
-def collection_delete_indexed(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    *,
-    ids: list[str] | None = None,
-    where: dict | None = None,
-    where_document: dict | None = None,
-    index_paths: list[str] | tuple[str, ...] = (),
-    retain_previous: bool = False,
-    fence: str = "collection",
-) -> int:
-    """``collection.delete`` that keeps the collection's persisted
-    ANN indexes SERVABLE: tombstone the deleted ids in every index at
-    ``index_paths`` (``ann.ivf_delete`` — never a data rewrite) and
-    re-stamp them to
-    the post-delete etag, so the etag
-    fence that would otherwise make every ``ivf_read`` raise
-    ``StaleIndexError`` until a full k-means ``ivf_refresh`` passes
-    again immediately. Each path is probed for ALL THREE sidecar
-    kinds (``ivf_index.json`` / ``ivf_pq_index.json`` /
-    ``band_index.json`` — they may cohabit one directory) and every
-    one found is tombstoned: vector indexes via ``ann.ivf_delete``,
-    the near-dup band index via ``band_index_delete`` (which ALSO
-    retires the deleted docs' unshared bucket keys, so the novelty
-    gate stops blocking near-duplicates of removed content).
-
-    Sequencing and crash window: the doomed id set is resolved and
-    materialized FIRST (one predicate scan — the ids must be captured
-    before the rows vanish), the collection delete commits through
-    its atomic pointer swap, then each index tombstones with the
-    PRE-delete etag as its foreign-mutation fence. A crash between
-    the swap and an index's tombstone commit leaves that index
-    honestly stale (its fence refuses to serve) — re-run
-    ``ivf_delete`` with the same ids, or ``ivf_refresh``; it can
-    never silently serve the deleted rows.
-
-    ``fence``: ``"collection"`` (default) pins every index mutation
-    to the PRE-delete collection etag — any foreign mutation between
-    stampings raises ``StaleIndexError``. ``"recorded"`` pins each
-    index mutation to that index's OWN recorded stamp instead; this
-    exists for WAL-recorded replays (``streaming/cdc_stream.py``):
-    a retry after a crash between the collection commit and an index
-    tombstone finds the collection etag already moved by its own
-    first attempt, so the default fence would refuse forever. Self-
-    fencing is sound ONLY when the caller serializes all writers and
-    holds a durable record proving the retried mutation is byte-
-    identical to the crashed one (the CDC WAL's content-qualified
-    tag). Returns the number of collection rows deleted.
-
-    Per-call cost of an id-list delete: O(batch) on the driver plus
-    one id-column probe per index. The list goes to each index as is:
-    dedupe, the tombstone anti-join and the Bloom prescreen run in
-    Python, and one pushed ``IN`` probe of the cells' id column finds
-    the ids to record. The collection side rewrites the touched
-    buckets and counts the deleted rows in the same job."""
+    else:
+        if touched is not None:
+            clone_untouched_buckets(
+                current_data_dir(root, manifest.name), staging, set(touched)
+            )
+        swap_data_dir(root, manifest.name, staging, retain=retain_previous)
+    if not targets:
+        return deleted
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         ivf_delete,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _local_sidecar_path,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        collection_etag,
-    )
-
-    if ids is None and where is None and where_document is None:
-        raise EngineError("delete needs ids and/or a where predicate")
-    if fence not in ("collection", "recorded"):
-        raise EngineError(
-            f"fence must be 'collection' or 'recorded', got {fence!r}"
-        )
-    etag_before = collection_etag(root, name)
-    if where is None and where_document is None:
-        # pure id-list delete: the doomed set IS the list — no scan,
-        # and each index settles it on the driver (ids absent from an
-        # index are dropped by its Bloom prescreen)
-        doomed = [str(i) for i in ids]
-    else:
-        cond = F.lit(True)
-        if ids is not None:
-            cond = cond & F.col("id").isin([str(i) for i in ids])
-        if where is not None:
-            cond = cond & compile_where(where)
-        if where_document is not None:
-            cond = cond & compile_where_document(where_document)
-        doomed = (
-            read_collection(spark, root, name)
-            .filter(F.coalesce(cond, F.lit(False)))
-            .select("id")
-            .localCheckpoint(eager=True)
-        )
-    n = collection_delete(
-        spark,
-        root,
-        name,
-        ids=ids,
-        where=where,
-        where_document=where_document,
-        retain_previous=retain_previous,
-    )
-    import os
-
     from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
         band_index_delete,
     )
 
-    for path in index_paths:
-        p = _local_sidecar_path(path)
-        found = False
-        for sc in ("ivf_index.json", "ivf_pq_index.json"):
-            if os.path.exists(os.path.join(p, sc)):
-                found = True
+    for path, p, kinds in targets:
+        for sc in _VECTOR_SIDECARS:
+            if sc in kinds:
                 ivf_delete(
-                    spark,
-                    path,
-                    doomed,
-                    sidecar=sc,
-                    expected_prev_etag=_fence_etag(fence, etag_before, p, sc),
+                    spark, path, gone, sidecar=sc,
+                    expected_prev_etag=fenced(p, sc),
                 )
-        if os.path.exists(os.path.join(p, "band_index.json")):
-            found = True
+        if _BAND in kinds:
             band_index_delete(
-                spark,
-                path,
-                # the literal list of an id-list delete lets the band
-                # delete's isin pushdown row-group-prune its ids-part
-                # lookup
-                doomed,
-                expected_prev_etag=_fence_etag(
-                    fence, etag_before, p, "band_index.json"
-                ),
+                spark, path, gone, expected_prev_etag=fenced(p, _BAND)
             )
-        if not found:
-            raise EngineError(
-                f"collection_delete_indexed: no index sidecar found at "
-                f"{path!r} (expected ivf_index.json, ivf_pq_index.json "
-                "or band_index.json) — the collection delete has "
-                "already committed; tombstone the index manually once "
-                "the path is corrected"
-            )
-    return n
+    return deleted
 
 
-def collection_update_indexed(
+def collection_update(
     spark: SparkSession,
     root: str,
     name: str,
@@ -1623,29 +1460,32 @@ def collection_update_indexed(
     fence: str = "collection",
     band_text_mode: str = "refuse",
 ) -> int:
-    """``collection.update`` that keeps the persisted VECTOR indexes
-    servable: after the collection's atomic rewrite, surgically upsert
-    the updated embeddings into every IVF / IVF-PQ index at
-    ``index_paths`` (``ann.ivf_upsert`` / ``pq.ivf_pq_upsert`` — only
-    the touched cell partitions rewrite, untouched cells hardlink-
-    clone forward, one sidecar swap per index) and re-stamp, so the
-    etag fence passes without an ``ivf_refresh``. Updates that carry
-    no ``embedding`` column (document/metadata-only) leave the vector
-    content valid — the indexes just re-stamp (the ``ivf_delete``
-    empty-batch heal path). Only ids the collection actually holds
-    are upserted (``collection.update`` ignores unknown ids — Chroma
-    semantics — and indexing a vector the collection rejected would
-    diverge the two); rows whose ``embedding`` is NULL keep their
-    stored vector (the update's per-field coalesce) and are likewise
-    skipped.
+    """``collection.update``: overwrite document / metadata /
+    embedding for EXISTING ids; ids not present in the collection are
+    ignored (Chroma logs-and-skips rather than inserting — use the
+    hydrate ``on_duplicate='upsert'`` path for insert-or-update).
+    Returns how many rows were updated.
 
-    Text updates on a path holding a BAND index: changed text
-    invalidates the doc's shingle/band rows, and the id-free serving
-    layout has no surgical row replacement — the honest unit is a
-    part rewrite. ``band_text_mode`` picks the posture:
+    ``updates`` must have an ``id`` column plus any subset of
+    ``document`` / ``metadata`` / ``embedding``; unmentioned fields
+    keep their stored values (per-row coalesce after a left join), and
+    so do NULL fields. Embedding updates are dim-validated against the
+    manifest before any rewrite. Bucketed layouts rewrite only the
+    buckets the updated ids hash into, hardlink-clone the untouched
+    buckets into the same fresh versioned dir, and swap the
+    ``_current`` pointer; flat layouts rewrite the whole set into a
+    fresh dir and swap.
 
-    - ``"refuse"`` (default): raise UP FRONT, no mutation performed —
-      the conservative pre-r13 contract.
+    Indexes at ``index_paths`` take exactly the rows the collection
+    took: one per held id, after the id dedupe. IVF / IVF-PQ indexes
+    upsert the non-NULL embeddings surgically (``ann.ivf_upsert`` /
+    ``pq.ivf_pq_upsert``); an index whose content the update leaves
+    valid is only re-stamped. Changed text on a path holding a BAND
+    index invalidates the doc's shingle/band rows, and the id-free
+    layout's honest unit of change is a part rewrite;
+    ``band_text_mode`` picks the posture:
+
+    - ``"refuse"`` (default): raise UP FRONT, no mutation performed.
     - ``"apply_now"``: route the ``(id, document)`` pairs through
       ``band_index_apply`` — ONE atomic part rewrite (compact-cost,
       however many updates ride along); the index serves the new
@@ -1655,56 +1495,17 @@ def collection_update_indexed(
       the PRE-update bands until the next ``band_index_compact``
       drains the queue — ``band_index_audit`` reports the queue and
       flips ``compact_recommended``, so a maintenance loop bounds
-      the window. The streaming CDC posture.
-
-    (Embedding/metadata-only updates leave band content valid
-    whatever the mode; such paths just re-stamp via the band delete's
-    empty-batch heal.)
-
-    Same crash posture as ``collection_delete_indexed``: the
-    collection commit is the pointer swap; a crash before an index's
-    upsert leaves that index honestly stale (fence refuses); and the
-    same ``fence`` escape hatch — ``"recorded"`` pins each index
-    mutation to its own recorded stamp so a WAL-recorded replay (the
-    CDC loop) can heal through the crash window instead of fencing
-    against its own first attempt's etag movement forever. Returns
-    the number of collection rows updated."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-        ivf_delete,
-        ivf_upsert,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _local_sidecar_path,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
-        band_index_delete,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
-        ivf_pq_upsert,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        collection_etag,
-    )
-    import os
-
-    if fence not in ("collection", "recorded"):
-        raise EngineError(
-            f"fence must be 'collection' or 'recorded', got {fence!r}"
-        )
+      the window. The streaming CDC posture."""
     if band_text_mode not in ("refuse", "apply_now", "defer"):
         raise EngineError(
             "band_text_mode must be 'refuse', 'apply_now' or 'defer', "
             f"got {band_text_mode!r}"
         )
-    has_embedding = "embedding" in updates.columns
-    has_document = "document" in updates.columns
-    band_text_paths = []
-    for path in index_paths:
-        p = _local_sidecar_path(path)
-        if has_document and os.path.exists(
-            os.path.join(p, "band_index.json")
-        ):
-            if band_text_mode == "refuse":
+    targets = _index_targets(index_paths, "collection_update")
+    upd_cols = set(updates.columns)
+    if "document" in upd_cols and band_text_mode == "refuse":
+        for path, _, kinds in targets:
+            if _BAND in kinds:
                 raise EngineError(
                     "collection_update_indexed: the updates carry a "
                     f"'document' column and {path!r} holds a band "
@@ -1716,126 +1517,162 @@ def collection_update_indexed(
                     "cadence), or run band_index_refresh. No mutation "
                     "was performed."
                 )
-            band_text_paths.append(path)
-    etag_before = collection_etag(root, name)
-    doc_batch = None
-    if band_text_paths:
-        doc_batch = (
-            updates.select(
-                F.col("id").cast("string").alias("id"), "document"
+    manifest = load_manifest(root, name)
+    fenced = _fence_etag(fence, root, name, targets)
+    bucketed = bool(manifest.n_buckets)
+    if "id" not in upd_cols:
+        raise EngineError("updates needs an 'id' column")
+    payload = [c for c in ("document", "metadata", "embedding") if c in upd_cols]
+    if not payload:
+        raise EngineError("updates needs document, metadata and/or embedding")
+
+    u = updates.select(
+        F.col("id").cast("string").alias("id"),
+        *[F.col(c).alias(f"_u_{c}") for c in payload],
+    ).dropDuplicates(["id"])
+    if "embedding" in payload:
+        bad = (
+            u.filter(
+                F.col("_u_embedding").isNotNull()
+                & (F.size("_u_embedding") != manifest.dim)
+            ).limit(1).count()
+        )
+        if bad:
+            raise EngineError(
+                f"update embeddings must have dim {manifest.dim}"
             )
-            .filter(F.col("document").isNotNull())
-            .dropDuplicates(["id"])
-            # only ids the collection holds (collection.update ignores
-            # the rest — the band index must not gate on text the
-            # collection rejected)
-            .join(
-                read_collection(spark, root, name).select("id"),
-                "id",
-                "left_semi",
+        u = u.withColumn("_u_embedding", F.col("_u_embedding").cast("array<float>"))
+
+    df = read_collection(spark, root, name, include_bucket=bucketed)
+    scoped = df
+    if bucketed:
+        # Distributed bucket pruning: hash each update id to its bucket
+        # ON THE UPDATE FRAME and collect only the DISTINCT bucket set
+        # (bounded by n_buckets, never O(updates)) — a bulk update with
+        # millions of ids ships a few hundred ints to the driver, not
+        # the id list. The literal IN-list on the hive-partition column
+        # keeps static partition pruning.
+        buckets = [
+            r["b"]
+            for r in u.select(
+                F.pmod(F.xxhash64("id"), F.lit(manifest.n_buckets)).alias("b")
+            )
+            .distinct()
+            .collect()
+        ]
+        scoped = df.filter(F.col("id_bucket").isin(buckets))
+
+    if targets:
+        # the held, deduplicated rows: the rewrite and every index
+        # take this one checkpoint (read before the swap retires the
+        # scanned files), and its job counts the non-NULL fields
+        held_obs = Observation("update_held")
+        u = (
+            u.join(scoped.select("id"), "id", "left_semi")
+            .observe(
+                held_obs,
+                F.count("*").alias("n"),
+                *[F.count(f"_u_{c}").alias(c) for c in payload],
             )
             .localCheckpoint(eager=True)
         )
-    vec_batch = None
-    if has_embedding:
-        vec_batch = (
-            updates.select(
-                F.col("id").cast("string").alias("id"), "embedding"
-            )
-            .filter(F.col("embedding").isNotNull())
-            .dropDuplicates(["id"])
-            # only ids the collection holds: collection.update ignores
-            # the rest, and the index must not hold vectors the
-            # collection rejected
-            .join(
-                read_collection(spark, root, name).select("id"),
+        held = held_obs.get
+        matched = held["n"] > 0
+    else:
+        # Cheap existence probe only — the exact matched count is
+        # observed inside the rewrite job itself (below)
+        matched = scoped.join(u, "id", "left_semi").limit(1).count() > 0
+
+    n = 0
+    if matched:
+        obs = Observation("update_matched")
+        matched_flag = F.col("_u_hit").isNotNull()
+        merged = (
+            scoped.join(u.withColumn("_u_hit", F.lit(True)), "id", "left")
+            .observe(obs, F.sum(matched_flag.cast("long")).alias("matched"))
+            .select(
                 "id",
-                "left_semi",
+                *[
+                    (
+                        F.coalesce(F.col(f"_u_{c}"), F.col(c)).alias(c)
+                        if c in payload
+                        else F.col(c)
+                    )
+                    for c in ("document", "embedding", "metadata")
+                ],
+                *(["id_bucket"] if bucketed else []),
             )
-            .localCheckpoint(eager=True)
         )
-    n = collection_update(
-        spark, root, name, updates, retain_previous=retain_previous
+        staging = next_data_dir(root, manifest.name)
+        if bucketed:
+            merged.write.mode("overwrite").partitionBy("id_bucket").parquet(staging)
+            clone_untouched_buckets(
+                current_data_dir(root, manifest.name), staging, set(buckets)
+            )
+        else:
+            merged.write.mode("overwrite").parquet(staging)
+        swap_data_dir(root, manifest.name, staging, retain=retain_previous)
+        n = int(obs.get["matched"])
+    if not targets:
+        return n
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        ivf_delete,
+        ivf_upsert,
     )
-    # one emptiness probe for the whole loop (the checkpointed batch
-    # is invariant across paths/sidecars — re-probing per sidecar
-    # would launch a redundant job each time)
-    has_vecs = vec_batch is not None and vec_batch.limit(1).count() > 0
-    # an updates frame CARRYING a document column whose values are all
-    # NULL (per-field Chroma semantics: keep stored text) must not pay
-    # an apply rewrite or queue an empty deferral — stamp-heal instead
-    has_docs = doc_batch is not None and doc_batch.limit(1).count() > 0
-    for path in index_paths:
-        p = _local_sidecar_path(path)
-        found = False
-        for sc, upsert_fn in (
-            ("ivf_index.json", ivf_upsert),
-            ("ivf_pq_index.json", ivf_pq_upsert),
-        ):
-            if not os.path.exists(os.path.join(p, sc)):
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
+        band_index_apply,
+        band_index_defer_updates,
+        band_index_delete,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
+        ivf_pq_upsert,
+    )
+
+    def held_rows(c: str):
+        # None when no held row carries a value for this field
+        if not held.get(c):
+            return None
+        return u.filter(F.col(f"_u_{c}").isNotNull()).select(
+            "id", F.col(f"_u_{c}").alias(c)
+        )
+
+    vecs, docs = held_rows("embedding"), held_rows("document")
+    for path, p, kinds in targets:
+        for sc, upsert in zip(_VECTOR_SIDECARS, (ivf_upsert, ivf_pq_upsert)):
+            if sc not in kinds:
                 continue
-            found = True
-            if has_vecs:
-                upsert_fn(
-                    spark, path, vec_batch,
-                    id_col="id", embedding_col="embedding",
-                    expected_prev_etag=_fence_etag(fence, etag_before, p, sc),
+            if vecs is not None:
+                upsert(
+                    spark, path, vecs, id_col="id", embedding_col="embedding",
+                    expected_prev_etag=fenced(p, sc),
                 )
             else:
-                # content untouched: heal the stamp only (the delete
-                # functions' fence-guarded empty-batch path)
+                # content untouched: re-stamp only (the delete's
+                # fence-guarded empty-batch path)
                 ivf_delete(
                     spark, path, [], sidecar=sc,
-                    expected_prev_etag=_fence_etag(fence, etag_before, p, sc),
+                    expected_prev_etag=fenced(p, sc),
                 )
-        if os.path.exists(os.path.join(p, "band_index.json")):
-            found = True
-            if path in band_text_paths and has_docs:
-                from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
-                    band_index_apply,
-                    band_index_defer_updates,
-                )
-
-                band_fence = _fence_etag(
-                    fence, etag_before, p, "band_index.json"
-                )
-                if band_text_mode == "apply_now":
-                    band_index_apply(
-                        spark,
-                        path,
-                        upserts=doc_batch,
-                        id_col="id",
-                        text_col="document",
-                        expected_prev_etag=band_fence,
-                    )
-                else:  # defer
-                    band_index_defer_updates(
-                        spark,
-                        path,
-                        doc_batch,
-                        id_col="id",
-                        text_col="document",
-                        expected_prev_etag=band_fence,
-                    )
-            else:
-                # text untouched on this path: heal the stamp only
-                band_index_delete(
-                    spark,
-                    path,
-                    [],
-                    expected_prev_etag=_fence_etag(
-                        fence, etag_before, p, "band_index.json"
-                    ),
-                )
-        if not found:
-            raise EngineError(
-                f"collection_update_indexed: no index sidecar found at "
-                f"{path!r} (expected ivf_index.json, ivf_pq_index.json "
-                "or band_index.json) — the collection update has "
-                "already committed; upsert the index manually once the "
-                "path is corrected"
+        if _BAND not in kinds:
+            continue
+        band_fence = fenced(p, _BAND)
+        if docs is None:
+            band_index_delete(spark, path, [], expected_prev_etag=band_fence)
+        elif band_text_mode == "apply_now":
+            band_index_apply(
+                spark, path, upserts=docs, id_col="id", text_col="document",
+                expected_prev_etag=band_fence,
+            )
+        else:
+            band_index_defer_updates(
+                spark, path, docs, id_col="id", text_col="document",
+                expected_prev_etag=band_fence,
             )
     return n
+
+
+collection_delete_indexed = collection_delete
+collection_update_indexed = collection_update
 
 
 def collection_diff(
@@ -1855,9 +1692,6 @@ def collection_diff(
     versions, not with history, because every version is a complete
     dir (no log replay). Maps are compared as sorted entry arrays
     (MapType itself is not comparable in Spark)."""
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
-        read_collection,
-    )
 
     def state(version: str | None) -> DataFrame:
         df = read_collection(spark, root, name, version=version)
@@ -1977,113 +1811,118 @@ def _check_dim_vs_manifest(root, name, embeddings, who: str) -> int | None:
     return batch_dim
 
 
-def _band_guard_documents(index_paths, documents, n: int) -> None:
-    """Validate-before-write guard for the literal client front
-    doors: ``documents=None`` (or null entries) is legal Chroma, but
-    a cohabiting band (near-dup) index needs text for every row it
-    will minhash — and the index refresh runs AFTER the collection
-    write, so failing late would leave collection and index
-    inconsistent. Driver-side and free: ``documents`` is a local
-    list here and the sidecar probe is a file stat."""
-    import os as _os
-
-    if documents is not None and not any(d is None for d in documents):
-        return
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _local_sidecar_path,
-    )
-
-    for path in index_paths:
-        if _os.path.exists(
-            _os.path.join(_local_sidecar_path(path), "band_index.json")
-        ):
-            raise EngineError(
-                "a band (near-dup) index cohabits at this index_path "
-                "but the batch carries missing documents "
-                "(documents=None or null entries are legal Chroma, "
-                "but every row indexed by a band index needs text to "
-                "minhash). Pass documents for all rows, or drop the "
-                "band index from index_paths for document-less "
-                "collections."
-            )
-
-
 def _indexes_insert(
     spark: SparkSession,
-    index_paths,
+    targets,
     batch: DataFrame,
     *,
-    upsert_semantics: bool,
+    id_col: str,
+    text_col: str,
+    embedding_col: str,
+    replace_text: bool,
+    tag: str | None = None,
 ) -> None:
-    """Keep every persisted index at ``index_paths`` servable after
-    rows landed in the collection — the same discipline as the CDC
-    loop's insert path. Vector sidecars (IVF / IVF-PQ) take the rows
-    through their surgical upsert (add-or-replace; also resurrects
-    ids a previous delete tombstoned). A cohabiting BAND index: for
-    pure inserts the cheap ``band_index_append`` covers the live
-    slice and previously-tombstoned ids ride ``band_index_apply``'s
-    atomic part rewrite; with upsert semantics the text of HELD ids
-    may have changed, so the whole batch rides ``band_index_apply``
-    (replace-or-add, one part rewrite — compact-cost, documented on
-    the front doors)."""
-    import os as _os
-
+    """The insert fan-out of add, upsert and the CDC loop's net
+    inserts, after the rows landed in the collection. Vector sidecars
+    take the batch through their surgical upsert (add-or-replace; it
+    also resurrects ids a previous delete tombstoned). A band sidecar
+    takes the whole batch through ``band_index_apply``'s part rewrite
+    when held ids' text may change (``replace_text``, the upsert);
+    otherwise it appends the batch (``tag`` names a stream batch's
+    append for its replay) and then re-adds the band-tombstoned ids
+    through ``band_index_apply``, since the id-free layout has no
+    surgical band upsert."""
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         ivf_upsert,
     )
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.store import (
-        _local_sidecar_path,
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
+        band_index_append,
+        band_index_apply,
+        band_index_tombstoned_ids,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
         ivf_pq_upsert,
     )
 
-    for path in index_paths:
-        p = _local_sidecar_path(path)
-        for sc, up_fn in (
-            ("ivf_index.json", ivf_upsert),
-            ("ivf_pq_index.json", ivf_pq_upsert),
-        ):
-            if _os.path.exists(_os.path.join(p, sc)):
-                up_fn(
-                    spark,
-                    path,
-                    batch.select("id", "embedding"),
-                    id_col="id",
-                    embedding_col="embedding",
+    docs = batch.select(id_col, text_col)
+    for path, _, kinds in targets:
+        for sc, upsert in zip(_VECTOR_SIDECARS, (ivf_upsert, ivf_pq_upsert)):
+            if sc in kinds:
+                upsert(
+                    spark, path, batch.select(id_col, embedding_col),
+                    id_col=id_col, embedding_col=embedding_col,
                 )
-        if _os.path.exists(_os.path.join(p, "band_index.json")):
-            from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
-                band_index_append,
-                band_index_apply,
-                band_index_tombstoned_ids,
+        if _BAND not in kinds:
+            continue
+        if replace_text:
+            band_index_apply(
+                spark, path, upserts=docs, id_col=id_col, text_col=text_col
+            )
+            continue
+        ts = band_index_tombstoned_ids(spark, path)
+        # bounded by the batch
+        dead = [
+            r[0]
+            for r in docs.join(
+                ts, F.col(id_col) == F.col("_ts_id"), "left_semi"
+            ).select(id_col).collect()
+        ]
+        # append FIRST: a torn-append replay heals its pending marker
+        # here, and band_index_apply refuses to run over a torn index
+        band_index_append(
+            spark, path, docs.filter(_outside(F.col(id_col), dead)),
+            id_col=id_col, text_col=text_col, tag=tag,
+        )
+        if dead:
+            band_index_apply(
+                spark, path, upserts=docs.filter(F.col(id_col).isin(dead)),
+                id_col=id_col, text_col=text_col,
             )
 
-            # the callers ran _band_guard_documents before any write
-            docs = batch.select("id", "document")
-            if upsert_semantics:
-                band_index_apply(
-                    spark, path, upserts=docs,
-                    id_col="id", text_col="document",
-                )
-                continue
-            ts = band_index_tombstoned_ids(spark, path)
-            # bounded by the batch
-            dead = [
-                r["id"]
-                for r in docs.join(
-                    ts, F.col("id") == F.col("_ts_id"), "left_semi"
-                ).select("id").collect()
-            ]
-            band_index_append(
-                spark, path, docs.filter(_outside(F.col("id"), dead)),
-                id_col="id", text_col="document",
-            )
-            if dead:
-                band_index_apply(
-                    spark, path, upserts=docs.filter(F.col("id").isin(dead)),
-                    id_col="id", text_col="document",
-                )
+
+def _collection_write(
+    spark, root, name, ids, embeddings, documents, metadatas, index_paths,
+    on_duplicate: str,
+) -> int:
+    """The one body of ``collection_add`` (``on_duplicate='error'``)
+    and ``collection_upsert`` (``'upsert'``)."""
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
+        HydrationConfig,
+        hydrate,
+    )
+
+    who = "collection_add" if on_duplicate == "error" else "collection_upsert"
+    targets = _index_targets(index_paths, who)
+    items = _chroma_items_df(spark, ids, embeddings, documents, metadatas)
+    dim = _check_dim_vs_manifest(root, name, embeddings, who)
+    if any(_BAND in kinds for _, _, kinds in targets) and (
+        documents is None or any(d is None for d in documents)
+    ):
+        raise EngineError(
+            "a band (near-dup) index cohabits at this index_path "
+            "but the batch carries missing documents "
+            "(documents=None or null entries are legal Chroma, "
+            "but every row indexed by a band index needs text to "
+            "minhash). Pass documents for all rows, or drop the "
+            "band index from index_paths for document-less "
+            "collections."
+        )
+    cfg = HydrationConfig(
+        collection_name=name,
+        root=root,
+        id_col="id",
+        text_col="document",
+        embedding_col="embedding",
+        metadata_col="metadata",
+        on_duplicate=on_duplicate,
+        dim=dim,
+    )
+    report = hydrate(spark, items, cfg)
+    _indexes_insert(
+        spark, targets, items, id_col="id", text_col="document",
+        embedding_col="embedding", replace_text=on_duplicate == "upsert",
+    )
+    return report.rows_written
 
 
 def collection_add(
@@ -2125,34 +1964,10 @@ def collection_add(
     client-SIZED batches (it builds one local DataFrame); bulk loads
     keep using ``operators.hydrate.hydrate`` on a distributed frame —
     same machinery, no collect anywhere."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
-        HydrationConfig,
-        hydrate,
+    return _collection_write(
+        spark, root, name, ids, embeddings, documents, metadatas,
+        index_paths, "error",
     )
-
-    items = _chroma_items_df(spark, ids, embeddings, documents, metadatas)
-    dim = _check_dim_vs_manifest(root, name, embeddings, "collection_add")
-    if index_paths:
-        _band_guard_documents(index_paths, documents, len(ids))
-    cfg = HydrationConfig(
-        collection_name=name,
-        root=root,
-        id_col="id",
-        text_col="document",
-        embedding_col="embedding",
-        metadata_col="metadata",
-        on_duplicate="error",
-        dim=dim,
-    )
-    report = hydrate(spark, items, cfg)
-    if index_paths:
-        _indexes_insert(
-            spark,
-            index_paths,
-            items,
-            upsert_semantics=False,
-        )
-    return report.rows_written
 
 
 def collection_upsert(
@@ -2182,31 +1997,7 @@ def collection_upsert(
     per index, as in ``collection_add``. The touched buckets are
     folded from the ids on the driver, and their rewrite drops the
     batch ids with a literal filter."""
-    from vector_databases___hydrate_chroma_db_collection_spark.operators.hydrate import (
-        HydrationConfig,
-        hydrate,
+    return _collection_write(
+        spark, root, name, ids, embeddings, documents, metadatas,
+        index_paths, "upsert",
     )
-
-    items = _chroma_items_df(spark, ids, embeddings, documents, metadatas)
-    dim = _check_dim_vs_manifest(root, name, embeddings, "collection_upsert")
-    if index_paths:
-        _band_guard_documents(index_paths, documents, len(ids))
-    cfg = HydrationConfig(
-        collection_name=name,
-        root=root,
-        id_col="id",
-        text_col="document",
-        embedding_col="embedding",
-        metadata_col="metadata",
-        on_duplicate="upsert",
-        dim=dim,
-    )
-    report = hydrate(spark, items, cfg)
-    if index_paths:
-        _indexes_insert(
-            spark,
-            index_paths,
-            items,
-            upsert_semantics=True,
-        )
-    return report.rows_written

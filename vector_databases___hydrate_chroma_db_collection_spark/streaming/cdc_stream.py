@@ -30,22 +30,18 @@ the outcome that event earned in the replay; the store mutations are
 the NET effect vs the pre-batch state — disjoint per-id sets routed
 through the same composed front doors the batch API uses:
 
-- net insert (pre-absent -> exists)  -> ``hydrate`` + ``ivf_upsert``
-  (upsert, not append, so re-inserting an id a previous batch DELETED
-  resurrects it — ``ivf_append`` would raise ``TombstonedIdError``
-  until a compact; the upsert's surgical rewrite purges the old row);
-  a cohabiting band index gets the docs via ``band_index_append``
-  (band-tombstoned ids ride ``band_index_apply``'s atomic rewrite —
-  the id-free layout has no surgical band upsert)
+- net insert (pre-absent -> exists) -> ``hydrate`` then
+  ``plans.chroma_api._indexes_insert``, the insert fan-out
+  ``collection_add`` uses (vector sidecars upsert, so an id a
+  previous batch DELETED is resurrected; a band sidecar appends under
+  the batch's tag)
 - net insert-over-held (pre-held -> exists via delete + insert)
   -> ``collection_delete_indexed`` then the net-insert path above
   (full payload replacement — never the coalescing update)
 - net update (pre-held -> exists, content touched, NOT through an
   applied insert) -> ``plans.chroma_api.collection_update_indexed``
-  (collection rewrite + surgical cell rewrite + re-stamp)
 - net delete (pre-held -> absent)
   -> ``plans.chroma_api.collection_delete_indexed``
-  (collection pointer swap + index tombstones + re-stamp)
 - ``skipped_existing`` / ``skipped_missing``: Chroma semantics —
   inserts of held ids and updates/deletes of absent ids are recorded,
   not applied.
@@ -71,7 +67,7 @@ collection commits moved the etag, so the default collection fence
 would raise ``StaleIndexError`` forever on a crash between a
 collection commit and its index mutation; self-fencing is sound here
 exactly because the WAL's content-qualified tag proves the retried
-mutation identical (see ``collection_delete_indexed``). Stores
+mutation identical (see the ``plans.chroma_api`` write path). Stores
 converge; published verdicts equal the first attempt's exactly.
 The WAL carries ``store.FORMAT_VERSION`` like every index sidecar; a
 WAL of another format refuses with ``StaleIndexError``.
@@ -107,7 +103,6 @@ from vector_databases___hydrate_chroma_db_collection_spark.operators.store impor
     _atomic_sidecar_write,
     _fresh_versioned_dir,
     _gc_recordings,
-    _local_sidecar_path,
     read_parquet,
     read_sidecar,
 )
@@ -238,6 +233,9 @@ def cdc_ingest_batch_fn(
         hydrate,
     )
     from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        _VECTOR_SIDECARS,
+        _index_targets,
+        _indexes_insert,
         collection_delete_indexed,
         collection_update_indexed,
     )
@@ -290,8 +288,18 @@ def cdc_ingest_batch_fn(
                 "stream_cdc_ingest: op must be one of "
                 "insert/update/delete"
             )
+        # the path check runs before the verdict recording and the WAL
+        # entry: a batch the loop cannot apply must not leave a
+        # pending entry that every replay re-raises on
+        targets = _index_targets([index_path], "stream_cdc_ingest")
+        [(_, p, kinds)] = targets
+        if not kinds.intersection(_VECTOR_SIDECARS):
+            raise EngineError(
+                f"stream_cdc_ingest: no vector index sidecar at "
+                f"{index_path!r} (expected ivf_index.json or "
+                "ivf_pq_index.json). Nothing was written."
+            )
         grouped = grouped.localCheckpoint(eager=True)
-        p = _local_sidecar_path(index_path)
         # content-qualified batch identity over (id, op, seq): a
         # restarted stream with same batch ids but different events
         # must judge as a FRESH batch
@@ -416,81 +424,13 @@ def cdc_ingest_batch_fn(
         if ins.limit(1).count() > 0:
             hydrate(spark, ins, cfg)
             # upsert, not append: resurrects ids a previous batch
-            # tombstoned (its surgical rewrite purges the old row).
-            # EVERY vector sidecar cohabiting at index_path gets the
-            # rows — upserting only the IVF one would leave a
-            # cohabiting IVF-PQ index stale, and the NEXT batch's
-            # composed update/delete (which fences on the etag it
-            # observes) would crash-loop on its StaleIndexError.
-            from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
-                ivf_upsert,
+            # tombstoned. EVERY sidecar at index_path takes the rows,
+            # or the next batch's fenced update/delete would
+            # crash-loop on a stale one.
+            _indexes_insert(
+                spark, targets, ins, id_col=ic, text_col=tc,
+                embedding_col=ec, replace_text=False, tag=tag,
             )
-            from vector_databases___hydrate_chroma_db_collection_spark.operators.pq import (
-                ivf_pq_upsert,
-            )
-
-            found = False
-            for sc, up_fn in (
-                ("ivf_index.json", ivf_upsert),
-                ("ivf_pq_index.json", ivf_pq_upsert),
-            ):
-                if os.path.exists(os.path.join(p, sc)):
-                    found = True
-                    up_fn(
-                        spark, index_path, ins.select(ic, ec),
-                        id_col=ic, embedding_col=ec,
-                    )
-            if not found:
-                raise EngineError(
-                    f"stream_cdc_ingest: no vector index sidecar at "
-                    f"{index_path!r} (expected ivf_index.json or "
-                    "ivf_pq_index.json)"
-                )
-            if os.path.exists(os.path.join(p, "band_index.json")):
-                # a cohabiting near-dup band index gets the inserted
-                # docs too, or its novelty gate would miss them until
-                # a refresh. Appends are the cheap path; ids a prior
-                # batch band-TOMBSTONED have no surgical band upsert
-                # (the ivf_upsert argument does not transfer — the
-                # id-free layout scatters a doc's rows), so the rare
-                # resurrection slice rides band_index_apply's atomic
-                # part rewrite instead.
-                from vector_databases___hydrate_chroma_db_collection_spark.operators.band_index import (
-                    band_index_append,
-                    band_index_apply,
-                    band_index_tombstoned_ids,
-                )
-
-                ts = band_index_tombstoned_ids(spark, index_path)
-                dead = ins.join(
-                    ts,
-                    F.col(ic).cast("string") == F.col("_ts_id"),
-                    "left_semi",
-                ).localCheckpoint(eager=True)
-                live = ins.join(
-                    ts,
-                    F.col(ic).cast("string") == F.col("_ts_id"),
-                    "left_anti",
-                )
-                # append FIRST: a torn-append replay heals its pending
-                # marker here, and band_index_apply refuses to run
-                # over a torn index
-                band_index_append(
-                    spark,
-                    index_path,
-                    live.select(ic, tc),
-                    id_col=ic,
-                    text_col=tc,
-                    tag=tag,
-                )
-                if dead.limit(1).count() > 0:
-                    band_index_apply(
-                        spark,
-                        index_path,
-                        upserts=dead.select(ic, tc),
-                        id_col=ic,
-                        text_col=tc,
-                    )
         upd = net.filter(
             F.col("_e0") & F.col("_ex") & F.col("_dirty") & ~F.col("_ins")
         ).select(
